@@ -6,7 +6,7 @@ interleaved text+media document corpus at web scale:
 
 - pure-Python correctness kernel (tokenizer → DOM → grid resolver) with the
   reference's exact semantics, pinned by golden fixtures F01–F15;
-- Arrow-vectorized `mapInPandas` extraction operator (no per-row Python);
+- Arrow-vectorized `mapInArrow` extraction operator (no per-row Python);
 - skew-aware partitioning (mega-document splitting + salting);
 - snapshot-committed Parquet sink with Iceberg-style resume semantics,
   per-partition lineage + metrics;

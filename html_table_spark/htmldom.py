@@ -261,8 +261,7 @@ class _TreeBuilder(HTMLParser):
 
 def parse_html_stdlib(html: str) -> tuple[Node, list[str]]:
     """Reference tree builder over the stdlib tokenizer — kept as the
-    differential-testing oracle for the fast tokenizer below (and as a
-    fallback via HTML_TABLE_SPARK_TOKENIZER=stdlib)."""
+    differential-testing oracle for the fast tokenizer below."""
     builder = _TreeBuilder()
     try:
         builder.feed(html)
@@ -465,21 +464,10 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
     return root, errors
 
 
-import os as _os
-
-_USE_STDLIB = _os.environ.get("HTML_TABLE_SPARK_TOKENIZER", "fast") == "stdlib"
-
-
-def parse_html(html: str) -> tuple[Node, list[str]]:
-    """Parse ``html`` tolerantly → (document root node, recoverable errors).
-
-    Never raises on malformed input (mirrors ``LIBXML_NOWARNING|NOERROR``,
-    reference ``Parser.php:446``); the error list feeds the
-    ``fail_on_xml_errors`` config knob.
-    """
-    if _USE_STDLIB:
-        return parse_html_stdlib(html)
-    return parse_html_fast(html)
+# the runtime tokenizer (Parser.php:446 ``loadHTML`` under
+# ``LIBXML_NOWARNING|NOERROR``): never raises on malformed input, and its
+# error list feeds the ``fail_on_xml_errors`` config knob
+parse_html = parse_html_fast
 
 
 def php_int_cast(value: str) -> int:

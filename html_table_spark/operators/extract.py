@@ -1,7 +1,8 @@
-"""The distributed extraction operator: Arrow-vectorized ``mapInPandas``.
+"""The distributed extraction operator: Arrow in, Arrow out (``mapInArrow``).
 
 Design (SURVEY.md §1.4, §3.4): Catalyst plans the Parquet/Iceberg scan with
-column pruning down to (doc_id, spans); Arrow moves columnar batches into
+column pruning down to (doc_id, spans), and the HTML is reassembled
+JVM-side (:func:`html_reassembly_col`); Arrow moves columnar batches into
 the Python worker; this operator runs the pure-Python kernel per document
 inside the batch and yields bounded output batches (1 input doc → N output
 tables, a UDTF-shaped fan-out).  There is **no per-row Python UDF** anywhere
@@ -12,19 +13,18 @@ The extraction config is a small frozen dataclass captured in the closure —
 pickled once per task, never re-validated per document.
 
 Memory envelope: multi-MB HTML docs can blow up the default 10k-row Arrow
-batches; callers should set ``spark.sql.execution.arrow.maxRecordsPerBatch``
-(the pipeline does, see plans/pipeline.py) and this operator additionally
-flushes its *output* every ``flush_rows`` tables so one mega-doc cannot
-pin a giant pandas frame (iterator-in/iterator-out, never the whole
-partition).
+batches; the session caps input batches by rows and bytes (session.py) and
+this operator additionally flushes its *output* every ``_FLUSH_ROWS``
+tables or ``_FLUSH_BYTES`` of span text, so one mega-doc cannot pin a
+giant batch (iterator-in/iterator-out, never the whole partition).
 """
 
 from __future__ import annotations
 
+import re as _re
 import time
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,10 +32,13 @@ from pyspark.sql import functions as F
 from ..config import ParserConfig
 from ..htmldom import _TAG_RE as _html_tag_re
 from ..semantics import parse_document
-from ..spans import doc_spans_to_html, encode_table_flat, encode_table_spans
+from ..spans import encode_table_flat
 from ..sources.documents import EXTRACTED_SCHEMA
 
-_OUT_COLUMNS = [f.name for f in EXTRACTED_SCHEMA.fields if f.name != "wall_ms"]
+# output batch bounds: rows, and approx bytes of span text (Arrow string
+# offsets are int32: one array must stay far below 2 GB)
+_FLUSH_ROWS = 4096
+_FLUSH_BYTES = 256 * 1024 * 1024
 
 _ARROW_SPAN = pa.struct(
     [
@@ -61,75 +64,6 @@ _ARROW_OUT = pa.schema(
         pa.field("wall_ms", pa.float64()),
     ]
 )
-
-
-def _result_row(doc_id: str, table, part_id: int) -> tuple:
-    spans = encode_table_spans(table)
-    return (
-        doc_id,
-        table.table_idx,
-        table.caption,
-        table.header,
-        spans,
-        [len(r) for r in table.rows],
-        table.n_rows,
-        table.n_cells,
-        table.status,
-        table.error_msg,
-        part_id,
-    )
-
-
-def make_extractor(config: ParserConfig, flush_rows: int = 2048):
-    """Build the mapInPandas function for ``config``.
-
-    Exposed separately so the mega-doc split path (plans/pipeline.py) can
-    reuse it over chunk streams with a table_idx base offset column.
-    """
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        started = time.monotonic()
-
-        def flush(rows: list[tuple]) -> pd.DataFrame:
-            frame = pd.DataFrame(rows, columns=_OUT_COLUMNS)
-            # cumulative partition wall time so far; lineage takes max()
-            frame["wall_ms"] = (time.monotonic() - started) * 1000.0
-            return frame
-
-        rows: list[tuple] = []
-        has_base = None
-        for batch in batches:
-            if has_base is None:
-                has_base = "table_idx_base" in batch.columns
-            bases = batch["table_idx_base"].values if has_base else None
-            for i, (doc_id, spans) in enumerate(
-                zip(batch["doc_id"].values, batch["spans"].values)
-            ):
-                html = doc_spans_to_html(spans if spans is not None else [])
-                base = int(bases[i]) if bases is not None else 0
-                results = parse_document(html, config)
-                if not results and config.select_all_tables:
-                    # completion marker: a doc with zero tables must still be
-                    # recorded, or snapshot-resume would reprocess it forever
-                    # (filter table_idx >= 0 for real tables)
-                    rows.append(
-                        (doc_id, -1, None, [], [], [], 0, 0, "ok", None, part_id)
-                    )
-                for table in results:
-                    if base:
-                        table.table_idx += base
-                    rows.append(_result_row(doc_id, table, part_id))
-                if len(rows) >= flush_rows:
-                    yield flush(rows)
-                    rows = []
-        if rows:
-            yield flush(rows)
-
-    return extract_batches
 
 
 def html_reassembly_col(spans_col: str = "spans"):
@@ -173,8 +107,7 @@ def html_reassembly_col(spans_col: str = "spans"):
 
 
 STATUS_CHUNK = "chunk"
-
-import re as _re
+_MEGA_POLICIES = ("parse", "chunk")
 
 _COMMENT_END_RE = _re.compile(r"--\s*>")
 
@@ -210,26 +143,26 @@ _UNSEEN_TAG_ANGLE_RE = _re.compile(
 
 def make_arrow_extractor(
     config: ParserConfig,
-    flush_rows: int = 4096,
-    mega_cost_threshold: int | None = None,
     tables_per_chunk: int = 64,
     mega_policy: str = "parse",
 ):
-    """mapInArrow extraction: Arrow in, Arrow out, flat buffers throughout.
+    """mapInArrow extraction over ``(doc_id, html[, table_idx_base])``
+    batches: Arrow in, Arrow out, flat buffers throughout.
 
-    ``mega_policy`` controls documents whose HTML exceeds
-    ``mega_cost_threshold`` (select-all mode only):
+    ``mega_policy`` (select-all mode only; single-table mode always parses):
 
-    - ``'parse'`` — parse in place (default; single-table mode always does;
-      the pipeline's pass 1 — a doc its routing proxy under-calls costs one
-      slow task, never a dropped doc);
-    - ``'skip'``  — emit nothing (for callers that route the mega tail to a
-      dedicated pass with a filter GUARANTEED ≥ the real len(html), as the
-      round-2 cost routing was; the discovery routing must NOT use it);
-    - ``'chunk'`` — split via a linear boundary scan into chunk rows
-      (``status='chunk'``, table_idx = base ordinal, spans = one text span)
-      for a salted redistribution; unsplittable tag soup is parsed in place
-      (correctness never depends on the split)."""
+    - ``'parse'`` — parse every document in place (the pipeline's pass 1 —
+      a doc its routing proxy under-calls costs one slow task, never a
+      dropped doc);
+    - ``'chunk'`` — split every document via a linear boundary scan into
+      chunk rows (``status='chunk'``, table_idx = base ordinal, spans = one
+      text span) for a salted redistribution; unsplittable tag soup becomes
+      one whole-doc chunk (correctness never depends on the split)."""
+    if mega_policy not in _MEGA_POLICIES:
+        raise ValueError(
+            f"mega_policy must be one of {_MEGA_POLICIES}, got {mega_policy!r}"
+        )
+    chunk_mode = mega_policy == "chunk" and config.select_all_tables
 
     def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import gc
@@ -242,11 +175,7 @@ def make_arrow_extractor(
         # the DOM tree is acyclic (no parent pointers) — refcounting frees
         # it; CPython's cyclic GC otherwise triggers constantly on the
         # millions of container allocations per batch
-        import os
-
-        gc_was_enabled = (
-            gc.isenabled() and os.environ.get("HTML_TABLE_SPARK_GC", "off") == "off"
-        )
+        gc_was_enabled = gc.isenabled()
         if gc_was_enabled:
             gc.disable()
         try:
@@ -270,9 +199,7 @@ def make_arrow_extractor(
             }
 
         buf = new_buffers()
-        buf_bytes = 0  # approx bytes of span text buffered (Arrow string
-        # offsets are int32: one array must stay far below 2 GB)
-        FLUSH_BYTES = 256 * 1024 * 1024
+        buf_bytes = 0  # approx bytes of span text buffered
 
         def flush() -> pa.RecordBatch:
             nonlocal buf, buf_bytes
@@ -324,23 +251,12 @@ def make_arrow_extractor(
             for i, html in enumerate(htmls):
                 doc_id = doc_ids[i]
                 base = bases[i] if bases is not None else 0
-                if config.select_all_tables and (
-                    mega_policy == "chunk"
-                    or (
-                        mega_policy == "skip"
-                        and mega_cost_threshold is not None
-                        and len(html) > mega_cost_threshold
-                    )
-                ):
-                    if mega_policy == "skip":
-                        continue
+                if chunk_mode:
                     # INVARIANT (plans/pipeline.py relies on this): chunk
                     # mode emits ONLY status='chunk' rows — for EVERY doc in
-                    # the pass, not just over-threshold ones, because the
-                    # pipeline's routing proxies (span count under discovery
-                    # routing, sort-free span-text length under cost
-                    # routing) can exceed the real len(html);
-                    # such a doc becomes one whole-doc chunk row, parsed
+                    # the pass, because the pipeline's routing proxy (span
+                    # count) can flag a doc whose real HTML is small; such a
+                    # doc becomes one whole-doc chunk row, parsed
                     # downstream, never an in-place parse. If an in-place
                     # path is ever added here, the pipeline needs its
                     # parsed-in-place union leg (and the chunk-pass persist)
@@ -378,14 +294,16 @@ def make_arrow_extractor(
                         buf["span_offsets"].append(len(buf["sk"]))
                         buf_bytes += len(text)
                         if (
-                            len(buf["doc_id"]) >= flush_rows
-                            or buf_bytes >= FLUSH_BYTES
+                            len(buf["doc_id"]) >= _FLUSH_ROWS
+                            or buf_bytes >= _FLUSH_BYTES
                         ):
                             yield flush()
                     continue
                 results = parse_document(html, config)
                 if not results and config.select_all_tables:
-                    # completion marker (see make_extractor)
+                    # completion marker: a doc with zero tables must still be
+                    # recorded, or snapshot-resume would reprocess it forever
+                    # (filter table_idx >= 0 for real tables)
                     buf["doc_id"].append(doc_id)
                     buf["table_idx"].append(-1)
                     buf["caption"].append(None)
@@ -409,7 +327,7 @@ def make_arrow_extractor(
                     encode_table_flat(table, buf["sk"], buf["st"], buf["sr"], buf["so"])
                     buf["span_offsets"].append(len(buf["sk"]))
                 buf_bytes += len(html)  # upper bound on this doc's span text
-                if len(buf["doc_id"]) >= flush_rows or buf_bytes >= FLUSH_BYTES:
+                if len(buf["doc_id"]) >= _FLUSH_ROWS or buf_bytes >= _FLUSH_BYTES:
                     yield flush()
         if buf["doc_id"]:
             yield flush()
@@ -425,10 +343,8 @@ def extract_tables(
     tables_per_chunk: int = 64,
     mega_policy: str = "parse",
     spread_small_inputs: bool = True,
-    pre_reassembled: bool = False,
-    has_base: bool | None = None,
 ) -> DataFrame:
-    """documents(doc_id, spans[, table_idx_base]) → extracted tables.
+    """documents(doc_id, spans) → extracted tables.
 
     One output row per (document, extracted table); reference single-table
     semantics by default, ``config.all_tables()`` for corpus mode.  Errors
@@ -437,56 +353,48 @@ def extract_tables(
     Implemented over ``mapInArrow``: the span columns stay as flat Arrow
     buffers on both sides of the Python boundary — no pandas, no per-span
     dict/object materialization (BASELINE.json hot-path constraint taken to
-    its conclusion).
-
-    ``pre_reassembled=True``: the input already carries
-    ``(doc_id, html[, table_idx_base])`` — the caller did the JVM-side
-    reassembly itself (the extraction pipeline shares ONE reassembly
-    subtree across both passes). ``has_base`` skips the ``.columns``
-    schema probe when the caller knows the answer — probing an unanalyzed
-    DataFrame triggers a full Catalyst analyzer pass, pure serial driver
-    time (round-3 serial-planning diet).
+    its conclusion). ``mega_policy`` / ``tables_per_chunk``: see
+    :func:`make_arrow_extractor`. ``mega_cost_threshold`` is accepted and
+    ignored: both policies treat every document alike, whatever its size.
     """
     from .util import ensure_parallelism
 
-    config = config or ParserConfig()
-    if has_base is None:
-        has_base = "table_idx_base" in documents.columns
-    if pre_reassembled:
-        pruned = documents
-    else:
-        # explicit pruning before the UDF stage, with the HTML reassembly
-        # done JVM-side: the Arrow boundary carries (doc_id, html) only — no
-        # span structs, no media spans (round-3 Arrow-copy reduction)
-        cols = [F.col("doc_id"), html_reassembly_col("spans").alias("html")] + (
-            [F.col("table_idx_base")] if has_base else []
-        )
-        pruned = documents.select(*cols)
+    # explicit pruning before the UDF stage, with the HTML reassembly done
+    # JVM-side: the Arrow boundary carries (doc_id, html) only — no span
+    # structs, no media spans (round-3 Arrow-copy reduction)
+    pruned = documents.select(
+        F.col("doc_id"), html_reassembly_col("spans").alias("html")
+    )
     if spread_small_inputs:
         # a dimension-sized corpus arriving as one file = one partition
         # would serialize the whole Arrow stage on a single Python worker.
-        # The full pipeline (plans/pipeline.py) manages partitioning itself
-        # and passes False to keep its zero-shuffle 'never' contract.
+        # The full pipeline (plans/pipeline.py) manages partitioning itself.
         pruned = ensure_parallelism(pruned)
-    return pruned.mapInArrow(
-        make_arrow_extractor(
-            config,
-            mega_cost_threshold=mega_cost_threshold,
-            tables_per_chunk=tables_per_chunk,
-            mega_policy=mega_policy,
-        ),
-        schema=EXTRACTED_SCHEMA,
+    return _extract_html(
+        pruned,
+        config or ParserConfig(),
+        tables_per_chunk=tables_per_chunk,
+        mega_policy=mega_policy,
     )
 
 
-# ---------------------------------------------------------------------------
-# Mega-document splitting (skew path)
-# ---------------------------------------------------------------------------
-
-SPLIT_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>, table_idx_base int"
-)
+def _extract_html(
+    html_docs: DataFrame,
+    config: ParserConfig,
+    *,
+    tables_per_chunk: int = 64,
+    mega_policy: str = "parse",
+) -> DataFrame:
+    """The one ``mapInArrow`` stage: ``html_docs(doc_id, html[,
+    table_idx_base])`` → extracted tables. The pipeline's legs call it on
+    their already-reassembled inputs (one reassembly subtree, no schema
+    probe: every intermediate Dataset costs a Catalyst analyzer pass)."""
+    return html_docs.mapInArrow(
+        make_arrow_extractor(
+            config, tables_per_chunk=tables_per_chunk, mega_policy=mega_policy
+        ),
+        schema=EXTRACTED_SCHEMA,
+    )
 
 
 def _top_level_table_cuts(html: str) -> list[tuple[int, int]] | None:
@@ -617,41 +525,3 @@ def _top_level_table_cuts(html: str) -> list[tuple[int, int]] | None:
     if depth != 0:
         return None
     return cuts
-
-
-def split_mega_docs(
-    mega: DataFrame, tables_per_chunk: int = 64
-) -> DataFrame:
-    """mega(doc_id, spans) → chunk work-units (doc_id, spans, table_idx_base).
-
-    Each chunk carries ≤ ``tables_per_chunk`` consecutive top-level tables as
-    a single text span, plus the ordinal of its first table, so downstream
-    extraction assigns globally correct ``table_idx`` values without any
-    per-doc reassembly shuffle (table_idx = base + local ordinal).
-    Documents whose markup defeats the linear boundary scan pass through
-    whole (base 0) — correctness never depends on the split.
-    """
-
-    def split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: list[tuple] = []
-        for batch in batches:
-            for doc_id, spans in zip(batch["doc_id"].values, batch["spans"].values):
-                html = doc_spans_to_html(spans if spans is not None else [])
-                cuts = _top_level_table_cuts(html)
-                if not cuts or len(cuts) <= tables_per_chunk:
-                    out.append(
-                        (doc_id, list(spans) if spans is not None else [], 0)
-                    )
-                    continue
-                for chunk_no in range(0, len(cuts), tables_per_chunk):
-                    group = cuts[chunk_no : chunk_no + tables_per_chunk]
-                    text = html[group[0][0] : group[-1][1]]
-                    chunk_spans = [
-                        {"kind": "text", "text": text, "media_ref": None, "offset": 0}
-                    ]
-                    out.append((doc_id, chunk_spans, chunk_no))
-            if out:
-                yield pd.DataFrame(out, columns=["doc_id", "spans", "table_idx_base"])
-                out = []
-
-    return mega.select("doc_id", "spans").mapInPandas(split_batches, schema=SPLIT_SCHEMA)

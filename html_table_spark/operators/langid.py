@@ -48,6 +48,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "LangIdModel",
@@ -253,7 +254,13 @@ def langid_predict(
                 }
             )
 
-    out_schema = f"{id_col} long, pred_lang string, score double"
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, docs.schema[id_col].dataType),
+            T.StructField("pred_lang", T.StringType()),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
     return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
         run, schema=out_schema
     )

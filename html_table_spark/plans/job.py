@@ -5,10 +5,10 @@
         job.py --input <corpus parquet/iceberg> --output <sink root> \
                [--mode all|single] [--partitions N] [--mega-threshold BYTES]
 
-The session is NOT constructed with local-mode defaults here: on a cluster
-spark-submit conf (executors, shuffle partitions, Arrow batch size) wins;
-we only set the configs that are semantic for the job (Arrow enabled,
-adaptive on).  Re-running the same command after a failure resumes from the
+The session comes from ``session.get_spark``, the builder the tests and
+the benchmark use: spark-submit's ``--master`` and cluster conf win, and the
+job runs with the same Arrow batch caps and FAIR scheduling the benchmark
+measures.  Re-running the same command after a failure resumes from the
 last committed snapshot (anti-join on committed doc_ids).
 """
 
@@ -17,17 +17,9 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
-
-
-def build_session(app: str = "html-table-extract") -> SparkSession:
-    return (
-        SparkSession.builder.appName(app)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .getOrCreate()
-    )
+# absolute imports: spark-submit executes this file as a top-level script;
+# the package arrives via --py-files
+from html_table_spark.session import get_spark
 
 
 def main(argv: list[str] | None = None) -> dict:
@@ -51,15 +43,13 @@ def main(argv: list[str] | None = None) -> dict:
                              "via sources/warc.py (HTML 200 responses become docs)")
     args = parser.parse_args(argv)
 
-    # absolute imports: spark-submit executes this file as a top-level
-    # script; the package arrives via --py-files
     from html_table_spark.config import ParserConfig
     from html_table_spark.plans.pipeline import DEFAULT_MEGA_COST, run_job
     from html_table_spark.sources.documents import read_documents
     from html_table_spark.sources.sinks import SnapshotSink
     from html_table_spark.sources.warc import read_warc_documents
 
-    spark = build_session()
+    spark = get_spark("html-table-extract")
     if args.format == "warc":
         documents = read_warc_documents(spark, args.input)
     else:

@@ -29,9 +29,8 @@ pushed ``doc_id IN`` filter the re-read touches only the row groups that
 actually hold mega docs.  The only shuffle in the job moves the skewed
 tail (mega-doc chunks ≪ corpus), repartitioned on ``xxhash64(doc_id,
 chunk)``.  Normal docs ride the scan's byte-balanced file splits
-(``maxPartitionBytes``); a full repartition remains available
-(``repartition_normal='always'``) for pathological file layouts, and
-engages automatically when the scan exposes too little parallelism.
+(``maxPartitionBytes``); a full salted repartition engages only when the
+scan exposes too little parallelism.
 """
 
 from __future__ import annotations
@@ -40,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ParserConfig
-from ..operators.extract import extract_tables, html_reassembly_col
+from ..operators.extract import _extract_html, extract_tables, html_reassembly_col
 from ..sources.sinks import SnapshotSink
 
 # Docs whose total text size exceeds this take the mega-doc split path.
@@ -48,9 +47,10 @@ DEFAULT_MEGA_COST = 256 * 1024  # bytes of HTML
 
 # Discovery routing collects at most this many mega doc_ids to the driver
 # (ids only — never bytes). 64Ki ids ≈ a few MB of strings; past it the
-# planner falls back to distributed cost routing. At fleet scale the mega
-# tail is vanishingly rare by construction (it is the skew tail), and a
-# STORED byte-length column would replace discovery outright (see module
+# mega leg keeps its lazy span-count filter (a full scan that keeps just
+# the tail) instead of the pruning IN list. At fleet scale the mega tail is
+# vanishingly rare by construction (it is the skew tail), and a STORED
+# byte-length column would replace discovery outright (see module
 # docstring).
 DEFAULT_DISCOVER_CAP = 65536
 
@@ -81,7 +81,7 @@ def discover_mega_ids(
     document where the round-2 routing scan re-decoded and re-concatenated
     every text byte in the corpus merely to find the tail. Returns the ids
     (possibly empty), or None when more than ``cap`` candidates exist —
-    callers then fall back to distributed cost routing, keeping the driver
+    callers then filter on the lazy predicate instead, keeping the driver
     out of the data path. doc_id-less rows are never candidates (they ride
     the normal leg). The predicate here is kept EXACTLY the null-safe form
     _prep_legs builds for the legs, so the returned ids are a faithful
@@ -97,31 +97,6 @@ def discover_mega_ids(
     if len(rows) > cap:
         return None
     return [r[0] for r in rows]
-
-
-def doc_cost_col():
-    """JVM-side cost proxy COLUMN: total text length across spans (no
-    Python). The single source of truth for routing predicates and
-    :func:`with_doc_cost` — the 'cost' routing branch filters on this very
-    expression, so the two can never drift.
-
-    Lambda-free on purpose: ``array_join`` skips null elements, so
-    ``length(array_join(spans.text, ''))`` equals the old per-span
-    ``aggregate(...coalesce(length(text), 0)...)`` exactly, stays inside
-    whole-stage codegen (interpreted HOF lambdas are not codegen'd), and
-    costs no LambdaFunction resolution on the ~10 analyzer passes the
-    pipeline plan takes during construction.
-
-    NULL spans must cost 0, not NULL: a NULL cost would fail BOTH pass
-    filters, silently dropping the doc — and with resume on, it would be
-    re-scanned forever (it never gets its completion marker)."""
-    cost = F.length(F.array_join(F.col("spans").getField("text"), ""))
-    return F.coalesce(cost, F.lit(0)).cast("long")
-
-
-def with_doc_cost(documents: DataFrame) -> DataFrame:
-    """Materialize :func:`doc_cost_col` as a ``doc_cost`` column."""
-    return documents.withColumn("doc_cost", doc_cost_col())
 
 
 def salted(documents: DataFrame, num_partitions: int) -> DataFrame:
@@ -143,13 +118,9 @@ def plan_extraction(
     num_partitions: int | None = None,
     mega_cost_threshold: int = DEFAULT_MEGA_COST,
     tables_per_chunk: int = 64,
-    repartition_normal: str = "auto",
-    routing: str = "discover",
-    discover_cap: int = DEFAULT_DISCOVER_CAP,
 ) -> DataFrame:
-    """Build the extraction DataFrame (with default routing='discover', one
-    tiny id-discovery job runs while the mega leg is planned;
-    routing='cost' is fully lazy) — the single-action union of
+    """Build the extraction DataFrame (one tiny id-discovery job runs while
+    the mega leg is planned) — the single-action union of
     :func:`plan_extraction_legs`. Prefer :func:`run_extraction_concurrent`
     when you control the action (see run_job): in
     the union plan the DAGScheduler cannot launch the result stage (which
@@ -162,9 +133,6 @@ def plan_extraction(
         num_partitions=num_partitions,
         mega_cost_threshold=mega_cost_threshold,
         tables_per_chunk=tables_per_chunk,
-        repartition_normal=repartition_normal,
-        routing=routing,
-        discover_cap=discover_cap,
     )
     if mega_out is None:
         return normal_out
@@ -178,41 +146,27 @@ def plan_extraction_legs(
     num_partitions: int | None = None,
     mega_cost_threshold: int = DEFAULT_MEGA_COST,
     tables_per_chunk: int = 64,
-    repartition_normal: str = "auto",
-    routing: str = "discover",
-    discover_cap: int = DEFAULT_DISCOVER_CAP,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Build the two extraction legs as INDEPENDENT lazy DataFrames.
 
     Returns ``(normal_out, mega_out)``; ``mega_out`` is None in single-table
-    mode (no mega splitting). The legs share no shuffle dependency, so a
-    caller that runs one action per leg from two driver threads (see
-    :func:`run_concurrent`) gets them scheduled as concurrent jobs: the mega
-    leg's scan#2 + chunk stage fills task slots the pass-1 stage leaves idle
-    in its straggler tail instead of barriering in front of it. Measured on
-    the sf0.1 bench corpus (pinned local[32]): union plan 7.0 s vs
-    concurrent legs 5.7 s; at local[8] both ~15.4 s (saturated cores — the
-    overlap is free capacity only the wide configuration has), which is
-    exactly the shape the N→4N scaling rule rewards.
+    mode (no mega splitting) or when discovery finds no mega docs. The legs
+    share no shuffle dependency, so a caller that runs one action per leg
+    from two driver threads (see :func:`run_concurrent`) gets them
+    scheduled as concurrent jobs: the mega leg's scan#2 + chunk stage fills
+    task slots the pass-1 stage leaves idle in its straggler tail instead
+    of barriering in front of it. Measured on the sf0.1 bench corpus
+    (pinned local[32]): union plan 7.0 s vs concurrent legs 5.7 s; at
+    local[8] both ~15.4 s (saturated cores — the overlap is free capacity
+    only the wide configuration has).
 
-    ``repartition_normal``: whether to shuffle the normal-doc stream before
-    extraction. ``'never'``: extract directly on scan partitions — zero
-    all-data shuffle; correct whenever input files are well-sized, since
-    ``maxPartitionBytes`` balances splits by bytes and per-doc cost is
-    bounded by ``mega_cost_threshold``. ``'always'``: salted repartition
-    (pay one full shuffle to fix pathological file layouts). ``'auto'``
-    (default): shuffle only when the scan exposes too few partitions to
-    keep the cluster busy. The mega-doc chunk stream is ALWAYS salted —
-    that shuffle moves only the skewed tail, which is the north rule's
-    skew case without the 100 TB full-corpus shuffle.
-
-    ``routing``: how docs are split between the legs — ``'discover'``
-    (default; a LAZY span-count predicate routes the legs, and an
-    offsets-only id-discovery job — run only when the mega leg is planned —
-    prunes the mega scan via pushed-down ``doc_id IN``) or ``'cost'``
-    (round-2 distributed span-text-length filters, fully lazy).
-    See the routing comment in :func:`_prep_legs`; output rows are
-    identical under either.
+    The normal-doc stream is extracted directly on scan partitions — zero
+    all-data shuffle, since ``maxPartitionBytes`` balances splits by bytes
+    and per-doc cost is bounded by the mega threshold — unless the scan
+    exposes too few partitions to keep the cluster busy, when it takes a
+    salted repartition. The mega-doc chunk stream is ALWAYS salted — that
+    shuffle moves only the skewed tail, which is the north rule's skew case
+    without the 100 TB full-corpus shuffle.
     """
     prep = _prep_legs(
         documents,
@@ -220,9 +174,6 @@ def plan_extraction_legs(
         num_partitions=num_partitions,
         mega_cost_threshold=mega_cost_threshold,
         tables_per_chunk=tables_per_chunk,
-        repartition_normal=repartition_normal,
-        routing=routing,
-        discover_cap=discover_cap,
     )
     return _plan_normal_leg(prep), _plan_mega_leg(prep)
 
@@ -234,9 +185,6 @@ def _prep_legs(
     num_partitions: int | None = None,
     mega_cost_threshold: int = DEFAULT_MEGA_COST,
     tables_per_chunk: int = 64,
-    repartition_normal: str = "auto",
-    routing: str = "discover",
-    discover_cap: int = DEFAULT_DISCOVER_CAP,
 ) -> dict:
     """Shared, JOB-FREE leg preparation: source shuffling decision + the two
     complementary routing predicates. Everything here is lazy driver work so
@@ -248,31 +196,21 @@ def _prep_legs(
     whatever predicate lands a doc in whichever leg, pass 1 parses it in
     place (mega_policy='parse') and chunk mode turns it into chunk rows
     parsed downstream — output rows are identical either way
-    (tests/test_pipeline.py pins this). That freedom buys two scans' worth
-    of bytes back:
+    (tests/test_pipeline.py pins this against the Spark-free kernel).
 
-    - 'discover' (default): BOTH legs route on the lazy span-count proxy
-      (``size(spans.offset)`` — the int32 offset leaf only, no text bytes,
-      no Spark job, exact complements by construction). When the mega leg
-      is planned it additionally runs discover_mega_ids — the offsets-only
-      job — and, because the discovered id set IS the exact materialization
-      of its own routing predicate, swaps the filter for `doc_id IN (...)`,
-      which pushes into the Parquet reader and prunes at row-group
-      granularity: the "second full scan" becomes a read of just the row
-      groups holding mega docs. The normal leg never waits for that job —
-      its complement predicate is a per-row array-length check, cheaper
-      than the round-2 InSet probe over 64Ki id strings and free of the id
-      list's per-task plan-serialization weight. Ids over discover_cap:
-      the mega leg keeps the lazy predicate (cost-style full scan of the
-      tail, still exactly complementary). (At fleet scale a STORED
-      byte-length column subsumes discovery — module docstring — but the
-      discovery job IS the honest stand-in: it reads the narrowest leaf,
-      never bytes, never spans.)
-    - 'cost': the round-2 distributed routing — both legs filter on the
-      sort-free span-text length (order-independent concat length ==
-      len(reassembled html) under the corpus contract). No id list; both
-      scans read every text byte. Kept for callers that want routing on
-      actual byte cost rather than the span-count proxy.
+    BOTH legs route on the lazy span-count proxy (``size(spans.offset)`` —
+    the int32 offset leaf only, no text bytes, no Spark job, exact
+    complements by construction). When the mega leg is planned it
+    additionally runs discover_mega_ids — the offsets-only job — and,
+    because the discovered id set IS the exact materialization of its own
+    routing predicate, adds a `doc_id IN (...)` filter, which pushes into
+    the Parquet reader and prunes at row-group granularity: the "second
+    full scan" becomes a read of just the row groups holding mega docs. The
+    normal leg never waits for that job — its complement predicate is a
+    per-row array-length check, free of the id list's per-task
+    plan-serialization weight. Ids over DEFAULT_DISCOVER_CAP: the mega leg
+    keeps the lazy predicate (a full scan of the tail, still exactly
+    complementary).
 
     Plan construction is deliberately terse: every intermediate Dataset
     costs a full Catalyst analyzer pass over the whole subtree (measured
@@ -284,13 +222,9 @@ def _prep_legs(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    if repartition_normal == "always":
-        shuffle_source = True
-    elif repartition_normal == "never":
-        shuffle_source = False
-    else:  # auto: cheap structural check, no job triggered
-        scan_parts = documents.rdd.getNumPartitions()
-        shuffle_source = scan_parts < max(2, num_partitions // 2)
+    # cheap structural check, no job triggered
+    scan_parts = documents.rdd.getNumPartitions()
+    shuffle_source = scan_parts < max(2, num_partitions // 2)
 
     if not config.select_all_tables:
         # reference single-table semantics: selection applies to the whole
@@ -302,34 +236,22 @@ def _prep_legs(
 
     shuffled = salted(documents, num_partitions) if shuffle_source else documents
 
-    if routing == "discover":
-        # size() of a NULL array is NULL (or -1 under legacy sizeOfNull) —
-        # coalesce to 0 so a null-spans doc rides the normal leg instead of
-        # failing BOTH predicates; null doc_id likewise must not vanish
-        # (the mega leg's IN/shuffle keys on doc_id, so it takes only
-        # non-null ids — discover_mega_ids applies the same carve-out)
-        n_spans = F.coalesce(
-            F.size(F.col("spans").getField("offset")), F.lit(0)
-        )
-        hint = mega_span_count_hint(mega_cost_threshold)
-        normal_filter = F.col("doc_id").isNull() | (n_spans <= hint)
-        mega_filter = F.col("doc_id").isNotNull() & (n_spans > hint)
-    else:
-        route_len = doc_cost_col()
-        normal_filter = route_len <= mega_cost_threshold
-        mega_filter = route_len > mega_cost_threshold
-
+    # size() of a NULL array is NULL (or -1 under legacy sizeOfNull) —
+    # coalesce to 0 so a null-spans doc rides the normal leg instead of
+    # failing BOTH predicates; null doc_id likewise must not vanish (the
+    # mega leg's IN/shuffle keys on doc_id, so it takes only non-null ids —
+    # discover_mega_ids applies the same carve-out)
+    n_spans = F.coalesce(F.size(F.col("spans").getField("offset")), F.lit(0))
+    hint = mega_span_count_hint(mega_cost_threshold)
     return {
         "config": config,
         "documents": documents,
         "shuffled": shuffled,
         "num_partitions": num_partitions,
-        "mega_cost_threshold": mega_cost_threshold,
+        "span_count_hint": hint,
         "tables_per_chunk": tables_per_chunk,
-        "routing": routing,
-        "discover_cap": discover_cap,
-        "normal_filter": normal_filter,
-        "mega_filter": mega_filter,
+        "normal_filter": F.col("doc_id").isNull() | (n_spans <= hint),
+        "mega_filter": F.col("doc_id").isNotNull() & (n_spans > hint),
     }
 
 
@@ -351,15 +273,9 @@ def _plan_normal_leg(prep: dict) -> DataFrame:
         return extract_tables(
             prep["single_source"], prep["config"], spread_small_inputs=False
         )
-    return extract_tables(
+    return _extract_html(
         _reassembled(prep["shuffled"].where(prep["normal_filter"])),
         prep["config"],
-        mega_cost_threshold=prep["mega_cost_threshold"],
-        tables_per_chunk=prep["tables_per_chunk"],
-        mega_policy="parse",
-        spread_small_inputs=False,
-        pre_reassembled=True,
-        has_base=False,
     )
 
 
@@ -367,63 +283,53 @@ def _plan_mega_leg(prep: dict) -> DataFrame | None:
     """Pass 2 — the skewed tail only. Returns None when the leg is absent
     (single-table mode, or discovery finds no mega docs at all).
 
-    Discovery mode runs the offsets-only id job HERE — not on the shared
-    planning path — so a threaded caller overlaps it with pass 1's launch.
-    The discovered id list drives PRUNING only: the leg filters on
-    ``doc_id IN (ids) AND mega_filter``, so the scan row-group-prunes on
-    the pushed IN while the span-count conjunct keeps the row set the
-    exact complement of the normal leg even when doc_ids are NOT unique
-    (a small doc sharing a mega doc's id would otherwise ride both legs
-    and its tables would be emitted twice).
+    The offsets-only id job runs HERE — not on the shared planning path —
+    so a threaded caller overlaps it with pass 1's launch. The discovered
+    id list drives PRUNING only: the leg filters on ``doc_id IN (ids) AND
+    mega_filter``, so the scan row-group-prunes on the pushed IN while the
+    span-count conjunct keeps the row set the exact complement of the
+    normal leg even when doc_ids are NOT unique (a small doc sharing a mega
+    doc's id would otherwise ride both legs and its tables would be emitted
+    twice).
 
-    The leg: a second PRUNED scan (discovery: row-group-pruned by the
-    pushed doc_id IN filter; fallback/cost: reads the corpus but keeps just
-    the tail), split into chunk rows by a linear boundary scan, salted so
-    one doc's chunks spread across the cluster, then extracted with global
-    table ordinals. The shuffle here moves mega-doc bytes only — there is
-    NO full-corpus shuffle anywhere in the plan."""
+    The leg: a second PRUNED scan (row-group-pruned by the pushed doc_id IN
+    filter; over the cap it reads the corpus but keeps just the tail),
+    split into chunk rows by a linear boundary scan, salted so one doc's
+    chunks spread across the cluster, then extracted with global table
+    ordinals. The shuffle here moves mega-doc bytes only — there is NO
+    full-corpus shuffle anywhere in the plan."""
     if "single_source" in prep:
         return None
     shuffled = prep["shuffled"]
     num_partitions = prep["num_partitions"]
-    mega_source = None
-    if prep["routing"] == "discover":
-        mega_ids = discover_mega_ids(
-            prep["documents"],
-            span_count_hint=mega_span_count_hint(prep["mega_cost_threshold"]),
-            cap=prep["discover_cap"],
-        )
-        if mega_ids is not None:
-            if not mega_ids:
-                # no skew tail at all: the normal leg's complement predicate
-                # already admits every doc, so the mega leg simply vanishes
-                return None
-            # The pruned scan inherits the corpus's partitioning (hundreds
-            # of tasks, nearly all empty after the IN filter) and the chunk
-            # kernel is a PYTHON stage — every empty partition still pays
-            # the worker task prologue. Compact to one partition per
-            # discovered doc first: this shuffle moves only the mega docs
-            # themselves, and the chunk split is per-doc serial anyway, so
-            # extra partitions buy nothing.
-            mega_source = shuffled.where(
-                F.col("doc_id").isin(mega_ids) & prep["mega_filter"]
-            ).repartition(
-                min(num_partitions, len(mega_ids)), F.xxhash64("doc_id")
-            )
-    if mega_source is None:
-        # cost routing, or discovery over cap: the lazy predicate scans the
-        # corpus but keeps just the tail — still the exact complement of
-        # the normal leg's filter
+    mega_ids = discover_mega_ids(
+        prep["documents"],
+        span_count_hint=prep["span_count_hint"],
+        cap=DEFAULT_DISCOVER_CAP,
+    )
+    if mega_ids is None:
+        # over the cap: the lazy predicate scans the corpus but keeps just
+        # the tail — still the exact complement of the normal leg's filter
         mega_source = shuffled.where(prep["mega_filter"])
-    chunks = extract_tables(
+    elif not mega_ids:
+        # no skew tail at all: the normal leg's complement predicate
+        # already admits every doc, so the mega leg simply vanishes
+        return None
+    else:
+        # The pruned scan inherits the corpus's partitioning (hundreds of
+        # tasks, nearly all empty after the IN filter) and the chunk kernel
+        # is a PYTHON stage — every empty partition still pays the worker
+        # task prologue. Compact to one partition per discovered doc first:
+        # this shuffle moves only the mega docs themselves, and the chunk
+        # split is per-doc serial anyway, so extra partitions buy nothing.
+        mega_source = shuffled.where(
+            F.col("doc_id").isin(mega_ids) & prep["mega_filter"]
+        ).repartition(min(num_partitions, len(mega_ids)), F.xxhash64("doc_id"))
+    chunks = _extract_html(
         _reassembled(mega_source),
         prep["config"],
-        mega_cost_threshold=prep["mega_cost_threshold"],
         tables_per_chunk=prep["tables_per_chunk"],
         mega_policy="chunk",
-        spread_small_inputs=False,
-        pre_reassembled=True,
-        has_base=False,
     )
     # chunk mode emits ONLY status='chunk' rows (extract.py documents the
     # invariant at the emit site: an unsplittable doc becomes one whole-doc
@@ -438,13 +344,7 @@ def _plan_mega_leg(prep: dict) -> DataFrame | None:
         F.coalesce(F.element_at("spans", 1)["text"], F.lit("")).alias("html"),
         F.col("table_idx").alias("table_idx_base"),
     )
-    return extract_tables(
-        salted_chunks(chunk_rows, num_partitions),
-        prep["config"],
-        spread_small_inputs=False,
-        pre_reassembled=True,
-        has_base=True,
-    )
+    return _extract_html(salted_chunks(chunk_rows, num_partitions), prep["config"])
 
 
 def run_extraction_concurrent(

@@ -27,29 +27,33 @@ def get_spark(
     shuffle_partitions: int | None = None,
     arrow_batch: int = DEFAULT_ARROW_BATCH,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
+    """The one session builder, shared by tests, bench and the deployed job.
+
+    Under spark-submit (``PYSPARK_GATEWAY_PORT`` set, no explicit
+    ``master``) the master is left to spark-submit's ``--master`` and the
+    session takes the cluster branch: no local-only confs, no fastdaemon."""
+    if not master and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     # SPARK_GRAFT_CPUS pins the LOCAL core count; it must never demote a
     # real cluster master to local mode
     if cpus and master == "local[*]":
         master = f"local[{cpus}]"
     threads = None
-    if master.startswith("local["):
+    if master and master.startswith("local["):
         # match the core count in local mode; 'local[N,maxFailures]' and
         # 'local[*]' are both legal master strings
         inner = master[master.find("[") + 1 : master.find("]")]
         t = inner.split(",")[0]
         threads = 32 if t == "*" else max(1, int(t))
-    if shuffle_partitions is None:
-        if threads is not None:
-            shuffle_partitions = max(8, threads)
-        else:
-            # cluster masters: leave Spark's own default / spark-submit conf
-            shuffle_partitions = None
+    # cluster masters: leave Spark's own default / spark-submit conf
+    if shuffle_partitions is None and threads is not None:
+        shuffle_partitions = max(8, threads)
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # FAIR between on-the-fly pools; FIFO within each (no alloc file).
         # Needed by the concurrent extraction legs: AQE materializes every
@@ -81,12 +85,8 @@ def get_spark(
         # totalBytes/4m, never into thousands of micro-tasks
         .config("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (serial driver cost per stage); SPARK_GRAFT_UI=1
-        # turns it on for stage-level profiling (scripts/profile_serial.py)
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # UI off: it costs serial driver time per stage
+        .config("spark.ui.enabled", "false")
     )
     if shuffle_partitions is not None:
         builder = builder.config(

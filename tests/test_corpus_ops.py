@@ -808,7 +808,7 @@ def test_job_cli_corpus_mode(spark, tmp_path, monkeypatch):
     df = _span_corpus(spark, 6)
     src = str(tmp_path / "in.parquet")
     df.write.parquet(src)
-    monkeypatch.setattr(job, "build_session", lambda app="x": spark)
+    monkeypatch.setattr(job, "get_spark", lambda app="x": spark)
     manifest = job.main([
         "--input", src, "--output", str(tmp_path / "out"),
         "--mode", "corpus",

@@ -14,6 +14,7 @@ import math
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from html_table_spark.operators import langid
 
@@ -83,6 +84,20 @@ def test_predict_held_out_and_score_schema(spark):
     assert isinstance(rows[100]["score"], float)
     df = langid.langid_predict(held, model)
     assert [f.name for f in df.schema.fields] == ["doc_id", "pred_lang", "score"]
+
+
+def test_predict_keeps_string_doc_ids(spark):
+    """The output id column takes the input's type: the canonical corpus
+    and WARC-derived documents carry string ids."""
+    model = langid.train_langid_model(_toy_corpus(spark), buckets=256, ngram=3)
+    held = spark.createDataFrame(
+        [("doc-a", "the bird sat on a dog"), ("doc-b", "le tapis est sur la table")],
+        "doc_id string, text string",
+    )
+    df = langid.langid_predict(held, model)
+    assert df.schema["doc_id"].dataType == T.StringType()
+    rows = {r["doc_id"]: r["pred_lang"] for r in df.collect()}
+    assert rows == {"doc-a": "en", "doc-b": "fr"}
 
 
 def test_trainer_deterministic_across_partitionings(spark):

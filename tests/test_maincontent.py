@@ -261,7 +261,7 @@ def test_job_cli_maincontent_mode(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "in.parquet")
     df.write.parquet(src)
     # reuse the live test session instead of building a fresh one
-    monkeypatch.setattr(job, "build_session", lambda app="x": spark)
+    monkeypatch.setattr(job, "get_spark", lambda app="x": spark)
     manifest = job.main([
         "--input", src, "--output", str(tmp_path / "out"),
         "--mode", "maincontent",

@@ -6,13 +6,11 @@ from pyspark.sql import functions as F
 
 from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import synthesize_documents
-from html_table_spark.plans.pipeline import (
-    plan_extraction,
-    run_job,
-    with_doc_cost,
-)
+from html_table_spark.plans.pipeline import plan_extraction, run_job
+from html_table_spark.semantics import parse_document
 from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
 from html_table_spark.sources.sinks import SnapshotSink
+from html_table_spark.spans import doc_spans_to_html
 
 
 def _corpus_df(spark, **kwargs):
@@ -20,16 +18,14 @@ def _corpus_df(spark, **kwargs):
     return spark.createDataFrame(rows, DOCUMENTS_SCHEMA), rows
 
 
-def test_doc_cost_is_jvm_side(spark):
-    df, rows = _corpus_df(spark, n_docs=10, seed=3)
-    costed = with_doc_cost(df)
-    # no Python stage in the plan: the cost column is a JVM aggregate
-    plan = costed._jdf.queryExecution().executedPlan().toString()
-    assert "mapInPandas" not in plan and "Python" not in plan
-    got = {r.doc_id: r.doc_cost for r in costed.collect()}
-    for row in rows:
-        expected = sum(len(s["text"] or "") for s in row["spans"])
-        assert got[row["doc_id"]] == expected
+def _kernel_rows(rows, config):
+    """(doc_id, table_idx, status, caption, n_cells) per table, from the
+    Spark-free kernel — the oracle for every routing choice."""
+    return sorted(
+        (row["doc_id"], t.table_idx, t.status, t.caption, t.n_cells)
+        for row in rows
+        for t in parse_document(doc_spans_to_html(row["spans"]), config)
+    )
 
 
 def test_plan_extraction_with_mega(spark):
@@ -203,21 +199,19 @@ def test_run_job_leg_layout_readable(spark, tmp_path):
     assert committed.filter("doc_id = 'mega000'").count() == 60
 
 
-def test_discovery_routing_equals_cost_routing(spark):
-    """Leg routing is a performance split, not a correctness boundary:
-    'discover' (offsets-only id discovery + pushed doc_id IN) and 'cost'
-    (distributed span-text-length filters) must extract identical rows."""
-    df, _ = _corpus_df(spark, n_docs=25, seed=21, mega_docs=2, mega_tables=80)
+def test_discovery_routing_equals_kernel(spark):
+    """Leg routing is a performance split, not a correctness boundary: the
+    discovery-routed plan (offsets-only id discovery + pushed doc_id IN,
+    chunked mega leg) must extract the rows the whole-doc kernel does."""
+    df, rows = _corpus_df(spark, n_docs=25, seed=21, mega_docs=2, mega_tables=80)
     config = ParserConfig().all_tables()
     kwargs = dict(
         num_partitions=8, mega_cost_threshold=16 * 1024, tables_per_chunk=16
     )
     cols = ["doc_id", "table_idx", "status", "caption", "n_cells"]
-    a = sorted(map(tuple, plan_extraction(
-        df, config, routing="discover", **kwargs).select(*cols).collect()))
-    b = sorted(map(tuple, plan_extraction(
-        df, config, routing="cost", **kwargs).select(*cols).collect()))
-    assert a == b and len(a) > 0
+    got = sorted(map(tuple, plan_extraction(df, config, **kwargs)
+                     .filter("table_idx >= 0").select(*cols).collect()))
+    assert got == _kernel_rows(rows, config) and len(got) > 0
 
 
 def test_discovery_proxy_miss_byte_heavy_doc_not_dropped(spark):
@@ -250,7 +244,6 @@ def test_discovery_proxy_miss_byte_heavy_doc_not_dropped(spark):
     out = plan_extraction(
         docs, ParserConfig().all_tables(),
         num_partitions=4, mega_cost_threshold=2048, tables_per_chunk=8,
-        routing="discover",
     ).filter("table_idx >= 0")
     rows = {(r.doc_id, r.table_idx): r for r in out.collect()}
     assert ("slim-mega", 0) in rows, "byte-heavy proxy miss was dropped"
@@ -297,7 +290,6 @@ def test_discovery_null_doc_id_rides_normal_leg(spark):
     out = plan_extraction(
         docs, ParserConfig().all_tables(),
         num_partitions=4, mega_cost_threshold=256, tables_per_chunk=8,
-        routing="discover",
     ).filter("table_idx >= 0")
     rows = out.collect()
     null_rows = [r for r in rows if r.doc_id is None]
@@ -332,7 +324,6 @@ def test_discovery_duplicate_doc_id_extracts_each_row_once(spark):
     out = plan_extraction(
         docs, ParserConfig().all_tables(),
         num_partitions=4, mega_cost_threshold=256, tables_per_chunk=8,
-        routing="discover",
     ).filter("table_idx >= 0")
     collected = out.collect()
     cells = [s.text for r in collected for s in r.spans]
@@ -343,22 +334,22 @@ def test_discovery_duplicate_doc_id_extracts_each_row_once(spark):
         assert cells.count(f"big{i}") == 1
 
 
-def test_discovery_cap_falls_back_to_cost_routing(spark):
-    """More candidates than discover_cap: discover_mega_ids returns None and
-    the planner falls back to distributed cost routing — same rows out."""
+def test_discovery_cap_falls_back_to_lazy_filter(spark, monkeypatch):
+    """More candidates than DEFAULT_DISCOVER_CAP: discover_mega_ids returns
+    None and the mega leg keeps its lazy span-count filter — the same rows
+    as the whole-doc kernel."""
+    from html_table_spark.plans import pipeline
     from html_table_spark.plans.pipeline import discover_mega_ids
 
-    df, _ = _corpus_df(spark, n_docs=10, seed=23, mega_docs=3, mega_tables=60)
+    df, rows = _corpus_df(spark, n_docs=10, seed=23, mega_docs=3, mega_tables=60)
     ids = discover_mega_ids(df, span_count_hint=8, cap=2)
     assert ids is None  # 3 candidates > cap 2
+    monkeypatch.setattr(pipeline, "DEFAULT_DISCOVER_CAP", 2)
     config = ParserConfig().all_tables()
     kwargs = dict(
         num_partitions=4, mega_cost_threshold=4096, tables_per_chunk=8
     )
-    cols = ["doc_id", "table_idx", "status"]
-    capped = sorted(map(tuple, plan_extraction(
-        df, config, routing="discover", discover_cap=2, **kwargs
-    ).select(*cols).collect()))
-    cost = sorted(map(tuple, plan_extraction(
-        df, config, routing="cost", **kwargs).select(*cols).collect()))
-    assert capped == cost and len(capped) > 0
+    cols = ["doc_id", "table_idx", "status", "caption", "n_cells"]
+    capped = sorted(map(tuple, plan_extraction(df, config, **kwargs)
+                        .filter("table_idx >= 0").select(*cols).collect()))
+    assert capped == _kernel_rows(rows, config) and len(capped) > 0
