@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
-Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on) and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -9,24 +10,14 @@ The extraction corpus (interleaved text+media spans, BASELINE.json input
 shape) is synthesized deterministically from seed 42 — sized by sf — and
 cached under /tmp so repeated runs measure compute, not corpus generation.
 
-Scaling mode (north rule evidence: ≥0.8 efficiency from N→4N):
-
-    python bench.py --scaling
-
-runs the SAME extraction job at local[8] and local[32] in fresh JVMs
-(subprocesses), reports docs/sec at both plus the efficiency, and rewrites
-BENCH/BASELINE.md. (Sandbox proxy for N vs 4N executors — no real cluster
-here; the job itself ships via spark-submit --py-files unchanged.)
-
-Internal flag: --extract-only --cores=K prints one JSON line with just the
-extraction timing (used by --scaling subprocesses).
+The extraction job's own benchmark, end to end and per layer, is
+``perfbench/run.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -34,7 +25,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 # extraction corpus size by sf tier (docs, mega_docs, mega_tables) — sized
 # so steady-state kernel work dominates scheduler + Python-worker overheads
@@ -43,10 +34,6 @@ CORPUS_BY_SF = {
     "0.001": (600, 1, 200),
     "0.01": (8000, 1, 800),
     "0.1": (96000, 4, 2000),
-    # 10x sf0.1 for the wall-clock-linearity evidence run
-    # (scripts/sf1_run.py): 10x the bulk docs AND 10x the mega-doc count,
-    # same per-mega skew shape
-    "1.0": (960000, 40, 2000),
 }
 
 HEADLINE = [
@@ -83,13 +70,12 @@ def _sf_num(sf: str):
 def corpus_path(sf: str) -> str:
     n_docs, mega, mega_tables = CORPUS_BY_SF.get(sf, CORPUS_BY_SF["0.01"])
     # 256 shards (path-versioned): file count bounds scan parallelism, and
-    # at 64 shards the 32-core leg ran the pass-1 stage in TWO waves — any
+    # at 64 shards a 32-core run did the pass-1 stage in TWO waves — any
     # task-duration variance idled cores for up to half the stage (measured
-    # par_eff 0.83). 256 shards ≈ 8 waves at 32 cores; the 8-core leg was
-    # already wave-rich at 64. At fleet scale the corpus is inherently
-    # many-filed; a benchmark corpus that under-shards would measure the
-    # file layout, not the engine.
-    n_shards = int(os.environ.get("SPARK_GRAFT_SHARDS", "256"))
+    # par_eff 0.83). At fleet scale the corpus is inherently many-filed; a
+    # benchmark corpus that under-shards would measure the file layout, not
+    # the engine.
+    n_shards = 256
     path = (
         f"/tmp/spark_graft_bench/corpus_sf{sf}_{n_docs}_{mega}x{mega_tables}"
         f"_s{n_shards}"
@@ -104,11 +90,11 @@ def corpus_path(sf: str) -> str:
     return path
 
 
-def run_extraction_bench(spark, sf: str, warm: bool = True) -> dict:
-    """Steady-state throughput: the first full run warms the Python worker
-    pool (32 simultaneous pandas imports otherwise dominate a small-corpus
+def run_extraction_bench(spark, sf: str) -> dict:
+    """Steady-state throughput: warm-up runs warm the Python worker pool
+    (one pandas import per worker otherwise dominates a small-corpus
     measurement — a one-time per-executor cost that is noise at fleet
-    scale), the second run is timed."""
+    scale), then the best of three runs is timed."""
     from html_table_spark.config import ParserConfig
     from html_table_spark.plans.pipeline import run_extraction_concurrent
     from html_table_spark.sources.documents import read_documents
@@ -123,7 +109,7 @@ def run_extraction_bench(spark, sf: str, warm: bool = True) -> dict:
         # its own thread, so pass 1's scan tasks launch while the mega
         # thread is still running id discovery + chunk-plan analysis —
         # none of that driver work sits serially in front of the job;
-        # total tables = sum of the legs (== the union plan's count)
+        # total tables = sum of the legs
         counts = run_extraction_concurrent(
             docs,
             config,
@@ -131,25 +117,22 @@ def run_extraction_bench(spark, sf: str, warm: bool = True) -> dict:
         )
         return sum(v for v in counts.values() if v is not None)
 
-    if warm:
-        # Warm until the run wall plateaus, not a fixed once: C2 compile
-        # time is WALL-time bound, so after one warm run a ~4 s local[32]
-        # job is still JIT-compiling through its timed runs while a ~23 s
-        # local[4] job is long plateaued — a systematic bias against
-        # exactly the wide legs the N→4N rule measures (observed pinned
-        # local[32] iteration walls: 13.0, 6.7, 5.4, then flat). Stop when
-        # a run improves <10% over the previous one (or at a 30 s budget);
-        # every leg is then timed at steady state, which is the regime a
-        # fleet-scale hours-long job lives in.
-        budget = time.monotonic() + 30.0
-        prev = float("inf")
-        while True:
-            t0 = time.monotonic()
-            extract_once()
-            w = time.monotonic() - t0
-            if w > prev * 0.9 or time.monotonic() > budget:
-                break
-            prev = w
+    # Warm until the run wall plateaus, not a fixed once: C2 compile time
+    # is WALL-time bound, so after one warm run a short job is still
+    # JIT-compiling through its timed runs while a long one is plateaued
+    # (observed local[32] iteration walls: 13.0, 6.7, 5.4, then flat). Stop
+    # when a run improves <10% over the previous one (or at a 30 s budget);
+    # the job is then timed at steady state, which is the regime a
+    # fleet-scale hours-long job lives in.
+    budget = time.monotonic() + 30.0
+    prev = float("inf")
+    while True:
+        t0 = time.monotonic()
+        extract_once()
+        w = time.monotonic() - t0
+        if w > prev * 0.9 or time.monotonic() > budget:
+            break
+        prev = w
     # best-of-3 damps scheduler + sandbox noise (observed ±20% wall jitter)
     wall = float("inf")
     for _ in range(3):
@@ -271,465 +254,5 @@ def main_bench() -> None:
     spark.stop()
 
 
-def main_extract_only(cores: int) -> None:
-    sf = _sf_of(SF_DIR)
-    spark = _get_spark(cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    result = run_extraction_bench(spark, sf, warm=True)
-    result["cores"] = cores
-    print(json.dumps(result))
-    spark.stop()
-
-
-SCALING_PAIRS = ((4, 16), (8, 32))
-
-
-# the files whose CONTENT determines extraction throughput — scaling
-# evidence may only merge across sweeps where all of these are identical
-# (doc/test-only commits don't reset honest evidence; any kernel, plan,
-# session-conf or bench-harness change does)
-_PERF_FILES = (
-    "bench.py",
-    "html_table_spark/session.py",
-    "html_table_spark/__init__.py",
-    "html_table_spark/fastdaemon.py",
-    "html_table_spark/htmldom.py",
-    "html_table_spark/semantics.py",
-    # xpath.py IS measured code: semantics._extract_table evaluates the
-    # compiled header/caption expressions ('(//table/thead/tr)[1]',
-    # '(//caption)[1]') once per extracted table, so the fast-path
-    # automaton in xpath.py runs on the hot path of every leg. A brief
-    # round-3 attempt to drop it from this list rested on the false
-    # premise that only the table SELECTOR touches xpath — reviewed and
-    # reverted; grammar-only commits do reset converged evidence, which
-    # is the honest cost of not merging bests across differing code.
-    "html_table_spark/xpath.py",
-    "html_table_spark/config.py",
-    "html_table_spark/corpus.py",
-    "html_table_spark/operators/extract.py",
-    "html_table_spark/plans/pipeline.py",
-    "html_table_spark/sources/documents.py",
-)
-
-
-def _code_rev() -> str:
-    """Content hash of the extraction-relevant sources: the merge key for
-    scaling evidence (round-2 lesson, commit d70ddb9 — never merge bests
-    across builds whose measured code differs)."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for rel in _PERF_FILES:
-        p = os.path.join(REPO, rel)
-        h.update(rel.encode())
-        try:
-            with open(p, "rb") as fh:
-                h.update(fh.read())
-        except OSError:
-            h.update(b"<missing>")
-    return h.hexdigest()[:16]
-
-
-def _cpu_busy_fraction(window_s: float = 3.0) -> float:
-    """Fraction of total CPU time spent non-idle over a short window,
-    from /proc/stat deltas — an INSTANTANEOUS quiet signal, unlike the
-    1-min loadavg whose exponential decay reports a box as 'loaded' for
-    minutes after the last heavy job exits."""
-
-    def snap() -> tuple[int, int]:
-        with open("/proc/stat") as fh:
-            parts = [int(x) for x in fh.readline().split()[1:]]
-        idle = parts[3] + parts[4]  # idle + iowait
-        return sum(parts), idle
-
-    t0, i0 = snap()
-    time.sleep(window_s)
-    t1, i1 = snap()
-    total = t1 - t0
-    return 1.0 - (i1 - i0) / total if total > 0 else 0.0
-
-
-def _wait_for_quiet(max_wait_s: int = 600, threshold: float = 0.10) -> None:
-    """Scaling runs are worthless under background load (a loaded box
-    penalizes exactly the high-core configs and can swing the efficiency
-    ratio by 2×); wait for present CPU use to settle before each pinned
-    measurement. Uses the measured busy fraction, not loadavg: on this
-    microVM the loadavg floats near 2-3 for minutes after a burst with
-    ZERO runnable tasks, which burned the full max_wait per leg while the
-    box was in fact idle."""
-    deadline = time.monotonic() + max_wait_s
-    while time.monotonic() < deadline:
-        if _cpu_busy_fraction() < threshold:
-            return
-        time.sleep(10)
-
-
-def record_and_merge_sweep(
-    sf: str, results: dict[int, dict], partial: bool = False
-) -> tuple[dict, dict]:
-    """Append a raw sweep to SCALING_RUNS.jsonl and ratchet it into
-    scaling_best.json, regenerating BASELINE.md once every pair leg exists.
-
-    THE one implementation of the merge discipline — `main_scaling` (full
-    sweeps) and `scripts/converge_legs.py` (partial, focused sweeps) both
-    call it, so the rules can never diverge between the two writers. Merge
-    ONLY same-revision same-corpus legs: mixing bests across code revisions
-    manufactures a sweep no single build ever ran (round-2 lesson, commit
-    d70ddb9), and mixing scale factors merges throughput over different
-    corpora — either way the evidence starts from scratch. Returns
-    ``(merged, effs)`` with effs computed for every SCALING_PAIRS pair
-    whose both legs are present."""
-    bench_dir = os.path.join(REPO, "BENCH")
-    os.makedirs(bench_dir, exist_ok=True)
-    rec: dict = {"ts": time.time(), "sf": sf}
-    if partial:
-        rec["partial"] = True
-    rec["results"] = results
-    with open(os.path.join(bench_dir, "SCALING_RUNS.jsonl"), "a") as fh:
-        fh.write(json.dumps(rec) + "\n")
-    best_path = os.path.join(bench_dir, "scaling_best.json")
-    rev = _code_rev()
-    merged = {}
-    if os.path.exists(best_path):
-        with open(best_path) as fh:
-            prev = json.load(fh)
-        if prev.get("rev") == rev and prev.get("sf") == sf:
-            merged = {int(k): v for k, v in prev.get("results", {}).items()}
-    for cores, r in results.items():
-        if cores not in merged or r["docs_per_sec"] > merged[cores]["docs_per_sec"]:
-            merged[cores] = r
-    with open(best_path, "w") as fh:
-        json.dump(
-            {
-                "rev": rev,
-                "sf": sf,
-                "results": {str(k): v for k, v in sorted(merged.items())},
-            },
-            fh,
-            indent=1,
-        )
-    effs = {}
-    for n_cores, n4_cores in SCALING_PAIRS:
-        if n_cores in merged and n4_cores in merged:
-            effs[(n_cores, n4_cores)] = round(
-                merged[n4_cores]["docs_per_sec"]
-                / (4.0 * merged[n_cores]["docs_per_sec"]),
-                3,
-            )
-    if len(effs) == len(SCALING_PAIRS):
-        _write_bench_md(sf, merged, effs)
-    return merged, effs
-
-
-def main_scaling() -> None:
-    sf = _sf_of(SF_DIR)
-    corpus_path(sf)  # pre-materialize so all runs share the cached corpus
-    # best-of-A per config: periodic background activity on the shared box
-    # (driver snapshots fire every ~15 min, and a full scaling sweep takes
-    # longer than that) always lands inside SOME leg and can halve that
-    # leg's throughput; taking each config's best over A attempts applies
-    # the repo-wide best-of-N minima policy per leg instead of hoping one
-    # whole sweep stays clean
-    attempts = int(os.environ.get("SPARK_GRAFT_SCALING_ATTEMPTS", "2"))
-    results = {}
-    for cores in sorted({c for pair in SCALING_PAIRS for c in pair}):
-        best = None
-        for _ in range(attempts):
-            _wait_for_quiet()
-            # taskset pins the WHOLE process tree (JVM + Python workers) to
-            # `cores` CPUs — otherwise "local[8]" still enjoys all 32 cores
-            # for GC/shuffle/Arrow threads and N-vs-4N is dishonest
-            out = subprocess.run(
-                [
-                    "taskset", "-c", f"0-{cores - 1}",
-                    sys.executable, __file__, "--extract-only", f"--cores={cores}",
-                ],
-                capture_output=True,
-                text=True,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-            )
-            lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-            if out.returncode != 0 or not lines:
-                sys.stderr.write(out.stderr[-4000:])
-                raise RuntimeError(
-                    f"scaling subprocess (cores={cores}) failed "
-                    f"rc={out.returncode}; stderr above"
-                )
-            r = json.loads(lines[-1])
-            if best is None or r["docs_per_sec"] > best["docs_per_sec"]:
-                best = r
-        results[cores] = best
-    results, effs = record_and_merge_sweep(sf, results)
-    queries = {}
-    for cores, r in results.items():
-        queries[f"extract_local{cores}_docs_per_sec"] = r["docs_per_sec"]
-        queries[f"extract_local{cores}_tables_per_sec"] = r["tables_per_sec"]
-    for (a, b), e in effs.items():
-        queries[f"efficiency_{a}_to_{b}"] = e
-    headline = effs[SCALING_PAIRS[0]]
-    report = {
-        "metric": f"scaling_efficiency_{SCALING_PAIRS[0][0]}_to_{SCALING_PAIRS[0][1]}",
-        "value": headline,
-        "unit": "ratio",
-        "queries": queries,
-        "sf": _sf_num(sf),
-    }
-    print(json.dumps(report))
-
-
-def _eff_summary(effs: dict) -> str:
-    """One data-driven PASS/BELOW line per pair — the narrative must never
-    assert a number the table contradicts (round-3 review finding)."""
-    parts = []
-    for (a, b), e in sorted(effs.items()):
-        verdict = "PASS" if e >= 0.8 else "BELOW target"
-        parts.append(f"**{a}→{b} = {e} ({verdict})**")
-    return "Current merged bests: " + " · ".join(parts) + "."
-
-
-def _write_bench_md(sf: str, results: dict, effs: dict) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    any_r = next(iter(results.values()))
-    rows = "\n".join(
-        f"| local[{c}] | {r['docs_per_sec']} | {r['tables_per_sec']} | {r['wall_sec']} |"
-        for c, r in sorted(results.items())
-    )
-    eff_rows = "\n".join(
-        f"| {a} → {b} | **{e}** |" for (a, b), e in sorted(effs.items())
-    )
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as fh:
-        fh.write(
-            f"""# BENCH — measured extraction throughput + scaling efficiency
-
-Same job, same deterministic corpus (seed 42, sf{sf}: {any_r['docs']} docs
-incl. mega-doc skew fixtures), several parallelism levels in fresh JVMs —
-the sandbox proxy for N vs 4N executors (no real cluster available; driver
-instruction). Each run is pinned with `taskset` to exactly that many CPUs
-(JVM + Python workers together), so "local[8]" is an honest 8-CPU machine,
-not 8 task threads enjoying all 32 cores.
-
-| parallelism (pinned CPUs) | docs/sec | tables/sec | wall (s) |
-|---|---|---|---|
-{rows}
-
-| N → 4N | scaling efficiency |
-|---|---|
-{eff_rows}
-
-Target ≥ 0.8 (BASELINE.json). Efficiency = docs/sec(4N) / (4 × docs/sec(N)).
-
-{_eff_summary(effs)}
-
-Reading the two pairs (round-2 analysis; every number same-code-revision,
-evidence in BENCH/SCALING_RUNS.jsonl):
-
-- **4 → 16** is the honest N→4N signal on this host: both legs sit
-  below the shared-bus saturation knee. It clears ≥0.8 on clean legs;
-  when the table above shows less, the per-config bests have not yet
-  converged for the current code revision (each sweep takes >15 min and
-  background box activity lands inside most sweeps — rerun
-  `python bench.py --scaling` and the merge ratchets up).
-- **8 → 32 sits at the single-box hardware ceiling**, not a plan defect.
-  Round 2's kernel fast path raised CPU-bound (low-core) throughput by
-  ~30%, which raises the denominator; the 32-core leg is capped by the
-  ONE shared memory bus all "executors" sit on (plus Arrow copy traffic,
-  which also rides that bus). Controls: (a) the retained Spark-free
-  control (`scripts/pool_control.py`, BENCH/POOL_RUNS.jsonl): a plain
-  multiprocessing pool running the identical Arrow extraction kernel
-  with no JVM/py4j/shuffle reaches 8→32 ≈ 0.81 on this box, and its
-  32-core AGGREGATE throughput (21.8k docs/s, 2026-08-18 run) is AT OR
-  BELOW Spark's own 32-core throughput — the round-2 "half the kernel
-  eaten by Arrow/IPC at 32 cores" gap is closed; what remains is the
-  bus. The ratio still reads low because Spark's 8-core leg BEATS the
-  bare pool's (JVM-side scan+reassembly the pool pays in Python), so
-  the denominator is larger for Spark than for any pure-Python control;
-  (b) raising partition counts (96 → 384 tasks) makes
-  the 32-core leg SLOWER (per-task overhead), ruling out stragglers;
-  (c) an earlier revision measured 0.44 here before a kernel allocation
-  diet — the ceiling tracks memory traffic, not scheduling. On a real
-  cluster each 4N-executor node brings its own memory buses and NICs —
-  the configuration the north rule actually targets — so the 4→16 pair
-  plus the pool control is the transferable evidence; the single-box
-  8→32 number is reported unvarnished for honesty.
-
-## Round-4 DIRECT memory-bandwidth control (settles the 8→32 question)
-
-The round-3 verdict asked for the missing direct control: a pure
-memory-bandwidth kernel with zero parse work, scheduling, IPC, or Python
-object churn, pinned to the same `0..P-1` core ranges `taskset` gives
-the Spark legs. `scripts/membw_control.py` runs numpy memcpy and
-STREAM-triad kernels in P single-core-pinned worker *processes* over
-64 MiB float64 buffers (far beyond L3), barrier-aligned 4 s windows,
-best-of-3 per leg (raw legs in `BENCH/MEMBW_RUNS.jsonl`, 2026-08-19):
-
-| pinned cores | copy GB/s | triad GB/s |
-|---|---|---|
-| 4 | 60.6 | 64.0 |
-| 8 | 99.5 | 101.4 |
-| 16 | 146.6 | 159.2 |
-| 32 | 172.2 | 169.7 |
-
-| N → 4N | copy eff | triad eff |
-|---|---|---|
-| 4 → 16 | 0.605 | 0.622 |
-| 8 → 32 | **0.433** | **0.419** |
-
-**Determination: the 8→32 north-rule miss is proven hardware.** The
-box's DRAM bandwidth saturates at ~170 GB/s by 16 cores; a kernel that
-does NOTHING but stream memory scales 8→32 at 0.42–0.43 — below the
-extraction pipeline's own 8→32 ratio and below the ~0.65 bar the
-round-3 decision rule set for declaring hardware. The extraction
-pipeline therefore *out-scales* pure streaming on this box (its working
-set is partially cache-resident and its kernel partially compute-bound),
-and no per-doc memory-traffic diet can lift a bandwidth-coupled workload
-to 0.8 on one socket when memcpy itself reaches 0.43. Per that decision
-rule, the **4→16 pair is the documented authoritative proxy** for the
-north rule's N→4N criterion: on a real 4N-executor cluster each node
-brings its own memory buses — precisely the resource this control shows
-binding. (Consistently, the control's own 4→16 ratio, ~0.61, is below
-the extraction pipeline's converged 4→16 — the pipeline is less
-bandwidth-bound than pure memcpy, so it scales better than the bus
-until the bus is the only thing left.)
-
-Round-3 change (concurrent extraction legs): in the round-2 union plan
-the DAGScheduler could not launch the result stage (which carries the
-bulk pass-1 scan tasks) until the mega leg's chunk map stage finished —
-a barrier whose cost only the wide configuration pays, because at low
-core counts the box is saturated either way. The two legs now run as
-concurrent jobs (run_extraction_concurrent, also the run_job write
-path). Pinned A/B on this corpus: local[32] 7.0 s → 5.7 s, while
-local[8] is unchanged (~15.4 s) — the overlap converts idle straggler-
-tail slots into chunk-stage work exactly where N→4N efficiency is
-measured. At fleet scale the same structure applies: the skewed-tail
-job runs beside the bulk job instead of gating it.
-
-Round-3 change (serial-path diet, per-leg self-planning): each leg now
-PLANS ITSELF inside its own thread — the normal leg's routing predicate
-is the lazy span-count complement (offsets only, no job), so pass 1's
-scan tasks launch while the mega thread is still running the
-offsets-only id-discovery job and analyzing the chunk plan. In the old
-shape that discovery job plus both legs' Catalyst analysis (~0.5 s of
-driver wall) sat serially in front of the first task — a fixed cost the
-N→4N ratio charges 4× harder against the wide leg.
-
-Run-to-run spread on this shared box is real and BIMODAL: background
-activity (driver snapshots fire every ~15 min, and one full sweep takes
->15 min) lands inside some leg of almost every sweep and can halve that
-leg's throughput (observed local[32]: 6.9k-19.0k docs/s across five
-same-code sweeps). Each row is therefore the best pinned measurement per
-config across recorded same-revision sweeps: per-sweep bests over
-SPARK_GRAFT_SCALING_ATTEMPTS attempts, merged via
-BENCH/scaling_best.json — keyed by a content hash of the
-extraction-relevant sources, so bests never mix across builds whose
-measured code differs; every raw sweep is appended to
-BENCH/SCALING_RUNS.jsonl for audit. Values above 1.0 would be noise
-penalizing the low-core runs, not true superlinearity.
-
-The measured job is the full plan as two CONCURRENT self-planning jobs:
-(leg 1) corpus scan → JVM-side span-count routing filter (mega-doc bytes
-never cross Arrow in pass 1) → Arrow extraction → count, beside (leg 2)
-offsets-only id discovery → a second scan row-group-pruned by the pushed
-doc_id IN filter → boundary-scan chunking → salted chunk shuffle →
-second extraction pass with global table ordinals → count; total = sum
-(equal to the union plan's count by construction, tests/test_pipeline.py).
-Steady-state (worker pool warmed, best-of-3 per leg pair). Reproduce
-with `python bench.py --scaling`.
-"""
-        )
-
-
-def main_skew() -> None:
-    """Evidence that the mega-doc split+salt plan matters: the same skewed
-    corpus (a few docs carrying thousands of tables) extracted (a) naively —
-    every doc parsed whole wherever it lands, so one task pins the stage —
-    and (b) with the two-pass split plan. Writes BENCH/SKEW.md."""
-    from html_table_spark.config import ParserConfig
-    from html_table_spark.corpus import synthesize_documents, write_corpus_dir
-    from html_table_spark.operators.extract import extract_tables
-    from html_table_spark.plans.pipeline import plan_extraction
-
-    path = "/tmp/spark_graft_bench/skew_corpus_4k_1x32000"
-    if not os.path.exists(path):
-        rows = synthesize_documents(
-            n_docs=4000, seed=7, mega_docs=1, mega_tables=32000
-        )
-        write_corpus_dir(rows, path, n_shards=64)
-    spark = _get_spark(CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(path)
-    config = ParserConfig().all_tables()
-
-    def timed(make_df) -> tuple[float, int]:
-        # takes a PLAN FACTORY, not a built plan: plan_extraction's
-        # discovery routing runs the id-discovery job at plan time, and
-        # run_job pays that on every production invocation — timing a
-        # pre-built plan would silently exclude it from the split side
-        # while the naive side carries its full cost
-        make_df().filter("table_idx >= 0").count()  # warm workers
-        best, n = float("inf"), 0
-        for _ in range(2):
-            t0 = time.monotonic()
-            n = make_df().filter("table_idx >= 0").count()
-            best = min(best, time.monotonic() - t0)
-        return best, n
-
-    naive_wall, naive_n = timed(
-        lambda: extract_tables(docs, config, spread_small_inputs=False)
-    )
-    planned_wall, planned_n = timed(lambda: plan_extraction(docs, config))
-    assert naive_n == planned_n, (naive_n, planned_n)
-    speedup = round(naive_wall / planned_wall, 2)
-    report = {
-        "metric": "skew_split_speedup",
-        "value": speedup,
-        "unit": "x",
-        "queries": {
-            "naive_wall_sec": round(naive_wall, 3),
-            "split_salted_wall_sec": round(planned_wall, 3),
-            "tables": planned_n,
-        },
-        "sf": "skew-4k+1x32000",
-    }
-    print(json.dumps(report))
-    with open(os.path.join(REPO, "BENCH", "SKEW.md"), "w") as fh:
-        fh.write(
-            f"""# BENCH — mega-document skew handling
-
-Corpus: 4000 normal docs + ONE mega-doc of 32000 tables (seed 7),
-local[{CPUS}]. The mega doc is ~32000 of {planned_n} tables but pins the naive stage:
-the one task that receives it parses it whole while the other
-{CPUS - 1} cores idle.
-
-| plan | wall (s) |
-|---|---|
-| naive (whole-doc everywhere, no split) | {naive_wall:.3f} |
-| two-pass split + salted chunk shuffle (plans/pipeline.py) | {planned_wall:.3f} |
-
-**Speedup {speedup}×** with identical output ({planned_n} tables both
-ways — asserted). Both sides are timed from a fresh plan per iteration,
-so the split side's cost INCLUDES the id-discovery job and Catalyst
-analysis that production `run_job` pays on every invocation — nothing is
-hoisted out of the measured loop. This is the north rule's skew case:
-AQE cannot split a skewed *UDF* stage, so the plan does it explicitly —
-pass 1 skips docs over the cost threshold via a length check, a pruned
-second scan boundary-splits only the mega tail into chunk rows, and a
-salted repartition spreads one doc's chunks across the cluster.
-Reproduce with `python bench.py --skew`.
-"""
-        )
-    spark.stop()
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        main_scaling()
-    elif "--skew" in sys.argv:
-        main_skew()
-    elif "--extract-only" in sys.argv:
-        cores = 8
-        for arg in sys.argv:
-            if arg.startswith("--cores="):
-                cores = int(arg.split("=")[1])
-        main_extract_only(cores)
-    else:
-        main_bench()
+    main_bench()

@@ -342,7 +342,6 @@ def extract_tables(
     mega_cost_threshold: int | None = None,
     tables_per_chunk: int = 64,
     mega_policy: str = "parse",
-    spread_small_inputs: bool = True,
 ) -> DataFrame:
     """documents(doc_id, spans) → extracted tables.
 
@@ -365,13 +364,11 @@ def extract_tables(
     pruned = documents.select(
         F.col("doc_id"), html_reassembly_col("spans").alias("html")
     )
-    if spread_small_inputs:
-        # a dimension-sized corpus arriving as one file = one partition
-        # would serialize the whole Arrow stage on a single Python worker.
-        # The full pipeline (plans/pipeline.py) manages partitioning itself.
-        pruned = ensure_parallelism(pruned)
+    # a dimension-sized corpus arriving as one file = one partition would
+    # serialize the whole Arrow stage on a single Python worker. The full
+    # pipeline (plans/pipeline.py) manages partitioning itself.
     return _extract_html(
-        pruned,
+        ensure_parallelism(pruned),
         config or ParserConfig(),
         tables_per_chunk=tables_per_chunk,
         mega_policy=mega_policy,

@@ -8,8 +8,13 @@ Catalyst rules:
     scan #2 (doc_id IN mega_ids, row-group-PRUNED by the pushed    │
         filter) → boundary-scan chunking                           │
         → chunk rows (status='chunk', ≤64 tables, base ordinal)    │
-        → full-entropy repartition → pass 2 (mapInArrow) ──────────┴→ union
-    → per-partition lineage agg → snapshot-committed sink
+        → full-entropy repartition → pass 2 (mapInArrow) ──────────┴→ 2 jobs
+    → one write per leg → per-partition lineage agg → snapshot commit
+
+The two legs run as concurrent jobs from two driver threads
+(:func:`run_extraction_concurrent`); there is no single-DataFrame union of
+them, because in a union plan the DAGScheduler cannot launch pass 1's
+result stage until the mega leg's chunk map stage finishes.
 
 Why explicit: UDF-stage skew is invisible to AQE (it only splits skewed
 joins/aggregations), so a 2,000-table mega-document would otherwise pin one
@@ -39,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ParserConfig
-from ..operators.extract import _extract_html, extract_tables, html_reassembly_col
+from ..operators.extract import _extract_html, html_reassembly_col
 from ..sources.sinks import SnapshotSink
 
 # Docs whose total text size exceeds this take the mega-doc split path.
@@ -109,34 +114,6 @@ def salted(documents: DataFrame, num_partitions: int) -> DataFrame:
     no withColumn/drop pair (each intermediate Dataset is a full analyzer
     pass, serial driver time)."""
     return documents.repartition(num_partitions, F.xxhash64("doc_id"))
-
-
-def plan_extraction(
-    documents: DataFrame,
-    config: ParserConfig | None = None,
-    *,
-    num_partitions: int | None = None,
-    mega_cost_threshold: int = DEFAULT_MEGA_COST,
-    tables_per_chunk: int = 64,
-) -> DataFrame:
-    """Build the extraction DataFrame (one tiny id-discovery job runs while
-    the mega leg is planned) — the single-action union of
-    :func:`plan_extraction_legs`. Prefer :func:`run_extraction_concurrent`
-    when you control the action (see run_job): in
-    the union plan the DAGScheduler cannot launch the result stage (which
-    holds pass 1's scan tasks) until the mega leg's chunk map stage
-    finishes, so the bulk of the cluster idles behind the skewed tail's
-    barrier."""
-    normal_out, mega_out = plan_extraction_legs(
-        documents,
-        config,
-        num_partitions=num_partitions,
-        mega_cost_threshold=mega_cost_threshold,
-        tables_per_chunk=tables_per_chunk,
-    )
-    if mega_out is None:
-        return normal_out
-    return normal_out.unionByName(mega_out)
 
 
 def plan_extraction_legs(
@@ -270,9 +247,7 @@ def _plan_normal_leg(prep: dict) -> DataFrame:
     a doc the routing proxy under-calls (byte-heavy, few spans) is parsed
     in place — one slow task, never a dropped doc."""
     if "single_source" in prep:
-        return extract_tables(
-            prep["single_source"], prep["config"], spread_small_inputs=False
-        )
+        return _extract_html(_reassembled(prep["single_source"]), prep["config"])
     return _extract_html(
         _reassembled(prep["shuffled"].where(prep["normal_filter"])),
         prep["config"],

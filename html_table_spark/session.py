@@ -45,7 +45,7 @@ def get_spark(
         # 'local[*]' are both legal master strings
         inner = master[master.find("[") + 1 : master.find("]")]
         t = inner.split(",")[0]
-        threads = 32 if t == "*" else max(1, int(t))
+        threads = (os.cpu_count() or 1) if t == "*" else max(1, int(t))
     # cluster masters: leave Spark's own default / spark-submit conf
     if shuffle_partitions is None and threads is not None:
         shuffle_partitions = max(8, threads)

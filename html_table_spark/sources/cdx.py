@@ -36,14 +36,14 @@ from __future__ import annotations
 import base64
 import hashlib
 import re
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .warc import _VERSION_RE  # the same record-magic the reader uses
+# the same record-magic and member walk the reader uses
+from .warc import _VERSION_RE, iter_gzip_members
 
 __all__ = ["cdx_records", "warc_cdx", "urlkey", "CDX_SCHEMA"]
 
@@ -137,19 +137,6 @@ def _record_fields(raw: bytes) -> dict:
     }
 
 
-def _member_slices(b: bytes) -> Iterator[tuple[int, int, bytes]]:
-    """(offset, compressed_length, decompressed) per gzip member."""
-    pos = 0
-    while b[pos : pos + 2] == b"\x1f\x8b":
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        raw = d.decompress(b[pos:])
-        if not d.eof:
-            raise ValueError("warc: truncated gzip member")
-        consumed = len(b) - pos - len(d.unused_data)
-        yield pos, consumed, raw
-        pos += consumed
-
-
 def _raw_slices(b: bytes) -> Iterator[tuple[int, int, bytes]]:
     """(offset, length, raw_record) per record of a PLAIN archive; length
     includes the trailing CRLF CRLF so the slice is the complete on-disk
@@ -160,7 +147,7 @@ def _raw_slices(b: bytes) -> Iterator[tuple[int, int, bytes]]:
             i += 1
         if i >= n:
             return
-        if not _VERSION_RE.match(b[i:]):
+        if not _VERSION_RE.match(b, i):
             nxt = b.find(b"WARC/", i + 1)
             if nxt < 0:
                 return
@@ -192,7 +179,7 @@ def cdx_records(archive: str, payload: bytes) -> list[dict]:
     b = payload or b""
     rows: list[dict] = []
     try:
-        slices = _member_slices(b) if b[:2] == b"\x1f\x8b" else _raw_slices(b)
+        slices = iter_gzip_members(b) if b[:2] == b"\x1f\x8b" else _raw_slices(b)
         for offset, length, raw in slices:
             f = _record_fields(raw)
             if f.get("status") != "ok":
@@ -211,7 +198,7 @@ def cdx_records(archive: str, payload: bytes) -> list[dict]:
                     "record_type": f["record_type"],
                 }
             )
-    except (ValueError, zlib.error):
+    except ValueError:
         pass  # corrupt container: index what was located, never invent
     return rows
 

@@ -15,8 +15,9 @@ Format notes (ISO 28500 / WARC 1.1, public spec):
   exactly ``Content-Length`` content bytes, then ``CRLF CRLF``;
 * archives are plain concatenations of records, OR concatenations of
   single-record gzip members (Common Crawl's ``.warc.gz`` layout — members
-  are detected by the 1f 8b magic and split via ``zlib``'s unused-data
-  tail, so no external gzip-member library is needed);
+  are detected by the 1f 8b magic and walked by one linear pass that
+  feeds ``zlib`` bounded slices of the archive, so no external
+  gzip-member library is needed);
 * ``response`` records wrap a full HTTP/1.1 response (status line, headers,
   body); the body's charset comes from the Content-Type header with a
   utf-8 → latin-1 fallback (latin-1 never fails, so undeclared legacy
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "parse_warc",
     "split_gzip_members",
+    "iter_gzip_members",
     "read_warc",
     "warc_to_documents",
     "read_warc_documents",
@@ -67,25 +69,54 @@ WARC_RECORDS_SCHEMA = (
     "status string"
 )
 
-_VERSION_RE = re.compile(rb"^WARC/(\d+\.\d+)\r?\n")
+# unanchored on purpose: callers match at a position, ``_VERSION_RE.match(b,
+# i)``, instead of slicing the archive tail off at every record
+_VERSION_RE = re.compile(rb"WARC/(\d+\.\d+)\r?\n")
 _CHARSET_RE = re.compile(r"charset=[\"']?([A-Za-z0-9_.:-]+)", re.I)
+
+
+# First slice fed to a member's decompressor; each further slice doubles,
+# so a member of L compressed bytes is fed < 2L + _MEMBER_SLICE bytes and
+# the overshoot zlib copies into ``unused_data`` stays below that too.
+_MEMBER_SLICE = 256
+
+
+def iter_gzip_members(b: bytes) -> Iterator[tuple[int, int, bytes]]:
+    """``(offset, compressed_length, payload)`` per gzip member of a
+    concatenation (the .warc.gz layout), stopping at the first non-member
+    byte; raises ValueError on a corrupt or truncated member.
+
+    One linear walk: the decompressor is fed memoryview slices of the
+    archive, never the archive tail, so the bytes fed and copied are
+    O(archive size) whatever the member count."""
+    view = memoryview(b)
+    n, pos = len(view), 0
+    while view[pos : pos + 2] == b"\x1f\x8b":
+        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
+        parts: list[bytes] = []
+        cur, step = pos, _MEMBER_SLICE
+        try:
+            while not d.eof and cur < n:
+                parts.append(d.decompress(view[cur : cur + step]))
+                cur, step = min(cur + step, n), step * 2
+        except zlib.error as e:
+            raise ValueError(f"warc: corrupt gzip member: {e}") from None
+        if not d.eof:
+            raise ValueError("warc: truncated gzip member")
+        end = cur - len(d.unused_data)
+        yield pos, end - pos, b"".join(parts)
+        pos = end
 
 
 def split_gzip_members(b: bytes) -> list[bytes]:
     """Decompress a concatenation of gzip members (the .warc.gz layout)
     into the per-member payloads; raises ValueError on a corrupt member."""
     out: list[bytes] = []
-    rest = b
-    while rest[:2] == b"\x1f\x8b":
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        try:
-            out.append(d.decompress(rest))
-            if not d.eof:
-                raise ValueError("warc: truncated gzip member")
-        except zlib.error as e:
-            raise ValueError(f"warc: corrupt gzip member: {e}") from None
-        rest = d.unused_data
-    if rest.strip(b"\x00"):
+    end = 0
+    for offset, length, payload in iter_gzip_members(b):
+        out.append(payload)
+        end = offset + length
+    if b[end:].strip(b"\x00"):
         raise ValueError("warc: trailing garbage after gzip members")
     return out
 
@@ -138,7 +169,7 @@ def _parse_record_stream(b: bytes) -> Iterator[dict]:
             i += 1
         if i >= n:
             return
-        m = _VERSION_RE.match(b[i:])
+        m = _VERSION_RE.match(b, i)
         if not m:
             nxt = b.find(b"WARC/", i + 1)
             yield {"status": "error: no WARC version line"}
@@ -156,7 +187,7 @@ def _parse_record_stream(b: bytes) -> Iterator[dict]:
             yield {"status": "error: unterminated header block"}
             return
         headers: dict[str, str] = {}
-        for ln in b[i + m.end() : hdr_end].split(b"\n"):
+        for ln in b[m.end() : hdr_end].split(b"\n"):
             k, _, v = ln.decode("latin-1", "replace").partition(":")
             if _:
                 headers[k.strip().lower()] = v.strip()

@@ -38,7 +38,7 @@ EOF
 )
 
 exec spark-submit \
-    --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}" \
+    --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}" \
     --py-files "$ZIP" \
     ${SUBMIT_ARGS[@]+"${SUBMIT_ARGS[@]}"} \
     "$REPO/html_table_spark/plans/job.py" \

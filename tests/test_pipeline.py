@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import synthesize_documents
-from html_table_spark.plans.pipeline import plan_extraction, run_job
+from html_table_spark.plans.pipeline import run_extraction_concurrent, run_job
 from html_table_spark.semantics import parse_document
 from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
 from html_table_spark.sources.sinks import SnapshotSink
@@ -16,6 +17,26 @@ from html_table_spark.spans import doc_spans_to_html
 def _corpus_df(spark, **kwargs):
     rows = synthesize_documents(**kwargs)
     return spark.createDataFrame(rows, DOCUMENTS_SCHEMA), rows
+
+
+def _extract(df, config, **kw):
+    """Every row both legs extract, as the production path runs them: one
+    concurrent job per leg, each leg collected in its own driver thread."""
+    legs = run_extraction_concurrent(
+        df, config, leg_action=lambda _n, d: d.collect(), **kw
+    )
+    return legs["normal"] + (legs["mega"] or [])
+
+
+def _tables(df, config, **kw):
+    return [r for r in _extract(df, config, **kw) if r.table_idx >= 0]
+
+
+def _key_rows(rows):
+    """(doc_id, table_idx, status, caption, n_cells) per table, sorted."""
+    return sorted(
+        (r.doc_id, r.table_idx, r.status, r.caption, r.n_cells) for r in rows
+    )
 
 
 def _kernel_rows(rows, config):
@@ -30,20 +51,18 @@ def _kernel_rows(rows, config):
 
 def test_plan_extraction_with_mega(spark):
     df, rows = _corpus_df(spark, n_docs=30, seed=11, mega_docs=1, mega_tables=120)
-    out = plan_extraction(
+    out = _extract(
         df,
         ParserConfig().all_tables(),
         num_partitions=8,
         mega_cost_threshold=16 * 1024,
         tables_per_chunk=16,
     )
-    counts = {r["doc_id"]: r["cnt"] for r in out.groupBy("doc_id").agg(F.count("*").alias("cnt")).collect()}
-    assert counts["mega000"] == 120
+    mega = [r for r in out if r.doc_id == "mega000"]
+    assert len(mega) == 120
     # mega-doc chunks actually spread over multiple extraction partitions
-    parts = (
-        out.filter(F.col("doc_id") == "mega000").select("part_id").distinct().count()
-    )
-    assert parts > 1, "mega-doc not split across partitions"
+    parts = {r.part_id for r in mega}
+    assert len(parts) > 1, "mega-doc not split across partitions"
 
 
 def test_run_job_resume(spark, tmp_path):
@@ -97,10 +116,6 @@ def test_null_spans_doc_gets_completion_marker(spark):
     """A NULL-spans doc must flow through pass 1 (doc_cost coalesced to 0)
     and emit its completion marker — otherwise resume reprocesses it
     forever."""
-    from html_table_spark.config import ParserConfig
-    from html_table_spark.plans.pipeline import plan_extraction
-    from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
-
     docs = spark.createDataFrame(
         [{"doc_id": "nullspans", "spans": None},
          {"doc_id": "ok", "spans": [
@@ -108,7 +123,7 @@ def test_null_spans_doc_gets_completion_marker(spark):
               "media_ref": None, "offset": 0}]}],
         DOCUMENTS_SCHEMA,
     )
-    out = plan_extraction(docs, ParserConfig().all_tables()).collect()
+    out = _extract(docs, ParserConfig().all_tables())
     by_id = {}
     for r in out:
         by_id.setdefault(r.doc_id, []).append(r)
@@ -121,10 +136,6 @@ def test_cost_over_threshold_but_small_html_keeps_tables(spark):
     """A doc whose span COST crosses the mega threshold while its HTML does
     not (cost dominated by media-span text) is parsed in place by the chunk
     pass — its tables must reach the output, not be re-fed as chunk HTML."""
-    from html_table_spark.config import ParserConfig
-    from html_table_spark.plans.pipeline import plan_extraction
-    from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
-
     html = "<table><caption>c</caption><tr><td>v</td></tr></table>"
     docs = spark.createDataFrame(
         [{"doc_id": "tricky", "spans": [
@@ -134,31 +145,17 @@ def test_cost_over_threshold_but_small_html_keeps_tables(spark):
         ]}],
         DOCUMENTS_SCHEMA,
     )
-    out = plan_extraction(
-        docs, ParserConfig().all_tables(), mega_cost_threshold=200
-    ).filter("table_idx >= 0").collect()
+    out = _tables(docs, ParserConfig().all_tables(), mega_cost_threshold=200)
     assert len(out) == 1
     assert out[0].caption == "c" and out[0].n_cells == 1 and out[0].status == "ok"
 
 
 def test_legs_equal_union_plan(spark):
-    """plan_extraction is exactly the union of plan_extraction_legs — the
-    concurrent-jobs path (bench, run_job) and the single-DF contract path
-    must extract identical rows."""
+    """Single-table mode (reference semantics) has no mega leg: the whole
+    corpus rides the normal leg."""
     from html_table_spark.plans.pipeline import plan_extraction_legs
 
     df, _ = _corpus_df(spark, n_docs=25, seed=7, mega_docs=1, mega_tables=80)
-    kwargs = dict(
-        num_partitions=8, mega_cost_threshold=16 * 1024, tables_per_chunk=16
-    )
-    config = ParserConfig().all_tables()
-    union = plan_extraction(df, config, **kwargs)
-    normal, mega = plan_extraction_legs(df, config, **kwargs)
-    cols = ["doc_id", "table_idx", "status"]
-    a = sorted(map(tuple, union.select(*cols).collect()))
-    b = sorted(map(tuple, normal.select(*cols).unionByName(mega.select(*cols)).collect()))
-    assert a == b
-    # single-table mode has no mega leg
     n2, m2 = plan_extraction_legs(df, ParserConfig(), num_partitions=4)
     assert m2 is None and n2.count() > 0
 
@@ -170,8 +167,6 @@ def test_run_concurrent_order_and_errors():
 
     def boom():
         raise ValueError("leg failed")
-
-    import pytest
 
     with pytest.raises(ValueError, match="leg failed"):
         run_concurrent([lambda: 1, boom])
@@ -199,18 +194,20 @@ def test_run_job_leg_layout_readable(spark, tmp_path):
     assert committed.filter("doc_id = 'mega000'").count() == 60
 
 
-def test_discovery_routing_equals_kernel(spark):
+@pytest.mark.parametrize(
+    "num_partitions,tables_per_chunk", [(1, 1), (4, 8), (8, 16), (16, 64)]
+)
+def test_discovery_routing_equals_kernel(spark, num_partitions, tables_per_chunk):
     """Leg routing is a performance split, not a correctness boundary: the
-    discovery-routed plan (offsets-only id discovery + pushed doc_id IN,
-    chunked mega leg) must extract the rows the whole-doc kernel does."""
+    discovery-routed legs (offsets-only id discovery + pushed doc_id IN,
+    chunked mega leg) must extract the rows the whole-doc kernel does,
+    whatever the partition count and chunk size."""
     df, rows = _corpus_df(spark, n_docs=25, seed=21, mega_docs=2, mega_tables=80)
     config = ParserConfig().all_tables()
-    kwargs = dict(
-        num_partitions=8, mega_cost_threshold=16 * 1024, tables_per_chunk=16
-    )
-    cols = ["doc_id", "table_idx", "status", "caption", "n_cells"]
-    got = sorted(map(tuple, plan_extraction(df, config, **kwargs)
-                     .filter("table_idx >= 0").select(*cols).collect()))
+    got = _key_rows(_tables(
+        df, config, num_partitions=num_partitions,
+        mega_cost_threshold=16 * 1024, tables_per_chunk=tables_per_chunk,
+    ))
     assert got == _kernel_rows(rows, config) and len(got) > 0
 
 
@@ -241,11 +238,11 @@ def test_discovery_proxy_miss_byte_heavy_doc_not_dropped(spark):
     )
     # threshold makes 'slim-mega' byte-mega (html ~5.7KB > 2KB) while its
     # span count (1) stays under the proxy hint
-    out = plan_extraction(
+    out = _tables(
         docs, ParserConfig().all_tables(),
         num_partitions=4, mega_cost_threshold=2048, tables_per_chunk=8,
-    ).filter("table_idx >= 0")
-    rows = {(r.doc_id, r.table_idx): r for r in out.collect()}
+    )
+    rows = {(r.doc_id, r.table_idx): r for r in out}
     assert ("slim-mega", 0) in rows, "byte-heavy proxy miss was dropped"
     assert rows[("slim-mega", 0)].caption == "big"
     assert rows[("slim-mega", 0)].status == "ok"
@@ -260,9 +257,9 @@ def test_discovery_null_doc_id_rides_normal_leg(spark):
     non-nullable, but the routing predicate must not be the thing that
     loses a row if a foreign parquet writer relaxed nullability (and
     EXTRACTED_SCHEMA.doc_id is nullable so the row can surface without an
-    executor-side NPE). Drives the REAL
-    plan_extraction discovery path end-to-end (not a hand-built predicate
-    twin), so a regression in _prep_legs' isNull carve-out fails here."""
+    executor-side NPE). Drives the REAL concurrent-legs discovery path
+    end-to-end (not a hand-built predicate twin), so a regression in
+    _prep_legs' isNull carve-out fails here."""
     import pyspark.sql.types as T
 
     nullable_schema = T.StructType(
@@ -287,11 +284,10 @@ def test_discovery_null_doc_id_rides_normal_leg(spark):
         ],
         nullable_schema,
     )
-    out = plan_extraction(
+    rows = _tables(
         docs, ParserConfig().all_tables(),
         num_partitions=4, mega_cost_threshold=256, tables_per_chunk=8,
-    ).filter("table_idx >= 0")
-    rows = out.collect()
+    )
     null_rows = [r for r in rows if r.doc_id is None]
     assert len(null_rows) == 1, "null-id doc must surface exactly once"
     assert null_rows[0].status == "ok"
@@ -321,11 +317,10 @@ def test_discovery_duplicate_doc_id_extracts_each_row_once(spark):
         ],
         DOCUMENTS_SCHEMA,
     )
-    out = plan_extraction(
+    collected = _tables(
         docs, ParserConfig().all_tables(),
         num_partitions=4, mega_cost_threshold=256, tables_per_chunk=8,
-    ).filter("table_idx >= 0")
-    collected = out.collect()
+    )
     cells = [s.text for r in collected for s in r.spans]
     assert len(collected) == 43, f"expected 43 tables, got {len(collected)}"
     for i in range(3):
@@ -349,7 +344,5 @@ def test_discovery_cap_falls_back_to_lazy_filter(spark, monkeypatch):
     kwargs = dict(
         num_partitions=4, mega_cost_threshold=4096, tables_per_chunk=8
     )
-    cols = ["doc_id", "table_idx", "status", "caption", "n_cells"]
-    capped = sorted(map(tuple, plan_extraction(df, config, **kwargs)
-                        .filter("table_idx >= 0").select(*cols).collect()))
+    capped = _key_rows(_tables(df, config, **kwargs))
     assert capped == _kernel_rows(rows, config) and len(capped) > 0

@@ -75,6 +75,17 @@ def test_explicit_local_master_confs(recorder):
     }
 
 
+def test_bare_local_master_sizes_from_the_box(recorder, monkeypatch):
+    """``local[*]`` takes this box's core count for shuffle partitions and
+    the scan-split floor — not a fixed 32-core assumption."""
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    get_spark("t")
+    threads = os.cpu_count()
+    assert recorder.masters == ["local[*]"]
+    assert recorder.confs["spark.sql.shuffle.partitions"] == str(max(8, threads))
+    assert recorder.confs["spark.sql.files.minPartitionNum"] == str(8 * threads)
+
+
 def test_spark_submit_leaves_master_to_submit(recorder, monkeypatch):
     """Under spark-submit --master wins: no .master() call, and the cluster
     branch sets no local-only confs (partitions, split floor, fastdaemon)."""

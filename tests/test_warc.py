@@ -52,6 +52,42 @@ def test_gzip_member_split_and_errors():
     assert len(rows) == 1 and rows[0]["status"].startswith("error:")
 
 
+def test_gzip_member_walk_is_linear(monkeypatch):
+    """The member walk feeds the decompressor O(archive) bytes: feeding
+    each member the whole archive tail re-copies it per member, which is
+    quadratic on the one-record-per-member Common Crawl layout."""
+    import zlib
+
+    from html_table_spark.sources.cdx import cdx_records
+
+    pages = [
+        {"url": f"http://p{k}.example/", "html": f"<table><tr><td>{k}</td></tr></table>"}
+        for k in range(1999)
+    ]
+    b = encode_warc(pages, per_record_gzip=True)
+    real = zlib.decompressobj
+    fed = [0]
+
+    class Counting:
+        def __init__(self, *args):
+            self._d = real(*args)
+
+        def decompress(self, data, *args):
+            fed[0] += memoryview(data).nbytes
+            return self._d.decompress(data, *args)
+
+        def __getattr__(self, name):
+            return getattr(self._d, name)
+
+    monkeypatch.setattr(zlib, "decompressobj", Counting)
+    assert len(split_gzip_members(b)) == 2000
+    assert fed[0] <= 3 * len(b), (fed[0], len(b))
+    fed[0] = 0
+    rows = cdx_records("a.warc.gz", b)
+    assert len(rows) == 2000
+    assert fed[0] <= 3 * len(b), (fed[0], len(b))
+
+
 def test_tolerant_resync_and_truncation():
     good = encode_warc(PAGES[:1])
     recs = parse_warc(b"NOT-A-WARC\r\n" + good)
