@@ -152,9 +152,7 @@ def run_extraction_bench(spark, sf: str) -> dict:
 def _get_spark(cores: int):
     from html_table_spark.session import get_spark
 
-    return get_spark(
-        "bench", master=f"local[{cores}]", shuffle_partitions=max(8, cores)
-    )
+    return get_spark("bench", master=f"local[{cores}]")
 
 
 def _box_quality_probe(window_s: float = 1.5) -> dict:

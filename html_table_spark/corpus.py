@@ -144,19 +144,6 @@ def synthesize_documents(
     return rows
 
 
-def write_corpus_parquet(rows: list[dict], path: str, row_group_docs: int = 512) -> str:
-    """Write corpus rows to one Parquet file (pyarrow, driver-side).
-
-    Modest row groups keep Spark's input splits balanced: with one row per
-    document and multi-KB span payloads, fewer docs per row group → more
-    parallel scan splits at a given ``maxPartitionBytes``.
-    """
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    table = pa.Table.from_pylist(rows, schema=CORPUS_SCHEMA)
-    pq.write_table(table, path, row_group_size=row_group_docs)
-    return path
-
-
 def write_corpus_dir(rows: list[dict], path: str, n_shards: int = 32) -> str:
     """Write the corpus as a directory of ``n_shards`` Parquet files.
 

@@ -226,10 +226,6 @@ def f14_mega_doc_html(n_tables: int = 2000) -> str:
 
 # Registry: fixture id → (html, ParserConfig). Expected values are asserted
 # hand-derived in tests/test_semantics_fixtures.py.
-def default_config() -> ParserConfig:
-    return ParserConfig()
-
-
 FIXTURES: dict[str, tuple[str, ParserConfig]] = {
     "F01": (F01_HTML, ParserConfig()),
     "F02a": (FILE_HTML, ParserConfig().table_position(1)),

@@ -20,8 +20,9 @@ LIBXML_NOERROR``, reference ``src/Parser.php:417-454``):
   algorithm, leaves ``<tr>`` as a direct child of ``<table>`` — fixture F02
   depends on this);
 - recoverable tag soup: implied end tags (``<tr>`` closes an open ``<tr>``,
-  ``<td>`` closes ``<td>/<th>``, …), stray end tags ignored, unclosed
-  elements closed at EOF.
+  ``<td>`` closes ``<td>/<th>``, …), stray end tags ignored, misplaced end
+  tags ignored when a higher end-priority element is open above their
+  match (libxml2 ``htmlAutoCloseOnClose``), unclosed elements closed at EOF.
 
 Recoverable-parse anomalies are collected into ``parse_errors`` so that the
 reference's ``failOnXmlErrors()`` mode (``Parser.php:256-271``) can be
@@ -153,6 +154,34 @@ CLOSE_BEFORE: dict[str, frozenset] = {
 
 _STRUCTURAL = frozenset({"html", "head", "body"})
 
+# libxml2's htmlEndPriority: a misplaced end tag may close only open
+# elements of lower or equal priority (htmlAutoCloseOnClose). A stray
+# </div> or </b> inside a cell therefore cannot close the cell, its row or
+# its table, so a table parses the same whatever markup wraps it.
+END_PRIORITY: dict[str, int] = {
+    "div": 150, "td": 160, "th": 160, "tr": 170,
+    "thead": 180, "tbody": 180, "tfoot": 180, "table": 190,
+    "head": 200, "body": 200, "html": 220,
+}
+_DEFAULT_END_PRIORITY = 100
+
+
+def _close_misnested(stack: list[Node], tag: str, errors: list[str]) -> None:
+    """End tag ``tag`` whose element is not on top of ``stack``: pop up to
+    the nearest match, unless an open element above it has a higher end
+    priority. An ignored end tag is a parse error, as libxml2 reports the
+    mismatch (``fail_on_xml_errors`` reads it)."""
+    priority = END_PRIORITY.get(tag, _DEFAULT_END_PRIORITY)
+    for i in range(len(stack) - 1, 0, -1):
+        open_tag = stack[i].tag
+        if open_tag == tag:
+            del stack[i:]
+            return
+        if END_PRIORITY.get(open_tag, _DEFAULT_END_PRIORITY) > priority:
+            errors.append(f"end tag </{tag}> ignored inside <{open_tag}>")
+            return
+    errors.append(f"unexpected end tag </{tag}>")
+
 
 class _TreeBuilder(HTMLParser):
     """Incremental tree construction over the stdlib tolerant tokenizer."""
@@ -223,12 +252,10 @@ class _TreeBuilder(HTMLParser):
             return
         if tag in VOID_ELEMENTS:
             return
-        # find the nearest matching open element
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                return
-        self.errors.append(f"unexpected end tag </{tag}>")
+        if self.stack[-1].tag == tag:
+            self.stack.pop()
+        else:
+            _close_misnested(self.stack, tag, self.errors)
 
     def handle_data(self, data: str) -> None:
         self._append_text(data)
@@ -439,12 +466,10 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
             tag = ename if ename.islower() else ename.lower()
             if tag in _STRUCTURAL or tag in VOID_ELEMENTS:
                 continue
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    del stack[i:]
-                    break
+            if stack[-1].tag == tag:
+                stack.pop()
             else:
-                errors.append(f"unexpected end tag </{tag}>")
+                _close_misnested(stack, tag, errors)
             continue
         comment = g(_G_COMMENT)
         if comment is not None:

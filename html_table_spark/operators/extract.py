@@ -9,14 +9,24 @@ tables, a UDTF-shaped fan-out).  There is **no per-row Python UDF** anywhere
 — the JVM↔Python boundary is crossed per Arrow batch, not per row
 (BASELINE.json:6 hot-path constraint).
 
+Two stages, each one ``mapInArrow`` with one output row shape:
+
+- :func:`split_mega_docs` cuts mega documents at top-level table
+  boundaries into ``(doc_id, html, table_idx_base)`` chunks (Spark-free
+  core: :func:`split_html`);
+- :func:`make_arrow_extractor` parses ``(doc_id, html[, table_idx_base])``
+  into ``EXTRACTED_SCHEMA`` rows, adding the base to each table ordinal.
+
 The extraction config is a small frozen dataclass captured in the closure —
 pickled once per task, never re-validated per document.
 
 Memory envelope: multi-MB HTML docs can blow up the default 10k-row Arrow
 batches; the session caps input batches by rows and bytes (session.py) and
-this operator additionally flushes its *output* every ``_FLUSH_ROWS``
+the extractor additionally flushes its *output* every ``_FLUSH_ROWS``
 tables or ``_FLUSH_BYTES`` of span text, so one mega-doc cannot pin a
-giant batch (iterator-in/iterator-out, never the whole partition).
+giant batch (iterator-in/iterator-out, never the whole partition). Chunks
+are substrings of their document, so the input byte cap bounds the
+splitter's output batches too.
 """
 
 from __future__ import annotations
@@ -28,6 +38,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import ParserConfig
 from ..htmldom import _TAG_RE as _html_tag_re
@@ -40,30 +51,12 @@ from ..sources.documents import EXTRACTED_SCHEMA
 _FLUSH_ROWS = 4096
 _FLUSH_BYTES = 256 * 1024 * 1024
 
-_ARROW_SPAN = pa.struct(
-    [
-        pa.field("kind", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()),
-        pa.field("offset", pa.int32()),
-    ]
-)
-_ARROW_OUT = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field("table_idx", pa.int32()),
-        pa.field("caption", pa.string()),
-        pa.field("header", pa.list_(pa.string())),
-        pa.field("spans", pa.list_(_ARROW_SPAN)),
-        pa.field("row_lens", pa.list_(pa.int32())),
-        pa.field("n_rows", pa.int32()),
-        pa.field("n_cells", pa.int32()),
-        pa.field("status", pa.string()),
-        pa.field("error_msg", pa.string()),
-        pa.field("part_id", pa.int32()),
-        pa.field("wall_ms", pa.float64()),
-    ]
-)
+_MEGA_POLICIES = ("parse", "chunk")
+
+_ARROW_OUT = to_arrow_schema(EXTRACTED_SCHEMA)
+_ARROW_SPAN_FIELDS = list(_ARROW_OUT.field("spans").type.value_type)
+
+SPLIT_SCHEMA = "doc_id string, html string, table_idx_base int"
 
 
 def html_reassembly_col(spans_col: str = "spans"):
@@ -106,9 +99,6 @@ def html_reassembly_col(spans_col: str = "spans"):
     return F.coalesce(joined, F.lit(""))
 
 
-STATUS_CHUNK = "chunk"
-_MEGA_POLICIES = ("parse", "chunk")
-
 _COMMENT_END_RE = _re.compile(r"--\s*>")
 
 # A '<' inside a tag the boundary scan does NOT inspect (generic start tags
@@ -141,28 +131,12 @@ _UNSEEN_TAG_ANGLE_RE = _re.compile(
 # pair consumed — it can never reach a '<' the possessive scan missed.
 
 
-def make_arrow_extractor(
-    config: ParserConfig,
-    tables_per_chunk: int = 64,
-    mega_policy: str = "parse",
-):
+def make_arrow_extractor(config: ParserConfig):
     """mapInArrow extraction over ``(doc_id, html[, table_idx_base])``
-    batches: Arrow in, Arrow out, flat buffers throughout.
-
-    ``mega_policy`` (select-all mode only; single-table mode always parses):
-
-    - ``'parse'`` — parse every document in place (the pipeline's pass 1 —
-      a doc its routing proxy under-calls costs one slow task, never a
-      dropped doc);
-    - ``'chunk'`` — split every document via a linear boundary scan into
-      chunk rows (``status='chunk'``, table_idx = base ordinal, spans = one
-      text span) for a salted redistribution; unsplittable tag soup becomes
-      one whole-doc chunk (correctness never depends on the split)."""
-    if mega_policy not in _MEGA_POLICIES:
-        raise ValueError(
-            f"mega_policy must be one of {_MEGA_POLICIES}, got {mega_policy!r}"
-        )
-    chunk_mode = mega_policy == "chunk" and config.select_all_tables
+    batches: Arrow in, Arrow out, flat buffers throughout. Every document
+    is parsed in place; a ``table_idx_base`` column (chunks from
+    :func:`split_mega_docs`) shifts each table ordinal to its place in the
+    whole document."""
 
     def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import gc
@@ -213,7 +187,7 @@ def make_arrow_extractor(
                     pa.array(buf["sr"], pa.string()),
                     pa.array(buf["so"], pa.int32()),
                 ],
-                fields=list(_ARROW_SPAN),
+                fields=_ARROW_SPAN_FIELDS,
             )
             spans_arr = pa.ListArray.from_arrays(
                 pa.array(buf["span_offsets"], pa.int32()), struct
@@ -251,54 +225,6 @@ def make_arrow_extractor(
             for i, html in enumerate(htmls):
                 doc_id = doc_ids[i]
                 base = bases[i] if bases is not None else 0
-                if chunk_mode:
-                    # INVARIANT (plans/pipeline.py relies on this): chunk
-                    # mode emits ONLY status='chunk' rows — for EVERY doc in
-                    # the pass, because the pipeline's routing proxy (span
-                    # count) can flag a doc whose real HTML is small; such a
-                    # doc becomes one whole-doc chunk row, parsed
-                    # downstream, never an in-place parse. If an in-place
-                    # path is ever added here, the pipeline needs its
-                    # parsed-in-place union leg (and the chunk-pass persist)
-                    # back, or those rows are re-fed through extraction and
-                    # their tables are lost
-                    # (tests/test_pipeline.py::test_cost_over_threshold_
-                    # but_small_html_keeps_tables).
-                    cuts = _top_level_table_cuts(html)
-                    if cuts and len(cuts) > tables_per_chunk:
-                        pieces = [
-                            (chunk_no, html[cuts[chunk_no][0]
-                                            : cuts[min(chunk_no + tables_per_chunk, len(cuts)) - 1][1]])
-                            for chunk_no in range(0, len(cuts), tables_per_chunk)
-                        ]
-                    else:
-                        # unsplittable (tag soup / few huge tables): one
-                        # whole-doc chunk — still redistributed by the salt,
-                        # parsed downstream; correctness never depends on
-                        # the boundary scan
-                        pieces = [(0, html)]
-                    for base_ordinal, text in pieces:
-                        buf["doc_id"].append(doc_id)
-                        buf["table_idx"].append(base_ordinal)
-                        buf["caption"].append(None)
-                        buf["header"].append([])
-                        buf["row_lens"].append([])
-                        buf["n_rows"].append(0)
-                        buf["n_cells"].append(0)
-                        buf["status"].append(STATUS_CHUNK)
-                        buf["error_msg"].append(None)
-                        buf["sk"].append("text")
-                        buf["st"].append(text)
-                        buf["sr"].append(None)
-                        buf["so"].append(0)
-                        buf["span_offsets"].append(len(buf["sk"]))
-                        buf_bytes += len(text)
-                        if (
-                            len(buf["doc_id"]) >= _FLUSH_ROWS
-                            or buf_bytes >= _FLUSH_BYTES
-                        ):
-                            yield flush()
-                    continue
                 results = parse_document(html, config)
                 if not results and config.select_all_tables:
                     # completion marker: a doc with zero tables must still be
@@ -352,12 +278,22 @@ def extract_tables(
     Implemented over ``mapInArrow``: the span columns stay as flat Arrow
     buffers on both sides of the Python boundary — no pandas, no per-span
     dict/object materialization (BASELINE.json hot-path constraint taken to
-    its conclusion). ``mega_policy`` / ``tables_per_chunk``: see
-    :func:`make_arrow_extractor`. ``mega_cost_threshold`` is accepted and
-    ignored: both policies treat every document alike, whatever its size.
+    its conclusion).
+
+    ``mega_policy='chunk'`` in select-all mode returns the mega-doc
+    splitter's rows instead (:func:`split_mega_docs`, ``SPLIT_SCHEMA``, up
+    to ``tables_per_chunk`` tables each); ``'parse'`` extracts. Single-table
+    mode always extracts: its selection applies to the whole document.
+    ``mega_cost_threshold`` is accepted and ignored: both policies treat
+    every document alike, whatever its size.
     """
     from .util import ensure_parallelism
 
+    if mega_policy not in _MEGA_POLICIES:
+        raise ValueError(
+            f"mega_policy must be one of {_MEGA_POLICIES}, got {mega_policy!r}"
+        )
+    config = config or ParserConfig()
     # explicit pruning before the UDF stage, with the HTML reassembly done
     # JVM-side: the Arrow boundary carries (doc_id, html) only — no span
     # structs, no media spans (round-3 Arrow-copy reduction)
@@ -367,31 +303,62 @@ def extract_tables(
     # a dimension-sized corpus arriving as one file = one partition would
     # serialize the whole Arrow stage on a single Python worker. The full
     # pipeline (plans/pipeline.py) manages partitioning itself.
-    return _extract_html(
-        ensure_parallelism(pruned),
-        config or ParserConfig(),
-        tables_per_chunk=tables_per_chunk,
-        mega_policy=mega_policy,
-    )
+    html_docs = ensure_parallelism(pruned)
+    if mega_policy == "chunk" and config.select_all_tables:
+        return split_mega_docs(html_docs, tables_per_chunk)
+    return _extract_html(html_docs, config)
 
 
-def _extract_html(
-    html_docs: DataFrame,
-    config: ParserConfig,
-    *,
-    tables_per_chunk: int = 64,
-    mega_policy: str = "parse",
-) -> DataFrame:
-    """The one ``mapInArrow`` stage: ``html_docs(doc_id, html[,
+def _extract_html(html_docs: DataFrame, config: ParserConfig) -> DataFrame:
+    """The one extraction ``mapInArrow`` stage: ``html_docs(doc_id, html[,
     table_idx_base])`` → extracted tables. The pipeline's legs call it on
     their already-reassembled inputs (one reassembly subtree, no schema
     probe: every intermediate Dataset costs a Catalyst analyzer pass)."""
-    return html_docs.mapInArrow(
-        make_arrow_extractor(
-            config, tables_per_chunk=tables_per_chunk, mega_policy=mega_policy
-        ),
-        schema=EXTRACTED_SCHEMA,
-    )
+    return html_docs.mapInArrow(make_arrow_extractor(config), schema=EXTRACTED_SCHEMA)
+
+
+def split_html(html: str, tables_per_chunk: int) -> list[tuple[int, str]]:
+    """Cut ``html`` into ``(base_ordinal, chunk_html)`` pieces of at most
+    ``tables_per_chunk`` top-level tables each, ``base_ordinal`` being the
+    ordinal of the chunk's first table in the whole document. A document
+    the boundary scan cannot split (tag soup, markup hidden in a tag body)
+    or with no more than ``tables_per_chunk`` tables is one piece,
+    ``[(0, html)]``: correctness never depends on the split."""
+    cuts = _top_level_table_cuts(html)
+    if not cuts or len(cuts) <= tables_per_chunk:
+        return [(0, html)]
+    return [
+        (first, html[cuts[first][0] : cuts[min(first + tables_per_chunk, len(cuts)) - 1][1]])
+        for first in range(0, len(cuts), tables_per_chunk)
+    ]
+
+
+def split_mega_docs(html_docs: DataFrame, tables_per_chunk: int = 64) -> DataFrame:
+    """``html_docs(doc_id, html)`` → ``SPLIT_SCHEMA`` chunk rows, via
+    :func:`split_html`; one output batch per input batch. The extractor
+    reads these rows directly; the pipeline salts them in between so one
+    document's chunks spread over the cluster."""
+
+    def split_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            doc_ids, htmls, bases = [], [], []
+            for doc_id, html in zip(
+                batch.column("doc_id").to_pylist(), batch.column("html").to_pylist()
+            ):
+                for base, chunk in split_html(html, tables_per_chunk):
+                    doc_ids.append(doc_id)
+                    htmls.append(chunk)
+                    bases.append(base)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(doc_ids, pa.string()),
+                    pa.array(htmls, pa.string()),
+                    pa.array(bases, pa.int32()),
+                ],
+                names=["doc_id", "html", "table_idx_base"],
+            )
+
+    return html_docs.mapInArrow(split_batches, schema=SPLIT_SCHEMA)
 
 
 def _top_level_table_cuts(html: str) -> list[tuple[int, int]] | None:

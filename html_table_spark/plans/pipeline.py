@@ -6,8 +6,8 @@ Catalyst rules:
     discovery (offsets-only scan → mega doc_ids, driver-planned)   │
     scan #1 (doc_id NOT IN mega_ids) → pass 1 (mapInArrow) ────────┐
     scan #2 (doc_id IN mega_ids, row-group-PRUNED by the pushed    │
-        filter) → boundary-scan chunking                           │
-        → chunk rows (status='chunk', ≤64 tables, base ordinal)    │
+        filter) → split_mega_docs (mapInArrow, boundary scan)      │
+        → (doc_id, html, table_idx_base) chunks of ≤64 tables      │
         → full-entropy repartition → pass 2 (mapInArrow) ──────────┴→ 2 jobs
     → one write per leg → per-partition lineage agg → snapshot commit
 
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ParserConfig
-from ..operators.extract import _extract_html, html_reassembly_col
+from ..operators.extract import _extract_html, html_reassembly_col, split_mega_docs
 from ..sources.sinks import SnapshotSink
 
 # Docs whose total text size exceeds this take the mega-doc split path.
@@ -65,9 +65,9 @@ def mega_span_count_hint(mega_cost_threshold: int) -> int:
 
     Routing needs only a CHEAP predicate that puts almost-all mega docs on
     the chunk path — it is a performance hint, not a correctness boundary:
-    a byte-heavy doc the proxy misses is parsed in place by pass 1
-    (mega_policy='parse'), and a span-heavy doc with tiny HTML becomes one
-    whole-doc chunk parsed downstream (chunk mode's documented invariant).
+    a byte-heavy doc the proxy misses is parsed in place by pass 1, and a
+    span-heavy doc with tiny HTML becomes one whole-doc chunk parsed by
+    pass 2 (``split_html`` never drops a document).
     4 KiB/span is the conservative end of the corpus shape (one table
     fixture per span); the floor keeps tiny thresholds sane."""
     return max(8, mega_cost_threshold // 4096)
@@ -171,8 +171,8 @@ def _prep_legs(
     Leg routing (round-3 discovery rewrite, made lazy in the serial-path
     diet). Routing is a PERFORMANCE split, not a correctness boundary:
     whatever predicate lands a doc in whichever leg, pass 1 parses it in
-    place (mega_policy='parse') and chunk mode turns it into chunk rows
-    parsed downstream — output rows are identical either way
+    place and the mega leg splits it into chunks parsed by pass 2 — output
+    rows are identical either way
     (tests/test_pipeline.py pins this against the Spark-free kernel).
 
     BOTH legs route on the lazy span-count proxy (``size(spans.offset)`` —
@@ -243,9 +243,9 @@ def _plan_normal_leg(prep: dict) -> DataFrame:
 
     Routed-out docs are filtered JVM-SIDE, so mega-doc bytes never cross
     the Arrow boundary just to be skipped. No cache, no materialization:
-    pass 1 output flows straight to the consumer/sink. mega_policy='parse':
-    a doc the routing proxy under-calls (byte-heavy, few spans) is parsed
-    in place — one slow task, never a dropped doc."""
+    pass 1 output flows straight to the consumer/sink. A doc the routing
+    proxy under-calls (byte-heavy, few spans) is parsed in place — one slow
+    task, never a dropped doc."""
     if "single_source" in prep:
         return _extract_html(_reassembled(prep["single_source"]), prep["config"])
     return _extract_html(
@@ -269,7 +269,7 @@ def _plan_mega_leg(prep: dict) -> DataFrame | None:
 
     The leg: a second PRUNED scan (row-group-pruned by the pushed doc_id IN
     filter; over the cap it reads the corpus but keeps just the tail),
-    split into chunk rows by a linear boundary scan, salted so one doc's
+    cut into chunks by ``split_mega_docs``, salted so one doc's
     chunks spread across the cluster, then extracted with global table
     ordinals. The shuffle here moves mega-doc bytes only — there is NO
     full-corpus shuffle anywhere in the plan."""
@@ -300,26 +300,12 @@ def _plan_mega_leg(prep: dict) -> DataFrame | None:
         mega_source = shuffled.where(
             F.col("doc_id").isin(mega_ids) & prep["mega_filter"]
         ).repartition(min(num_partitions, len(mega_ids)), F.xxhash64("doc_id"))
-    chunks = _extract_html(
-        _reassembled(mega_source),
-        prep["config"],
-        tables_per_chunk=prep["tables_per_chunk"],
-        mega_policy="chunk",
-    )
-    # chunk mode emits ONLY status='chunk' rows (extract.py documents the
-    # invariant at the emit site: an unsplittable doc becomes one whole-doc
-    # chunk, parsed downstream after the salt spreads it) and the routing
-    # predicate above is the complement of pass 1's, so the chunk pass has
-    # exactly one consumer — no persist, no always-empty parsed-in-place
-    # union leg. A chunk row carries exactly ONE text span (the chunk's
-    # HTML, built by the extractor) — element_at(1) IS its reassembly,
-    # lambda-free.
-    chunk_rows = chunks.select(
-        "doc_id",
-        F.coalesce(F.element_at("spans", 1)["text"], F.lit("")).alias("html"),
-        F.col("table_idx").alias("table_idx_base"),
-    )
-    return _extract_html(salted_chunks(chunk_rows, num_partitions), prep["config"])
+    # every routed doc yields at least one chunk (split_html never drops
+    # one) and the routing predicate above is the complement of pass 1's,
+    # so the split stage has exactly one consumer: no persist, no
+    # parsed-in-place union leg
+    chunks = split_mega_docs(_reassembled(mega_source), prep["tables_per_chunk"])
+    return _extract_html(salted_chunks(chunks, num_partitions), prep["config"])
 
 
 def run_extraction_concurrent(
@@ -454,7 +440,7 @@ def run_job(
 ) -> dict:
     """Execute one extraction run: resume-filter → extract → write+commit.
 
-    Returns the commit manifest (plus counters). Re-running after a crash or
+    Returns the commit manifest. Re-running after a crash or
     partial corpus processes only uncommitted documents (Iceberg-snapshot
     discipline, SURVEY.md §4.3).
     """

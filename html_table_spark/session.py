@@ -22,12 +22,10 @@ DEFAULT_ARROW_BATCH_BYTES = 64 * 1024 * 1024
 
 
 def get_spark(
-    app_name: str = "html-table-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_batch: int = DEFAULT_ARROW_BATCH,
+    app_name: str = "html-table-spark", master: str | None = None
 ) -> SparkSession:
     """The one session builder, shared by tests, bench and the deployed job.
+    Local masters get ``max(8, cores)`` shuffle partitions.
 
     Under spark-submit (``PYSPARK_GATEWAY_PORT`` set, no explicit
     ``master``) the master is left to spark-submit's ``--master`` and the
@@ -46,9 +44,6 @@ def get_spark(
         inner = master[master.find("[") + 1 : master.find("]")]
         t = inner.split(",")[0]
         threads = (os.cpu_count() or 1) if t == "*" else max(1, int(t))
-    # cluster masters: leave Spark's own default / spark-submit conf
-    if shuffle_partitions is None and threads is not None:
-        shuffle_partitions = max(8, threads)
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -72,7 +67,7 @@ def get_spark(
         # the serialized escalation ladder.
         .config("spark.sql.limit.initialNumPartitions", "1024")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_ARROW_BATCH))
         .config(
             "spark.sql.execution.arrow.maxBytesPerBatch",
             str(DEFAULT_ARROW_BATCH_BYTES),
@@ -88,11 +83,11 @@ def get_spark(
         # UI off: it costs serial driver time per stage
         .config("spark.ui.enabled", "false")
     )
-    if shuffle_partitions is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
+    # cluster masters: leave Spark's own default / spark-submit conf
     if threads is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(max(8, threads))
+        )
         # Spark's file-split formula, split = min(maxPartitionBytes,
         # max(openCostInBytes, totalBytes / minPartitionNum)), defaults
         # minPartitionNum to the core count — i.e. ONE wave of scan tasks.

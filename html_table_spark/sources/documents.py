@@ -145,10 +145,6 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def empty_extracted(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], EXTRACTED_SCHEMA)
-
-
 def read_html_files(spark: SparkSession, path: str, glob: str = "*.html") -> DataFrame:
     """The reference's ``parseFile`` surface (Parser.php:333-357) at corpus
     scale: a directory of raw HTML files becomes a ``documents`` DataFrame

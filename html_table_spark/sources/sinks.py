@@ -67,15 +67,6 @@ class SnapshotSink:
     def lineage_path(self, run_id: str) -> str:
         return os.path.join(self.lineage_dir, f"run_id={run_id}")
 
-    def write(self, extracted: DataFrame, lineage: DataFrame | None, run_id: str) -> dict:
-        """Write one run's output + lineage, then commit atomically."""
-        extracted.write.mode("errorifexists").parquet(self.data_path(run_id))
-        lineage_path = None
-        if lineage is not None:
-            lineage_path = self.lineage_path(run_id)
-            lineage.write.mode("errorifexists").parquet(lineage_path)
-        return self.commit_run(run_id, self.data_path(run_id), lineage_path)
-
     def commit_run(self, run_id: str, data_path: str, lineage_path: str | None) -> dict:
         """Publish already-written run directories as one atomic snapshot.
         Until this rename lands, readers and resume logic see nothing."""

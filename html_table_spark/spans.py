@@ -159,34 +159,3 @@ def spans_signature(spans) -> tuple:
             out.append((kind, text, ref, off))
     out.sort(key=lambda s: (s[3] is None, s[3]))
     return tuple(out)
-
-
-def decode_rows(spans) -> dict:
-    """Inverse view of :func:`encode_table_spans` for downstream consumers:
-    {'caption': str|None, 'header': [...], 'cells': [(text, [media...])]}.
-    Row boundaries are not encoded in the span stream (the golden gate is
-    sequence equality); use ``ExtractedTable.rows`` when boundaries matter.
-    """
-    caption = None
-    header: list[str] = []
-    cells: list[tuple[str | None, list[str]]] = []
-    # offsets are the order key (spans may arrive shuffled) — sort first so
-    # media refs attach to the right cell
-    def _off(span):
-        off = span.get("offset") if isinstance(span, dict) else span[3]
-        return (off is None, off)
-
-    spans = sorted(spans, key=_off)
-    for span in spans:
-        kind = span["kind"] if isinstance(span, dict) else span[0]
-        text = span["text"] if isinstance(span, dict) else span[1]
-        ref = span["media_ref"] if isinstance(span, dict) else span[2]
-        if kind == KIND_CAPTION:
-            caption = text
-        elif kind == KIND_HEADER:
-            header.append(text)
-        elif kind == KIND_CELL:
-            cells.append((text, []))
-        elif kind == KIND_MEDIA and cells:
-            cells[-1][1].append(ref)
-    return {"caption": caption, "header": header, "cells": cells}

@@ -170,7 +170,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from html_table_spark.session import get_spark
 
-    spark = get_spark("explain", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("explain", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     report = ["# Physical plans (sf=%s)\n" % SF]

@@ -12,11 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from html_table_spark.session import get_spark
 
-    session = get_spark(
-        app_name="html-table-spark-tests",
-        master="local[4]",
-        shuffle_partitions=8,
-    )
+    session = get_spark(app_name="html-table-spark-tests", master="local[4]")
     yield session
     session.stop()
 

@@ -14,7 +14,7 @@ import pytest
 from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import fixture_documents, synthesize_documents
 from html_table_spark.fixtures import FIXTURES, f14_mega_doc_html
-from html_table_spark.operators.extract import STATUS_CHUNK, extract_tables
+from html_table_spark.operators.extract import extract_tables
 from html_table_spark.plans.pipeline import plan_extraction_legs
 from html_table_spark.semantics import parse_document
 from html_table_spark.spans import doc_spans_to_html, encode_table_spans, spans_signature
@@ -151,7 +151,7 @@ def test_split_falls_back_on_soup(spark):
     chunks = extract_tables(
         _docs_df(spark, rows), config, tables_per_chunk=1, mega_policy="chunk"
     ).collect()
-    assert [(r.status, r.table_idx) for r in chunks] == [(STATUS_CHUNK, 0)]
+    assert [(r.doc_id, r.table_idx_base) for r in chunks] == [("soup", 0)]
     got = spark_signatures(_chunk_leg(spark, rows, tables_per_chunk=1))
     assert len(got) == 1
     assert got == kernel_signatures(rows, config)
@@ -301,10 +301,11 @@ def test_unseen_tag_angle_prescan_is_linear_time():
 
 
 def test_chunk_mode_emits_only_chunk_rows(spark):
-    """INVARIANT the pipeline relies on (plans/pipeline.py dropped its
-    parsed-in-place union leg + persist on the strength of this): with
+    """INVARIANT the pipeline relies on (plans/pipeline.py has no
+    parsed-in-place union leg and no persist on the strength of this): with
     mega_policy='chunk', every doc — splittable or tag soup — yields ONLY
-    status='chunk' rows."""
+    split rows (doc_id, html, table_idx_base), at least one per doc, with
+    bases ascending from 0."""
     splittable = f14_mega_doc_html(8)
     soup = "</table>" + "<table><tr><td>s</td></tr></table>" * 3
     rows = [
@@ -318,17 +319,19 @@ def test_chunk_mode_emits_only_chunk_rows(spark):
         mega_policy="chunk",
     ).collect()
     assert out, "chunk pass emitted nothing"
-    assert {r.status for r in out} == {STATUS_CHUNK}
+    assert {tuple(r.asDict()) for r in out} == {("doc_id", "html", "table_idx_base")}
     # the soup doc must still be represented (whole-doc chunk), not dropped
     assert {r.doc_id for r in out} == {"m1", "m2"}
+    for doc_id in ("m1", "m2"):
+        bases = [r.table_idx_base for r in out if r.doc_id == doc_id]
+        assert bases[0] == 0 and bases == sorted(set(bases)), (doc_id, bases)
 
 
-def test_unknown_mega_policy_rejected():
-    from html_table_spark.operators.extract import make_arrow_extractor
-
+def test_unknown_mega_policy_rejected(spark):
+    docs = _docs_df(spark, [])
     for policy in ("drop", "PARSE", None):
         with pytest.raises(ValueError, match="mega_policy"):
-            make_arrow_extractor(ParserConfig().all_tables(), mega_policy=policy)
+            extract_tables(docs, ParserConfig().all_tables(), mega_policy=policy)
 
 
 def test_mega_doc_split_parity_quoted_markup(spark):
@@ -403,17 +406,12 @@ def test_mega_doc_split_parity_selfclosed_script(spark):
     assert got == expected
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="known defect: a cut has no <div> ancestor, so a stray </div> "
-    "inside a table closes it in the whole-doc parse but not in the chunk",
-)
 def test_chunk_leg_parity_misnested_end_tag(spark):
     """Chunking must never change output. A <div> wraps 130 tables and
-    table 70 holds a stray </div>: the whole-doc parse closes the table at
-    the </div> (one cell, 'a'); the chunk starting at table 64 has no open
-    <div>, so the end tag is ignored and the table keeps two cells ('ab',
-    'c')."""
+    table 70 holds a stray </div>. The chunk starting at table 64 has no
+    open <div>; the whole-doc parse has one, but the open <td> outranks
+    it (libxml2 end-tag priority), so both ignore the end tag and the
+    table keeps two cells ('ab', 'c')."""
     tables = ["<table><tr><td>t{}</td></tr></table>".format(i) for i in range(130)]
     tables[70] = "<table><tr><td>a</div>b</td><td>c</td></tr></table>"
     html = "<div>" + "".join(tables) + "</div>"

@@ -12,7 +12,10 @@ behavior, hand-derived case by case:
 - NO implicit ``<tbody>`` and NO foster parenting (HTML4 recovery — a
   ``<div>`` inside ``<table>`` stays nested; the HTML5 algorithm would
   relocate it)
-- stray end tags ignored; unclosed elements closed at EOF; unclosed
+- stray end tags ignored; a misplaced end tag is ignored when an open
+  element above its match has a higher end priority (``htmlEndPriority``:
+  div 150, td/th 160, tr 170, sections 180, table 190, default 100);
+  unclosed elements closed at EOF; unclosed
   ``<script>``/``<style>`` raw text runs to EOF (``htmlParseScript``)
 - lenient comment termination (``--\s*>``), ``--`` allowed inside
 - DOCTYPE / ``<![CDATA[`` / bogus ``<!x`` declarations skipped to the
@@ -151,6 +154,12 @@ CASES = [
      "#document[table[' ' tr['\\n' td['x'] ' '] ' ']]"),
     ("pi_in_row_counts_as_child", '<table><tr><?php x ?><td>a</td></tr></table>',
      "#document[table[tr[#pi'php x ?' td['a']]]]"),
+    ("end_div_in_td_ignored", '<div><table><tr><td>a</div>b</td><td>c</td></tr></table></div>',
+     "#document[div[table[tr[td['ab'] td['c']]]]]"),
+    ("end_b_in_td_ignored", '<b><table><tr><td>a</b>b</td></tr></table></b>',
+     "#document[b[table[tr[td['ab']]]]]"),
+    ("end_span_closes_within_td", '<span><table><tr><td><span>a<i>b</span>c</td></tr></table></span>',
+     "#document[span[table[tr[td[span['a' i['b']] 'c']]]]]"),
 ]
 
 

@@ -63,7 +63,7 @@ SHARED_CONFS = {
 
 
 def test_explicit_local_master_confs(recorder):
-    get_spark("t", master="local[4]", shuffle_partitions=8)
+    get_spark("t", master="local[4]")
     assert recorder.masters == ["local[4]"]
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(session_mod.__file__)))
     assert recorder.confs == {
