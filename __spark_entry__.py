@@ -970,8 +970,10 @@ def x_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter → the canonical documents shape → table extraction; output is
     one row per WARC record with its extraction yield.  The DuckDB twin
     replays the same reader kernel + extraction kernel driver-side
-    (sources/warc.py parse_warc, semantics.parse_document)."""
-    from html_table_spark.sources.warc import parse_warc_column, warc_to_documents
+    (sources/warc.py parse_warc, semantics.parse_document): a
+    plumbing-only oracle, blind to the kernels' own decisions."""
+    from html_table_spark.sources.warc import parse_warc_column, warc_doc_id
+    from html_table_spark.sources.warc import warc_to_documents
 
     adf = spark.createDataFrame(
         _warc_fixture_archives(), "archive string, payload binary"
@@ -989,10 +991,7 @@ def x_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        records.withColumn(
-            "doc_id",
-            F.concat_ws("#", F.col("url"), F.col("record_idx").cast("string")),
-        )
+        records.withColumn("doc_id", warc_doc_id())
         .join(per_doc, "doc_id", "left")
         .select(
             "archive",
@@ -1036,7 +1035,8 @@ def mc_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus + a markdown-stress tail: headings, nested lists, pipe tables
     with escaped cells, links/images, blockquotes, fenced code.  One
     Arrow-batched zero-shuffle pass; the DuckDB twin replays the renderer
-    kernel driver-side (VALUES oracle, byte-exact markdown strings)."""
+    kernel driver-side (VALUES oracle, byte-exact markdown strings): a
+    plumbing-only oracle, blind to the renderer's own decisions."""
     from html_table_spark.operators.markdown import render_markdown
 
     docs = spark.createDataFrame(
@@ -1092,7 +1092,8 @@ def mc_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     OpenGraph / canonical / base / charset / lang, first-wins document
     order, over fixture pages whose heads rotate every field's presence,
     duplication, and encoding form.  One Arrow-batched zero-shuffle pass;
-    the DuckDB twin replays the kernel driver-side."""
+    the DuckDB twin replays the kernel driver-side: a plumbing-only
+    oracle, blind to the kernel's own decisions."""
     from html_table_spark.operators.metadata import page_metadata
 
     docs = spark.createDataFrame(
@@ -1160,9 +1161,9 @@ def tx_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _robots_fixture() -> tuple[list[tuple[str, str]], list[tuple[int, str]]]:
     """(robots rows, url rows) exercising every RFC 9309 decision path:
     longest-match precedence, Allow-wins ties, $ anchors, * wildcards,
-    exact-agent vs * group selection, unknown directives inside groups,
-    hosts without robots, rules that match nothing, query-string
-    matching, and case-insensitive hosts."""
+    exact-agent vs * group selection (an empty exact group included),
+    unknown directives inside groups, hosts without robots, rules that
+    match nothing, query-string matching, and case-insensitive hosts."""
     robots = [
         ("site-a.example", "\n".join([
             "# crawl policy",
@@ -1182,6 +1183,7 @@ def _robots_fixture() -> tuple[list[tuple[str, str]], list[tuple[int, str]]]:
             "Disallow:",             # empty Disallow: matches nothing
         ])),
         ("site-c.example", "User-agent: OtherBot\nDisallow: /\n"),
+        ("site-d.example", "User-agent: GoodBot\nDisallow:\n\nUser-agent: *\nDisallow: /\n"),
     ]
     paths = [
         "/", "/private/x", "/private/pub/ok", "/private/pubzzz",
@@ -1189,7 +1191,7 @@ def _robots_fixture() -> tuple[list[tuple[str, str]], list[tuple[int, str]]]:
         "/cgi-bin/run", "/open/page", "",
     ]
     hosts = ["site-a.example", "Site-B.example", "site-c.example",
-             "norobots.example"]
+             "site-d.example", "norobots.example"]
     urls = []
     i = 0
     for h in hosts:
@@ -1226,7 +1228,8 @@ def x_warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     (offset, length) random-access coordinates — member offsets in the
     COMPRESSED stream for .warc.gz, raw byte offsets for .warc (the
     slice-and-reparse property is pytest-pinned).  The DuckDB twin
-    replays the kernel driver-side."""
+    replays the kernel driver-side: a plumbing-only oracle, blind to the
+    kernel's own decisions."""
     from html_table_spark.sources.cdx import warc_cdx
 
     adf = spark.createDataFrame(

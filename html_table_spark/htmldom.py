@@ -9,8 +9,9 @@ HTML parser (PHP ``DOMDocument::loadHTML`` with ``LIBXML_NOWARNING |
 LIBXML_NOERROR``, reference ``src/Parser.php:417-454``):
 
 - tag and attribute names lowercased;
-- character/entity references decoded (``&nbsp;`` → U+00A0 — the header trim
-  charset depends on this, ``Parser.php:539``);
+- character/entity references decoded as libxml2 2.9 does: HTML 4 names
+  only, each ended by ``;`` (``&nbsp;`` → U+00A0 — the header trim charset
+  depends on this, ``Parser.php:539``);
 - whitespace text nodes PRESERVED verbatim (the reference's rowspan carry is
   keyed by DOM child index *including* whitespace text nodes,
   ``Parser.php:559``, so formatting is semantically load-bearing);
@@ -28,15 +29,15 @@ Recoverable-parse anomalies are collected into ``parse_errors`` so that the
 reference's ``failOnXmlErrors()`` mode (``Parser.php:256-271``) can be
 honoured as a per-document ``status='error'`` instead of an exception.
 
-Pure stdlib (``html.parser``) — the sandbox has no lxml; at cluster scale
-this also removes a native-lib deployment dependency from --py-files.
+A single-pass regex scanner in pure Python, so executors need no native
+library shipped with --py-files. Its trees are checked against libxml2
+2.9.14 itself, the reference's parser (``tests/libxml2_oracle.py``).
 """
 
 from __future__ import annotations
 
 import re
-from html import unescape
-from html.parser import HTMLParser
+from html.entities import name2codepoint
 
 TEXT = 0
 ELEMENT = 1
@@ -116,40 +117,43 @@ VOID_ELEMENTS = frozenset(
 )
 
 # Implied end tags: when a start tag `t` arrives, pop open elements while the
-# current element's tag is in CLOSE_BEFORE[t].  None of these sets contain
-# 'table', so implied closes never cross a table boundary (matches libxml's
-# HTML4 recovery on the fixture envelope).
-_TABLE_INNER = frozenset({"td", "th", "tr", "caption", "colgroup"})
-_BLOCK_CLOSES_P = frozenset({"p"})
+# current element's tag is in CLOSE_BEFORE[t]. The sets are libxml2 2.9.14's
+# htmlStartClose pairs (checked against libxml2 itself by
+# tests/test_htmldom.py), so e.g. a cell closes an open inline <b>, a
+# caption or thead after a cell nests in it, and <dt> does not close <dt>.
+# None of the sets contain 'table', so implied closes never cross a table
+# boundary.
 CLOSE_BEFORE: dict[str, frozenset] = {
-    "td": frozenset({"td", "th", "p"}),
-    "th": frozenset({"td", "th", "p"}),
-    "tr": _TABLE_INNER | {"p"},
-    "thead": _TABLE_INNER | {"thead", "tbody", "tfoot", "p"},
-    "tbody": _TABLE_INNER | {"thead", "tbody", "tfoot", "p"},
-    "tfoot": _TABLE_INNER | {"thead", "tbody", "tfoot", "p"},
-    "caption": _TABLE_INNER | {"p"},
-    "colgroup": _TABLE_INNER | {"p"},
-    "li": frozenset({"li", "p"}),
-    "dt": frozenset({"dt", "dd", "p"}),
-    "dd": frozenset({"dt", "dd", "p"}),
-    "option": frozenset({"option"}),
-    "p": _BLOCK_CLOSES_P,
-    # block-level starts implicitly close an open <p>
-    "div": _BLOCK_CLOSES_P,
-    "table": _BLOCK_CLOSES_P,
-    "ul": _BLOCK_CLOSES_P,
-    "ol": _BLOCK_CLOSES_P,
-    "pre": _BLOCK_CLOSES_P,
-    "blockquote": _BLOCK_CLOSES_P,
-    "form": _BLOCK_CLOSES_P,
-    "hr": _BLOCK_CLOSES_P,
-    "h1": _BLOCK_CLOSES_P,
-    "h2": _BLOCK_CLOSES_P,
-    "h3": _BLOCK_CLOSES_P,
-    "h4": _BLOCK_CLOSES_P,
-    "h5": _BLOCK_CLOSES_P,
-    "h6": _BLOCK_CLOSES_P,
+    tag: frozenset(closes.split())
+    for tag, closes in {
+        "td": "td th p a b font i span u",
+        "th": "td th p a b font i span u",
+        "tr": "tr td th caption colgroup p",
+        "thead": "caption colgroup",
+        "tbody": "thead tbody tfoot tr td th caption colgroup p",
+        "tfoot": "thead tbody tr td th caption colgroup p",
+        "caption": "p",
+        "colgroup": "caption colgroup p",
+        "col": "caption p",
+        "table": "p a pre h1 h2 h3 h4 h5 h6",
+        "p": "p b big i s small strike tt u h1 h2 h3 h4 h5 h6",
+        "li": "li p address dl pre h1 h2 h3 h4 h5 h6",
+        "dt": "dd p address dir menu pre",
+        "dd": "dt p address dir menu pre",
+        "dl": "dt p address dir menu pre",
+        "ul": "ol p address dir menu pre",
+        "ol": "ul p",
+        "pre": "ul p",
+        "menu": "ul p",
+        "address": "ul p",
+        "form": "form p address dir dl menu ol pre ul h1 h2 h3 h4 h5 h6",
+        "fieldset": "legend p a pre h1 h2 h3 h4 h5 h6",
+        "center": "b font i p",
+        "a": "a",
+        "option": "option",
+        "optgroup": "option",
+        **dict.fromkeys("dir div blockquote hr h1 h2 h3 h4 h5 h6".split(), "p"),
+    }.items()
 }
 
 _STRUCTURAL = frozenset({"html", "head", "body"})
@@ -183,148 +187,15 @@ def _close_misnested(stack: list[Node], tag: str, errors: list[str]) -> None:
     errors.append(f"unexpected end tag </{tag}>")
 
 
-class _TreeBuilder(HTMLParser):
-    """Incremental tree construction over the stdlib tolerant tokenizer."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.root = Node(ELEMENT, tag="#document")
-        self.stack: list[Node] = [self.root]
-        self.errors: list[str] = []
-
-    # -- helpers -------------------------------------------------------
-
-    def _current(self) -> Node:
-        return self.stack[-1]
-
-    def _append(self, node: Node) -> None:
-        self._current().children.append(node)
-
-    def _append_text(self, data: str) -> None:
-        if not data:
-            return
-        children = self._current().children
-        if children and type(children[-1]) is str:
-            # libxml keeps contiguous character data as ONE text node; child
-            # indices (rowspan carry keys) depend on this merge.
-            children[-1] += data
-        else:
-            children.append(data)
-
-    # -- tokenizer callbacks --------------------------------------------
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        tag = tag.lower()
-        if tag in _STRUCTURAL:
-            # <html>/<head>/<body> wrappers are skipped entirely — every
-            # XPath in scope uses the descendant axis, so wrappers are
-            # structurally inert (libxml would synthesize them anyway).
-            return
-        close_set = CLOSE_BEFORE.get(tag)
-        if close_set:
-            while len(self.stack) > 1 and self.stack[-1].tag in close_set:
-                self.stack.pop()
-        attr_dict: dict[str, str] = {}
-        for name, value in attrs:
-            name = name.lower()
-            if name not in attr_dict:  # libxml keeps the first duplicate
-                attr_dict[name] = value if value is not None else ""
-        node = Node(ELEMENT, tag=tag, attrs=attr_dict)
-        self._append(node)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(node)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        tag = tag.lower()
-        if tag in _STRUCTURAL:
-            return
-        if tag in VOID_ELEMENTS:
-            self.handle_starttag(tag, attrs)
-            return
-        self.handle_starttag(tag, attrs)
-        # non-void self-closing (XHTML-ish): empty element
-        if self.stack and self.stack[-1].tag == tag:
-            self.stack.pop()
-
-    def handle_endtag(self, tag: str) -> None:
-        tag = tag.lower()
-        if tag in _STRUCTURAL:
-            return
-        if tag in VOID_ELEMENTS:
-            return
-        if self.stack[-1].tag == tag:
-            self.stack.pop()
-        else:
-            _close_misnested(self.stack, tag, self.errors)
-
-    def handle_data(self, data: str) -> None:
-        self._append_text(data)
-
-    def handle_comment(self, data: str) -> None:
-        # Comments ARE childNodes in the reference DOM: they shift the
-        # rowspan-carry child index (Parser.php:559) but contribute nothing
-        # to nodeValue — keep them as real nodes.
-        self._append(Node(COMMENT, data=data))
-
-    def handle_pi(self, data: str) -> None:
-        # libxml2's HTML parser keeps <?...> as a PI childNode (PHP DOM
-        # shows them); they count for child indices, contribute no text
-        self._append(Node(PI, data=data))
-
-    def parse_html_declaration(self, i: int) -> int:
-        # align with the fast tokenizer and libxml2's htmlSkipBogusComment:
-        # real comments parse normally; DOCTYPE, <![CDATA[ and bogus <!x
-        # declarations skip to the FIRST '>' and produce no node (stdlib's
-        # default would scan marked sections to ']]>' and emit bogus
-        # comments — a different, SGML-ish recovery)
-        rawdata = self.rawdata
-        if rawdata[i : i + 4] == "<!--":
-            return self.parse_comment(i)
-        gt = rawdata.find(">", i)
-        if gt == -1:
-            return -1  # incomplete at buffer end
-        return gt + 1
-
-
-def parse_html_stdlib(html: str) -> tuple[Node, list[str]]:
-    """Reference tree builder over the stdlib tokenizer — kept as the
-    differential-testing oracle for the fast tokenizer below."""
-    builder = _TreeBuilder()
-    try:
-        builder.feed(html)
-        builder.close()
-        if builder.cdata_elem and builder.rawdata:
-            # unclosed <script>/<style> raw text runs to EOF (libxml2
-            # htmlParseScript; the stdlib goahead loop just buffers it)
-            builder.handle_data(builder.rawdata)
-            builder.rawdata = ""
-    except Exception as exc:  # pragma: no cover - extreme tag soup
-        builder.errors.append(f"tokenizer error: {exc}")
-    if len(builder.stack) > 1:
-        builder.errors.append(
-            "unclosed elements at EOF: " + ",".join(n.tag for n in builder.stack[1:])
-        )
-    return builder.root, builder.errors
-
-
-# ---------------------------------------------------------------------------
-# Fast tokenizer
-# ---------------------------------------------------------------------------
-# The stdlib tokenizer costs ~2/3 of kernel time (feed/goahead/updatepos do
-# line-tracking and incremental-buffer work we never use).  This is a
-# single-pass regex scanner producing the SAME tree shape — verified by a
-# differential test over all fixtures and the synthetic corpus
-# (tests/test_htmldom.py) — at ~3-4× the throughput.
-
 # start-tag alternative first: it's ~half of all tokens and the alternatives
 # are mutually exclusive on the character after '<', so order only affects
 # how fast the engine reaches the common case
 _TAG_RE = re.compile(
     r"""<(?:
         (?P<name>[a-zA-Z][^\s/>]*)(?P<attrs>(?:"[^"]*"|'[^']*'|[^>])*?)(?P<selfclose>/?)>
-      | (?P<end>/)\s*(?P<ename>[a-zA-Z][^\s>]*)[^>]*>
-      | !--(?P<comment>.*?)--\s*>
-      | (?P<bang>![^>]*)>
+      | (?P<end>/)(?:(?P<ename>[a-zA-Z][^\s>]*)[^>]*>|(?![a-zA-Z]))
+      | !--(?P<comment>.*?)--(?:\s*|!)>
+      | !(?:--|(?i:doctype))[^>]*>
       | \?(?P<pi>[^>]*)>
     )""",
     re.DOTALL | re.VERBOSE,
@@ -332,6 +203,7 @@ _TAG_RE = re.compile(
 _G_NAME = _TAG_RE.groupindex["name"]
 _G_ATTRS = _TAG_RE.groupindex["attrs"]
 _G_SELFCLOSE = _TAG_RE.groupindex["selfclose"]
+_G_END = _TAG_RE.groupindex["end"]
 _G_ENAME = _TAG_RE.groupindex["ename"]
 _G_COMMENT = _TAG_RE.groupindex["comment"]
 _G_PI = _TAG_RE.groupindex["pi"]
@@ -348,10 +220,7 @@ _RAWTEXT_END = {t: re.compile(f"</{t}", re.IGNORECASE) for t in _RAWTEXT}
 # one-lookup dispatch table for known tags: (close_set|None, skip, void,
 # rawtext). Unknown tags (custom elements) fall back to the default tuple.
 _TAG_INFO: dict[str, tuple[frozenset | None, bool, bool, bool]] = {}
-for _t in (
-    set(CLOSE_BEFORE) | VOID_ELEMENTS | _STRUCTURAL | _RAWTEXT
-    | {"a", "span", "b", "i", "u", "em", "strong", "td", "th", "tr", "table"}
-):
+for _t in set(CLOSE_BEFORE) | VOID_ELEMENTS | _STRUCTURAL | _RAWTEXT:
     _TAG_INFO[_t] = (
         CLOSE_BEFORE.get(_t),
         _t in _STRUCTURAL,
@@ -359,6 +228,42 @@ for _t in (
         _t in _RAWTEXT,
     )
 _TAG_INFO_DEFAULT: tuple = (None, False, False, False)
+
+
+# libxml2's htmlIsBooleanAttr: a valueless boolean attribute gets its own
+# name as value (``<td nowrap>`` reads nowrap="nowrap"), any other ''
+_BOOLEAN_ATTRS = frozenset(
+    "checked compact declare defer disabled ismap multiple nohref noresize "
+    "noshade nowrap readonly selected".split()
+)
+
+# libxml2 2.9 decodes only the HTML 4 entity set (plus &apos;), and a named
+# reference only when ';' follows its name (htmlParseEntityRef), so
+# "&notice" and "&ap;" stay literal; html.unescape would decode both
+_ENTITIES = {name: chr(cp) for name, cp in name2codepoint.items()}
+_ENTITIES["apos"] = "'"
+_REF_RE = re.compile(r"&(?:#[xX]([0-9a-fA-F]*);?|#([0-9]*);?|([A-Za-z_:][-A-Za-z0-9_:.]*);)")
+
+
+def _decode_ref(m: re.Match) -> str:
+    """One reference as libxml2 decodes it (htmlParseCharRef); '' for a
+    character reference to a code point XML does not allow."""
+    hex_digits, dec_digits, name = m.groups()
+    if name is not None:
+        return _ENTITIES.get(name, m.group(0))
+    digits, base = (hex_digits, 16) if hex_digits is not None else (dec_digits, 10)
+    # libxml2 stops accumulating past 0x10FFFF; 8 significant digits
+    # already exceed it, and int() of a huge digit run would raise
+    cp = int(digits.lstrip("0")[:8] or "0", base)
+    valid = cp in (0x9, 0xA, 0xD) or 0x20 <= cp <= 0xD7FF or 0xE000 <= cp <= 0xFFFD
+    return chr(cp) if valid or 0x10000 <= cp <= 0x10FFFF else ""
+
+
+def _decode_attr(value: str) -> str:
+    """An attribute value's references decoded; an invalid character
+    reference ends the value, as htmlParseHTMLAttribute writes it into its
+    C string as a NUL (a literal NUL ends it there too)."""
+    return _REF_RE.sub(lambda m: _decode_ref(m) or "\0", value).split("\0", 1)[0]
 
 
 def _parse_attrs(attrs_src: str) -> dict[str, str]:
@@ -369,20 +274,20 @@ def _parse_attrs(attrs_src: str) -> dict[str, str]:
             continue
         raw = m.group(2)
         if raw is None:
-            value = ""
+            value = name if name in _BOOLEAN_ATTRS else ""
         elif m.group(3) is not None:
             value = m.group(3)
         elif m.group(4) is not None:
             value = m.group(4)
         else:
             value = raw
-        out[name] = unescape(value) if "&" in value else value
+        out[name] = _decode_attr(value) if "&" in value else value
     return out
 
 
 def parse_html_fast(html: str) -> tuple[Node, list[str]]:
-    """Single-pass tolerant tokenizer + tree builder (same observable tree
-    as :func:`parse_html_stdlib`).
+    """Single-pass tolerant tokenizer + tree builder: libxml2's tree for
+    ``html`` without its implied ``html``/``head``/``body`` wrappers.
 
     Hot-loop notes: text slices are appended directly (adjacent runs merge
     at append time, so entity decoding per-piece equals decoding the merged
@@ -398,7 +303,7 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
 
     def append_text(data: str) -> None:
         if "&" in data:
-            data = unescape(data)
+            data = _REF_RE.sub(_decode_ref, data)
         children = stack[-1].children
         if children and type(children[-1]) is str:
             children[-1] += data
@@ -414,7 +319,7 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
             append_text(html[pos:lt])
         m = tag_match(html, lt)
         if m is None:
-            # lone '<' that opens no tag — character data (stdlib parity)
+            # lone '<' that opens no tag — character data, as in libxml2
             append_text("<")
             pos = lt + 1
             continue
@@ -452,9 +357,7 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
                     node.children.append(html[pos:end])
                 if m_end is None:
                     # raw text ran to EOF: keep the element on the stack so
-                    # the unclosed-at-EOF error fires, matching the stdlib
-                    # engine (failOnXmlErrors parity must not depend on the
-                    # tokenizer choice)
+                    # the unclosed-at-EOF error fires (failOnXmlErrors)
                     pos = n
                     continue
                 gt = find(">", end)
@@ -480,8 +383,12 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
             # PHP DOM keeps <?...> as a PI childNode — index parity
             stack[-1].children.append(Node(PI, data=pi))
             continue
-        # doctype / bogus declarations: skipped to '>' with no node
-        # (libxml2 htmlSkipBogusComment)
+        if g(_G_END):
+            # '</' with no name after it: libxml2's htmlParseEndTag drops
+            # the '</' and what follows stays character data
+            errors.append("end tag without a name")
+        # a doctype or an unterminated comment is skipped to '>' with no
+        # node; any other '<!' opens no tag and stays character data
     if len(stack) > 1:
         errors.append(
             "unclosed elements at EOF: " + ",".join(n.tag for n in stack[1:])

@@ -99,7 +99,7 @@ def html_reassembly_col(spans_col: str = "spans"):
     return F.coalesce(joined, F.lit(""))
 
 
-_COMMENT_END_RE = _re.compile(r"--\s*>")
+_COMMENT_END_RE = _re.compile(r"--(?:\s*|!)>")
 
 # A '<' inside a tag the boundary scan does NOT inspect (generic start tags
 # like <td ...>, generic end tags like </td ...>) can hide one of the scan's
@@ -373,8 +373,8 @@ def _top_level_table_cuts(html: str) -> list[tuple[int, int]] | None:
     ``<table/>``), quoted-attribute ``>`` and quoted ``</table>`` inside the
     *inspected* tag, and ``<tablex``-style non-matches all resolve the same
     way a whole-doc parse would. Table tags inside comments, inside
-    <script>/<style> raw text, and inside ``<?...?>`` PIs / ``<!...>``
-    bogus declarations (which the tokenizer swallows to their first '>')
+    <script>/<style> raw text, and inside ``<?...?>`` PIs / ``<!DOCTYPE``
+    declarations (which the tokenizer swallows to their first '>')
     are NOT boundaries, and close tags require the tokenizer's
     name-boundary (``</tables>`` is not a close). Tags the scan does not
     inspect (``<td …>``, ``</td …>``) can swallow event patterns in their
@@ -414,19 +414,19 @@ def _top_level_table_cuts(html: str) -> list[tuple[int, int]] | None:
         at, kind = min(events)
         if kind == "bang":
             if lower.startswith("<!--", at):
-                # tokenizer comment terminator is the regex --\s*> (not
-                # the literal -->); an unterminated comment is ambiguous →
-                # fall back to whole-doc parsing rather than risk
-                # divergent cuts
+                # tokenizer comment terminator is the regex --(\s*|!)>
+                # (not the literal -->); an unterminated comment is
+                # ambiguous → fall back to whole-doc parsing rather than
+                # risk divergent cuts
                 m = _COMMENT_END_RE.search(lower, at + 4)
                 if m is None:
                     return None
                 pos = m.end()
             else:
-                # bogus declaration / DOCTYPE: tokenizer swallows to the
-                # first '>' (no node); with no '>' it emits '<' as text
-                # and rescans from at+1 — mirror both
-                gt = find(">", at)
+                # DOCTYPE: tokenizer swallows to the first '>' (no node);
+                # any other '<!', or one with no '>', is '<' as text and
+                # rescans from at+1 — mirror both
+                gt = find(">", at) if lower.startswith("<!doctype", at) else -1
                 pos = (gt + 1) if gt != -1 else at + 1
             continue
         if kind == "pi":

@@ -72,7 +72,10 @@ def pattern_to_regex(pattern: str) -> str:
 def parse_robots(text: str) -> list[dict]:
     """One robots.txt → rule dicts (§2.2 grammar, tolerant): each rule
     carries its group's user-agent tokens.  Rules before any User-agent
-    line are ignored (they belong to no group, per the ABNF)."""
+    line are ignored (they belong to no group, per the ABNF).  Each
+    User-agent line also yields a group row (NULL pattern and regex, so it
+    matches no path): an agent's group replaces ``*`` even when it has no
+    rules, as in ``User-agent: a`` / ``Disallow:`` (§2.2.1)."""
     agents: list[str] = []
     rules: list[dict] = []
     last_was_rule = False
@@ -87,15 +90,15 @@ def parse_robots(text: str) -> list[dict]:
             if last_was_rule:
                 agents = []  # a new group starts
             agents.append(value.lower())
+            rules.append({"agent": value.lower(), "allow": True, "pattern": None,
+                          "pattern_len": 0, "regex": None})
             last_was_rule = False
         elif key in ("allow", "disallow"):
             last_was_rule = True
             if not agents:
                 continue
-            if value == "" and key == "disallow":
-                continue  # empty Disallow matches nothing (allows all)
-            if value == "" and key == "allow":
-                continue  # empty pattern can never be the longest match
+            if value == "":
+                continue  # an empty pattern matches nothing (its group row stays)
             for agent in agents:
                 rules.append(
                     {
@@ -147,8 +150,9 @@ def robots_allowed(
     matched_pattern)`` — pure JVM on the corpus side.
 
     Group selection: rows for the crawler's exact (lowercased) token if
-    that host has any, else the ``*`` group (decided per host with one
-    tiny aggregate on the broadcast-sized rules relation).  Matching:
+    that host has a group for it, rules or not, else the ``*`` group
+    (decided per host with one tiny aggregate on the broadcast-sized rules
+    relation).  Matching:
     per-row RLIKE against the translated regex; winner =
     ``max(struct(pattern_len, allow))`` — longest pattern first, Allow
     winning ties, exactly §2.2.2's precedence.  Hosts with no rules (or

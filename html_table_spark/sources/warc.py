@@ -57,6 +57,7 @@ __all__ = [
     "split_gzip_members",
     "iter_gzip_members",
     "read_warc",
+    "warc_doc_id",
     "warc_to_documents",
     "read_warc_documents",
     "encode_warc",
@@ -305,11 +306,20 @@ def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFram
 _HTML_MIMES = ("text/html", "application/xhtml+xml")
 
 
+def warc_doc_id():
+    """A record's document id, ``<archive file name>#<url>#<record_idx>``:
+    unique even when a crawl revisits a URL or two archives hold the same
+    URL at the same index. The file name, not the full path, keeps the ids
+    of a resume from another mount the same."""
+    name = F.regexp_extract("archive", r"[^/]*$", 0)
+    return F.concat_ws("#", name, "url", F.col("record_idx").cast("string"))
+
+
 def warc_to_documents(records: DataFrame) -> DataFrame:
     """HTML ``response`` records → the canonical ``documents(doc_id,
-    spans)`` shape (doc_id = ``url#record_idx``, unique even when a crawl
-    revisits a URL), ready for the extraction pipeline / read_documents
-    consumers.  Pure Column expressions — the parse already happened."""
+    spans)`` shape (doc_id from :func:`warc_doc_id`), ready for the
+    extraction pipeline / read_documents consumers.  Pure Column
+    expressions — the parse already happened."""
     keep = records.where(
         (F.col("status") == "ok")
         & (F.col("record_type") == "response")
@@ -317,7 +327,7 @@ def warc_to_documents(records: DataFrame) -> DataFrame:
         & (F.col("http_status") == 200)
     )
     return keep.select(
-        F.concat_ws("#", "url", F.col("record_idx").cast("string")).alias("doc_id"),
+        warc_doc_id().alias("doc_id"),
         F.array(
             F.struct(
                 F.lit("text").alias("kind"),

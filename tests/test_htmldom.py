@@ -1,20 +1,26 @@
-"""Tokenizer tests: fast scanner vs stdlib oracle (differential), plus the
-edge cases the reference's libxml parse pins down."""
+"""Tokenizer tests: the fast scanner against libxml2 2.9.14, the
+reference's own parser (differential), plus the edge cases the reference's
+libxml parse pins down."""
 
 from __future__ import annotations
 
+import re
+
+from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import synthesize_documents
 from html_table_spark.fixtures import FIXTURES, f14_mega_doc_html
 from html_table_spark.htmldom import (
     COMMENT,
     ELEMENT,
+    PI,
     TEXT,
     Node,
     parse_html_fast,
-    parse_html_stdlib,
     php_int_cast,
 )
+from html_table_spark.semantics import parse_document
 from html_table_spark.spans import doc_spans_to_html
+from tests import libxml2_oracle as libxml2
 
 
 def tree_repr(node):
@@ -22,19 +28,34 @@ def tree_repr(node):
         return ("T", node)
     if node.kind == COMMENT:
         return ("C", node.data)
+    if node.kind == PI:
+        return ("P", node.data)
     return ("E", node.tag, tuple(sorted(node.attrs.items())),
             tuple(tree_repr(c) for c in node.children))
 
 
 def assert_same_tree(html: str) -> None:
     fast, _ = parse_html_fast(html)
-    std, _ = parse_html_stdlib(html)
-    assert tree_repr(fast) == tree_repr(std), html[:200]
+    assert tree_repr(fast) == tree_repr(libxml2.unwrap(libxml2.parse(html)[0])), html[:200]
+
+
+def assert_same_extraction(html: str, config: ParserConfig) -> None:
+    ours = parse_document(html, config.ignore_errors())
+    assert ours == libxml2.extract(html, config), html[:200]
+
+
+# Fixtures whose trees differ from libxml2's only where libxml2 implies
+# html/head/body structure: the whitespace before an implied <head> and an
+# implied <p> around bare body text. Their extraction output is equal.
+IMPLIED_STRUCTURE_FIXTURES = {"F02a", "F02b", "F02c", "F10a", "F10d"}
 
 
 def test_differential_fixtures():
-    for fixture_id, (html, _cfg) in FIXTURES.items():
-        assert_same_tree(html)
+    for fixture_id, (html, cfg) in FIXTURES.items():
+        assert_same_extraction(html, cfg)
+        assert_same_extraction(html, cfg.all_tables())
+        if fixture_id not in IMPLIED_STRUCTURE_FIXTURES:
+            assert_same_tree(html)
     assert_same_tree(f14_mega_doc_html(30))
 
 
@@ -43,11 +64,14 @@ def test_differential_corpus():
         assert_same_tree(doc_spans_to_html(row["spans"]))
 
 
+# Documents that open with bare text, which libxml2 wraps in an implied <p>
+# (htmlCheckParagraph): only their extraction output is compared.
+IMPLIED_P_CASES = ["plain text only", "a < b and c > d", "df<body></p>sghfd"]
+
+
 def test_differential_edge_cases():
     cases = [
         "",
-        "plain text only",
-        "a < b and c > d",
         "<td>unclosed cell",
         "<table><tr><td>a<td>b</table>",  # implied closes
         "<TABLE ID='X'><TR><TD COLSPAN=2>shout</TD></TR></TABLE>",
@@ -60,20 +84,41 @@ def test_differential_edge_cases():
         "<div><span>nested <b>bold</b> tail</span></div>",
         "<table><caption>cap</caption><tr><td>v</td></tr></table>",
         "<ol><li>one<li>two</ol>",
-        "df<body></p>sghfd",
         "<table><tr><td title=\"a&quot;b\">t</td></tr></table>",
         "<a href=unquoted>x</a>",
         "<x-custom attr>y</x-custom>",
     ]
     for html in cases:
         assert_same_tree(html)
+    for html in cases + IMPLIED_P_CASES:
+        assert_same_extraction(html, ParserConfig())
+        assert_same_extraction(html, ParserConfig().all_tables())
+
+
+# HTML 4 elements that can be open when a start tag arrives (void, raw-text
+# and html/head/body elements aside)
+_CONTAINERS = (
+    "a abbr acronym address b bdo big blockquote button caption center cite "
+    "code colgroup dd del dfn dir div dl dt em fieldset font form h1 h2 h3 h4 "
+    "h5 h6 i ins kbd label legend li map menu nobr ol optgroup option p pre q "
+    "s samp select small span strike strong sub sup table tbody td tfoot th "
+    "thead tr tt u ul var"
+).split()
+
+
+def test_differential_implied_end_tags():
+    """Every start tag after every open element: the implied end tags
+    (CLOSE_BEFORE) are libxml2's own."""
+    for new in _CONTAINERS + ["col", "hr", "br", "img"]:
+        for old in _CONTAINERS:
+            assert_same_tree(f"<div><{old}><{new}>x")
 
 
 def test_mismatched_quote_divergence():
-    """Known (accepted) divergence: on a start tag with mismatched quotes
-    the stdlib tokenizer demotes the whole tag to text, while the fast
-    scanner parses it tolerantly — which is what libxml (the reference's
-    parser) does. The fast behavior is the spec here."""
+    """A start tag with mismatched quotes still parses as a tag: the fast
+    scanner recovers at the first '>', where libxml2 swallows the rest of
+    the document into the value (the deliberate ``unclosed_attr_quote``
+    divergence, ``LIBXML2_DIVERGES`` in test_libxml2_corpus.py)."""
     root, _ = parse_html_fast("<td colspan='2\">weird quotes</td>")
     td = next(root.iter_elements())
     assert td.tag == "td"
@@ -107,9 +152,9 @@ def test_php_int_cast():
     assert php_int_cast("nope") == 0
 
 
-# --- randomized differential fuzz (fast scanner vs stdlib builder) ----------
+# --- randomized differential fuzz (fast scanner vs libxml2) ------------------
 
-from hypothesis import given, settings
+from hypothesis import event, given, settings
 from hypothesis import strategies as st
 
 _FUZZ_TAGS = [
@@ -139,13 +184,33 @@ def _token(draw):
     return f"<{tag}/>"
 
 
+# libxml2 acts on html/body tags that the fast tokenizer skips: </body>,
+# </html>, <body/> and <html/> close an open table, and a <body> inside a
+# table nests there (ROADMAP Fix first: implied html/body). A divergence
+# belongs to this class when removing every html/body tag removes it; the
+# fast tokenizer's own output does not change when they are removed.
+_HTML_BODY_TAG = re.compile(r"</?(?:html|body)\b[^>]*>")
+
+
+def _html_body_class(html: str, config: ParserConfig) -> bool:
+    stripped = _HTML_BODY_TAG.sub("", html)
+    return parse_document(stripped, config) == libxml2.extract(stripped, config)
+
+
 @given(st.lists(_token(), min_size=0, max_size=30))
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=500, deadline=None)
 def test_differential_fuzz_tag_soup(tokens):
     """Random tag soup (unbalanced opens/closes, implied closes, comments,
-    entities, void and self-closing elements, skipped structural wrappers):
-    the fast scanner and the stdlib builder must produce identical trees."""
-    assert_same_tree("".join(tokens))
+    entities, void and self-closing elements, html/body wrappers), extracted
+    in first-table and all-tables mode: the output equals the extraction
+    over libxml2's tree, or the divergence is the html/body class above
+    (its minimal repros are strict xfails in test_libxml2_corpus.py)."""
+    html = "".join(tokens)
+    for mode, config in (("first-table", ParserConfig()), ("all-tables", ParserConfig().all_tables())):
+        if parse_document(html, config) == libxml2.extract(html, config):
+            continue
+        assert _html_body_class(html, config), (mode, html)
+        event(f"{mode}: html/body tags")
 
 
 def test_xpath_descendant_positionals_count_per_parent():

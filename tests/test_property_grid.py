@@ -1,5 +1,6 @@
-"""Property-based tests (hypothesis): the two tokenizers agree on arbitrary
-table soup, and the grid resolver maintains its structural invariants."""
+"""Property-based tests (hypothesis): the tokenizer agrees with libxml2 on
+arbitrary table soup, and the grid resolver maintains its structural
+invariants."""
 
 from __future__ import annotations
 
@@ -7,8 +8,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from html_table_spark.config import ParserConfig
-from html_table_spark.htmldom import parse_html_fast, parse_html_stdlib
+from html_table_spark.htmldom import parse_html_fast
 from html_table_spark.semantics import parse_document
+from tests import libxml2_oracle as libxml2
 from tests.test_htmldom import tree_repr
 
 _cell_text = st.text(
@@ -60,8 +62,7 @@ def table_html(draw) -> str:
 @settings(max_examples=150, deadline=None)
 def test_tokenizers_agree(html: str):
     fast, _ = parse_html_fast(html)
-    std, _ = parse_html_stdlib(html)
-    assert tree_repr(fast) == tree_repr(std)
+    assert tree_repr(fast) == tree_repr(libxml2.unwrap(libxml2.parse(html)[0]))
 
 
 @given(table_html())

@@ -27,7 +27,12 @@ User-agent: *
 Disallow:
 Allow:
 """
-    rules = parse_robots(txt)
+    rows = parse_robots(txt)
+    rules = [r for r in rows if r["regex"] is not None]
+    # every UA token records its group, rules or not
+    assert [r["agent"] for r in rows if r["regex"] is None] == [
+        "goodbot", "otherbot", "third", "*"
+    ]
     # both UA tokens of the first group carry both rules
     assert {(r["agent"], r["pattern"], r["allow"]) for r in rules} == {
         ("goodbot", "/private/", False), ("otherbot", "/private/", False),
@@ -36,8 +41,10 @@ Allow:
     }
     # empty Disallow/Allow produce no rules; rules before any UA ignored
     assert parse_robots("Disallow: /x\nUser-agent: a\nDisallow: /y") == [
+        {"agent": "a", "allow": True, "pattern": None, "pattern_len": 0,
+         "regex": None},
         {"agent": "a", "allow": False, "pattern": "/y", "pattern_len": 2,
-         "regex": "^/y"}
+         "regex": "^/y"},
     ]
     assert parse_robots("") == [] and parse_robots(None) == []
 
@@ -47,7 +54,7 @@ def test_sitemap_does_not_split_ua_run():
     assert {r["agent"] for r in parse_robots(txt)} == {"a", "b"}
     # but a RULE does end the run: c gets its own group
     txt2 = "User-agent: a\nDisallow: /x\nUser-agent: c\nDisallow: /y"
-    assert {(r["agent"], r["pattern"]) for r in parse_robots(txt2)} == {
+    assert {(r["agent"], r["pattern"]) for r in parse_robots(txt2) if r["regex"]} == {
         ("a", "/x"), ("c", "/y")
     }
 
@@ -92,6 +99,10 @@ def test_rfc_decision_matrix(spark):
     assert v["http://site-a.example"] == (True, None)
     # userinfo + port: host still resolves to site-a.example
     assert v["https://u@site-a.example:8443/private/x"] == (False, "/private/")
+    # an exact-agent group with only an empty Disallow still replaces the
+    # * group (§2.2.1): GoodBot may fetch everything on site-d
+    assert v["http://site-d.example/private/x"] == (True, None)
+    assert v["http://site-d.example/"] == (True, None)
 
 
 def test_no_python_on_url_side(spark):

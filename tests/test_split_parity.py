@@ -22,7 +22,9 @@ from html_table_spark.config import ParserConfig
 from html_table_spark.operators.extract import split_html
 from html_table_spark.semantics import parse_document
 
-_STRAY = st.sampled_from(["", "", "</div>", "</b>", "</span>", "</tr>", "</p>"])
+_STRAY = st.sampled_from(
+    ["", "", "</div>", "</b>", "</span>", "</tr>", "</p>", "<!x ", "<!-- c --!>", "<!-- d -->"]
+)
 _CELL = st.tuples(_STRAY, st.sampled_from(["a", "b c", "&amp;"]))
 _ROW = st.lists(_CELL, min_size=1, max_size=3)
 _TABLE = st.tuples(_STRAY, st.lists(_ROW, min_size=1, max_size=2))

@@ -143,9 +143,11 @@ def test_spark_reader_binaryfile(spark, tmp_path):
     docs = warc_to_documents(recs)
     got = sorted(r["doc_id"] for r in docs.collect())
     # only 200 + HTML responses become documents (idx offset by warcinfo),
-    # from BOTH archives
+    # from BOTH archives, and the same url#idx in two archives stays two ids
     assert got == sorted(
-        ["http://a.example/t#1", "http://b.example/p#2"] * 2
+        f"{archive}#{url}"
+        for archive in ("one.warc", "two.warc.gz")
+        for url in ("http://a.example/t#1", "http://b.example/p#2")
     )
     assert docs.schema["spans"].dataType.elementType.fieldNames() == [
         "kind", "text", "media_ref", "offset"
@@ -162,7 +164,7 @@ def test_end_to_end_extraction_from_warc(spark, tmp_path):
     ok = extracted.where((F.col("status") == "ok") & (F.col("table_idx") >= 0))
     rows = ok.collect()
     assert len(rows) == 1  # only a.example/t carries a table
-    assert rows[0]["doc_id"] == "http://a.example/t#1"
+    assert rows[0]["doc_id"] == "crawl.warc.gz#http://a.example/t#1"
     texts = [s["text"] for s in rows[0]["spans"] if s["kind"] == "cell"]
     assert "v" in texts
 
