@@ -23,7 +23,8 @@ LIBXML_NOERROR``, reference ``src/Parser.php:417-454``):
 - recoverable tag soup: implied end tags (``<tr>`` closes an open ``<tr>``,
   ``<td>`` closes ``<td>/<th>``, …), stray end tags ignored, misplaced end
   tags ignored when a higher end-priority element is open above their
-  match (libxml2 ``htmlAutoCloseOnClose``), unclosed elements closed at EOF.
+  match (libxml2 ``htmlAutoCloseOnClose``), unclosed elements closed at EOF,
+  a tag cut off by end of input built as a tag.
 
 Recoverable-parse anomalies are collected into ``parse_errors`` so that the
 reference's ``failOnXmlErrors()`` mode (``Parser.php:256-271``) can be
@@ -31,7 +32,9 @@ honoured as a per-document ``status='error'`` instead of an exception.
 
 A single-pass regex scanner in pure Python, so executors need no native
 library shipped with --py-files. Its trees are checked against libxml2
-2.9.14 itself, the reference's parser (``tests/libxml2_oracle.py``).
+2.9.14 itself, the reference's parser (``tests/libxml2_oracle.py``). Its
+token grammar (``_TAG_RE``) is the only one in the package: the mega-doc
+splitter cuts at :func:`top_level_table_ranges`, a walk of the same tokens.
 """
 
 from __future__ import annotations
@@ -187,16 +190,22 @@ def _close_misnested(stack: list[Node], tag: str, errors: list[str]) -> None:
     errors.append(f"unexpected end tag </{tag}>")
 
 
-# start-tag alternative first: it's ~half of all tokens and the alternatives
-# are mutually exclusive on the character after '<', so order only affects
-# how fast the engine reaches the common case
+# The one HTML token grammar: the tree builder and the mega-doc splitter
+# (top_level_table_ranges) both walk it. Start-tag alternative first: it's
+# ~half of all tokens and the alternatives are mutually exclusive on the
+# character after '<', so order only affects how fast the engine reaches the
+# common case. Names use libxml2's htmlParseHTMLName class, so '<td<b>' is a
+# td. Every tag ends at '>' or at the end of input, as libxml2 builds a tag
+# cut off by end of input; the attribute region is possessive, so a tag with
+# no '>' after it costs one linear scan, never a backtracking search.
 _TAG_RE = re.compile(
     r"""<(?:
-        (?P<name>[a-zA-Z][^\s/>]*)(?P<attrs>(?:"[^"]*"|'[^']*'|[^>])*?)(?P<selfclose>/?)>
-      | (?P<end>/)(?:(?P<ename>[a-zA-Z][^\s>]*)[^>]*>|(?![a-zA-Z]))
+        (?P<name>[a-zA-Z][-a-zA-Z0-9:_.]*)
+        (?P<attrs>(?:"[^"]*"|'[^']*'|[^>"'/]++|/(?!>)|["'])*+)(?P<selfclose>/?)(?:>|\Z)
+      | (?P<end>/)(?:(?P<ename>[a-zA-Z][-a-zA-Z0-9:_.]*)[^>]*+(?:>|\Z)|(?![a-zA-Z]))
       | !--(?P<comment>.*?)--(?:\s*|!)>
-      | !(?:--|(?i:doctype))[^>]*>
-      | \?(?P<pi>[^>]*)>
+      | !(?:--|(?i:doctype))[^>]*+(?:>|\Z)
+      | \?(?:(?P<pi>[^>]*+)>|.*)
     )""",
     re.DOTALL | re.VERBOSE,
 )
@@ -208,9 +217,14 @@ _G_ENAME = _TAG_RE.groupindex["ename"]
 _G_COMMENT = _TAG_RE.groupindex["comment"]
 _G_PI = _TAG_RE.groupindex["pi"]
 
+# an attribute, or a run libxml2 drops because no name starts it (its
+# htmlParseStartTag skips such a run up to the next blank). A quoted value
+# the tag ends inside runs to the tag's end, as libxml2's runs to the end
+# of input.
 _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)
-        (?:\s*=\s*("([^"]*)"|'([^']*)'|[^\s>]*))?""",
+        (?:\s*=\s*("([^"]*)(?:"|\Z)|'([^']*)(?:'|\Z)|[^\s>]*))?
+      | \S+""",
     re.VERBOSE,
 )
 
@@ -269,7 +283,10 @@ def _decode_attr(value: str) -> str:
 def _parse_attrs(attrs_src: str) -> dict[str, str]:
     out: dict[str, str] = {}
     for m in _ATTR_RE.finditer(attrs_src):
-        name = m.group(1).lower()
+        name = m.group(1)
+        if name is None:
+            continue
+        name = name.lower()
         if name in out:  # libxml keeps the first duplicate
             continue
         raw = m.group(2)
@@ -283,6 +300,20 @@ def _parse_attrs(attrs_src: str) -> dict[str, str]:
             value = raw
         out[name] = _decode_attr(value) if "&" in value else value
     return out
+
+
+def _rawtext_end(html: str, tag: str, pos: int) -> tuple[int, int | None]:
+    """The raw text of a ``<script>``/``<style>`` whose start tag ends at
+    ``pos``: ``(end, after)``, ``after`` being the position past its end
+    tag, or None when the raw text runs to the end of ``html``. A
+    case-insensitive search from ``pos``: lowercasing the whole document
+    per element would be O(k·n) allocation."""
+    m_end = _RAWTEXT_END[tag].search(html, pos)
+    if m_end is None:
+        return len(html), None
+    end = m_end.start()
+    gt = html.find(">", end)
+    return end, len(html) if gt == -1 else gt + 1
 
 
 def parse_html_fast(html: str) -> tuple[Node, list[str]]:
@@ -348,20 +379,15 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
                 continue  # empty element (XHTML-ish)
             stack.append(node)
             if rawtext:
-                # raw-text content: case-insensitive search for the end tag
-                # from pos (lowercasing the whole document per script/style
-                # element would be O(k·n) allocation)
-                m_end = _RAWTEXT_END[tag].search(html, pos)
-                end = m_end.start() if m_end else n
+                end, after = _rawtext_end(html, tag, pos)
                 if end > pos:
                     node.children.append(html[pos:end])
-                if m_end is None:
+                if after is None:
                     # raw text ran to EOF: keep the element on the stack so
                     # the unclosed-at-EOF error fires (failOnXmlErrors)
                     pos = n
                     continue
-                gt = find(">", end)
-                pos = n if gt == -1 else gt + 1
+                pos = after
                 stack.pop()
             continue
         ename = g(_G_ENAME)
@@ -394,6 +420,45 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
             "unclosed elements at EOF: " + ",".join(n.tag for n in stack[1:])
         )
     return root, errors
+
+
+def top_level_table_ranges(html: str) -> list[tuple[int, int]]:
+    """``[start, end)`` of each top-level table of ``parse_html_fast``'s
+    tree, in document order, from the same token stream without building
+    the tree (the mega-doc splitter cuts at these ranges). ``_TAG_RE`` is
+    walked from the same positions and raw text skipped the same way; only
+    tables move the depth. A table closes only at ``</table>`` or at the end
+    of input: no implied close pops a table, and ``END_PRIORITY`` lets no
+    open element rank above one, so ``</table>`` with a table open closes
+    the innermost, and a stray one is ignored."""
+    ranges: list[tuple[int, int]] = []
+    depth = start = 0
+    pos: int | None = 0
+    while pos is not None:
+        for m in _TAG_RE.finditer(html, pos):
+            last = m.lastindex
+            if last == _G_SELFCLOSE:
+                tag = m.group(_G_NAME).lower()
+                if tag == "table":
+                    if m.group(_G_SELFCLOSE):  # <table/>: a complete empty table
+                        if not depth:
+                            ranges.append(m.span())
+                        continue
+                    if not depth:
+                        start = m.start()
+                    depth += 1
+                elif tag in _RAWTEXT and not m.group(_G_SELFCLOSE):
+                    pos = _rawtext_end(html, tag, m.end())[1]
+                    break
+            elif last == _G_ENAME and depth and m.group(_G_ENAME).lower() == "table":
+                depth -= 1
+                if not depth:
+                    ranges.append((start, m.end()))
+        else:
+            pos = None
+    if depth:
+        ranges.append((start, len(html)))
+    return ranges
 
 
 # the runtime tokenizer (Parser.php:446 ``loadHTML`` under

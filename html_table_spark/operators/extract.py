@@ -13,7 +13,8 @@ Two stages, each one ``mapInArrow`` with one output row shape:
 
 - :func:`split_mega_docs` cuts mega documents at top-level table
   boundaries into ``(doc_id, html, table_idx_base)`` chunks (Spark-free
-  core: :func:`split_html`);
+  core: :func:`split_html`, which takes the boundaries from the tokenizer's
+  own token stream);
 - :func:`make_arrow_extractor` parses ``(doc_id, html[, table_idx_base])``
   into ``EXTRACTED_SCHEMA`` rows, adding the base to each table ordinal.
 
@@ -31,7 +32,6 @@ splitter's output batches too.
 
 from __future__ import annotations
 
-import re as _re
 import time
 from collections.abc import Iterator
 
@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import ParserConfig
-from ..htmldom import _TAG_RE as _html_tag_re
+from ..htmldom import top_level_table_ranges
 from ..semantics import parse_document
 from ..spans import encode_table_flat
 from ..sources.documents import EXTRACTED_SCHEMA
@@ -97,38 +97,6 @@ def html_reassembly_col(spans_col: str = "spans"):
     )
     joined = F.array_join(F.array_sort(indexed).getField("t"), "")
     return F.coalesce(joined, F.lit(""))
-
-
-_COMMENT_END_RE = _re.compile(r"--(?:\s*|!)>")
-
-# A '<' inside a tag the boundary scan does NOT inspect (generic start tags
-# like <td ...>, generic end tags like </td ...>) can hide one of the scan's
-# own event patterns (quoted '<table>'/'</table>' in a data attribute,
-# unquoted 'foo=</table>') and silently divert the depth counter while
-# staying balanced. Detect that shape in ONE C-level pass and fall back to
-# the always-correct whole-doc parse. Mirrors _TAG_RE's consumption rules:
-# start-tag attrs honor quotes (so the quote alternatives here exclude '<'
-# to EXPOSE an angle hidden inside them), end tags are quote-blind and stop
-# at the first '>'. Event tags (<table/<script/<style/<!/<?/comments) fire
-# before anything embedded in them and are consumed exactly, so a match
-# inside one of those is only ever a harmless false positive (→ fallback).
-_UNSEEN_TAG_ANGLE_RE = _re.compile(
-    r"""<(?:
-          [a-zA-Z](?:"[^"<]*"|'[^'<]*'|[^<>])*+  # start tag: quote-aware
-        | /[^<>]*+                               # end tag: quote-blind
-        )<""",
-    _re.VERBOSE,
-)
-# The attr-region quantifiers are POSSESSIVE (*+): a quote char is matchable
-# by both the pair alternatives and [^<>], so on a failing overall match a
-# backtracking engine re-explores every pair-vs-single split — measured
-# exponential (~8× per 4 chars) on a quote run like '<a ' + '"'*48, which
-# would pin an executor core on one adversarial mega doc. Possessive
-# matching keeps the deterministic left-to-right consumption (pairs first,
-# lone quote as a plain char) and the same match language: the pair branch
-# excludes '<', so every '<' it could hide is exposed either way, and a
-# singles re-parse of a successful pair region dies at the first '>' the
-# pair consumed — it can never reach a '<' the possessive scan missed.
 
 
 def make_arrow_extractor(config: ParserConfig):
@@ -320,12 +288,13 @@ def _extract_html(html_docs: DataFrame, config: ParserConfig) -> DataFrame:
 def split_html(html: str, tables_per_chunk: int) -> list[tuple[int, str]]:
     """Cut ``html`` into ``(base_ordinal, chunk_html)`` pieces of at most
     ``tables_per_chunk`` top-level tables each, ``base_ordinal`` being the
-    ordinal of the chunk's first table in the whole document. A document
-    the boundary scan cannot split (tag soup, markup hidden in a tag body)
-    or with no more than ``tables_per_chunk`` tables is one piece,
-    ``[(0, html)]``: correctness never depends on the split."""
-    cuts = _top_level_table_cuts(html)
-    if not cuts or len(cuts) <= tables_per_chunk:
+    ordinal of the chunk's first table in the whole document. The cuts are
+    the tokenizer's own top-level table ranges
+    (:func:`htmldom.top_level_table_ranges`), so every piece parses to
+    exactly its tables of the whole document. A document with no more than
+    ``tables_per_chunk`` tables is one piece, ``[(0, html)]``."""
+    cuts = top_level_table_ranges(html)
+    if len(cuts) <= tables_per_chunk:
         return [(0, html)]
     return [
         (first, html[cuts[first][0] : cuts[min(first + tables_per_chunk, len(cuts)) - 1][1]])
@@ -359,133 +328,3 @@ def split_mega_docs(html_docs: DataFrame, tables_per_chunk: int = 64) -> DataFra
             )
 
     return html_docs.mapInArrow(split_batches, schema=SPLIT_SCHEMA)
-
-
-def _top_level_table_cuts(html: str) -> list[tuple[int, int]] | None:
-    """Byte ranges [start, end) of top-level <table>…</table> blocks via a
-    single linear scan. Returns None when the scan finds unbalanced nesting
-    (tag soup) — callers then fall back to whole-doc extraction, which is
-    always correct, just unsplit.
-
-    The scan mirrors the tokenizer exactly at every event it inspects: at a
-    candidate <table>/<script>/<style> start tag it runs the tokenizer's own
-    ``_TAG_RE`` (htmldom), so self-closed empty elements (``<script/>``,
-    ``<table/>``), quoted-attribute ``>`` and quoted ``</table>`` inside the
-    *inspected* tag, and ``<tablex``-style non-matches all resolve the same
-    way a whole-doc parse would. Table tags inside comments, inside
-    <script>/<style> raw text, and inside ``<?...?>`` PIs / ``<!DOCTYPE``
-    declarations (which the tokenizer swallows to their first '>')
-    are NOT boundaries, and close tags require the tokenizer's
-    name-boundary (``</tables>`` is not a close). Tags the scan does not
-    inspect (``<td …>``, ``</td …>``) can swallow event patterns in their
-    attribute region — quoted ``data-x="</table>x<table>"`` stays
-    *balanced* and would silently cut garbage (round-3 ADVICE) — so a
-    single C-level pre-scan (``_UNSEEN_TAG_ANGLE_RE``) detects any ``<``
-    inside a tag body and falls back to the whole-doc parse, which is
-    always correct, just unsplit."""
-    lower = html.lower()
-    n = len(lower)
-    if n != len(html):  # .lower() changed length (e.g. 'İ') → offsets shift
-        return None
-    if _UNSEEN_TAG_ANGLE_RE.search(html) is not None:
-        return None  # markup hidden inside a tag body — do not split
-    cuts: list[tuple[int, int]] = []
-    depth = 0
-    pos = 0
-    start = -1
-    find = lower.find
-    tag_match = _html_tag_re.match
-    # per-pattern next-occurrence cache, refreshed only once consumed — a
-    # fresh find() of every pattern at every event would rescan the rest of
-    # the doc k times per table (quadratic on mega docs, the one place this
-    # function runs)
-    pats = {
-        "open": "<table", "close": "</table", "bang": "<!",
-        "pi": "<?", "script": "<script", "style": "<style",
-    }
-    nxt = {k: find(p) for k, p in pats.items()}
-    while pos < n:
-        for k, p in pats.items():
-            if -1 < nxt[k] < pos:
-                nxt[k] = find(p, pos)
-        events = [(v, k) for k, v in nxt.items() if v != -1]
-        if not events:
-            break
-        at, kind = min(events)
-        if kind == "bang":
-            if lower.startswith("<!--", at):
-                # tokenizer comment terminator is the regex --(\s*|!)>
-                # (not the literal -->); an unterminated comment is
-                # ambiguous → fall back to whole-doc parsing rather than
-                # risk divergent cuts
-                m = _COMMENT_END_RE.search(lower, at + 4)
-                if m is None:
-                    return None
-                pos = m.end()
-            else:
-                # DOCTYPE: tokenizer swallows to the first '>' (no node);
-                # any other '<!', or one with no '>', is '<' as text and
-                # rescans from at+1 — mirror both
-                gt = find(">", at) if lower.startswith("<!doctype", at) else -1
-                pos = (gt + 1) if gt != -1 else at + 1
-            continue
-        if kind == "pi":
-            # <?...> processing instruction: swallowed to the first '>'
-            gt = find(">", at)
-            pos = (gt + 1) if gt != -1 else at + 1
-            continue
-        if kind == "close":
-            after = at + 7
-            if after < n and lower[after] not in " >\t\n\r":
-                pos = after  # </tables> — not a table close
-                continue
-            if depth == 0:
-                return None  # stray close — soup; don't split
-            depth -= 1
-            gt = find(">", at)
-            end = (gt + 1) if gt != -1 else n
-            if depth == 0:
-                cuts.append((start, end))
-            pos = end
-            continue
-        # open / script / style: run the tokenizer's start-tag regex so tag
-        # end and self-closing resolve identically to a whole-doc parse
-        m = tag_match(lower, at)
-        if m is None:
-            pos = at + 1  # tokenizer emits '<' as text and rescans from at+1
-            continue
-        name = m.group("name")
-        tag_end = m.end()
-        selfclose = bool(m.group("selfclose"))
-        if kind in ("script", "style"):
-            if name != kind:
-                pos = tag_end  # <scriptx ...> — ordinary unknown element
-                continue
-            if selfclose:
-                pos = tag_end  # <script/> is an EMPTY element — no raw text
-                continue
-            endtag = find(f"</{kind}", tag_end)
-            if endtag == -1:
-                break  # raw text runs to EOF — nothing after can be a table
-            gt = find(">", endtag)
-            pos = n if gt == -1 else gt + 1
-            continue
-        # kind == "open"
-        if name != "table":
-            pos = tag_end  # <tablex ...>
-            continue
-        if selfclose:
-            # empty table element: a complete zero-row table at this depth —
-            # it never pushes the tokenizer's stack, so it must not touch
-            # the depth counter either
-            if depth == 0:
-                cuts.append((at, tag_end))
-            pos = tag_end
-            continue
-        if depth == 0:
-            start = at
-        depth += 1
-        pos = tag_end
-    if depth != 0:
-        return None
-    return cuts

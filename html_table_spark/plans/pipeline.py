@@ -6,7 +6,7 @@ Catalyst rules:
     discovery (offsets-only scan → mega doc_ids, driver-planned)   │
     scan #1 (doc_id NOT IN mega_ids) → pass 1 (mapInArrow) ────────┐
     scan #2 (doc_id IN mega_ids, row-group-PRUNED by the pushed    │
-        filter) → split_mega_docs (mapInArrow, boundary scan)      │
+        filter) → split_mega_docs (mapInArrow, table ranges)       │
         → (doc_id, html, table_idx_base) chunks of ≤64 tables      │
         → full-entropy repartition → pass 2 (mapInArrow) ──────────┴→ 2 jobs
     → one write per leg → per-partition lineage agg → snapshot commit
@@ -20,12 +20,13 @@ Why explicit: UDF-stage skew is invisible to AQE (it only splits skewed
 joins/aggregations), so a 2,000-table mega-document would otherwise pin one
 task for the whole stage.  Mega docs are found by a span-COUNT discovery
 job that reads only the int32 offset leaf (nested schema pruning), then
-split by a linear boundary scan; routing is a performance split, never a
-correctness boundary — misrouted docs parse in place (pass 1) or as one
-whole-doc chunk (pass 2).  (At fleet scale the routing predicate would be
-a STORED top-level byte-length column, giving scan #2 parquet min/max
-pruning + predicate pushdown with no discovery job at all; discovery is
-the honest stand-in because the corpus schema is fixed by BASELINE.json.)
+split at the tokenizer's own top-level table ranges; routing is a
+performance split, never a correctness boundary — misrouted docs parse in
+place (pass 1) or as one whole-doc chunk (pass 2).  (At fleet scale the
+routing predicate would be a STORED top-level byte-length column, giving
+scan #2 parquet min/max pruning + predicate pushdown with no discovery job
+at all; discovery is the honest stand-in because the corpus schema is
+fixed by BASELINE.json.)
 
 Why TWO scans (a deliberate trade): scan #2 re-reads the mega tail instead
 of persisting pass-1 output — persisting a corpus-sized intermediate at
@@ -132,10 +133,7 @@ def plan_extraction_legs(
     from two driver threads (see :func:`run_concurrent`) gets them
     scheduled as concurrent jobs: the mega leg's scan#2 + chunk stage fills
     task slots the pass-1 stage leaves idle in its straggler tail instead
-    of barriering in front of it. Measured on the sf0.1 bench corpus
-    (pinned local[32]): union plan 7.0 s vs concurrent legs 5.7 s; at
-    local[8] both ~15.4 s (saturated cores — the overlap is free capacity
-    only the wide configuration has).
+    of barriering in front of it.
 
     The normal-doc stream is extracted directly on scan partitions — zero
     all-data shuffle, since ``maxPartitionBytes`` balances splits by bytes
@@ -168,8 +166,7 @@ def _prep_legs(
     both legs can plan themselves independently (run_extraction_concurrent
     threads them; plan_extraction_legs calls them in sequence).
 
-    Leg routing (round-3 discovery rewrite, made lazy in the serial-path
-    diet). Routing is a PERFORMANCE split, not a correctness boundary:
+    Leg routing is a PERFORMANCE split, not a correctness boundary:
     whatever predicate lands a doc in whichever leg, pass 1 parses it in
     place and the mega leg splits it into chunks parsed by pass 2 — output
     rows are identical either way
@@ -190,9 +187,8 @@ def _prep_legs(
     complementary).
 
     Plan construction is deliberately terse: every intermediate Dataset
-    costs a full Catalyst analyzer pass over the whole subtree (measured
-    ~1s per extract_tables call in the round-2 shape — pure serial driver
-    time that caps the N→4N scaling ratio).
+    costs a full Catalyst analyzer pass over the whole subtree, serial
+    driver time before any task runs.
     """
     config = config or ParserConfig()
     spark = documents.sparkSession
@@ -317,15 +313,13 @@ def run_extraction_concurrent(
 ) -> dict:
     """Plan AND execute both extraction legs in concurrent driver threads.
 
-    The round-3 serial-path diet over ``plan_extraction_legs`` +
-    ``run_concurrent``: in the serial shape the discovery job plus BOTH
-    legs' Catalyst analysis finish before the first task launches —
-    measured ~0.5 s of driver wall at local[32]/sf0.1, a cost only the wide
-    configuration feels (at low core counts the box is saturated anyway),
-    i.e. exactly the shape the N→4N scaling rule punishes. Here each leg
-    plans itself inside its own thread: the normal leg's routing predicate
-    is lazy, so pass 1's scan tasks are launching while the mega thread is
-    still running id discovery and analyzing the chunk plan.
+    Planning the legs first (``plan_extraction_legs``) and then running
+    them (``run_concurrent``) would finish the discovery job plus BOTH
+    legs' Catalyst analysis before the first task launches: serial driver
+    wall that idles the cores. Here each leg plans itself inside its own
+    thread: the normal leg's routing predicate is lazy, so pass 1's scan
+    tasks are launching while the mega thread is still running id
+    discovery and analyzing the chunk plan.
 
     ``leg_action(name, df)`` (name in {'normal','mega'}) runs the leg's
     action in that thread — count, write, collect. Returns

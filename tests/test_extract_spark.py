@@ -142,7 +142,9 @@ def test_mega_doc_split_parity(spark, tables_per_chunk):
 
 
 def test_split_falls_back_on_soup(spark):
-    # unbalanced </table> defeats the linear scan → one whole-doc chunk
+    """A stray top-level </table> is ignored, as the tree builder ignores
+    it: the one table left is one whole-doc chunk, and the chunk leg equals
+    the kernel."""
     soup = "</table><table><tr><td>x</td></tr></table>"
     rows = [
         {"doc_id": "soup", "spans": [{"kind": "text", "text": soup, "media_ref": None, "offset": 0}]}
@@ -224,88 +226,109 @@ def test_read_documents_reordered_span_fields(spark, tmp_path):
     assert spans[1].media_ref == "M9" and spans[1].offset == 1
 
 
+def _tokenizer_table_count(html: str) -> int:
+    from html_table_spark.htmldom import parse_html
+    from html_table_spark.semantics import _top_level_tables
+
+    return len(_top_level_tables(parse_html(html)[0]))
+
+
 def test_table_cuts_ignore_comments_rawtext_and_typos():
-    from html_table_spark.operators.extract import _top_level_table_cuts
+    from html_table_spark.htmldom import top_level_table_ranges
 
     # commented-out table is not a boundary
     h = "<!-- <table><tr><td>x</td></tr></table> --><table><tr><td>y</td></tr></table>"
-    cuts = _top_level_table_cuts(h)
-    assert cuts is not None and len(cuts) == 1
+    cuts = top_level_table_ranges(h)
+    assert len(cuts) == 1
     assert h[cuts[0][0]:cuts[0][1]].startswith("<table><tr><td>y")
     # script-embedded table markup is not a boundary
     h2 = "<script>var s='<table>'</script><table><tr><td>z</td></tr></table>"
-    cuts2 = _top_level_table_cuts(h2)
-    assert cuts2 is not None and len(cuts2) == 1
+    assert len(top_level_table_ranges(h2)) == 1
     # </tables> is not a close tag
     h3 = "<table><tr><td>a</td></tr></tables></table>"
-    cuts3 = _top_level_table_cuts(h3)
-    assert cuts3 is not None and len(cuts3) == 1
-    # unterminated comment → ambiguous → whole-doc fallback
-    assert _top_level_table_cuts("<!-- oops <table></table>") is None
+    assert len(top_level_table_ranges(h3)) == 1
+    # unterminated comment: skipped to its first '>' like any tokenizer token
+    h4 = "<!-- oops <table></table>"
+    assert len(top_level_table_ranges(h4)) == _tokenizer_table_count(h4) == 0
 
 
 def test_table_cuts_quoted_markup_in_uninspected_tag_falls_back():
-    """Round-3 ADVICE: balanced table markup hidden inside an UNINSPECTED
-    tag's attribute must not produce garbage cuts — the pre-scan detects a
-    '<' inside any tag body and falls back to the whole-doc parse."""
-    from html_table_spark.operators.extract import _top_level_table_cuts
+    """Round-3 ADVICE: balanced table markup hidden inside a tag's
+    attribute or end tag must not produce garbage cuts. The cuts come from
+    the tokenizer's own token stream, so markup it hides is hidden from the
+    cuts too: each of these documents splits into exactly the tokenizer's
+    tables."""
+    from html_table_spark.htmldom import top_level_table_ranges
 
     t = "<table><tr><td>x</td></tr></table>"
     # the ADVICE repro: quoted close+open stays depth-balanced
     bad = '<table><tr><td data-x="</table>x<table>">A</td></tr></table>'
-    assert _top_level_table_cuts(bad) is None
-    # unquoted attr value running into an event pattern
-    assert _top_level_table_cuts("<table><tr><td foo=</table>>A</td></tr></table>" ) is None
-    # quoted '>' before the hidden '<' (defeats any quote-blind heuristic)
-    assert _top_level_table_cuts('<div a=">" b="<table">' + t) is None
-    # '<' inside an END tag's junk region (</td ... > is quote-blind)
-    assert _top_level_table_cuts("<div></div <table>" + t) is None
-    # text '< letter' genuinely opens a tag for the tokenizer too → fallback
-    assert _top_level_table_cuts("i<j and k<m" + t) is None
-    # …but ordinary quoted attributes (including quoted '>') still split
-    cuts = _top_level_table_cuts('<table class="a>b"><tr><td>y</td></tr></table>' + t)
-    assert cuts is not None and len(cuts) == 2
-    cuts = _top_level_table_cuts('<div id="x" data-y=\'1\'>' + t * 2)
-    assert cuts is not None and len(cuts) == 2
-    # text '<' NOT followed by a letter is harmless
-    cuts = _top_level_table_cuts("<p>1 < 2 &lt; 3</p>" + t)
-    assert cuts is not None and len(cuts) == 1
+    assert top_level_table_ranges(bad) == [(0, len(bad))]
+    for h, tables in (
+        # unquoted attr value running into table markup
+        ("<table><tr><td foo=</table>>A</td></tr></table>", 1),
+        # quoted '>' before the hidden '<' (defeats any quote-blind heuristic)
+        ('<div a=">" b="<table">' + t, 1),
+        # '<' inside an END tag's junk region (</td ... > is quote-blind)
+        ("<div></div <table>" + t, 1),
+        # text '< letter' opens a tag, whose attributes hide the table's tag
+        ("i<j and k<m" + t, 0),
+        # ordinary quoted attributes (including quoted '>')
+        ('<table class="a>b"><tr><td>y</td></tr></table>' + t, 2),
+        ('<div id="x" data-y=\'1\'>' + t * 2, 2),
+        # text '<' NOT followed by a letter
+        ("<p>1 < 2 &lt; 3</p>" + t, 1),
+    ):
+        assert len(top_level_table_ranges(h)) == _tokenizer_table_count(h) == tables, h
+
+
+_QUOTE_RUNS = """
+from html_table_spark.htmldom import parse_html
+from html_table_spark.operators.extract import split_html
+
+t = "<table><tr><td>x</td></tr></table>"
+for q in ('"', "'"):
+    for n in (61, 200_000):
+        # a quote run inside a tag, then '>' and a table; or, cut off by end
+        # of input, after the table
+        for s in ("<a " + q * n + ">" + t, t + "<a " + q * n):
+            assert split_html(s, 1) == [(0, s)]
+            assert len(parse_html(s)[0].children) == 2
+"""
 
 
 def test_unseen_tag_angle_prescan_is_linear_time():
-    """Round-3 review: the quote-aware pre-scan must stay linear on
-    adversarial quote runs — the pre-fix backtracking variant took ~8x
-    longer per +4 quotes (3s at 32 quotes; hours at 60+), pinning an
-    executor core on one crafted mega doc. Budget is generous (0.5s for
-    200k chars) so the test only fails on a complexity regression, not on
-    a loaded box."""
-    import time
+    """Round-3 review: splitting and parsing stay linear on adversarial
+    quote runs. A backtracking attribute region took ~8x longer per +4
+    quotes (3s at 32 quotes; hours at 60+), pinning an executor core on one
+    crafted mega doc, so the check runs in a subprocess with a timeout: a
+    regression fails instead of hanging the suite. Markup a quoted
+    attribute hides is hidden from the cuts as from the tree."""
+    import subprocess
+    import sys
+    from pathlib import Path
 
-    from html_table_spark.operators.extract import _UNSEEN_TAG_ANGLE_RE
+    from html_table_spark.operators.extract import split_html
 
+    repo = Path(__file__).resolve().parents[1]
+    subprocess.run([sys.executable, "-c", _QUOTE_RUNS], cwd=repo, check=True, timeout=60)
     t = "<table><tr><td>x</td></tr></table>"
-    for q in ('"', "'"):
-        for n in (61, 200_000):
-            s = "<a " + q * n + ">" + t
-            t0 = time.monotonic()
-            m = _UNSEEN_TAG_ANGLE_RE.search(s)
-            assert time.monotonic() - t0 < 0.5, (q, n)
-            assert m is None, "quote run hides no angle -> no match"
-    # possessive rewrite keeps the match language: every documented
-    # positive/negative from the quote-aware spec still holds
-    assert _UNSEEN_TAG_ANGLE_RE.search('<td data-x="</table>x<table>">')
-    assert _UNSEEN_TAG_ANGLE_RE.search("</td foo<table>")
-    assert _UNSEEN_TAG_ANGLE_RE.search('<a "x<y">')
-    assert not _UNSEEN_TAG_ANGLE_RE.search('<td a="q\'q" b=\'d"d\'>x</td>')
-    assert not _UNSEEN_TAG_ANGLE_RE.search('<td class="x">a</td><table>')
+    for h in (
+        '<td data-x="</table>x<table>">',
+        "</td foo<table>",
+        '<a "x<y">',
+        '<td a="q\'q" b=\'d"d\'>x</td>',
+        '<td class="x">a</td><table>',
+    ):
+        assert len(split_html(h + t, 1)) == max(1, _tokenizer_table_count(h + t)), h
 
 
 def test_chunk_mode_emits_only_chunk_rows(spark):
     """INVARIANT the pipeline relies on (plans/pipeline.py has no
     parsed-in-place union leg and no persist on the strength of this): with
-    mega_policy='chunk', every doc — splittable or tag soup — yields ONLY
-    split rows (doc_id, html, table_idx_base), at least one per doc, with
-    bases ascending from 0."""
+    mega_policy='chunk', every doc — well-formed or tag soup with a stray
+    </table> — yields ONLY split rows (doc_id, html, table_idx_base), at
+    least one per doc, with bases ascending from 0."""
     splittable = f14_mega_doc_html(8)
     soup = "</table>" + "<table><tr><td>s</td></tr></table>" * 3
     rows = [
@@ -320,11 +343,12 @@ def test_chunk_mode_emits_only_chunk_rows(spark):
     ).collect()
     assert out, "chunk pass emitted nothing"
     assert {tuple(r.asDict()) for r in out} == {("doc_id", "html", "table_idx_base")}
-    # the soup doc must still be represented (whole-doc chunk), not dropped
     assert {r.doc_id for r in out} == {"m1", "m2"}
     for doc_id in ("m1", "m2"):
         bases = [r.table_idx_base for r in out if r.doc_id == doc_id]
         assert bases[0] == 0 and bases == sorted(set(bases)), (doc_id, bases)
+    # the stray </table> is ignored, so the soup doc's 3 tables split too
+    assert [r.table_idx_base for r in out if r.doc_id == "m2"] == [0, 2]
 
 
 def test_unknown_mega_policy_rejected(spark):
@@ -337,8 +361,11 @@ def test_unknown_mega_policy_rejected(spark):
 def test_mega_doc_split_parity_quoted_markup(spark):
     """End-to-end: a doc with quoted table markup inside an attribute
     produces IDENTICAL results via the pipeline's chunk leg and the
-    whole-doc kernel (the cut scan must fall back rather than cut
-    garbage)."""
+    whole-doc kernel. The cuts follow the tokenizer, which keeps the quoted
+    markup inside the attribute, so the doc splits and no cut lands in
+    it."""
+    from html_table_spark.operators.extract import split_html
+
     t = "<table><tr><td>c{}</td></tr></table>"
     html = (
         '<table><tr><td data-x="</table>x<table>">A</td></tr></table>'
@@ -347,6 +374,7 @@ def test_mega_doc_split_parity_quoted_markup(spark):
     rows = [
         {"doc_id": "qm", "spans": [{"kind": "text", "text": html, "media_ref": None, "offset": 0}]}
     ]
+    assert len(split_html(html, 8)) == 7
     config = ParserConfig().all_tables()
     got = spark_signatures(_chunk_leg(spark, rows, tables_per_chunk=8))
     expected = kernel_signatures(rows, config)
@@ -355,10 +383,10 @@ def test_mega_doc_split_parity_quoted_markup(spark):
 
 def test_table_cuts_selfclosed_rawtext_and_empty_table():
     """Self-closed <script/>/<style/>/<table/> are EMPTY elements to the
-    tokenizer (htmldom _TAG_RE selfclose group) — the boundary scan must not
+    tokenizer (htmldom _TAG_RE selfclose group) — the table ranges must not
     raw-text-skip past them or unbalance its depth counter (round-2 ADVICE:
     silent table loss when chunk-splitting engaged)."""
-    from html_table_spark.operators.extract import _top_level_table_cuts
+    from html_table_spark.htmldom import top_level_table_ranges
 
     t = "<table><tr><td>x</td></tr></table>"
     # ADVICE repro: <script/> + 3 tables + stray </script> + 1 table.
@@ -366,26 +394,19 @@ def test_table_cuts_selfclosed_rawtext_and_empty_table():
     # tokenizer sees 4 top-level tables... but the stray close is consumed
     # as an end-tag token; all 4 tables are real.
     h = "<script/>" + t * 3 + "</script>" + t
-    cuts = _top_level_table_cuts(h)
-    assert cuts is not None and len(cuts) == 4
+    assert len(top_level_table_ranges(h)) == 4
     # self-closed style
-    cuts = _top_level_table_cuts("<style/>" + t * 2 + "</style>" + t)
-    assert cuts is not None and len(cuts) == 3
+    assert len(top_level_table_ranges("<style/>" + t * 2 + "</style>" + t)) == 3
     # self-closed table: a complete zero-row table, must count as a cut and
     # not increment depth
-    cuts = _top_level_table_cuts("<table/>" + t + "<table/>")
-    assert cuts is not None and len(cuts) == 3
+    assert len(top_level_table_ranges("<table/>" + t + "<table/>")) == 3
     # self-closed with attributes / unquoted value ending in '/'
-    cuts = _top_level_table_cuts('<script src="x.js"/>' + t)
-    assert cuts is not None and len(cuts) == 1
-    cuts = _top_level_table_cuts("<script src=foo/>" + t)
-    assert cuts is not None and len(cuts) == 1
+    assert len(top_level_table_ranges('<script src="x.js"/>' + t)) == 1
+    assert len(top_level_table_ranges("<script src=foo/>" + t)) == 1
     # quoted '>' inside a raw-text opener's attribute
-    cuts = _top_level_table_cuts('<script src="a>b">var x</script>' + t)
-    assert cuts is not None and len(cuts) == 1
+    assert len(top_level_table_ranges('<script src="a>b">var x</script>' + t)) == 1
     # quoted '>' inside the table tag itself
-    cuts = _top_level_table_cuts('<table class="a>b"><tr><td>y</td></tr></table>')
-    assert cuts is not None and len(cuts) == 1
+    assert len(top_level_table_ranges('<table class="a>b"><tr><td>y</td></tr></table>')) == 1
 
 
 def test_mega_doc_split_parity_selfclosed_script(spark):

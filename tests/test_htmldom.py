@@ -5,6 +5,9 @@ libxml parse pins down."""
 from __future__ import annotations
 
 import re
+import subprocess
+import sys
+from pathlib import Path
 
 from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import synthesize_documents
@@ -123,6 +126,32 @@ def test_mismatched_quote_divergence():
     td = next(root.iter_elements())
     assert td.tag == "td"
     assert td.text_content() == "weird quotes"
+
+
+_CUT_OFF_TAGS = """
+from html_table_spark.htmldom import ELEMENT, parse_html
+
+t = "<table><tr><td>x</td></tr></table>"
+for tail, built in (
+    ('<img ' + 'a="1" ' * 40_000, ["img"]),
+    ('<a ' + '"' * 200_001, ["a"]),
+    ("<a " + "'" * 200_000, ["a"]),
+    ('<a b="' + "c d " * 50_000, ["a"]),
+    ('</td ' + '"' * 200_000, []),
+):
+    root, _ = parse_html(t + tail)
+    assert [n.tag for n in root.children if n.kind == ELEMENT] == ["table", *built]
+"""
+
+
+def test_tag_cut_off_by_end_of_input_is_linear_time():
+    """A tag with no '>' after it (a truncated crawl record) is parsed in
+    one linear scan and built, as libxml2 builds it. A backtracking
+    attribute region takes ~3x longer per extra attribute on such a tag,
+    so the check runs in a subprocess with a timeout: a regression fails
+    instead of hanging the suite."""
+    repo = Path(__file__).resolve().parents[1]
+    subprocess.run([sys.executable, "-c", _CUT_OFF_TAGS], cwd=repo, check=True, timeout=60)
 
 
 def test_rawtext_script_not_parsed():

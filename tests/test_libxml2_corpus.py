@@ -21,6 +21,11 @@ The goldens cover:
   div 150, td/th 160, tr 170, sections 180, table 190, default 100);
   unclosed elements closed at EOF; unclosed
   ``<script>``/``<style>`` raw text runs to EOF (``htmlParseScript``)
+- a tag cut off by end of input is built, as are its attributes (a quoted
+  value runs to the end); an unterminated comment with no later ``>``
+  swallows the rest
+- tag names take libxml2's name characters (``<td<b>`` is a ``td``); a
+  run in a start tag that no attribute name starts is dropped
 - comments end at ``-->`` or ``--!>``, ``--`` allowed inside; DOCTYPE
   skipped; any other ``<!`` and a ``<`` before a non-letter stay text; a
   ``</`` with no name is dropped; ``<?...>`` kept as a PI childNode (it
@@ -86,7 +91,7 @@ LIBXML2_DIVERGES = {
     "bogus_decl": _DOCUMENT_START,
     "cdata_block": _DOCUMENT_START,
     "comment_spacey_end": _SWALLOWED.format(what="comment ('--   >' does not end it)", where="'--\\s*>'"),
-    "unclosed_attr_quote": _SWALLOWED.format(what="attribute value", where="'>' (keeping the stray quote)"),
+    "unclosed_attr_quote": _SWALLOWED.format(what="attribute value", where="'>' (the value runs to it)"),
 }
 
 CASES = [
@@ -171,7 +176,7 @@ CASES = [
     ("lone_lt", '<td>1 < 2</td>',
      "#document[td['1 < 2']]"),
     ("unclosed_attr_quote", '<td class="x>a</td>',
-     '#document[td(class=\'"x\')[\'a\']]'),
+     "#document[td(class='x')['a']]"),
     ("th_then_td", '<table><tr><th>h<td>d</tr></table>',
      "#document[table[tr[th['h'] td['d']]]]"),
     ("colgroup_col", "<table><colgroup><col span='2'><tr><td>x</td></tr></table>",
@@ -220,6 +225,28 @@ CASES = [
      "#document[div['a>b1>c']]"),
     ("comment_bang_end", '<div>a<!-- c --!>b</div>',
      "#document[div['a' #c' c ' 'b']]"),
+    # a tag cut off by end of input (a truncated crawl record) is built
+    ("td_at_eof", '<table><tr><td>a</td><td colspan=2',
+     "#document[table[tr[td['a'] td(colspan='2')[]]]]"),
+    ("attr_quote_at_eof", '<table><tr><td>a<td class="x y',
+     "#document[table[tr[td['a'] td(class='x y')[]]]]"),
+    ("img_at_eof_in_cell", '<table><tr><td>a<img ',
+     "#document[table[tr[td['a' img[]]]]]"),
+    ("end_tag_at_eof", '<table><tr><td>a</td',
+     "#document[table[tr[td['a']]]]"),
+    ("pi_at_eof", '<table><tr><td>a<?php x',
+     "#document[table[tr[td['a']]]]"),
+    # an unterminated comment with no later '>' swallows the rest
+    ("comment_unterminated_eof", '<table><tr><td>a<!-- x',
+     "#document[table[tr[td['a']]]]"),
+    # tag names take libxml2's name characters; a run no attribute name
+    # starts is dropped up to the next blank
+    ("tag_name_ends_at_lt", '<table><tr><td<b>y</td></tr></table>',
+     "#document[table[tr[td['y']]]]"),
+    ("tag_name_ends_at_non_name_char", '<table><tr><td@x>y</td></tr></table>',
+     "#document[table[tr[td['y']]]]"),
+    ("attr_junk_dropped", '<td x<b=1 "q" 1a=2 c=2>y</td>',
+     "#document[td(c='2' x='')['y']]"),
 ]
 
 
