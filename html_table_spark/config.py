@@ -34,16 +34,6 @@ ALL_SECTIONS = (THEAD, TBODY, TFOOT, TR)
 _SECTION_SORT = {name: i for i, name in enumerate(sorted(ALL_SECTIONS))}
 
 
-def section_xpath_row(section: str, offset: int = 0) -> str:
-    """Reference ``Section::xpathRow`` (src/Section.php:19-28)."""
-    if offset < 0:
-        raise ParserError(MSG_NEGATIVE_HEADER_OFFSET)
-    offset += 1
-    if section == TR:
-        return f"(//table/tr)[{offset}]"
-    return f"(//table/{section}/tr)[{offset}]"
-
-
 @dataclass(frozen=True)
 class ParserConfig:
     """One extraction job's semantics. Defaults match the reference
@@ -56,7 +46,9 @@ class ParserConfig:
     # (ParserTest.php:307 uses [3=>'Annee', 2=>'Sexe', 0=>'Firstname', ...]).
     table_header: tuple[tuple[int, str], ...] = ()
     ignore_table_header: bool = False
-    table_header_expression: str = "(//table/thead/tr)[1]"
+    # header row as (section, 0-based offset): ``Section::xpathRow``
+    # (src/Section.php:19-28), found by semantics._header_row_and_caption
+    table_header_row: tuple[str, int] = (THEAD, 0)
     # thead EXCLUDED from data by default (Parser.php:61)
     included_sections: tuple[str, ...] = (TBODY, TFOOT, TR)
     fail_on_xml_errors: bool = False
@@ -103,7 +95,9 @@ class ParserConfig:
 
     def table_header_position(self, section: str, offset: int = 0) -> "ParserConfig":
         _check_section(section)
-        return replace(self, table_header_expression=section_xpath_row(section, offset))
+        if offset < 0:
+            raise ParserError(MSG_NEGATIVE_HEADER_OFFSET)
+        return replace(self, table_header_row=(section, offset))
 
     def include_all_sections(self) -> "ParserConfig":
         return self.include_section(*ALL_SECTIONS)
@@ -140,8 +134,11 @@ class ParserConfig:
 
     # -- derived -------------------------------------------------------------
 
-    def header_names(self) -> list[str]:
-        return [name for _, name in self.table_header]
+    @property
+    def splits_documents(self) -> bool:
+        """Whether mega docs may be extracted in chunks: not when a verdict
+        covers the whole document (table selection, ``fail_on_xml_errors``)."""
+        return self.select_all_tables and not self.fail_on_xml_errors
 
 
 def _check_section(section: str) -> None:

@@ -248,10 +248,11 @@ def extract_tables(
     dict/object materialization (BASELINE.json hot-path constraint taken to
     its conclusion).
 
-    ``mega_policy='chunk'`` in select-all mode returns the mega-doc
-    splitter's rows instead (:func:`split_mega_docs`, ``SPLIT_SCHEMA``, up
-    to ``tables_per_chunk`` tables each); ``'parse'`` extracts. Single-table
-    mode always extracts: its selection applies to the whole document.
+    ``mega_policy='chunk'`` returns the mega-doc splitter's rows instead
+    (:func:`split_mega_docs`, ``SPLIT_SCHEMA``, up to ``tables_per_chunk``
+    tables each) when the config splits documents
+    (``ParserConfig.splits_documents``); ``'parse'`` extracts. Other configs
+    always extract: their verdict applies to the whole document.
     ``mega_cost_threshold`` is accepted and ignored: both policies treat
     every document alike, whatever its size.
     """
@@ -272,7 +273,7 @@ def extract_tables(
     # serialize the whole Arrow stage on a single Python worker. The full
     # pipeline (plans/pipeline.py) manages partitioning itself.
     html_docs = ensure_parallelism(pruned)
-    if mega_policy == "chunk" and config.select_all_tables:
+    if mega_policy == "chunk" and config.splits_documents:
         return split_mega_docs(html_docs, tables_per_chunk)
     return _extract_html(html_docs, config)
 

@@ -127,13 +127,13 @@ def plan_extraction_legs(
 ) -> tuple[DataFrame, DataFrame | None]:
     """Build the two extraction legs as INDEPENDENT lazy DataFrames.
 
-    Returns ``(normal_out, mega_out)``; ``mega_out`` is None in single-table
-    mode (no mega splitting) or when discovery finds no mega docs. The legs
-    share no shuffle dependency, so a caller that runs one action per leg
-    from two driver threads (see :func:`run_concurrent`) gets them
-    scheduled as concurrent jobs: the mega leg's scan#2 + chunk stage fills
-    task slots the pass-1 stage leaves idle in its straggler tail instead
-    of barriering in front of it.
+    Returns ``(normal_out, mega_out)``; ``mega_out`` is None when the config
+    does not split documents (``ParserConfig.splits_documents``) or when
+    discovery finds no mega docs. The legs share no shuffle dependency, so
+    a caller that runs one action per leg from two driver threads (see
+    :func:`run_concurrent`) gets them scheduled as concurrent jobs: the mega
+    leg's scan#2 + chunk stage fills task slots the pass-1 stage leaves
+    idle in its straggler tail instead of barriering in front of it.
 
     The normal-doc stream is extracted directly on scan partitions — zero
     all-data shuffle, since ``maxPartitionBytes`` balances splits by bytes
@@ -199,9 +199,9 @@ def _prep_legs(
     scan_parts = documents.rdd.getNumPartitions()
     shuffle_source = scan_parts < max(2, num_partitions // 2)
 
-    if not config.select_all_tables:
-        # reference single-table semantics: selection applies to the whole
-        # document, so mega splitting does not apply
+    if not config.splits_documents:
+        # a verdict on the whole document (single-table selection,
+        # fail_on_xml_errors) cannot be chunked: every document parses whole
         source = documents.select("doc_id", "spans")
         if shuffle_source:
             source = salted(source, num_partitions)
@@ -252,7 +252,7 @@ def _plan_normal_leg(prep: dict) -> DataFrame:
 
 def _plan_mega_leg(prep: dict) -> DataFrame | None:
     """Pass 2 — the skewed tail only. Returns None when the leg is absent
-    (single-table mode, or discovery finds no mega docs at all).
+    (``config.splits_documents`` is false, or discovery finds no mega docs).
 
     The offsets-only id job runs HERE — not on the shared planning path —
     so a threaded caller overlaps it with pass 1's launch. The discovered
@@ -324,8 +324,8 @@ def run_extraction_concurrent(
     ``leg_action(name, df)`` (name in {'normal','mega'}) runs the leg's
     action in that thread — count, write, collect. Returns
     ``{'normal': result, 'mega': result}`` with ``'mega': None`` when the
-    leg is absent (single-table mode or an unskewed corpus). Errors in
-    either thread re-raise after both finish (run_concurrent contract)."""
+    leg is absent (``config.splits_documents`` false, or an unskewed corpus).
+    Errors in either thread re-raise after both finish (run_concurrent)."""
     prep = _prep_legs(documents, config, **plan_kwargs)
     spark = documents.sparkSession
 

@@ -35,7 +35,7 @@ from functools import lru_cache
 
 from .config import ALL_SECTIONS, TR, ParserConfig, validate_header
 from .errors import MSG_TABLE_NOT_FOUND, ParserError, msg_not_a_table
-from .htmldom import COMMENT, ELEMENT, TEXT, Node, parse_html, php_int_cast
+from .htmldom import ELEMENT, Node, parse_html, php_int_cast
 from .xpath import XPathExpr, compile_xpath
 
 # PHP trim charset used for header cells ONLY (Parser.php:539):
@@ -89,10 +89,6 @@ def _compiled(expression: str) -> XPathExpr:
     return compile_xpath(expression)
 
 
-_CAPTION_EXPR = "(//caption)[1]"  # Parser.php:389
-_TABLE_EXPR = "//table"  # Parser.php:478
-
-
 def _span_size(node: Node, attr: str) -> int:
     """Parser.php:549-556 — PHP int cast then clamp to [2, 1000] else 1."""
     span = php_int_cast(node.attrs.get(attr, ""))
@@ -109,21 +105,6 @@ def _collect_media(cell: Node) -> tuple[str, ...]:
             if ref:
                 refs.append(ref)
     return tuple(refs)
-
-
-def _cell_text(node: Node) -> str:
-    """text_content with a fast path for the dominant leaf shape
-    (<td>one text node</td>)."""
-    children = node.children
-    if not children:
-        return ""
-    if len(children) == 1:
-        first = children[0]
-        if type(first) is str:
-            return first
-        if first.kind != ELEMENT:
-            return ""  # comment or PI only → nodeValue ''
-    return node.text_content()
 
 
 def _has_element_child(node: Node) -> bool:
@@ -160,9 +141,7 @@ def extract_record(
                 has_children_elements = False
             else:
                 has_children_elements = _has_element_child(node)
-                text = (
-                    node.text_content() if has_children_elements else _cell_text(node)
-                )
+                text = node.text_content()
             media = (
                 _collect_media(node) if (emit_media and has_children_elements) else ()
             )
@@ -210,57 +189,105 @@ def _combine(record: list[Cell], header_pairs) -> list[Cell | None]:
     return [record[off] if 0 <= off < len(record) else None for off, _ in header_pairs]
 
 
+def _header_row_and_caption(
+    table: Node, section: str | None, offset: int
+) -> tuple[Node | None, Node | None]:
+    """The reference's two lookups over the re-rooted table
+    (Parser.php:375-390), found in one document-order walk of its subtree:
+
+    - the header row, ``(//table/{section}/tr)[offset + 1]``
+      (``Section::xpathRow``, Section.php:19-28): the ``offset``-th ``tr``
+      whose parent is a ``section`` child of a ``table`` — for the ``tr``
+      section, a ``tr`` child of a ``table``. ``section=None`` skips it;
+    - the caption, ``(//caption)[1]``.
+
+    Nested tables are part of the subtree, so either may come from a NESTED
+    table (the reference's quirk). Returns ``(row, caption)``, None when
+    absent."""
+    row = caption = None
+    want_row = section is not None
+    # while the row is wanted, tuple entries carry the node's place: 1 =
+    # child of a table, 2 = child of a ``section`` under a table; every other
+    # node rides bare, so the walk allocates only around table levels
+    row_under = 1 if section == TR else 2
+    seen = 0
+    stack: list = [table]
+    while want_row and stack:
+        item = stack.pop()
+        if type(item) is tuple:
+            node, under = item
+        else:
+            node, under = item, 0
+        if type(node) is not Node or node.kind != ELEMENT:
+            continue
+        tag = node.tag
+        if tag == "caption" and caption is None:
+            caption = node
+        elif tag == "tr" and under == row_under:
+            if seen == offset:
+                row = node
+                want_row = False
+            seen += 1
+        children = node.children
+        if tag == "table":
+            stack.extend([(c, 1) for c in reversed(children)])
+        elif under == 1 and tag == section and row_under == 2:
+            stack.extend([(c, 2) for c in reversed(children)])
+        elif children:
+            stack.extend(reversed(children))
+    # the rest of the walk looks for the caption alone
+    stack = [item[0] if type(item) is tuple else item for item in stack]
+    while caption is None and stack:
+        node = stack.pop()
+        if type(node) is Node and node.kind == ELEMENT:
+            if node.tag == "caption":
+                caption = node
+            elif node.children:
+                stack.extend(reversed(node.children))
+    return row, caption
+
+
 def _extract_table(
     table_node: Node,
     config: ParserConfig,
     table_idx: int,
 ) -> ExtractedTable:
     """Steps 3-7 of the reference lifecycle (SURVEY.md §3.2) for one selected
-    table element: re-root, resolve header, walk sections, grid-expand,
-    combine, caption."""
-    # Re-root: a fresh document containing only the selected table
-    # (Parser.php:375). Subsequent XPaths run over this subtree, which
-    # preserves the reference's nested-table quirk: (//caption)[1] and
-    # (//table/thead/tr)[1] may match a NESTED table's caption/thead.
-    rerooted = Node(ELEMENT, tag="#document")
-    rerooted.children = [table_node]
-
+    table element: resolve header and caption over its subtree, walk
+    sections, grid-expand, combine."""
     # -- header resolution (precedence at Parser.php:376-380) --------------
     marked_id: int | None = None
+    header_section, offset = None, 0
     if config.table_header:
         header_pairs = list(config.table_header)
         header_names = [name for _, name in header_pairs]
-        extracted = False
     elif config.ignore_table_header:
         header_pairs = []
         header_names = []
-        extracted = False
     else:
-        tr = _compiled(config.table_header_expression).first(rerooted)
-        if tr is None:
-            header_names = []
-        else:
-            header_names = _extract_header_row(tr, config.emit_media_spans)
-            if header_names:
-                # reference marks the DOM row so body extraction skips it
-                # (Parser.php:536, :524)
-                marked_id = id(tr)
+        header_section, offset = config.table_header_row
+    tr, caption_node = _header_row_and_caption(table_node, header_section, offset)
+    if header_section is not None:
+        header_names = (
+            _extract_header_row(tr, config.emit_media_spans) if tr is not None else []
+        )
+        if header_names:
+            # extracted headers are re-validated for duplicates
+            # (Parser.php:482); user headers were validated at config time
+            try:
+                validate_header(header_names)
+            except ParserError as exc:
+                return ExtractedTable(
+                    table_idx=table_idx, status="error", error_msg=str(exc)
+                )
+            # reference marks the DOM row so body extraction skips it
+            # (Parser.php:536, :524)
+            marked_id = id(tr)
         header_pairs = list(enumerate(header_names))
-        extracted = True
-
-    # extracted headers are re-validated for duplicates inside the body walk
-    # (Parser.php:482); user headers were validated at config time.
-    if extracted and header_names:
-        try:
-            validate_header(header_names)
-        except ParserError as exc:
-            return ExtractedTable(
-                table_idx=table_idx, status="error", error_msg=str(exc)
-            )
 
     # -- body extraction (Parser.php:475-508) -------------------------------
-    # NOTE: '//table' item(0) over the re-rooted doc is the selected table
-    # itself (document order puts the outer table first).
+    # '//table' item(0) over the re-rooted table (Parser.php:478) is the
+    # selected table itself: document order puts the outer table first.
     included = set(config.included_sections)
     rows: list[list[Cell | None]] = []
     row_span_shared: dict[int, list[list[Cell]]] = {}  # direct-tr state, shared
@@ -292,7 +319,6 @@ def _extract_table(
                 )
 
     # -- caption (Parser.php:389-390) ---------------------------------------
-    caption_node = _compiled(_CAPTION_EXPR).first(rerooted)
     caption = caption_node.text_content() if caption_node is not None else config.caption
 
     return ExtractedTable(

@@ -3,9 +3,9 @@
 The reference accepts arbitrary XPath through ``tableXPathPosition``
 (``src/Parser.php:67-92``, validated eagerly at ``:73-80``) and *generates*
 four shapes internally (``Parser.php:56,60,102,105``; ``Section.php:25-27``).
-Round 1 supported only the generated family; this round implements a
-recursive-descent parser + evaluator for the DOMXPath subset real users
-paste from browser devtools:
+It serves table selection (the header-row and caption shapes are one walk in
+semantics.py) with a recursive-descent parser + evaluator for the DOMXPath
+subset real users paste from browser devtools:
 
 - absolute, relative, and ``.//``-anchored paths; ``/`` and ``//`` steps
   (``//`` desugars to ``descendant-or-self::node()`` + child step, so
@@ -1990,126 +1990,14 @@ def _truth(expr, node, pos, size, ev) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _attr_eq_preds(preds) -> list[tuple[str, str]] | None:
-    """Return [(attr, value), ...] if every predicate is a plain
-    ``[@attr="value"]`` equality, else None."""
-    out = []
-    for p in preds:
-        if (
-            p[0] == "cmp"
-            and p[1] == "="
-            and p[2][0] == "attr"
-            and p[2][1] != "*"  # [@*="v"] is any-attribute, not a lookup
-            and p[3][0] == "str"
-        ):
-            out.append((p[2][1], p[3][1]))
-        else:
-            return None
-    return out
-
-
-def _compile_fast(path: _Path):
-    """Specialized evaluator for the shapes the extraction kernel compiles
-    per table — ``descendant::tag`` (from the ``//tag`` fusion) followed by
-    child::tag steps, with at most attr-equality predicates. These run once
-    or more per table on the hot path; the generic walk's
-    generator-per-context layering costs ~10% of kernel throughput, so the
-    common chains get a flat-loop evaluator (identical results and
-    identical yield order to the generic walk). Returns None when the path
-    needs the generic machinery."""
-    steps = path.steps
-    if path.id_arg is not None or path.filter_start is not None:
-        return None  # id()/FilterExpr seeding needs the generic walk
-    _nontag = ("*", "node()", "text()", "comment()", "processing-instruction()")
-    if not steps or steps[0].axis != "descendant" or steps[0].test in _nontag:
-        return None
-    plan = []
-    for i, s in enumerate(steps):
-        if s.axis != ("descendant" if i == 0 else "child"):
-            return None
-        if s.test in _nontag:
-            return None
-        attrs = _attr_eq_preds(s.preds)
-        if attrs is None:
-            return None
-        plan.append((s.test, attrs))
-    tag0, attrs0 = plan[0]
-
-    def match_attrs(node, attrs):
-        nd = node.attrs
-        for a, v in attrs:
-            if nd.get(a) != v:
-                return False
-        return True
-
-    if len(plan) == 1:
-
-        def run(root: Node):
-            stack = root.children[::-1]
-            while stack:
-                n = stack.pop()
-                if type(n) is Node and n.kind == ELEMENT:
-                    if n.tag == tag0 and (not attrs0 or match_attrs(n, attrs0)):
-                        yield n
-                    if n.children:
-                        stack.extend(n.children[::-1])
-
-        return run
-
-    # multi-step chain: ONE DFS carrying a chain-state bitmask per node
-    # (bit j = "this node matches plan[0..j] along its ancestor path").
-    # This yields strict DOCUMENT order even when matching elements nest
-    # (e.g. //table/tr with a table inside a td: the inner table's rows
-    # surface at their document position, exactly as DOMXPath orders them
-    # — the generic two-phase walk emits per-context and needs a sort)
-    final_bit = 1 << (len(plan) - 1)
-
-    def run(root: Node):
-        # masks ride the stack only where nonzero: most nodes sit outside
-        # any matched chain, so they push bare (one type check per node
-        # instead of a 2-tuple allocation per node — measurable on the
-        # per-table hot path)
-        stack = list(reversed(root.children))
-        while stack:
-            item = stack.pop()
-            if type(item) is tuple:
-                n, pmask = item
-            else:
-                n, pmask = item, 0
-            if type(n) is not Node or n.kind != ELEMENT:
-                continue
-            mask = 0
-            if n.tag == tag0 and (not attrs0 or match_attrs(n, attrs0)):
-                mask = 1
-            if pmask:
-                for j in range(1, len(plan)):
-                    if pmask & (1 << (j - 1)):
-                        tj, aj = plan[j]
-                        if n.tag == tj and (not aj or match_attrs(n, aj)):
-                            mask |= 1 << j
-            if mask & final_bit:
-                yield n
-            if n.children:
-                if mask:
-                    stack.extend((c, mask) for c in reversed(n.children))
-                else:
-                    stack.extend(reversed(n.children))
-
-    return run
-
-
 @dataclass(frozen=True)
 class XPathExpr:
     paths: tuple[_Path, ...]
     outer_index: int | None  # 1-based, from the (...)[N] wrapper
     source: str
     needs_order_fix: bool = field(default=False)
-    fast: object = field(default=None, compare=False)
 
     def _iter(self, root: Node):
-        if self.fast is not None:
-            yield from self.fast(root)
-            return
         ev = _EvalCtx(root)
         if len(self.paths) == 1 and not self.needs_order_fix:
             yield from _iter_path([root], self.paths[0], ev)
@@ -2169,9 +2057,8 @@ def _path_needs_order_fix(path: _Path) -> bool:
     emit theirs), and any NON-FINAL descendant step (with nested same-tag
     matches, an outer context's chain results all emit before an inner
     context's, though the inner ones may precede in document order — e.g.
-    ``//table/tr`` with a table nested inside a td). Predicate-light chains
-    never reach this: the fast-path automaton DFS yields strict document
-    order by construction."""
+    ``//table/tr`` with a table nested inside a td). Such paths are
+    collected and sorted into document order."""
     def expr_uses(expr) -> bool:
         if expr[0] == "path" and _path_needs_order_fix(expr[1]):
             return True
@@ -2277,16 +2164,9 @@ def compile_xpath(expression: str) -> XPathExpr:
         return _compile_scalar_fallback(expression, expression.strip())
     except (IndexError, ValueError):
         raise ParserError(msg_invalid_xpath(expression)) from None
-    # the fast-path automaton yields strict document order by itself, so
-    # paths it accepts never need (or pay for) the eager sort
-    fast = _compile_fast(paths[0]) if len(paths) == 1 else None
-    needs_fix = fast is None and (
-        len(paths) > 1 or any(_path_needs_order_fix(p) for p in paths)
-    )
     return XPathExpr(
         paths=tuple(paths),
         outer_index=outer_index,
         source=expression,
-        needs_order_fix=needs_fix,
-        fast=fast,
+        needs_order_fix=len(paths) > 1 or any(_path_needs_order_fix(p) for p in paths),
     )

@@ -211,6 +211,43 @@ def test_discovery_routing_equals_kernel(spark, num_partitions, tables_per_chunk
     assert got == _kernel_rows(rows, config) and len(got) > 0
 
 
+def test_fail_on_errors_routing_equals_kernel(spark):
+    """``fail_on_xml_errors`` is a verdict on the whole document: one error
+    row for a document with any parse error (Parser.php:450-453). Chunking
+    must not change it, whether the stray end tag sits inside a chunk (the
+    chunk without it would come out ``ok``) or between two chunks (no chunk
+    sees it)."""
+    table = "<table><tr><td>v{}</td></tr></table>"
+    tables = [table.format(i) for i in range(202)]
+    tables[1] = "<table><tr><td>v1</div></td></tr></table>"
+    in_chunk = "".join(tables)
+    between = "".join(tables[2:10]) + "</div>" + "".join(tables[10:18])
+
+    def spans(html):
+        return [
+            {"kind": "text", "text": html[i : i + 64], "media_ref": None, "offset": n}
+            for n, i in enumerate(range(0, len(html), 64))
+        ]
+
+    rows = [
+        {"doc_id": "in_chunk", "spans": spans(in_chunk)},
+        {"doc_id": "between", "spans": spans(between)},
+        {"doc_id": "clean", "spans": spans(table.format("c") * 2)},
+    ]
+    df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    config = ParserConfig().all_tables().fail_on_errors()
+    got = _key_rows(_extract(
+        df, config, mega_cost_threshold=256, tables_per_chunk=8
+    ))
+    assert got == _kernel_rows(rows, config)
+    assert [r[:3] for r in got] == [
+        ("between", 0, "error"),
+        ("clean", 0, "ok"),
+        ("clean", 1, "ok"),
+        ("in_chunk", 0, "error"),
+    ]
+
+
 def test_discovery_proxy_miss_byte_heavy_doc_not_dropped(spark):
     """A doc the span-count proxy under-calls (FEW spans, HUGE html) must be
     parsed in place by pass 1 — the round-2 'skip' guard would have dropped

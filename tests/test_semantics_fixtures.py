@@ -8,8 +8,10 @@ specification, independent of the kernel's implementation.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from html_table_spark.config import TBODY, TFOOT, TR, ParserConfig
+from html_table_spark.config import ALL_SECTIONS, TBODY, TFOOT, THEAD, TR, ParserConfig
 from html_table_spark.errors import ParserError
 from html_table_spark.fixtures import (
     CLAMP_HTML,
@@ -34,8 +36,15 @@ from html_table_spark.fixtures import (
     FILE_HTML,
     f14_mega_doc_html,
 )
-from html_table_spark.semantics import parse_document
+from html_table_spark.htmldom import ELEMENT, Node, parse_html
+from html_table_spark.semantics import (
+    _header_row_and_caption,
+    _top_level_tables,
+    parse_document,
+)
 from html_table_spark.spans import encode_table_spans
+from html_table_spark.xpath import compile_xpath
+from tests.test_htmldom import _token
 
 HEADER = ["prenoms", "nombre", "sexe", "annee"]
 ROW1 = ["Abdoulaye", "15", "M", "2004"]
@@ -395,6 +404,80 @@ def test_nested_table_thead_quirk():
     t = one(html, ParserConfig())
     # outer has no thead; (//table/thead/tr)[1] matches the nested one
     assert t.header == ["H"]
+
+
+def test_nested_table_thead_document_order():
+    """A nested table's thead that comes before the outer table's own thead
+    in document order is the first match of (//table/thead/tr)[n]: offset 0
+    picks the inner row, offset 1 the outer one."""
+    html = (
+        "<table id='outer'><tr><td>"
+        "<table id='inner'><thead><tr><th>inner</th></tr></thead></table>"
+        "</td></tr><thead><tr><th>outer</th></tr></thead></table>"
+    )
+    assert one(html, ParserConfig().table_header_position(THEAD, 0)).header == ["inner"]
+    assert one(html, ParserConfig().table_header_position(THEAD, 1)).header == ["outer"]
+    assert one(html, ParserConfig().table_header_position(THEAD, 2)).header == []
+
+
+def test_thead_inside_a_cell_is_no_header_section():
+    """(//table/thead/tr) needs the thead to be a CHILD of a table: a thead
+    the tree builder nests inside a cell gives no header, and its row is
+    body data of the cell."""
+    html = (
+        "<table><tr><td><div><thead><tr><th>H</th></tr></thead></div></td></tr>"
+        "<tr><td>x</td></tr></table>"
+    )
+    t = one(html, ParserConfig())
+    assert t.header == []
+    assert t.row_texts() == [["H"], ["x"]]
+
+
+# --- the header-row/caption walk against the reference's own XPaths
+#     (Section::xpathRow, Section.php:19-28; (//caption)[1], Parser.php:389)
+
+
+# tag soup (tests.test_htmldom._token) inside and around table-shaped
+# markup, so captions, sections, rows and nested tables occur often enough
+# to reach every branch of the walk
+_soup = st.lists(_token(), max_size=3).map("".join)
+
+
+def _element(tag, content):
+    return content.map(lambda c: f"<{tag}>{c}</{tag}>")
+
+
+def _tables(inner):
+    cell = st.sampled_from(["td", "th"]).flatmap(
+        lambda tag: _element(tag, st.one_of(_soup, inner))
+    )
+    row = _element("tr", st.lists(cell, max_size=3).map("".join))
+    rows = st.lists(row, max_size=3).map("".join)
+    section = st.one_of(rows, *(_element(s, rows) for s in ("thead", "tbody", "tfoot")))
+    part = st.one_of(section, _soup, st.just("<caption>c</caption>"))
+    return _element("table", st.lists(part, max_size=4).map("".join))
+
+
+_table_soup = st.recursive(st.just(""), _tables, max_leaves=8)
+
+
+@settings(max_examples=300, deadline=None)
+@given(parts=st.lists(st.one_of(_table_soup, _token()), max_size=6))
+def test_header_row_and_caption_walk_equals_xpath(parts):
+    root, _ = parse_html("".join(parts))
+    caption_expr = compile_xpath("(//caption)[1]")
+    for table in _top_level_tables(root):
+        rerooted = Node(ELEMENT, tag="#document")
+        rerooted.children = [table]
+        caption = caption_expr.first(rerooted)
+        assert _header_row_and_caption(table, None, 0)[1] is caption
+        for section in ALL_SECTIONS:
+            parent = "table" if section == TR else f"table/{section}"
+            for offset in range(4):
+                row_expr = compile_xpath(f"(//{parent}/tr)[{offset + 1}]")
+                got = _header_row_and_caption(table, section, offset)
+                assert got[0] is row_expr.first(rerooted)
+                assert got[1] is caption
 
 
 # --- rowspan carry drops pending entries past the single trailing splice

@@ -252,8 +252,9 @@ def test_reference_generated_shapes_still_work(root):
 
 def test_nested_same_tag_document_order():
     """//table/tr with a table nested inside the outer table: DOMXPath
-    yields strict document order (inner rows surface at their position),
-    which the fast-path automaton DFS reproduces (round-2 review fix)."""
+    yields strict document order (inner rows surface at their position);
+    the walk emits per context, so the path takes the document-order sort
+    (``_path_needs_order_fix``: a non-final descendant step)."""
     html = (
         '<table id="outer"><table id="inner"><tr id="A"><td>a</td></tr>'
         "</table><tr id=\"B\"><td>b</td></tr></table>"
