@@ -105,17 +105,13 @@ def run_extraction_bench(spark, sf: str) -> dict:
     config = ParserConfig().all_tables()
 
     def extract_once() -> int:
-        # the production shape (run_job): each leg PLANS ITSELF and runs in
-        # its own thread, so pass 1's scan tasks launch while the mega
-        # thread is still running id discovery + chunk-plan analysis —
-        # none of that driver work sits serially in front of the job;
-        # total tables = sum of the legs
-        counts = run_extraction_concurrent(
+        # the production shape (run_job): the one extraction pass, every
+        # document parsed whole
+        return run_extraction_concurrent(
             docs,
             config,
             leg_action=lambda _name, df: df.filter("table_idx >= 0").count(),
-        )
-        return sum(v for v in counts.values() if v is not None)
+        )["normal"]
 
     # Warm until the run wall plateaus, not a fixed once: C2 compile time
     # is WALL-time bound, so after one warm run a short job is still

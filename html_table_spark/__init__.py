@@ -7,7 +7,8 @@ interleaved text+media document corpus at web scale:
 - pure-Python correctness kernel (tokenizer → DOM → grid resolver) with the
   reference's exact semantics, pinned by golden fixtures F01–F15;
 - Arrow-vectorized `mapInArrow` extraction operator (no per-row Python);
-- skew-aware partitioning (mega-document splitting + salting);
+- byte-balanced scan splits and salted repartitioning, each document
+  parsed whole;
 - snapshot-committed Parquet sink with Iceberg-style resume semantics,
   per-partition lineage + metrics;
 - the reference's downstream tabular query surface (filter/sorted/slice/

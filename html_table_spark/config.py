@@ -132,14 +132,6 @@ class ParserConfig:
     def all_tables(self) -> "ParserConfig":
         return replace(self, select_all_tables=True)
 
-    # -- derived -------------------------------------------------------------
-
-    @property
-    def splits_documents(self) -> bool:
-        """Whether mega docs may be extracted in chunks: not when a verdict
-        covers the whole document (table selection, ``fail_on_xml_errors``)."""
-        return self.select_all_tables and not self.fail_on_xml_errors
-
 
 def _check_section(section: str) -> None:
     if section not in ALL_SECTIONS:

@@ -33,8 +33,7 @@ honoured as a per-document ``status='error'`` instead of an exception.
 A single-pass regex scanner in pure Python, so executors need no native
 library shipped with --py-files. Its trees are checked against libxml2
 2.9.14 itself, the reference's parser (``tests/libxml2_oracle.py``). Its
-token grammar (``_TAG_RE``) is the only one in the package: the mega-doc
-splitter cuts at :func:`top_level_table_ranges`, a walk of the same tokens.
+token grammar (``_TAG_RE``) is the only one in the package.
 """
 
 from __future__ import annotations
@@ -190,14 +189,14 @@ def _close_misnested(stack: list[Node], tag: str, errors: list[str]) -> None:
     errors.append(f"unexpected end tag </{tag}>")
 
 
-# The one HTML token grammar: the tree builder and the mega-doc splitter
-# (top_level_table_ranges) both walk it. Start-tag alternative first: it's
-# ~half of all tokens and the alternatives are mutually exclusive on the
-# character after '<', so order only affects how fast the engine reaches the
-# common case. Names use libxml2's htmlParseHTMLName class, so '<td<b>' is a
-# td. Every tag ends at '>' or at the end of input, as libxml2 builds a tag
-# cut off by end of input; the attribute region is possessive, so a tag with
-# no '>' after it costs one linear scan, never a backtracking search.
+# The one HTML token grammar, walked by the tree builder. Start-tag
+# alternative first: it's ~half of all tokens and the alternatives are
+# mutually exclusive on the character after '<', so order only affects how
+# fast the engine reaches the common case. Names use libxml2's
+# htmlParseHTMLName class, so '<td<b>' is a td. Every tag ends at '>' or at
+# the end of input, as libxml2 builds a tag cut off by end of input; the
+# attribute region is possessive, so a tag with no '>' after it costs one
+# linear scan, never a backtracking search.
 _TAG_RE = re.compile(
     r"""<(?:
         (?P<name>[a-zA-Z][-a-zA-Z0-9:_.]*)
@@ -382,12 +381,7 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
                 end, after = _rawtext_end(html, tag, pos)
                 if end > pos:
                     node.children.append(html[pos:end])
-                if after is None:
-                    # raw text ran to EOF: keep the element on the stack so
-                    # the unclosed-at-EOF error fires (failOnXmlErrors)
-                    pos = n
-                    continue
-                pos = after
+                pos = n if after is None else after
                 stack.pop()
             continue
         ename = g(_G_ENAME)
@@ -415,50 +409,9 @@ def parse_html_fast(html: str) -> tuple[Node, list[str]]:
             errors.append("end tag without a name")
         # a doctype or an unterminated comment is skipped to '>' with no
         # node; any other '<!' opens no tag and stays character data
-    if len(stack) > 1:
-        errors.append(
-            "unclosed elements at EOF: " + ",".join(n.tag for n in stack[1:])
-        )
+    # elements still open at the end of input close silently: libxml2
+    # reports no error for a payload cut off mid-table
     return root, errors
-
-
-def top_level_table_ranges(html: str) -> list[tuple[int, int]]:
-    """``[start, end)`` of each top-level table of ``parse_html_fast``'s
-    tree, in document order, from the same token stream without building
-    the tree (the mega-doc splitter cuts at these ranges). ``_TAG_RE`` is
-    walked from the same positions and raw text skipped the same way; only
-    tables move the depth. A table closes only at ``</table>`` or at the end
-    of input: no implied close pops a table, and ``END_PRIORITY`` lets no
-    open element rank above one, so ``</table>`` with a table open closes
-    the innermost, and a stray one is ignored."""
-    ranges: list[tuple[int, int]] = []
-    depth = start = 0
-    pos: int | None = 0
-    while pos is not None:
-        for m in _TAG_RE.finditer(html, pos):
-            last = m.lastindex
-            if last == _G_SELFCLOSE:
-                tag = m.group(_G_NAME).lower()
-                if tag == "table":
-                    if m.group(_G_SELFCLOSE):  # <table/>: a complete empty table
-                        if not depth:
-                            ranges.append(m.span())
-                        continue
-                    if not depth:
-                        start = m.start()
-                    depth += 1
-                elif tag in _RAWTEXT and not m.group(_G_SELFCLOSE):
-                    pos = _rawtext_end(html, tag, m.end())[1]
-                    break
-            elif last == _G_ENAME and depth and m.group(_G_ENAME).lower() == "table":
-                depth -= 1
-                if not depth:
-                    ranges.append((start, m.end()))
-        else:
-            pos = None
-    if depth:
-        ranges.append((start, len(html)))
-    return ranges
 
 
 # the runtime tokenizer (Parser.php:446 ``loadHTML`` under

@@ -9,14 +9,9 @@ tables, a UDTF-shaped fan-out).  There is **no per-row Python UDF** anywhere
 — the JVM↔Python boundary is crossed per Arrow batch, not per row
 (BASELINE.json:6 hot-path constraint).
 
-Two stages, each one ``mapInArrow`` with one output row shape:
-
-- :func:`split_mega_docs` cuts mega documents at top-level table
-  boundaries into ``(doc_id, html, table_idx_base)`` chunks (Spark-free
-  core: :func:`split_html`, which takes the boundaries from the tokenizer's
-  own token stream);
-- :func:`make_arrow_extractor` parses ``(doc_id, html[, table_idx_base])``
-  into ``EXTRACTED_SCHEMA`` rows, adding the base to each table ordinal.
+One stage, one ``mapInArrow`` (:func:`make_arrow_extractor`), one output
+row shape: ``(doc_id, html)`` in, ``EXTRACTED_SCHEMA`` rows out, every
+document parsed whole.
 
 The extraction config is a small frozen dataclass captured in the closure —
 pickled once per task, never re-validated per document.
@@ -25,9 +20,7 @@ Memory envelope: multi-MB HTML docs can blow up the default 10k-row Arrow
 batches; the session caps input batches by rows and bytes (session.py) and
 the extractor additionally flushes its *output* every ``_FLUSH_ROWS``
 tables or ``_FLUSH_BYTES`` of span text, so one mega-doc cannot pin a
-giant batch (iterator-in/iterator-out, never the whole partition). Chunks
-are substrings of their document, so the input byte cap bounds the
-splitter's output batches too.
+giant batch (iterator-in/iterator-out, never the whole partition).
 """
 
 from __future__ import annotations
@@ -41,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import ParserConfig
-from ..htmldom import top_level_table_ranges
 from ..semantics import parse_document
 from ..spans import encode_table_flat
 from ..sources.documents import EXTRACTED_SCHEMA
@@ -51,12 +43,8 @@ from ..sources.documents import EXTRACTED_SCHEMA
 _FLUSH_ROWS = 4096
 _FLUSH_BYTES = 256 * 1024 * 1024
 
-_MEGA_POLICIES = ("parse", "chunk")
-
 _ARROW_OUT = to_arrow_schema(EXTRACTED_SCHEMA)
 _ARROW_SPAN_FIELDS = list(_ARROW_OUT.field("spans").type.value_type)
-
-SPLIT_SCHEMA = "doc_id string, html string, table_idx_base int"
 
 
 def html_reassembly_col(spans_col: str = "spans"):
@@ -100,11 +88,8 @@ def html_reassembly_col(spans_col: str = "spans"):
 
 
 def make_arrow_extractor(config: ParserConfig):
-    """mapInArrow extraction over ``(doc_id, html[, table_idx_base])``
-    batches: Arrow in, Arrow out, flat buffers throughout. Every document
-    is parsed in place; a ``table_idx_base`` column (chunks from
-    :func:`split_mega_docs`) shifts each table ordinal to its place in the
-    whole document."""
+    """mapInArrow extraction over ``(doc_id, html)`` batches: Arrow in,
+    Arrow out, flat buffers throughout. Every document is parsed whole."""
 
     def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import gc
@@ -182,17 +167,10 @@ def make_arrow_extractor(config: ParserConfig):
 
         for batch in batches:
             doc_ids = batch.column("doc_id").to_pylist()
-            bases = (
-                batch.column("table_idx_base").to_pylist()
-                if "table_idx_base" in batch.schema.names
-                else None
-            )
             # HTML is reassembled JVM-side (html_reassembly_col): one string
             # column crosses Arrow, already filtered/ordered/joined
             htmls = batch.column("html").to_pylist()
-            for i, html in enumerate(htmls):
-                doc_id = doc_ids[i]
-                base = bases[i] if bases is not None else 0
+            for doc_id, html in zip(doc_ids, htmls):
                 results = parse_document(html, config)
                 if not results and config.select_all_tables:
                     # completion marker: a doc with zero tables must still be
@@ -210,7 +188,7 @@ def make_arrow_extractor(config: ParserConfig):
                     buf["span_offsets"].append(len(buf["sk"]))
                 for table in results:
                     buf["doc_id"].append(doc_id)
-                    buf["table_idx"].append(table.table_idx + base)
+                    buf["table_idx"].append(table.table_idx)
                     buf["caption"].append(table.caption)
                     buf["header"].append(table.header)
                     buf["row_lens"].append([len(r) for r in table.rows])
@@ -234,7 +212,6 @@ def extract_tables(
     config: ParserConfig | None = None,
     *,
     mega_cost_threshold: int | None = None,
-    tables_per_chunk: int = 64,
     mega_policy: str = "parse",
 ) -> DataFrame:
     """documents(doc_id, spans) → extracted tables.
@@ -248,20 +225,12 @@ def extract_tables(
     dict/object materialization (BASELINE.json hot-path constraint taken to
     its conclusion).
 
-    ``mega_policy='chunk'`` returns the mega-doc splitter's rows instead
-    (:func:`split_mega_docs`, ``SPLIT_SCHEMA``, up to ``tables_per_chunk``
-    tables each) when the config splits documents
-    (``ParserConfig.splits_documents``); ``'parse'`` extracts. Other configs
-    always extract: their verdict applies to the whole document.
-    ``mega_cost_threshold`` is accepted and ignored: both policies treat
-    every document alike, whatever its size.
+    ``mega_cost_threshold`` and ``mega_policy`` are accepted and ignored
+    (the benchmark harness still passes them): every document is parsed
+    whole, whatever its size.
     """
     from .util import ensure_parallelism
 
-    if mega_policy not in _MEGA_POLICIES:
-        raise ValueError(
-            f"mega_policy must be one of {_MEGA_POLICIES}, got {mega_policy!r}"
-        )
     config = config or ParserConfig()
     # explicit pruning before the UDF stage, with the HTML reassembly done
     # JVM-side: the Arrow boundary carries (doc_id, html) only — no span
@@ -272,60 +241,12 @@ def extract_tables(
     # a dimension-sized corpus arriving as one file = one partition would
     # serialize the whole Arrow stage on a single Python worker. The full
     # pipeline (plans/pipeline.py) manages partitioning itself.
-    html_docs = ensure_parallelism(pruned)
-    if mega_policy == "chunk" and config.splits_documents:
-        return split_mega_docs(html_docs, tables_per_chunk)
-    return _extract_html(html_docs, config)
+    return _extract_html(ensure_parallelism(pruned), config)
 
 
 def _extract_html(html_docs: DataFrame, config: ParserConfig) -> DataFrame:
-    """The one extraction ``mapInArrow`` stage: ``html_docs(doc_id, html[,
-    table_idx_base])`` → extracted tables. The pipeline's legs call it on
-    their already-reassembled inputs (one reassembly subtree, no schema
-    probe: every intermediate Dataset costs a Catalyst analyzer pass)."""
+    """The one extraction ``mapInArrow`` stage: ``html_docs(doc_id, html)``
+    → extracted tables. The pipeline calls it on its already-reassembled
+    input (one reassembly subtree, no schema probe: every intermediate
+    Dataset costs a Catalyst analyzer pass)."""
     return html_docs.mapInArrow(make_arrow_extractor(config), schema=EXTRACTED_SCHEMA)
-
-
-def split_html(html: str, tables_per_chunk: int) -> list[tuple[int, str]]:
-    """Cut ``html`` into ``(base_ordinal, chunk_html)`` pieces of at most
-    ``tables_per_chunk`` top-level tables each, ``base_ordinal`` being the
-    ordinal of the chunk's first table in the whole document. The cuts are
-    the tokenizer's own top-level table ranges
-    (:func:`htmldom.top_level_table_ranges`), so every piece parses to
-    exactly its tables of the whole document. A document with no more than
-    ``tables_per_chunk`` tables is one piece, ``[(0, html)]``."""
-    cuts = top_level_table_ranges(html)
-    if len(cuts) <= tables_per_chunk:
-        return [(0, html)]
-    return [
-        (first, html[cuts[first][0] : cuts[min(first + tables_per_chunk, len(cuts)) - 1][1]])
-        for first in range(0, len(cuts), tables_per_chunk)
-    ]
-
-
-def split_mega_docs(html_docs: DataFrame, tables_per_chunk: int = 64) -> DataFrame:
-    """``html_docs(doc_id, html)`` → ``SPLIT_SCHEMA`` chunk rows, via
-    :func:`split_html`; one output batch per input batch. The extractor
-    reads these rows directly; the pipeline salts them in between so one
-    document's chunks spread over the cluster."""
-
-    def split_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            doc_ids, htmls, bases = [], [], []
-            for doc_id, html in zip(
-                batch.column("doc_id").to_pylist(), batch.column("html").to_pylist()
-            ):
-                for base, chunk in split_html(html, tables_per_chunk):
-                    doc_ids.append(doc_id)
-                    htmls.append(chunk)
-                    bases.append(base)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.string()),
-                    pa.array(htmls, pa.string()),
-                    pa.array(bases, pa.int32()),
-                ],
-                names=["doc_id", "html", "table_idx_base"],
-            )
-
-    return html_docs.mapInArrow(split_batches, schema=SPLIT_SCHEMA)

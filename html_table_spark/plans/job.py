@@ -3,11 +3,11 @@
     spark-submit --master <cluster> \
         --py-files html_table_spark.zip \
         job.py --input <corpus parquet/iceberg> --output <sink root> \
-               [--mode all|single] [--partitions N] [--mega-threshold BYTES]
+               [--mode all|single] [--partitions N]
 
 The session comes from ``session.get_spark``, the builder the tests and
 the benchmark use: spark-submit's ``--master`` and cluster conf win, and the
-job runs with the same Arrow batch caps and FAIR scheduling the benchmark
+job runs with the same Arrow batch caps and scan split sizes the benchmark
 measures.  Re-running the same command after a failure resumes from the
 last committed snapshot (anti-join on committed doc_ids).
 """
@@ -34,8 +34,6 @@ def main(argv: list[str] | None = None) -> dict:
                              "'corpus': training-corpus build (quality gate + exact "
                              "dedup + PII scrub) with the same snapshot commit")
     parser.add_argument("--partitions", type=int, default=None)
-    parser.add_argument("--mega-threshold", type=int, default=None,
-                        help="bytes of HTML above which a doc takes the split path")
     parser.add_argument("--no-resume", action="store_true")
     parser.add_argument("--format", choices=["auto", "warc"], default="auto",
                         help="'auto': parquet/iceberg documents table; 'warc': a "
@@ -44,7 +42,7 @@ def main(argv: list[str] | None = None) -> dict:
     args = parser.parse_args(argv)
 
     from html_table_spark.config import ParserConfig
-    from html_table_spark.plans.pipeline import DEFAULT_MEGA_COST, run_job
+    from html_table_spark.plans.pipeline import run_job
     from html_table_spark.sources.documents import read_documents
     from html_table_spark.sources.sinks import SnapshotSink
     from html_table_spark.sources.warc import read_warc_documents
@@ -79,11 +77,6 @@ def main(argv: list[str] | None = None) -> dict:
         config,
         resume=not args.no_resume,
         num_partitions=args.partitions,
-        mega_cost_threshold=(
-            args.mega_threshold
-            if args.mega_threshold is not None
-            else DEFAULT_MEGA_COST
-        ),
     )
     print(json.dumps(manifest))
     return manifest

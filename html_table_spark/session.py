@@ -12,11 +12,10 @@ from pyspark.sql import SparkSession
 # costs IPC framing plus per-batch buffer materialization on both sides,
 # measured ~5% of pass-1 wall at sf0.1 (round-3 Arrow-copy reduction;
 # SURVEY.md §4.3 "Arrow batch sizing"). The record cap alone bounds
-# nothing for the chunk pass, whose rows are mega docs/chunks of unbounded
-# size (1024 multi-MB rows = a multi-GB batch): DEFAULT_ARROW_BATCH_BYTES
-# is the actual memory guarantee — the JVM cuts a batch at whichever cap
-# hits first, so pass 1 rides the record cap (typical batch ~3 MB) and the
-# mega pass the byte cap.
+# nothing when rows are mega docs of unbounded size (1024 multi-MB rows =
+# a multi-GB batch): DEFAULT_ARROW_BATCH_BYTES is the actual memory
+# guarantee — the JVM cuts a batch at whichever cap hits first, so typical
+# batches ride the record cap (~3 MB) and mega-doc runs the byte cap.
 DEFAULT_ARROW_BATCH = 1024
 DEFAULT_ARROW_BATCH_BYTES = 64 * 1024 * 1024
 
@@ -50,21 +49,12 @@ def get_spark(
     builder = (
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # FAIR between on-the-fly pools; FIFO within each (no alloc file).
-        # Needed by the concurrent extraction legs: AQE materializes every
-        # query stage as a new job with a LATER job id, so under FIFO the
-        # tiny mega leg's downstream stages (4-task chunk split, pass 2)
-        # queue behind pass 1's hundreds of running tasks — measured 4 s of
-        # dead wait at local[32]. run_concurrent assigns one pool per leg
-        # when it sees this mode. Single-job workloads are unaffected (one
-        # pool, FIFO within).
-        .config("spark.scheduler.mode", "FAIR")
         # CollectLimit escalation starts at ONE partition and quadruples —
-        # a selective limit+collect (mega-id discovery) otherwise runs
-        # ~5 SEQUENTIAL mini-jobs before it has scanned the corpus
-        # (measured 0.35 s serial at local[32]). Start wide: the scan is
-        # an offsets-only leaf read, so a full first pass is cheaper than
-        # the serialized escalation ladder.
+        # a selective limit/first (the tabular, similarity and corpus
+        # operators call them) otherwise runs ~5 SEQUENTIAL mini-jobs
+        # before it has scanned the input (measured 0.35 s serial at
+        # local[32]). Start wide: a full first pass is cheaper than the
+        # serialized escalation ladder.
         .config("spark.sql.limit.initialNumPartitions", "1024")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_ARROW_BATCH))
@@ -91,8 +81,8 @@ def get_spark(
         # Spark's file-split formula, split = min(maxPartitionBytes,
         # max(openCostInBytes, totalBytes / minPartitionNum)), defaults
         # minPartitionNum to the core count — i.e. ONE wave of scan tasks.
-        # Extraction task durations are skewed (doc cost varies ~100× below
-        # the mega threshold), so one to three coarse waves end in a ragged
+        # Extraction task durations are skewed (doc cost varies ~100×
+        # between documents), so one to three coarse waves end in a ragged
         # straggler tail: measured par_eff 0.67 on the pass-1 stage at
         # local[8] with 10×32m splits vs 0.88+ with ~8 waves of smaller
         # splits. Target ~8 waves; the 4m openCost floor above keeps the

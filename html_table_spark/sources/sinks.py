@@ -141,10 +141,11 @@ class SnapshotSink:
         ]
         if not paths:
             return spark.createDataFrame([], schema)
-        # recursiveFileLookup: a committed run's data_path may hold the two
-        # concurrently-written leg subdirectories (run_job) — read every
-        # data file under it with the explicit schema, no partition
-        # inference from the leg directory names
+        # recursiveFileLookup: a committed run's data_path holds its files in
+        # leg subdirectories (run_job writes normal/; runs committed by the
+        # earlier two-leg plan also hold mega/) — read every data file under
+        # it with the explicit schema, no partition inference from the
+        # directory names
         return (
             spark.read.schema(schema)
             .option("recursiveFileLookup", "true")

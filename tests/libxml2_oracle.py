@@ -78,6 +78,18 @@ _XmlAttr._fields_ = [
 # read through the same struct
 
 
+class _XmlError(ctypes.Structure):
+    # the leading fields of libxml2 2.9's xmlError (xmlerror.h)
+    _fields_ = [
+        ("domain", ctypes.c_int),
+        ("code", ctypes.c_int),
+        ("message", ctypes.c_char_p),
+    ]
+
+
+_ERROR_FUNC = ctypes.CFUNCTYPE(None, ctypes.c_void_p, ctypes.POINTER(_XmlError))
+
+
 def _load():
     path = ctypes.util.find_library("xml2")
     if path is None:
@@ -92,6 +104,8 @@ def _load():
         ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_int,
     ]
     lib.xmlFreeDoc.argtypes = [_node_p]
+    lib.xmlSetStructuredErrorFunc.argtypes = [ctypes.c_void_p, _ERROR_FUNC]
+    lib.xmlSetStructuredErrorFunc.restype = None
     return lib, version
 
 
@@ -140,17 +154,21 @@ def _convert(node_p, out: list) -> None:
         node_p = node.next
 
 
+def _read(html: str):
+    if _lib is None:
+        pytest.skip(VERSION)
+    data = html.encode("utf-8", "surrogatepass")
+    return _lib.htmlReadMemory(
+        data, len(data), None, b"UTF-8",
+        HTML_PARSE_RECOVER | HTML_PARSE_NOERROR | HTML_PARSE_NOWARNING,
+    )
+
+
 def parse(html: str) -> tuple[Node, list[str]]:
     """libxml2's tree for ``html`` as the reference parses it, in the
     ``parse_html`` signature (libxml2 errors are suppressed, so the error
     list is always empty)."""
-    if _lib is None:
-        pytest.skip(VERSION)
-    data = html.encode("utf-8", "surrogatepass")
-    doc = _lib.htmlReadMemory(
-        data, len(data), None, b"UTF-8",
-        HTML_PARSE_RECOVER | HTML_PARSE_NOERROR | HTML_PARSE_NOWARNING,
-    )
+    doc = _read(html)
     root = Node(ELEMENT, tag="#document")
     if doc:
         try:
@@ -158,6 +176,31 @@ def parse(html: str) -> tuple[Node, list[str]]:
         finally:
             _lib.xmlFreeDoc(doc)
     return root, []
+
+
+def errors(html: str) -> list[str]:
+    """The errors libxml2 reports while parsing ``html`` as the reference
+    does, from its structured error stream (``xmlSetStructuredErrorFunc``):
+    the stream PHP's ``libxml_get_errors`` collects and the reference's
+    ``failOnXmlErrors()`` reads (Parser.php:450-453). NOERROR silences only
+    the SAX error channel, not this one."""
+    if _lib is None:
+        pytest.skip(VERSION)
+    found: list[str] = []
+
+    def collect(_ctx, error):
+        found.append((error.contents.message or b"").decode().strip())
+
+    # the callback is reset before this frame, which holds it, returns
+    callback = _ERROR_FUNC(collect)
+    _lib.xmlSetStructuredErrorFunc(None, callback)
+    try:
+        doc = _read(html)
+    finally:
+        _lib.xmlSetStructuredErrorFunc(None, _ERROR_FUNC())
+    if doc:
+        _lib.xmlFreeDoc(doc)
+    return found
 
 
 _WRAPPERS = frozenset({"html", "head", "body"})

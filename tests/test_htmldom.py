@@ -154,6 +154,29 @@ def test_tag_cut_off_by_end_of_input_is_linear_time():
     subprocess.run([sys.executable, "-c", _CUT_OFF_TAGS], cwd=repo, check=True, timeout=60)
 
 
+_QUOTE_RUNS = """
+from html_table_spark.htmldom import parse_html
+
+t = "<table><tr><td>x</td></tr></table>"
+for q in ('"', "'"):
+    for n in (61, 200_000):
+        # a quote run inside a tag, then '>' and a table; or, cut off by end
+        # of input, after the table
+        for s in ("<a " + q * n + ">" + t, t + "<a " + q * n):
+            assert len(parse_html(s)[0].children) == 2
+"""
+
+
+def test_unseen_tag_angle_prescan_is_linear_time():
+    """Parsing stays linear on adversarial quote runs. A backtracking
+    attribute region took ~8x longer per +4 quotes (3s at 32 quotes; hours
+    at 60+), pinning an executor core on one crafted document, so the check
+    runs in a subprocess with a timeout: a regression fails instead of
+    hanging the suite."""
+    repo = Path(__file__).resolve().parents[1]
+    subprocess.run([sys.executable, "-c", _QUOTE_RUNS], cwd=repo, check=True, timeout=60)
+
+
 def test_rawtext_script_not_parsed():
     root, _ = parse_html_fast("<script><table><tr></script><p>after</p>")
     tags = [e.tag for e in root.iter_elements()]

@@ -360,3 +360,26 @@ def test_unterminated_quote_divergence_unreachable_on_corpus():
     for r in rows:
         html = doc_spans_to_html(r["spans"])
         assert not _has_unterminated_attr_quote(html), r["doc_id"]
+
+
+# (html, whether libxml2 reports an error): payloads cut off inside open
+# elements, as crawl records truncated at a size cap are, and a stray end
+# tag, which both parsers report
+FAIL_ON_ERRORS_VERDICTS = [
+    ("<table><tr><td>a", False),
+    ("<div><p>x<table><tr><td>y", False),
+    ("<table><tr><td>a</td></tr><tr><td>b", False),
+    ("<table><tr><td>a</td></tr></table><script>var x", False),
+    ("<p>a</b><table><tr><td>x</td></tr></table>", True),
+]
+
+
+@pytest.mark.parametrize("html,libxml2_errs", FAIL_ON_ERRORS_VERDICTS)
+def test_fail_on_errors_verdict_matches_libxml2(html, libxml2_errs):
+    """``fail_on_errors()`` fails a document exactly when libxml2's
+    structured error stream, which the reference reads
+    (Parser.php:450-453), is non-empty: a truncated payload extracts."""
+    assert bool(libxml2.errors(html)) is libxml2_errs
+    for config in (ParserConfig().fail_on_errors(), ParserConfig().all_tables().fail_on_errors()):
+        statuses = {t.status for t in parse_document(html, config)}
+        assert statuses == ({"error"} if libxml2_errs else {"ok"}), (html, config)

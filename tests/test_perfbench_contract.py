@@ -1,0 +1,102 @@
+"""The benchmark harness (``perfbench/``) against the package it measures.
+
+perfbench is kept fixed between benchmark changes, so a package change that
+drops or renames a name it uses shows up only when the benchmark runs, and
+then as no numbers at all. This reads perfbench's source with ``ast`` (no
+Spark session, nothing run) and checks every use of the package there:
+
+- each ``from html_table_spark... import x`` resolves;
+- each call of such a name, or of ``module.attr`` on an imported package
+  module, binds its positional count and keyword names to the callee's
+  signature;
+- each attribute read or assigned on an imported package module exists.
+"""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import inspect
+import types
+from pathlib import Path
+
+import pytest
+
+PERFBENCH = Path(__file__).resolve().parents[1] / "perfbench"
+SOURCES = sorted(PERFBENCH.rglob("*.py"))
+
+
+def _resolve(module: str, name: str):
+    mod = importlib.import_module(module)
+    if hasattr(mod, name):
+        return getattr(mod, name)
+    try:
+        return importlib.import_module(f"{module}.{name}")
+    except ModuleNotFoundError:
+        raise AssertionError(f"from {module} import {name}: {name} is gone") from None
+
+
+def _package_names(tree: ast.AST) -> dict[str, object]:
+    """Local name -> package object, for every package import in the file
+    (the harness imports inside functions; its names do not clash)."""
+    names = {}
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.ImportFrom) or node.module is None:
+            continue
+        if node.module.split(".")[0] == "html_table_spark":
+            for alias in node.names:
+                names[alias.asname or alias.name] = _resolve(node.module, alias.name)
+    return names
+
+
+def _bind(fn, call: ast.Call, where: str) -> None:
+    try:
+        sig = inspect.signature(fn)
+    except (TypeError, ValueError):
+        return
+    kwargs = {k.arg: None for k in call.keywords if k.arg is not None}
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        args = ()
+    else:
+        args = (None,) * len(call.args)
+    try:
+        sig.bind_partial(*args, **kwargs)
+    except TypeError as exc:
+        raise AssertionError(f"{where}: {ast.unparse(call)[:120]} does not bind to {sig}: {exc}")
+
+
+@pytest.mark.parametrize("path", SOURCES, ids=lambda p: str(p.relative_to(PERFBENCH)))
+def test_perfbench_uses_of_the_package_resolve(path):
+    tree = ast.parse(path.read_text(), filename=str(path))
+    names = _package_names(tree)
+    modules = {n for n, obj in names.items() if isinstance(obj, types.ModuleType)}
+    for node in ast.walk(tree):
+        where = f"{path.name}:{getattr(node, 'lineno', '?')}"
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+        ):
+            # reads, calls and assignments (monkeypatching) alike
+            assert hasattr(names[node.value.id], node.attr), (
+                f"{where}: {node.value.id}.{node.attr} is gone"
+            )
+        if not isinstance(node, ast.Call):
+            continue
+        func = node.func
+        if isinstance(func, ast.Name) and func.id in names:
+            _bind(names[func.id], node, where)
+        elif (
+            isinstance(func, ast.Attribute)
+            and isinstance(func.value, ast.Name)
+            and func.value.id in modules
+        ):
+            _bind(getattr(names[func.value.id], func.attr), node, where)
+
+
+def test_the_harness_is_read():
+    """The walk above sees the harness's own package imports."""
+    seen = set()
+    for path in SOURCES:
+        seen |= set(_package_names(ast.parse(path.read_text())))
+    assert {"run_extraction_concurrent", "extract_tables", "pipeline", "get_spark"} <= seen

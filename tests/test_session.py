@@ -50,7 +50,6 @@ def recorder(monkeypatch):
 SHARED_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.scheduler.mode": "FAIR",
     "spark.sql.limit.initialNumPartitions": "1024",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
@@ -98,7 +97,7 @@ def test_spark_submit_leaves_master_to_submit(recorder, monkeypatch):
 
 def test_job_builds_its_session_with_get_spark(spark, recorder, monkeypatch, tmp_path):
     """The deployed job runs with the confs the benchmark measures: 1024-row
-    Arrow batches, the 64 MB byte cap and FAIR scheduling."""
+    Arrow batches and the 64 MB byte cap."""
     import html_table_spark.plans.job as job
     from html_table_spark.corpus import synthesize_documents
     from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
@@ -117,4 +116,3 @@ def test_job_builds_its_session_with_get_spark(spark, recorder, monkeypatch, tmp
     assert recorder.confs["spark.sql.execution.arrow.maxBytesPerBatch"] == str(
         DEFAULT_ARROW_BATCH_BYTES
     )
-    assert recorder.confs["spark.scheduler.mode"] == "FAIR"
