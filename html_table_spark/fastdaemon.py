@@ -20,6 +20,18 @@ read (or on its first invalidation). New path entries, directory finders
 replaced/rewritten archives all behave exactly as stock CPython; only the
 pointless identical re-read is skipped.
 
+What a task still costs with the patch active (local[4], 4 vCPUs, one-row
+partitions of a cached DataFrame, six alternating rounds): a no-op
+``mapInArrow`` task takes 55-80 core-ms, i.e. 128 tasks in 2.30-2.78 s of
+stage wall. That is PySpark's runner (task launch, worker handshake,
+closure unpickling, Arrow stream set-up) and not ours to cut. The
+extraction operator used to run a full ``gc.collect()`` at the end of
+every task on top of it (20-26 ms for the 43k objects a process with the
+worker's imports tracks): its 128 tasks took 3.70-4.53 s. Without the
+collection they take 2.56-3.03 s, level with the no-op. The split sizing
+in ``session.get_spark`` (≈2 tasks per core, by bytes) keeps the number
+of prologues per job small.
+
 Activation: ``spark.python.daemon.module=html_table_spark.fastdaemon``
 with this package importable by the worker Python (in local mode,
 ``session.get_spark`` arranges both; on a cluster, ship the package via

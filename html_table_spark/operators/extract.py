@@ -101,7 +101,10 @@ def make_arrow_extractor(config: ParserConfig):
         started = time.monotonic()
         # the DOM tree is acyclic (no parent pointers) — refcounting frees
         # it; CPython's cyclic GC otherwise triggers constantly on the
-        # millions of container allocations per batch
+        # millions of container allocations per batch. No gc.collect() at
+        # the end: there is no cycle for it to find, it was most of the
+        # operator's own per-task cost (fastdaemon.py), and the automatic
+        # collector resumes once GC is re-enabled.
         gc_was_enabled = gc.isenabled()
         if gc_was_enabled:
             gc.disable()
@@ -113,7 +116,6 @@ def make_arrow_extractor(config: ParserConfig):
             # (downstream limit(), task kill, or any raise)
             if gc_was_enabled:
                 gc.enable()
-                gc.collect()
 
     def _run(part_id: int, started: float, batches):
         def new_buffers():

@@ -3,16 +3,18 @@
 Plan shape (SURVEY.md §3.4, §4.3) — a plan-shape decision, no custom
 Catalyst rules:
 
-    scan (doc_id, spans; byte-balanced maxPartitionBytes splits)
+    scan (doc_id, spans; splits packed by bytes, ≈2 per core)
     → JVM-side HTML reassembly → extraction (mapInArrow)
     → one write → per-partition lineage agg → snapshot commit
 
 Every document parses whole, in place, as the reference parses each page
 in one ``loadHTML`` (Parser.php:446). The kernel's cost is about linear in
-HTML bytes, so the scan's byte-balanced splits already balance the work; a
+HTML bytes, so the scan's byte-balanced splits (``session.get_spark``:
+files weighed by their bytes, not counted) already balance the work; a
 task costs at most the larger of its split and its largest document. The
-only shuffle is :func:`salted`, which engages when the scan exposes too
-few partitions to keep the cluster busy.
+only shuffle is :func:`salted`, which engages when the scan can keep too
+few tasks busy, e.g. a one-file corpus whose byte ranges hold one row
+group between them.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..config import ParserConfig
 from ..operators.extract import _extract_html, html_reassembly_col
+from ..operators.util import scan_parallelism
 from ..sources.sinks import SnapshotSink
 
 
@@ -45,9 +48,11 @@ def plan_extraction(
 ) -> DataFrame:
     """The one extraction pass, lazy: ``documents(doc_id, spans)`` →
     ``EXTRACTED_SCHEMA`` rows. Documents are extracted on the scan's
-    partitions unless it exposes fewer than half of ``num_partitions``
-    (default ``spark.sql.shuffle.partitions``), when they take a salted
-    repartition first.
+    partitions unless they can keep fewer than half of ``num_partitions``
+    (default ``spark.sql.shuffle.partitions``) tasks busy
+    (:func:`~html_table_spark.operators.util.scan_parallelism`: a
+    one-row-group file fills one split however many it is cut into), when
+    they take a salted repartition first.
 
     Plan construction is deliberately terse: every intermediate Dataset
     costs a full Catalyst analyzer pass over the whole subtree, serial
@@ -57,8 +62,7 @@ def plan_extraction(
         spark = documents.sparkSession
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     source = documents.select("doc_id", "spans")
-    # cheap structural check, no job triggered
-    if documents.rdd.getNumPartitions() < max(2, num_partitions // 2):
+    if scan_parallelism(documents) < max(2, num_partitions // 2):
         source = salted(source, num_partitions)
     return _extract_html(
         source.select(F.col("doc_id"), html_reassembly_col("spans").alias("html")),

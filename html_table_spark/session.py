@@ -65,10 +65,14 @@ def get_spark(
         # one doc row can be multi-MB; cap scan split size so a handful of
         # mega-docs cannot land in one input split
         .config("spark.sql.files.maxPartitionBytes", "32m")
-        # openCostInBytes floors the split size at 4m (Spark default kept
-        # explicit): minPartitionNum below can only grow the task count to
-        # totalBytes/4m, never into thousands of micro-tasks
-        .config("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
+        # Spark packs files into a split by bytes + openCostInBytes each.
+        # Spark's 4 MB default outweighs every file of a typical corpus
+        # shard (≤330 KB in the benchmark corpora), so packing went by file
+        # COUNT: 32 tasks for 32 shards, mega-doc shards stacked together.
+        # 64 KB lets the bytes decide. Not 0: the split size then falls
+        # below one row group, and the empty byte ranges each still pay a
+        # Python task (a 4-file corpus became 9 tasks, 5 of them empty).
+        .config("spark.sql.files.openCostInBytes", str(64 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # UI off: it costs serial driver time per stage
         .config("spark.ui.enabled", "false")
@@ -79,20 +83,17 @@ def get_spark(
             "spark.sql.shuffle.partitions", str(max(8, threads))
         )
         # Spark's file-split formula, split = min(maxPartitionBytes,
-        # max(openCostInBytes, totalBytes / minPartitionNum)), defaults
-        # minPartitionNum to the core count — i.e. ONE wave of scan tasks.
-        # Extraction task durations are skewed (doc cost varies ~100×
-        # between documents), so one to three coarse waves end in a ragged
-        # straggler tail: measured par_eff 0.67 on the pass-1 stage at
-        # local[8] with 10×32m splits vs 0.88+ with ~8 waves of smaller
-        # splits. Target ~8 waves; the 4m openCost floor above keeps the
-        # task count bounded (≤ totalBytes/4m tasks), and at fleet data
-        # sizes totalBytes/(8·cores) exceeds the 32m cap anyway, so this
-        # only changes behavior where the default was degenerate (small
-        # corpus relative to the cluster). Cluster masters: leave to
-        # spark-submit conf.
+        # max(openCostInBytes, totalBytes / minPartitionNum)): ≈2 tasks per
+        # core by bytes. Every Python task pays a fixed 55-80 core-ms
+        # (fastdaemon.py), so more, smaller waves cost more than the
+        # straggler tail they trim: on 4 cores, seed-1 perfbench bulk went
+        # from 32 tasks (largest 1.46x the mean bytes) to 9 (1.22x), and
+        # skew from 19 tasks (2.85x) to 10 (1.58x, at most one mega doc
+        # each). A scan that keeps too few tasks busy, e.g. one file cut
+        # into byte ranges, is salted (operators.util.scan_parallelism).
+        # Cluster masters: leave to spark-submit conf.
         builder = builder.config(
-            "spark.sql.files.minPartitionNum", str(8 * threads)
+            "spark.sql.files.minPartitionNum", str(2 * threads)
         )
         # Local masters: boot Python workers through fastdaemon so the
         # zip-TOC invalidation patch is active from the FIRST task (the

@@ -164,8 +164,12 @@ class SnapshotSink:
         Left-anti join on doc_id — Catalyst/AQE broadcasts the distinct-ids
         side when it is small enough; at 10^12-doc scale the committed set
         is bucketable by the same doc_id hash, keeping this a co-located
-        join on a real cluster.
+        join on a real cluster. Null-safe: a null doc_id is committed like
+        any other, and a plain equality would never match it, so every
+        resumed run would extract that document again.
         """
         spark = documents.sparkSession
         done = self.read_committed(spark).select("doc_id").distinct()
-        return documents.join(done, "doc_id", "left_anti")
+        return documents.join(
+            done, documents["doc_id"].eqNullSafe(done["doc_id"]), "left_anti"
+        )

@@ -9,6 +9,9 @@ kernel in-process.
 
 from __future__ import annotations
 
+import gc
+
+import pyarrow as pa
 import pytest
 
 from html_table_spark.config import ParserConfig
@@ -255,3 +258,35 @@ def test_chunk_leg_parity_misnested_end_tag(spark):
     assert got[("nest", 70)][3] == spans_signature(
         [("cell", "ab", None, 0), ("cell", "c", None, 1)]
     )
+
+
+def _html_batches(n_docs=3):
+    for i in range(n_docs):
+        yield pa.RecordBatch.from_pydict(
+            {"doc_id": [f"d{i}"], "html": [f"<table><tr><td>{i}</td></tr></table>"]}
+        )
+
+
+def test_extractor_re_enables_gc_however_it_stops(monkeypatch):
+    """The extractor runs with the cyclic GC off and turns it back on when
+    it stops, whether the generator is closed early (a downstream limit, a
+    killed task) or the kernel raises: Python workers are reused, and a GC
+    left off would stay off for every later task."""
+    from html_table_spark.operators import extract
+
+    config = ParserConfig().all_tables()
+    monkeypatch.setattr(extract, "_FLUSH_ROWS", 1)
+    assert gc.isenabled()
+    out = extract.make_arrow_extractor(config)(_html_batches())
+    assert next(out).column("doc_id").to_pylist() == ["d0"]
+    assert not gc.isenabled()
+    out.close()
+    assert gc.isenabled()
+
+    def kernel_fails(html, config):
+        raise RuntimeError("kernel failed")
+
+    monkeypatch.setattr(extract, "parse_document", kernel_fails)
+    with pytest.raises(RuntimeError, match="kernel failed"):
+        list(extract.make_arrow_extractor(config)(_html_batches()))
+    assert gc.isenabled()

@@ -1,19 +1,24 @@
 """End-to-end pipeline: the one extraction pass, lineage metrics, snapshot
 resume, and the metamorphic suite: the same documents give the Spark-free
-kernel's rows under any partition count, Arrow batch size and resume
-split."""
+kernel's rows under any partition count, Arrow batch size, scan split size
+and resume split."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.types as T
 import pytest
 from pyspark.sql import functions as F
 
 from html_table_spark.config import ParserConfig
-from html_table_spark.corpus import synthesize_documents
+from html_table_spark.corpus import CORPUS_SCHEMA, synthesize_documents
 from html_table_spark.plans.pipeline import run_extraction_concurrent, run_job
 from html_table_spark.semantics import parse_document
-from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
+from html_table_spark.sources.documents import DOCUMENTS_SCHEMA, read_documents
 from html_table_spark.sources.sinks import SnapshotSink
 from html_table_spark.spans import doc_spans_to_html, encode_table_spans, spans_signature
 
@@ -265,13 +270,86 @@ def test_discovery_routing_equals_kernel(spark, num_partitions, batch_rows):
     assert len([r for r in got if r[0] == "mega001"]) == 80
 
 
+# (openCostInBytes, minPartitionNum, maxPartitionBytes); minPartitionNum
+# None is twice the session's cores. "by_bytes" is get_spark's; "by_count"
+# is Spark's 4 MB open cost, which packs small files by count;
+# "byte_ranges" cuts every file.
+_SPLIT_SETTINGS = {
+    "by_count": (str(4 * 1024 * 1024), "32", "32m"),
+    "by_bytes": (str(64 * 1024), None, "32m"),
+    "byte_ranges": ("0", "64", "4096"),
+}
+
+
+@contextlib.contextmanager
+def _split_confs(spark, setting):
+    open_cost, min_parts, max_bytes = _SPLIT_SETTINGS[setting]
+    confs = {
+        "spark.sql.files.openCostInBytes": open_cost,
+        "spark.sql.files.minPartitionNum": min_parts
+        or str(2 * spark.sparkContext.defaultParallelism),
+        "spark.sql.files.maxPartitionBytes": max_bytes,
+    }
+    before = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def _write_corpus(rows, path, n_files, row_group_rows):
+    os.makedirs(path)
+    for i in range(n_files):
+        pq.write_table(
+            pa.Table.from_pylist(rows[i::n_files], schema=CORPUS_SCHEMA),
+            os.path.join(path, f"part-{i:05d}.parquet"),
+            row_group_size=row_group_rows,
+        )
+    return path
+
+
+@pytest.mark.parametrize("setting", list(_SPLIT_SETTINGS))
+def test_byte_target_equals_kernel(spark, tmp_path, setting):
+    """The scan's split sizing is a performance choice too: the documents
+    read back from four Parquet files of several row groups each give the
+    kernel's rows whether files are packed by count, by bytes, or cut into
+    4 KB byte ranges (most of them empty, the rest holding a few row
+    groups of a file)."""
+    rows = _metamorphic_rows()
+    path = _write_corpus(rows, str(tmp_path / "corpus"), n_files=4, row_group_rows=3)
+    config = ParserConfig().all_tables()
+    with _split_confs(spark, setting):
+        docs = read_documents(spark, path)
+        if setting == "byte_ranges":
+            assert docs.rdd.getNumPartitions() > 4
+        got = _full_rows(_extract(docs, config))
+    assert got == _full_kernel_rows(rows, config)
+
+
+@pytest.mark.parametrize("setting", list(_SPLIT_SETTINGS))
+def test_one_file_corpus_spreads(spark, tmp_path, setting):
+    """A one-file, one-row-group corpus (the layout of the sf*
+    documents.parquet files) fills one split however many byte ranges the
+    scan cuts it into, so the pass salts it over the cores instead of
+    parsing the whole corpus in one task."""
+    rows = _metamorphic_rows()
+    path = _write_corpus(rows, str(tmp_path / "corpus"), n_files=1, row_group_rows=len(rows))
+    config = ParserConfig().all_tables()
+    with _split_confs(spark, setting):
+        got = _extract(read_documents(spark, path), config)
+    assert _full_rows(got) == _full_kernel_rows(rows, config)
+    assert len({r.part_id for r in got}) >= 2
+
+
 def test_resume_split_equals_kernel(spark, tmp_path):
-    """A resume split: ``run_job`` over about a third of the documents,
-    then a resumed ``run_job`` over all of them, commits the kernel's rows
-    once each. The null doc_id is left out: resume cannot see it as
-    committed (``test_resume_null_doc_id_extracted_once``)."""
-    rows = [r for r in _metamorphic_rows() if r["doc_id"] is not None]
-    df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    """A resume split: ``run_job`` over about a third of the documents
+    (the null doc_id among them: its hash is the seed, 42), then a resumed
+    ``run_job`` over all of them, commits the kernel's rows once each."""
+    rows = _metamorphic_rows()
+    df = spark.createDataFrame(rows, _NULLABLE_SCHEMA)
     config = ParserConfig().all_tables()
     sink = SnapshotSink(str(tmp_path / "resume"))
     first = df.filter(F.xxhash64("doc_id") % 3 == 0)
@@ -282,12 +360,9 @@ def test_resume_split_equals_kernel(spark, tmp_path):
     assert _full_rows(sink.read_committed(spark).collect()) == _full_kernel_rows(rows, config)
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="remaining_documents anti-joins on doc_id, and a null doc_id "
-    "never matches its committed row, so every resumed run extracts it again",
-)
 def test_resume_null_doc_id_extracted_once(spark, tmp_path):
+    """A null doc_id is committed like any other: the resumed run skips it
+    (the resume anti-join is null-safe)."""
     rows = _edge_rows()[:1]
     df = spark.createDataFrame(rows, _NULLABLE_SCHEMA)
     sink = SnapshotSink(str(tmp_path / "resume_null"))

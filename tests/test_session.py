@@ -55,7 +55,7 @@ SHARED_CONFS = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
     "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
     "spark.sql.files.maxPartitionBytes": "32m",
-    "spark.sql.files.openCostInBytes": str(4 * 1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(64 * 1024),
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }
@@ -68,7 +68,7 @@ def test_explicit_local_master_confs(recorder):
     assert recorder.confs == {
         **SHARED_CONFS,
         "spark.sql.shuffle.partitions": "8",
-        "spark.sql.files.minPartitionNum": "32",
+        "spark.sql.files.minPartitionNum": "8",
         "spark.python.daemon.module": "html_table_spark.fastdaemon",
         "spark.executorEnv.PYTHONPATH": repo_root,
     }
@@ -82,7 +82,7 @@ def test_bare_local_master_sizes_from_the_box(recorder, monkeypatch):
     threads = os.cpu_count()
     assert recorder.masters == ["local[*]"]
     assert recorder.confs["spark.sql.shuffle.partitions"] == str(max(8, threads))
-    assert recorder.confs["spark.sql.files.minPartitionNum"] == str(8 * threads)
+    assert recorder.confs["spark.sql.files.minPartitionNum"] == str(2 * threads)
 
 
 def test_spark_submit_leaves_master_to_submit(recorder, monkeypatch):
