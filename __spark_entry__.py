@@ -303,7 +303,10 @@ def x_xpath_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         "attr_step": "//table[following-sibling::table/@id]",
         "text_step": '//table[tr/td/text()="menu"]',
         # round-3 function-library additions: UnionExpr in predicates,
-        # lang() (xml:lang ancestor walk), sum() over a node-set
+        # lang(), sum() over a node-set. libxml2's HTML parser binds no
+        # namespace, so xml:lang is a plain attribute and lang() matches
+        # nothing: as in the reference, the selection is not found and
+        # yields no cells
         "pred_union": "//table[@id | @nosuch]",
         "lang": '//table[lang("en")]',
         "sum_attr": "//table[sum(@data-n) = 4]",
@@ -318,7 +321,7 @@ def x_xpath_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         # now matches EVERY node kind (text/comment/PI/element) with full
         # predicate support and arbitrary continuations from non-element
         # contexts — each selector keys on the PI inside the nav table's
-        # tr, invisible to an element-only walk (xpath.py mixed-kind walk)
+        # tr, invisible to an element-only walk
         "node_count": "//table[count(.//node()) = 4]",
         "node_pos_pi": "//table[tr/node()[1][self::processing-instruction()]]",
         "pi_sibling": "//table[tr/processing-instruction()/following-sibling::td]",
@@ -2670,8 +2673,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, 'text_step', 'menu', CAST(0 AS INT) FROM w
             UNION ALL
             SELECT doc_id, 'pred_union', w0, CAST(0 AS INT) FROM w
-            UNION ALL
-            SELECT doc_id, 'lang', 'menu', CAST(0 AS INT) FROM w
             UNION ALL
             SELECT doc_id, 'sum_attr', unnest(rest),
                    CAST(generate_subscripts(rest, 1) - 1 AS INT) FROM w

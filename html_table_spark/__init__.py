@@ -4,8 +4,9 @@ A from-scratch rebuild (NOT a port) of the query and data-processing
 capabilities of bakame-php/html-table, re-expressed Spark-first for an
 interleaved text+media document corpus at web scale:
 
-- pure-Python correctness kernel (tokenizer → DOM → grid resolver) with the
-  reference's exact semantics, pinned by golden fixtures F01–F15;
+- a correctness kernel (libxml2, the reference's parser, → DOM → grid
+  resolver) with the reference's exact semantics, pinned by golden
+  fixtures F01–F15;
 - Arrow-vectorized `mapInArrow` extraction operator (no per-row Python);
 - byte-balanced scan splits and salted repartitioning, each document
   parsed whole;

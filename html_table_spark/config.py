@@ -21,7 +21,7 @@ from .errors import (
     MSG_NON_STRING_HEADER,
     ParserError,
 )
-from .xpath import compile_xpath
+from .libxml2 import validate
 
 # Section values (reference enum Section, src/Section.php:7-13).
 THEAD = "thead"
@@ -67,7 +67,7 @@ class ParserConfig:
         """Parser.php:67-92 — eager XPath validation."""
         if expression == self.table_expression:
             return self
-        compile_xpath(expression)  # raises ParserError on invalid/unsupported
+        validate(expression)
         return replace(self, table_expression=expression)
 
     def table_position(self, position_or_id: int | str) -> "ParserConfig":

@@ -3,7 +3,7 @@
 Design (SURVEY.md §1.4, §3.4): Catalyst plans the Parquet/Iceberg scan with
 column pruning down to (doc_id, spans), and the HTML is reassembled
 JVM-side (:func:`html_reassembly_col`); Arrow moves columnar batches into
-the Python worker; this operator runs the pure-Python kernel per document
+the Python worker; this operator runs the kernel (semantics.py) per document
 inside the batch and yields bounded output batches (1 input doc → N output
 tables, a UDTF-shaped fan-out).  There is **no per-row Python UDF** anywhere
 — the JVM↔Python boundary is crossed per Arrow batch, not per row

@@ -51,8 +51,7 @@ _BLOCK_TAGS = frozenset(
 )
 
 # Subtrees that never contribute visible text.  ``title`` is listed on its
-# own because the tolerant parser unwraps ``head``/``body`` containers, so a
-# document's title can surface as a top-level element.
+# own because libxml2 leaves a title that follows body content in ``body``.
 _SKIP_TAGS = frozenset({
     "script", "style", "noscript", "template", "svg", "head",
     "title", "meta", "link", "base",

@@ -57,13 +57,6 @@ _NAME_FIELDS = {"description": "description", "author": "author",
 _OG_FIELDS = {"og:title": "og_title", "og:description": "og_description",
               "og:image": "og_image", "og:type": "og_type"}
 _CHARSET_IN_CT = re.compile(r"charset\s*=\s*[\"']?([A-Za-z0-9_.:-]+)", re.I)
-# the tolerant tree unwraps <html>/<head>/<body> containers (reference
-# parity), which drops the html element's attributes — so the page-level
-# lang declaration is read from the raw markup, with the first lang
-# attribute anywhere in the tree as the documented fallback
-_HTML_LANG = re.compile(
-    r"<html\b[^>]*?\blang\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>\"']+))", re.I
-)
 
 
 def extract_page_meta(html: str) -> dict[str, str | None]:
@@ -74,10 +67,6 @@ def extract_page_meta(html: str) -> dict[str, str | None]:
     def put(field: str, value: str | None) -> None:
         if value and out[field] is None:
             out[field] = value
-
-    m = _HTML_LANG.search(html or "")
-    if m:
-        put("lang", (m.group(1) or m.group(2) or m.group(3) or "").strip())
 
     stack = list(reversed([c for c in root.children if type(c) is not str]))
     while stack:
@@ -107,7 +96,9 @@ def extract_page_meta(html: str) -> dict[str, str | None]:
                 put("canonical", node.get_attribute("href").strip())
         elif tag == "base":
             put("base_href", node.get_attribute("href").strip())
-        if node.get_attribute("lang"):  # fallback: first declared lang
+        # the html element comes first, so its lang wins; else the first
+        # lang declared anywhere
+        if node.get_attribute("lang"):
             put("lang", node.get_attribute("lang").strip())
         stack.extend(
             reversed([c for c in node.children if type(c) is not str])

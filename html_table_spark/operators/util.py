@@ -16,7 +16,7 @@ def scan_parallelism(df: DataFrame) -> int:
     return min(n, len(files)) if files else n
 
 
-def ensure_parallelism(df: DataFrame, min_rows_per_partition: int = 1) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Spread a narrow input over the cluster before a compute-heavy stage.
 
     Small dimension-sized inputs (a single parquet file) fill ONE

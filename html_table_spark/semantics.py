@@ -1,4 +1,4 @@
-"""The extraction kernel: reference-exact table semantics, pure Python.
+"""The extraction kernel: reference-exact table semantics over libxml2's tree.
 
 This is the correctness core (SURVEY.md §7.1 step 1): given one HTML string
 and a :class:`ParserConfig`, produce the extracted table(s) with the exact
@@ -31,12 +31,11 @@ per Python call), satisfying the "no per-row Python on the hot path" rule
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import lru_cache
 
+from . import libxml2
 from .config import ALL_SECTIONS, TR, ParserConfig, validate_header
 from .errors import MSG_TABLE_NOT_FOUND, ParserError, msg_not_a_table
-from .htmldom import ELEMENT, Node, parse_html, php_int_cast
-from .xpath import XPathExpr, compile_xpath
+from .htmldom import ELEMENT, Node, php_int_cast
 
 # PHP trim charset used for header cells ONLY (Parser.php:539):
 # NBSP + space + \t \n \r \0 \x0B. Data cells are NOT normalized.
@@ -84,9 +83,9 @@ class ExtractedTable:
         return [[c.text if c is not None else None for c in row] for row in self.rows]
 
 
-@lru_cache(maxsize=256)
-def _compiled(expression: str) -> XPathExpr:
-    return compile_xpath(expression)
+# nested tables are part of their outer cell's text (nodeValue
+# flattening), not independent extraction units
+TOP_LEVEL_TABLES = "//table[not(ancestor::table)]"
 
 
 def _span_size(node: Node, attr: str) -> int:
@@ -329,23 +328,6 @@ def _extract_table(
     )
 
 
-def _top_level_tables(root: Node) -> list[Node]:
-    """Tables with no <table> ancestor, document order. Nested tables are
-    part of their outer cell's text (nodeValue flattening) — they are not
-    independent extraction units."""
-    found: list[Node] = []
-    stack = list(reversed(root.children))
-    while stack:
-        node = stack.pop()
-        if type(node) is not Node or node.kind != ELEMENT:
-            continue
-        if node.tag == "table":
-            found.append(node)
-            continue  # do not descend
-        stack.extend(reversed(node.children))
-    return found
-
-
 def parse_document(html: str, config: ParserConfig) -> list[ExtractedTable]:
     """Extract table(s) from one HTML document.
 
@@ -356,39 +338,35 @@ def parse_document(html: str, config: ParserConfig) -> list[ExtractedTable]:
     ``select_all_tables`` mode (graft extension for the interleaved corpus):
     one result per top-level table, ``table_idx`` = 0-based ordinal; a
     document with no tables yields no results.
+
+    libxml2 parses and selects; only the selected tables are converted to
+    ``Node`` trees.
     """
-    root, parse_errors = parse_html(html)
-    if config.fail_on_xml_errors and parse_errors:
-        # reference: ParserError::dueToLibXmlErrors (Parser.php:450-453)
-        msg = "\n".join(f"parse error: {e}" for e in parse_errors)
-        return [ExtractedTable(table_idx=0, status="error", error_msg=msg)]
+    parse_errors: list[str] | None = [] if config.fail_on_xml_errors else None
+    with libxml2.document(html, parse_errors) as doc:
+        if parse_errors:
+            # reference: ParserError::dueToLibXmlErrors (Parser.php:450-453)
+            msg = "\n".join(f"parse error: {e}" for e in parse_errors)
+            return [ExtractedTable(table_idx=0, status="error", error_msg=msg)]
 
-    if config.select_all_tables:
-        return [
-            _extract_table(node, config, i)
-            for i, node in enumerate(_top_level_tables(root))
-        ]
+        if config.select_all_tables:
+            return [
+                _extract_table(libxml2.to_node(table), config, i)
+                for i, table in enumerate(libxml2.query(doc, TOP_LEVEL_TABLES))
+            ]
 
-    selected = _compiled(config.table_expression).first(root)
-    if (
-        selected is None
-        or type(selected) is not Node
-        or selected.kind != ELEMENT
-        or selected.tag == "#document"
-    ):
-        # None, or an attribute/text/comment/PI/namespace result, or the
-        # synthetic #document container (reachable via parent climbs:
-        # //table/.., //comment()/..): the reference gates on
-        # `instanceof DOMElement` (Parser.php:370) and a DOMDocument is
-        # not a DOMElement, so non-element nodes get the not-found error,
-        # not not-a-table
-        return [
-            ExtractedTable(table_idx=0, status="error", error_msg=MSG_TABLE_NOT_FOUND)
-        ]
-    if selected.tag != "table":
-        return [
-            ExtractedTable(
-                table_idx=0, status="error", error_msg=msg_not_a_table(selected.tag)
-            )
-        ]
-    return [_extract_table(selected, config, 0)]
+        selected = libxml2.query(doc, config.table_expression)
+        # the reference takes ->item(0) and gates on `instanceof DOMElement`
+        # (Parser.php:370): an empty or scalar result, an attribute, text,
+        # comment, PI, namespace or the document node (None) is not found
+        first = selected[0] if selected else None
+        if first is None:
+            return [
+                ExtractedTable(table_idx=0, status="error", error_msg=MSG_TABLE_NOT_FOUND)
+            ]
+        tag = libxml2.element_name(first)
+        if tag != "table":
+            return [
+                ExtractedTable(table_idx=0, status="error", error_msg=msg_not_a_table(tag))
+            ]
+        return [_extract_table(libxml2.to_node(first), config, 0)]

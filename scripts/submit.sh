@@ -2,6 +2,9 @@
 # Package the engine and run the extraction job via spark-submit --py-files.
 # Usage: scripts/submit.sh <input> <output> [spark-submit args...] [-- job args...]
 #   e.g. scripts/submit.sh in.parquet out/ --conf spark.ui.enabled=false -- --mode single --no-resume
+# Executors, and the machine submitting the job, need libxml2.so.2 2.9.x
+# (html_table_spark/libxml2.py binds it over ctypes): --py-files ships
+# Python only, nothing compiled.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 INPUT="${1:?input corpus path}"

@@ -1,10 +1,10 @@
-"""Tokenizer tests: the fast scanner against libxml2 2.9.14, the
-reference's own parser (differential), plus the edge cases the reference's
-libxml parse pins down."""
+"""The whole-document tree (``htmldom.parse_html``, libxml2's) and the
+extraction's selected-subtree path checked against each other, plus the
+edge cases the reference's libxml parse pins down."""
 
 from __future__ import annotations
 
-import re
+import hashlib
 import subprocess
 import sys
 from pathlib import Path
@@ -16,9 +16,8 @@ from html_table_spark.htmldom import (
     COMMENT,
     ELEMENT,
     PI,
-    TEXT,
     Node,
-    parse_html_fast,
+    parse_html,
     php_int_cast,
 )
 from html_table_spark.semantics import parse_document
@@ -37,39 +36,24 @@ def tree_repr(node):
             tuple(tree_repr(c) for c in node.children))
 
 
-def assert_same_tree(html: str) -> None:
-    fast, _ = parse_html_fast(html)
-    assert tree_repr(fast) == tree_repr(libxml2.unwrap(libxml2.parse(html)[0])), html[:200]
-
-
 def assert_same_extraction(html: str, config: ParserConfig) -> None:
+    """``parse_document`` (libxml2's XPath selects, only the selected
+    subtrees are converted) equals the extraction over the whole converted
+    document, tables found by a walk."""
     ours = parse_document(html, config.ignore_errors())
-    assert ours == libxml2.extract(html, config), html[:200]
-
-
-# Fixtures whose trees differ from libxml2's only where libxml2 implies
-# html/head/body structure: the whitespace before an implied <head> and an
-# implied <p> around bare body text. Their extraction output is equal.
-IMPLIED_STRUCTURE_FIXTURES = {"F02a", "F02b", "F02c", "F10a", "F10d"}
+    assert ours == libxml2.extract(html, config.ignore_errors()), html[:200]
 
 
 def test_differential_fixtures():
-    for fixture_id, (html, cfg) in FIXTURES.items():
-        assert_same_extraction(html, cfg)
+    for html, cfg in FIXTURES.values():
+        assert_same_extraction(html, cfg.table_position(0))
         assert_same_extraction(html, cfg.all_tables())
-        if fixture_id not in IMPLIED_STRUCTURE_FIXTURES:
-            assert_same_tree(html)
-    assert_same_tree(f14_mega_doc_html(30))
+    assert_same_extraction(f14_mega_doc_html(30), ParserConfig().all_tables())
 
 
 def test_differential_corpus():
     for row in synthesize_documents(n_docs=200, seed=31, media_fraction=0.5):
-        assert_same_tree(doc_spans_to_html(row["spans"]))
-
-
-# Documents that open with bare text, which libxml2 wraps in an implied <p>
-# (htmlCheckParagraph): only their extraction output is compared.
-IMPLIED_P_CASES = ["plain text only", "a < b and c > d", "df<body></p>sghfd"]
+        assert_same_extraction(doc_spans_to_html(row["spans"]), ParserConfig().all_tables())
 
 
 def test_differential_edge_cases():
@@ -90,10 +74,11 @@ def test_differential_edge_cases():
         "<table><tr><td title=\"a&quot;b\">t</td></tr></table>",
         "<a href=unquoted>x</a>",
         "<x-custom attr>y</x-custom>",
+        "plain text only",
+        "a < b and c > d",
+        "df<body></p>sghfd",
     ]
     for html in cases:
-        assert_same_tree(html)
-    for html in cases + IMPLIED_P_CASES:
         assert_same_extraction(html, ParserConfig())
         assert_same_extraction(html, ParserConfig().all_tables())
 
@@ -109,27 +94,39 @@ _CONTAINERS = (
 ).split()
 
 
+# the digest the Python tokenizer's CLOSE_BEFORE table also gave, when it
+# was checked against libxml2 2.9.14 tree by tree
+IMPLIED_END_TAGS_DIGEST = "00e3553c7c7f4d8c"
+
+
 def test_differential_implied_end_tags():
-    """Every start tag after every open element: the implied end tags
-    (CLOSE_BEFORE) are libxml2's own."""
-    for new in _CONTAINERS + ["col", "hr", "br", "img"]:
-        for old in _CONTAINERS:
-            assert_same_tree(f"<div><{old}><{new}>x")
+    """Every start tag after every open element: a golden of libxml2
+    2.9.14's implied end tags (htmlAutoClose), as a digest of the trees."""
+    trees = [
+        tree_repr(libxml2.unwrap(parse_html(f"<div><{old}><{new}>x")[0]))
+        for new in _CONTAINERS + ["col", "hr", "br", "img"]
+        for old in _CONTAINERS
+    ]
+    assert hashlib.sha256(repr(trees).encode()).hexdigest()[:16] == IMPLIED_END_TAGS_DIGEST
 
 
 def test_mismatched_quote_divergence():
-    """A start tag with mismatched quotes still parses as a tag: the fast
-    scanner recovers at the first '>', where libxml2 swallows the rest of
-    the document into the value (the deliberate ``unclosed_attr_quote``
-    divergence, ``LIBXML2_DIVERGES`` in test_libxml2_corpus.py)."""
-    root, _ = parse_html_fast("<td colspan='2\">weird quotes</td>")
-    td = next(root.iter_elements())
-    assert td.tag == "td"
-    assert td.text_content() == "weird quotes"
+    """A start tag with mismatched quotes: libxml2 runs the value to the
+    next matching quote, here to the end of input, and builds the tag."""
+    root, _ = parse_html("<td colspan='2\">weird quotes</td>")
+    td = next(n for n in root.iter_elements() if n.tag == "td")
+    assert td.attrs == {"colspan": '2">weird quotes</td>'}
+    assert td.children == []
+
+
+def _body_tags(root: Node) -> list[str]:
+    (body,) = (n for n in root.iter_elements() if n.tag == "body")
+    return [n.tag for n in body.children if type(n) is Node and n.kind == ELEMENT]
 
 
 _CUT_OFF_TAGS = """
-from html_table_spark.htmldom import ELEMENT, parse_html
+from html_table_spark.htmldom import parse_html
+from tests.test_htmldom import _body_tags
 
 t = "<table><tr><td>x</td></tr></table>"
 for tail, built in (
@@ -139,59 +136,58 @@ for tail, built in (
     ('<a b="' + "c d " * 50_000, ["a"]),
     ('</td ' + '"' * 200_000, []),
 ):
-    root, _ = parse_html(t + tail)
-    assert [n.tag for n in root.children if n.kind == ELEMENT] == ["table", *built]
+    assert _body_tags(parse_html(t + tail)[0]) == ["table", *built]
 """
 
 
 def test_tag_cut_off_by_end_of_input_is_linear_time():
     """A tag with no '>' after it (a truncated crawl record) is parsed in
-    one linear scan and built, as libxml2 builds it. A backtracking
-    attribute region takes ~3x longer per extra attribute on such a tag,
-    so the check runs in a subprocess with a timeout: a regression fails
-    instead of hanging the suite."""
+    linear time and built, as libxml2 builds it. The check runs in a
+    subprocess with a timeout: a regression fails instead of hanging the
+    suite."""
     repo = Path(__file__).resolve().parents[1]
     subprocess.run([sys.executable, "-c", _CUT_OFF_TAGS], cwd=repo, check=True, timeout=60)
 
 
 _QUOTE_RUNS = """
 from html_table_spark.htmldom import parse_html
+from tests.test_htmldom import _body_tags
 
 t = "<table><tr><td>x</td></tr></table>"
 for q in ('"', "'"):
     for n in (61, 200_000):
         # a quote run inside a tag, then '>' and a table; or, cut off by end
         # of input, after the table
-        for s in ("<a " + q * n + ">" + t, t + "<a " + q * n):
-            assert len(parse_html(s)[0].children) == 2
+        assert _body_tags(parse_html("<a " + q * n + ">" + t)[0]) == ["a", "table"]
+        assert _body_tags(parse_html(t + "<a " + q * n)[0]) == ["table", "a"]
 """
 
 
 def test_unseen_tag_angle_prescan_is_linear_time():
-    """Parsing stays linear on adversarial quote runs. A backtracking
-    attribute region took ~8x longer per +4 quotes (3s at 32 quotes; hours
-    at 60+), pinning an executor core on one crafted document, so the check
-    runs in a subprocess with a timeout: a regression fails instead of
-    hanging the suite."""
+    """Parsing stays linear on adversarial quote runs, which once pinned an
+    executor core on one crafted document; the check runs in a subprocess
+    with a timeout: a regression fails instead of hanging the suite."""
     repo = Path(__file__).resolve().parents[1]
     subprocess.run([sys.executable, "-c", _QUOTE_RUNS], cwd=repo, check=True, timeout=60)
 
 
 def test_rawtext_script_not_parsed():
-    root, _ = parse_html_fast("<script><table><tr></script><p>after</p>")
+    root, _ = parse_html("<script><table><tr></script><p>after</p>")
     tags = [e.tag for e in root.iter_elements()]
-    assert tags == ["script", "p"]
+    assert tags == ["html", "head", "script", "body", "p"]
+    (script,) = (e for e in root.iter_elements() if e.tag == "script")
+    assert script.children == ["<table><tr>"]
 
 
 def test_fast_entity_decoding():
-    root, _ = parse_html_fast("<td>&amp;x&nbsp;</td>")
-    td = next(root.iter_elements())
+    root, _ = parse_html("<td>&amp;x&nbsp;</td>")
+    td = next(n for n in root.iter_elements() if n.tag == "td")
     assert td.text_content() == "&x\xa0"
 
 
 def test_unexpected_end_tag_recorded():
-    _, errs = parse_html_fast("df</p>x")
-    assert any("unexpected end tag" in e for e in errs)
+    _, errs = parse_html("<p>a</b>x")
+    assert errs == ["Unexpected end tag : b"]
 
 
 def test_php_int_cast():
@@ -204,9 +200,9 @@ def test_php_int_cast():
     assert php_int_cast("nope") == 0
 
 
-# --- randomized differential fuzz (fast scanner vs libxml2) ------------------
+# --- randomized differential fuzz (selected subtrees vs the whole tree) ----
 
-from hypothesis import event, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 _FUZZ_TAGS = [
@@ -236,33 +232,28 @@ def _token(draw):
     return f"<{tag}/>"
 
 
-# libxml2 acts on html/body tags that the fast tokenizer skips: </body>,
-# </html>, <body/> and <html/> close an open table, and a <body> inside a
-# table nests there (ROADMAP Fix first: implied html/body). A divergence
-# belongs to this class when removing every html/body tag removes it; the
-# fast tokenizer's own output does not change when they are removed.
-_HTML_BODY_TAG = re.compile(r"</?(?:html|body)\b[^>]*>")
-
-
-def _html_body_class(html: str, config: ParserConfig) -> bool:
-    stripped = _HTML_BODY_TAG.sub("", html)
-    return parse_document(stripped, config) == libxml2.extract(stripped, config)
-
-
 @given(st.lists(_token(), min_size=0, max_size=30))
 @settings(max_examples=500, deadline=None)
 def test_differential_fuzz_tag_soup(tokens):
     """Random tag soup (unbalanced opens/closes, implied closes, comments,
     entities, void and self-closing elements, html/body wrappers), extracted
-    in first-table and all-tables mode: the output equals the extraction
-    over libxml2's tree, or the divergence is the html/body class above
-    (its minimal repros are strict xfails in test_libxml2_corpus.py)."""
+    in first-table and all-tables mode, equals the extraction over the
+    whole converted tree."""
     html = "".join(tokens)
-    for mode, config in (("first-table", ParserConfig()), ("all-tables", ParserConfig().all_tables())):
-        if parse_document(html, config) == libxml2.extract(html, config):
-            continue
-        assert _html_body_class(html, config), (mode, html)
-        event(f"{mode}: html/body tags")
+    assert_same_extraction(html, ParserConfig())
+    assert_same_extraction(html, ParserConfig().all_tables())
+
+
+def _captions(html: str, expr: str) -> list[str]:
+    """The captions of the tables ``expr`` selects, in document order,
+    through the public selection path: ``(expr)[k]`` for k = 1, 2, ..."""
+    out = []
+    while True:
+        config = ParserConfig().table_xpath_position(f"({expr})[{len(out) + 1}]")
+        [table] = parse_document(html, config)
+        if table.status == "error":
+            return out
+        out.append(table.caption)
 
 
 def test_xpath_descendant_positionals_count_per_parent():
@@ -270,31 +261,24 @@ def test_xpath_descendant_positionals_count_per_parent():
     — DOMXPath counts per PARENT, not across the document. Stacked
     positionals re-filter the already-filtered set; attr predicates after a
     positional filter the positional survivor."""
-    from html_table_spark.htmldom import parse_html_fast
-    from html_table_spark.xpath import compile_xpath
-
-    html = (
-        '<div><table id="a"></table><table id="b"></table></div>'
-        '<div><table id="c"></table></div>'
-        '<table id="d"></table><table id="e"></table>'
+    html = "".join(
+        f'<table id="{i}"><caption>{i}</caption></table>' if i in "abcde" else i
+        for i in ("<div>", "a", "b", "</div><div>", "c", "</div>", "d", "e")
     )
-    root, _ = parse_html_fast(html)
 
-    def ids(expr):
-        return [(n.attrs or {}).get("id") for n in compile_xpath(expr).query(root)]
-
-    # 2nd table per parent: 'b' (div1), 'e' (document) — NOT global 2nd
-    assert ids("//table[2]") == ["b", "e"]
+    # 2nd table per parent: 'b' (div1), 'e' (body) — NOT global 2nd
+    assert _captions(html, "//table[2]") == ["b", "e"]
     # global document-order 2nd via the wrapper
-    assert ids("(//table)[2]") == ["b"]
+    assert _captions(html, "(//table)[2]") == ["b"]
     # [1][2]: first-per-parent, then 2nd of that singleton set → empty
-    assert ids("//table[1][2]") == []
+    assert _captions(html, "//table[1][2]") == []
     # positional then attribute filter
-    assert ids('//table[2][@id="e"]') == ["e"]
-    assert ids('//table[@id="e"][1]') == ["e"]
-    # descendant:: counts per CONTEXT (whole subtree), unlike //
-    assert ids("descendant::table[2]") == ["b"]
+    assert _captions(html, '//table[2][@id="e"]') == ["e"]
+    assert _captions(html, '//table[@id="e"][1]') == ["e"]
+    # descendant:: counts per CONTEXT (the root element's whole subtree)
+    assert _captions(html, "descendant::table[2]") == ["b"]
     # the reference's generated forms stay accepted
     for ok in ("(//table)[2]", "(//table[@id=\"x\"])[1]",
                "(//table/thead/tr)[1]", "/table[2]/tr"):
-        compile_xpath(ok)
+        ParserConfig().table_xpath_position(ok)
+

@@ -1,12 +1,11 @@
-r"""libxml2 tag-soup corpus: hand-derived goldens, each checked against
-libxml2 2.9.14 itself.
+r"""libxml2 tag-soup corpus: hand-derived goldens of libxml2 2.9.14's
+recovery, the version the reference's PHP 8.2 links.
 
 The reference parses through libxml2's tolerant HTML4 parser (PHP
-``DOMDocument::loadHTML``, ``src/Parser.php:417-454``). Each golden below
-encodes its recovery behavior, and the test compares it twice: with the
-fast tokenizer's tree, and with libxml2's own tree through the ctypes
-oracle (``tests/libxml2_oracle.py``), html/head/body wrappers unwrapped.
-The goldens cover:
+``DOMDocument::loadHTML``, ``src/Parser.php:417-454``), and so does this
+package. Each golden below pins the tree ``htmldom.parse_html`` builds,
+html/head/body wrappers unwrapped, so a libxml2 version change shows up in
+the test diff. The goldens cover:
 
 - implied end tags (``htmlAutoClose``, libxml2's htmlStartClose pairs):
   ``<tr>`` closes an open tr/td/th, ``<td>`` closes td/th and an open
@@ -16,38 +15,41 @@ The goldens cover:
 - NO implicit ``<tbody>`` and NO foster parenting (HTML4 recovery — a
   ``<div>`` inside ``<table>`` stays nested; the HTML5 algorithm would
   relocate it)
+- implied structure: bare body text gets an implied ``<p>``, a leading
+  ``<script>``/``<style>`` goes into an implied ``<head>``
 - stray end tags ignored; a misplaced end tag is ignored when an open
   element above its match has a higher end priority (``htmlEndPriority``:
   div 150, td/th 160, tr 170, sections 180, table 190, default 100);
   unclosed elements closed at EOF; unclosed
   ``<script>``/``<style>`` raw text runs to EOF (``htmlParseScript``)
 - a tag cut off by end of input is built, as are its attributes (a quoted
-  value runs to the end); an unterminated comment with no later ``>``
-  swallows the rest
+  value runs to the end, and so does an unterminated one); an
+  unterminated comment, or one ended by ``--   >``, swallows the rest
 - tag names take libxml2's name characters (``<td<b>`` is a ``td``); a
   run in a start tag that no attribute name starts is dropped
 - comments end at ``-->`` or ``--!>``, ``--`` allowed inside; DOCTYPE
-  skipped; any other ``<!`` and a ``<`` before a non-letter stay text; a
-  ``</`` with no name is dropped; ``<?...>`` kept as a PI childNode (it
-  shifts DOM child indices, which the reference's rowspan carry keys on —
-  Parser.php:559)
+  skipped; at the start of a document the ``<`` of a ``<!`` that opens no
+  declaration is dropped, in content it stays text; a ``<`` before a
+  non-letter stays text; a ``</`` with no name is dropped; ``<?...>`` kept
+  as a PI childNode (it shifts DOM child indices, which the reference's
+  rowspan carry keys on — Parser.php:559)
 - entities: HTML 4 names decoded when ``;`` ends them, others (``&foo;``,
   ``&ap;``, ``&amp``) left literal; character references to code points
   XML forbids dropped (in an attribute they end the value); attr names
   lowercased, first duplicate attr wins, a valueless boolean attribute
   valued by its name
-
-``LIBXML2_DIVERGES`` lists the goldens that differ from libxml2 2.9.14, each
-with its reason.
 """
 
 from __future__ import annotations
 
+import ctypes.util
+
 import pytest
 
+from html_table_spark import libxml2 as binding
 from html_table_spark.config import ParserConfig
 from html_table_spark.errors import msg_not_a_table
-from html_table_spark.htmldom import COMMENT, PI, parse_html_fast
+from html_table_spark.htmldom import COMMENT, PI, parse_html
 from html_table_spark.semantics import parse_document
 from tests import libxml2_oracle as libxml2
 
@@ -63,36 +65,6 @@ def ser(n):
     inner = " ".join(ser(c) for c in n.children)
     return f"{n.tag}({attrs.strip()})[{inner}]" if attrs else f"{n.tag}[{inner}]"
 
-
-_IMPLIED_STRUCTURE = (
-    "libxml2 implies html/head/body: bare body text gets an implied <p> and "
-    "a leading <script>/<style> goes into an implied <head> (ROADMAP Fix "
-    "first: implied html/body)"
-)
-_DOCUMENT_START = (
-    "at the start of a document libxml2 drops the '<' of a '<!' that opens "
-    "no declaration and wraps the rest in an implied <p>; in content both "
-    "keep it as text (bogus_decl_in_content)"
-)
-_SWALLOWED = (
-    "libxml2 swallows the rest of the document into the unterminated "
-    "{what}; the fast tokenizer recovers at the first {where}, losing at "
-    "most one tag instead of the remaining document: a deliberate, "
-    "better-bounded recovery for mega-doc extraction"
-)
-LIBXML2_DIVERGES = {
-    "comment_empty": _IMPLIED_STRUCTURE,
-    "comment_ddash": _IMPLIED_STRUCTURE,
-    "pi_php": _IMPLIED_STRUCTURE,
-    "void_br_close_ignored": _IMPLIED_STRUCTURE,
-    "script_rawtext": _IMPLIED_STRUCTURE,
-    "script_unclosed": _IMPLIED_STRUCTURE,
-    "style_rawtext": _IMPLIED_STRUCTURE,
-    "bogus_decl": _DOCUMENT_START,
-    "cdata_block": _DOCUMENT_START,
-    "comment_spacey_end": _SWALLOWED.format(what="comment ('--   >' does not end it)", where="'--\\s*>'"),
-    "unclosed_attr_quote": _SWALLOWED.format(what="attribute value", where="'>' (the value runs to it)"),
-}
 
 CASES = [
     ("nested_table_in_td", '<table><tr><td>a<table><tr><td>b</td></tr></table></td></tr></table>',
@@ -116,19 +88,19 @@ CASES = [
     ("comment_normal", '<table><!-- note --><tr><td>x</td></tr></table>',
      "#document[table[#c' note ' tr[td['x']]]]"),
     ("comment_empty", '<!---->Z',
-     "#document[#c'' 'Z']"),
+     "#document[#c'' p['Z']]"),
     ("comment_ddash", '<!-- a -- b -->Z',
-     "#document[#c' a -- b ' 'Z']"),
+     "#document[#c' a -- b ' p['Z']]"),
     ("comment_spacey_end", '<!-- a --   >Z',
-     "#document[#c' a ' 'Z']"),
+     "#document[]"),
     ("bogus_decl", '<!x>Z',
-     "#document['<!x>Z']"),
+     "#document[p['!x>Z']]"),
     ("doctype_dropped", '<!DOCTYPE html><p>x</p>',
      "#document[p['x']]"),
     ("pi_php", '<?php echo 1 ?>Z',
-     "#document[#pi'php echo 1 ?' 'Z']"),
+     "#document[#pi'php echo 1 ?' p['Z']]"),
     ("cdata_block", '<![CDATA[ <table></table> ]]>Z',
-     "#document['<![CDATA[ ' table[] ' ]]>Z']"),
+     "#document[p['![CDATA[ '] table[] ' ]]>Z']"),
     ("entity_named", '<td>a&amp;b&nbsp;c</td>',
      "#document[td['a&b\\xa0c']]"),
     ("entity_numeric", '<td>&#65;&#x42;</td>',
@@ -152,7 +124,7 @@ CASES = [
     ("selfclosed_td", '<table><tr><td/>a</tr></table>',
      "#document[table[tr[td[] 'a']]]"),
     ("void_br_close_ignored", 'a<br></br>b',
-     "#document['a' br[] 'b']"),
+     "#document[p['a' br[] 'b']]"),
     ("tag_case_fold", '<TaBlE><TR><TD>x</TD></TR></TaBlE>',
      "#document[table[tr[td['x']]]]"),
     ("div_in_table_no_foster", '<table><div>d</div><tr><td>x</td></tr></table>',
@@ -160,11 +132,11 @@ CASES = [
     ("orphan_td", '<td>alone</td>',
      "#document[td['alone']]"),
     ("script_rawtext", "<script>var t='<table>';</script>X",
-     '#document[script["var t=\'<table>\';"] \'X\']'),
+     "#document[script[\"var t='<table>';\"] p['X']]"),
     ("script_unclosed", 'X<script>var a=1;',
-     "#document['X' script['var a=1;']]"),
+     "#document[p['X' script['var a=1;']]]"),
     ("style_rawtext", "<style>td::after{content:'</td>'}</style>X",
-     '#document[style["td::after{content:\'</td>\'}"] \'X\']'),
+     "#document[style[\"td::after{content:'</td>'}\"] p['X']]"),
     ("li_closes_li", '<ul><li>1<li>2</ul>',
      "#document[ul[li['1'] li['2']]]"),
     ("option_closes_option", '<select><option>1<option>2</select>',
@@ -176,7 +148,7 @@ CASES = [
     ("lone_lt", '<td>1 < 2</td>',
      "#document[td['1 < 2']]"),
     ("unclosed_attr_quote", '<td class="x>a</td>',
-     "#document[td(class='x')['a']]"),
+     "#document[td(class='x>a</td>')[]]"),
     ("th_then_td", '<table><tr><th>h<td>d</tr></table>',
      "#document[table[tr[th['h'] td['d']]]]"),
     ("colgroup_col", "<table><colgroup><col span='2'><tr><td>x</td></tr></table>",
@@ -252,36 +224,25 @@ CASES = [
 
 @pytest.mark.parametrize("name,html,expected", CASES, ids=[c[0] for c in CASES])
 def test_libxml2_recovery_golden(name, html, expected):
-    root, _ = parse_html_fast(html)
-    assert ser(root) == expected
-    if name not in LIBXML2_DIVERGES:
-        oracle = ser(libxml2.unwrap(libxml2.parse(html)[0]))
-        assert oracle == expected, f"libxml2 {libxml2.VERSION} diverged from golden"
+    root, _ = parse_html(html)
+    assert ser(libxml2.unwrap(root)) == expected
 
 
-def test_libxml2_diverges_entries_still_diverge():
-    """Every LIBXML2_DIVERGES entry names a golden that still differs from
-    libxml2, so a fixed divergence cannot linger in the list."""
-    goldens = {name: (html, expected) for name, html, expected in CASES}
-    for name in LIBXML2_DIVERGES:
-        html, expected = goldens[name]
-        assert ser(libxml2.unwrap(libxml2.parse(html)[0])) != expected, name
-
-
-# --- ROADMAP Fix first: the tolerant tree has no implied html/body ---------
-# libxml2 wraps every document in html[body[...]]; the fast tokenizer skips
-# the wrappers. These repros fail until it creates them; each expected
-# result is libxml2's own, through the same extraction.
+# --- libxml2 implies html/head/body, so absolute and body-anchored paths
+# select the table, and the table's parent is body
 
 _INTRO_TABLE = "<p>intro</p><table><tr><td>x</td></tr></table>"
 IMPLIED_HTML_BODY = [
-    # absolute and body-anchored paths select the table
-    ("absolute_path", _INTRO_TABLE, ParserConfig().table_xpath_position("/html/body/table")),
-    ("body_child_path", _INTRO_TABLE, ParserConfig().table_xpath_position("//body/table[1]")),
+    ("absolute_path", _INTRO_TABLE, ParserConfig().table_xpath_position("/html/body/table"),
+     [("ok", None, None, [["x"]])]),
+    ("body_child_path", _INTRO_TABLE, ParserConfig().table_xpath_position("//body/table[1]"),
+     [("ok", None, None, [["x"]])]),
     # the table's parent is body: not-a-table, not not-found
-    ("parent_is_body", _INTRO_TABLE, ParserConfig().table_xpath_position("//table/..")),
+    ("parent_is_body", _INTRO_TABLE, ParserConfig().table_xpath_position("//table/.."),
+     [("error", msg_not_a_table("body"), None, [])]),
     # </body> closes the open table, so the caption after it is outside
-    ("end_body_closes_table", "<table></body><caption>x", ParserConfig().all_tables()),
+    ("end_body_closes_table", "<table></body><caption>x", ParserConfig().all_tables(),
+     [("ok", None, None, [])]),
 ]
 
 
@@ -290,87 +251,36 @@ def _summary(tables):
 
 
 def test_implied_html_body_reference_results():
-    """libxml2's results for the strict xfails below."""
-    expected = {
-        "absolute_path": [("ok", None, None, [["x"]])],
-        "body_child_path": [("ok", None, None, [["x"]])],
-        "parent_is_body": [("error", msg_not_a_table("body"), None, [])],
-        "end_body_closes_table": [("ok", None, None, [])],
-    }
-    for name, html, config in IMPLIED_HTML_BODY:
-        assert _summary(libxml2.extract(html, config)) == expected[name], name
+    """The tree the selections below run on: libxml2's implied wrappers."""
+    root, _ = parse_html(_INTRO_TABLE)
+    assert ser(root) == "#document[html[body[p['intro'] table[tr[td['x']]]]]]"
+    root, _ = parse_html("<table></body><caption>x")
+    assert ser(root) == "#document[html[body[table[]] caption['x']]]"
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="ROADMAP Fix first: absolute XPath table selection fails, the "
-    "tolerant tree has no implied html/body",
-)
 @pytest.mark.parametrize(
-    "html,config", [c[1:] for c in IMPLIED_HTML_BODY], ids=[c[0] for c in IMPLIED_HTML_BODY]
+    "html,config,expected", [c[1:] for c in IMPLIED_HTML_BODY], ids=[c[0] for c in IMPLIED_HTML_BODY]
 )
-def test_implied_html_body_matches_libxml2(html, config):
-    assert parse_document(html, config) == libxml2.extract(html, config)
-
-
-def _has_unterminated_attr_quote(html: str) -> bool:
-    """Detector for the ONE documented tokenizer divergence (round-3
-    VERDICT item 8): a start tag whose attrs region ends while a
-    left-to-right libxml2-style quote scan is still inside an open quote.
-    Over-approximate on purpose (finditer ignores rawtext regions), so a
-    clean corpus is PROVABLY clean."""
-    from html_table_spark.htmldom import _TAG_RE
-
-    for m in _TAG_RE.finditer(html):
-        attrs = m.group("attrs")
-        if not attrs or ('"' not in attrs and "'" not in attrs):
-            continue
-        i, n = 0, len(attrs)
-        while i < n:
-            c = attrs[i]
-            if c in ('"', "'"):
-                close = attrs.find(c, i + 1)
-                if close == -1:
-                    return True  # quote opens inside the tag, never closes
-                i = close + 1
-            else:
-                i += 1
-    return False
-
-
-def test_unterminated_quote_divergence_unreachable_on_corpus():
-    """The unclosed-attr-quote divergence (LIBXML2_DIVERGES above) cannot
-    fire on anything the rounds measure: every synthetic corpus document —
-    including the mega-doc skew fixtures and the junk fraction — and every
-    PHPUnit-derived fixture is free of unterminated attribute quotes.
-    Detector sanity-checked against the divergent golden itself."""
-    from html_table_spark.corpus import synthesize_documents
-    from html_table_spark.fixtures import FIXTURES
-    from html_table_spark.spans import doc_spans_to_html
-
-    assert _has_unterminated_attr_quote('<td class="x>a</td>')
-    assert not _has_unterminated_attr_quote('<td class="x">a</td>')
-    assert not _has_unterminated_attr_quote("<td a=\"q'q\" b='d\"d'>x</td>")
-
-    for name, (fixture_html, _cfg) in FIXTURES.items():
-        assert not _has_unterminated_attr_quote(fixture_html), name
-    rows = synthesize_documents(
-        2000, seed=42, junk_fraction=0.5, mega_docs=2, mega_tables=300
-    )
-    for r in rows:
-        html = doc_spans_to_html(r["spans"])
-        assert not _has_unterminated_attr_quote(html), r["doc_id"]
+def test_implied_html_body_matches_libxml2(html, config, expected):
+    assert _summary(parse_document(html, config)) == expected
 
 
 # (html, whether libxml2 reports an error): payloads cut off inside open
-# elements, as crawl records truncated at a size cap are, and a stray end
-# tag, which both parsers report
+# elements, as crawl records truncated at a size cap are, extract; the
+# error classes libxml2 reports fail the document, as in the reference
 FAIL_ON_ERRORS_VERDICTS = [
     ("<table><tr><td>a", False),
     ("<div><p>x<table><tr><td>y", False),
     ("<table><tr><td>a</td></tr><tr><td>b", False),
     ("<table><tr><td>a</td></tr></table><script>var x", False),
     ("<p>a</b><table><tr><td>x</td></tr></table>", True),
+    ("<table><tr><td>Fish & Chips</td></tr></table>", True),
+    ("<table><tr><td>AT&T</td></tr></table>", True),
+    ("<table><tr><td>&amp x</td></tr></table>", True),
+    ("<table><tr><td>&#65</td></tr></table>", True),
+    ("<p>x</p><body><table><tr><td>a</td></tr></table>", True),
+    ("<table><tr><td>a</br></td></tr></table>", True),
+    ("<table><tr><td>a</td><td colspan=2", True),
 ]
 
 
@@ -378,8 +288,64 @@ FAIL_ON_ERRORS_VERDICTS = [
 def test_fail_on_errors_verdict_matches_libxml2(html, libxml2_errs):
     """``fail_on_errors()`` fails a document exactly when libxml2's
     structured error stream, which the reference reads
-    (Parser.php:450-453), is non-empty: a truncated payload extracts."""
-    assert bool(libxml2.errors(html)) is libxml2_errs
+    (Parser.php:450-453), is non-empty, and reports its messages: a
+    truncated payload extracts, "Fish & Chips" does not."""
+    _, errors = parse_html(html)
+    assert bool(errors) is libxml2_errs
     for config in (ParserConfig().fail_on_errors(), ParserConfig().all_tables().fail_on_errors()):
-        statuses = {t.status for t in parse_document(html, config)}
-        assert statuses == ({"error"} if libxml2_errs else {"ok"}), (html, config)
+        results = parse_document(html, config)
+        if libxml2_errs:
+            assert [(t.status, t.error_msg) for t in results] == [
+                ("error", "\n".join(f"parse error: {e}" for e in errors))
+            ], (html, config)
+        else:
+            assert {t.status for t in results} == {"ok"}, (html, config)
+
+
+def test_binding_needs_libxml2_2_9(monkeypatch):
+    """The binding reads 2.9's struct layouts and its HTML tokenizer is the
+    reference's: importing it fails loudly, naming the path and version
+    found, when there is no libxml2 or it is not 2.9.x."""
+    assert binding.VERSION.startswith("209")
+    path = ctypes.util.find_library("xml2")
+    monkeypatch.setattr(binding, "_version", lambda lib: "21400")
+    with pytest.raises(ImportError, match=f"{path} is libxml2 21400; the binding needs 2.9.x"):
+        binding.load(path)
+    with pytest.raises(ImportError, match="libxml2 not found"):
+        binding.load(None)
+
+
+def test_query_gives_pointers_for_elements_only():
+    """A node set's non-element entries come back as None, their kind read
+    while the node set lives: the namespace entries are copies libxml2 frees
+    with it, so a pointer to one would dangle."""
+    html = "<div id=d><!--c--><?php x ?><table><tr><td>x</td></tr></table></div>"
+    with binding.document(html) as doc:
+        for expr in ("//table/namespace::*", "//div/@id", "//td/text()", "//comment()",
+                     "//processing-instruction()", "/"):
+            selected = binding.query(doc, expr)
+            assert selected and selected == [None] * len(selected), expr
+        (table,) = binding.query(doc, "//table")
+        assert binding.element_name(table) == "table"
+
+
+def test_validate_is_silent_on_every_thread(capfd):
+    """libxml2's generic error handler is per thread: a bad expression
+    validated on a thread started after import prints nothing either."""
+    import threading
+
+    from html_table_spark.errors import ParserError
+
+    raised = []
+
+    def check():
+        try:
+            binding.validate("//[")
+        except ParserError:
+            raised.append(True)
+
+    thread = threading.Thread(target=check)
+    thread.start()
+    thread.join()
+    assert raised == [True]
+    assert capfd.readouterr().err == ""

@@ -101,9 +101,13 @@ def test_malformed_html_tolerated():
 
 
 def test_deep_nesting_no_recursion_error():
-    html = "<div>" * 3000 + "deep" + "</div>" * 3000
-    bs = blocks_of(html)
-    assert [b.text for b in bs] == ["deep"]
+    """libxml2, parsing as the reference does (no HTML_PARSE_HUGE), stops
+    256 elements deep and drops the rest of the document; what it built
+    still segments, with no RecursionError."""
+    html = "<p>top</p>" + "<div>" * 3000 + "deep" + "</div>" * 3000 + "<p>after</p>"
+    assert [b.text for b in blocks_of(html)] == ["top"]
+    shallow = "<div>" * 200 + "deep" + "</div>" * 200
+    assert [b.text for b in blocks_of(shallow)] == ["deep"]
 
 
 # ---------------------------------------------------------------------------

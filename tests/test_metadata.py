@@ -32,8 +32,7 @@ def test_full_head_first_wins():
     assert m["canonical"] == "http://x/canon"
     assert m["base_href"] == "http://x/"
     assert m["charset"] == "utf-8"
-    # the raw <html lang> wins over nested lang attrs even though the
-    # tolerant tree unwraps the html container
+    # the html element's lang wins over nested lang attrs
     assert m["lang"] == "en-US"
 
 

@@ -1,5 +1,6 @@
-"""Property-based tests (hypothesis): the tokenizer agrees with libxml2 on
-arbitrary table soup, and the grid resolver maintains its structural
+"""Property-based tests (hypothesis): the extraction over libxml2's
+selected subtrees agrees with the extraction over its whole tree on
+arbitrary tables, and the grid resolver maintains its structural
 invariants."""
 
 from __future__ import annotations
@@ -8,10 +9,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from html_table_spark.config import ParserConfig
-from html_table_spark.htmldom import parse_html_fast
 from html_table_spark.semantics import parse_document
-from tests import libxml2_oracle as libxml2
-from tests.test_htmldom import tree_repr
+from tests.test_htmldom import assert_same_extraction
 
 _cell_text = st.text(
     alphabet=st.characters(whitelist_categories=("L", "N"), max_codepoint=0x2FF),
@@ -61,8 +60,8 @@ def table_html(draw) -> str:
 @given(table_html())
 @settings(max_examples=150, deadline=None)
 def test_tokenizers_agree(html: str):
-    fast, _ = parse_html_fast(html)
-    assert tree_repr(fast) == tree_repr(libxml2.unwrap(libxml2.parse(html)[0]))
+    assert_same_extraction(html, ParserConfig())
+    assert_same_extraction(html, ParserConfig().all_tables())
 
 
 @given(table_html())

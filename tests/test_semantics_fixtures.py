@@ -7,10 +7,13 @@ specification, independent of the kernel's implementation.
 
 from __future__ import annotations
 
+import ctypes
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from html_table_spark import libxml2
 from html_table_spark.config import ALL_SECTIONS, TBODY, TFOOT, THEAD, TR, ParserConfig
 from html_table_spark.errors import ParserError
 from html_table_spark.fixtures import (
@@ -36,14 +39,12 @@ from html_table_spark.fixtures import (
     FILE_HTML,
     f14_mega_doc_html,
 )
-from html_table_spark.htmldom import ELEMENT, Node, parse_html
 from html_table_spark.semantics import (
+    TOP_LEVEL_TABLES,
     _header_row_and_caption,
-    _top_level_tables,
     parse_document,
 )
 from html_table_spark.spans import encode_table_spans
-from html_table_spark.xpath import compile_xpath
 from tests.test_htmldom import _token
 
 HEADER = ["prenoms", "nombre", "sexe", "annee"]
@@ -461,23 +462,39 @@ def _tables(inner):
 _table_soup = st.recursive(st.just(""), _tables, max_leaves=8)
 
 
+def _address(node_p) -> int:
+    return ctypes.cast(node_p, ctypes.c_void_p).value
+
+
 @settings(max_examples=300, deadline=None)
 @given(parts=st.lists(st.one_of(_table_soup, _token()), max_size=6))
 def test_header_row_and_caption_walk_equals_xpath(parts):
-    root, _ = parse_html("".join(parts))
-    caption_expr = compile_xpath("(//caption)[1]")
-    for table in _top_level_tables(root):
-        rerooted = Node(ELEMENT, tag="#document")
-        rerooted.children = [table]
-        caption = caption_expr.first(rerooted)
-        assert _header_row_and_caption(table, None, 0)[1] is caption
-        for section in ALL_SECTIONS:
-            parent = "table" if section == TR else f"table/{section}"
-            for offset in range(4):
-                row_expr = compile_xpath(f"(//{parent}/tr)[{offset + 1}]")
-                got = _header_row_and_caption(table, section, offset)
-                assert got[0] is row_expr.first(rerooted)
-                assert got[1] is caption
+    """The walk over each converted table finds the node libxml2's XPath
+    finds over the document: the same ordinal among the table's ``tr`` (or
+    ``caption``) descendants."""
+    with libxml2.document("".join(parts)) as doc:
+        for k, table_p in enumerate(libxml2.query(doc, TOP_LEVEL_TABLES), 1):
+            table = libxml2.to_node(table_p)
+            top = f"({TOP_LEVEL_TABLES})[{k}]"
+
+            def ordinal(expr: str, tag: str):
+                hits = [_address(p) for p in libxml2.query(doc, expr)]
+                nodes = [_address(p) for p in libxml2.query(doc, f"{top}//{tag}")]
+                return nodes.index(hits[0]) if hits else None
+
+            def walk_ordinal(node, tag: str):
+                nodes = [n for n in table.iter_elements() if n.tag == tag]
+                return next((i for i, n in enumerate(nodes) if n is node), None)
+
+            caption = ordinal(f"({top}//caption)[1]", "caption")
+            assert walk_ordinal(_header_row_and_caption(table, None, 0)[1], "caption") == caption
+            for section in ALL_SECTIONS:
+                parent = "table" if section == TR else f"table/{section}"
+                for offset in range(4):
+                    row, cap = _header_row_and_caption(table, section, offset)
+                    expr = f"({top}/descendant-or-self::{parent}/tr)[{offset + 1}]"
+                    assert walk_ordinal(row, "tr") == ordinal(expr, "tr")
+                    assert walk_ordinal(cap, "caption") == caption
 
 
 # --- rowspan carry drops pending entries past the single trailing splice

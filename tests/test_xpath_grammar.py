@@ -1,17 +1,169 @@
-"""DOMXPath-parity grammar tests for the round-2 xpath.py rewrite.
+"""XPath grammar tests through the public selection path.
 
-Pure-Python (no Spark session): parse + evaluate against a fixed tree and
-check node sets, document order, eager validation, and the laziness
-contract the extraction hot path relies on.
+The reference selects its table with DOMXPath, which is libxml2's XPath,
+and so does ``parse_document`` under ``table_xpath_position``. These tests
+run every expression through that path alone (no Spark session): node
+sets, document order, the context node and eager validation are read back
+from what ``parse_document`` reports, with the probes below.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from html_table_spark.errors import ParserError
-from html_table_spark.htmldom import parse_html_fast
-from html_table_spark.xpath import compile_xpath
+from html_table_spark.config import ParserConfig
+from html_table_spark.errors import MSG_TABLE_NOT_FOUND, ParserError, msg_not_a_table
+from html_table_spark.htmldom import COMMENT, PI, parse_html
+from html_table_spark.semantics import parse_document
+
+
+def select(html: str, expr: str) -> str:
+    """What ``parse_document`` reports for ``expr``: the selected table's
+    caption (``table:<caption>``) or the error message."""
+    [table] = parse_document(html, ParserConfig().table_xpath_position(expr))
+    return table.error_msg if table.status == "error" else f"table:{table.caption}"
+
+
+def holds(html: str, test: str) -> bool:
+    """An XPath test evaluated in ``html`` through the public path:
+    ``/html[test]`` selects the root element, not a table, iff it holds. The
+    root element is also the top-level context node, so a relative path
+    means the same inside the predicate."""
+    result = select(html, f"/html[{test}]")
+    assert result in (MSG_TABLE_NOT_FOUND, msg_not_a_table("html")), result
+    return result != MSG_TABLE_NOT_FOUND
+
+
+# Expressions libxml2 accepts in the reference's empty-document check, and
+# which select nothing where they evaluate. Most fail only in a part that
+# never runs on an empty document: libxml2 checks a function's arguments
+# when it calls the function, and a predicate over no nodes calls nothing.
+# The Python engine rejected them all at compile time.
+LIBXML2_ACCEPTS = {
+    "///x",
+    "(count(//td))[1]",
+    "(true())[1]",
+    "//table[substring()]",
+    "//table[substring(1)]",
+    "//table[concat(1)]",
+    "//table[count(2)]",
+    "//table[count()]",
+    "//table[translate(1, 2)]",
+    '//table[name("s")]',
+    "//table[true(1)]",
+    "//p[count('x')]",
+    "//tr[sum(1)]",
+    "//tr[sum()]",
+    "//p[a | 1]",
+    '//p[a | "s"]',
+    '//div[name("str")]',
+}
+
+
+def assert_invalid(expr: str) -> None:
+    """``expr`` fails the eager check, or fails to select anything where it
+    evaluates (LIBXML2_ACCEPTS)."""
+    if expr in LIBXML2_ACCEPTS:
+        ParserConfig().table_xpath_position(expr)
+        assert select(FN_HTML + ID_HTML, expr) == MSG_TABLE_NOT_FOUND
+    else:
+        with pytest.raises(ParserError):
+            ParserConfig().table_xpath_position(expr)
+
+
+def count(html: str, expr: str) -> int:
+    for n in range(200):
+        if holds(html, f"count({expr}) = {n}"):
+            return n
+    raise AssertionError(f"count({expr}) is not a node-set size")
+
+
+def _literal(value: str) -> str | None:
+    if '"' not in value:
+        return f'"{value}"'
+    return f"'{value}'" if "'" not in value else None
+
+
+class Sel:
+    """One node of a node set, read back through :func:`holds`: its kind,
+    name, string value and ``id``/``class`` attributes, each matched
+    against the strings the document holds."""
+
+    __slots__ = ("kind", "name", "value", "attrs")
+
+    def __init__(self, kind, name, value, attrs):
+        self.kind, self.name, self.value, self.attrs = kind, name, value, attrs
+
+    @property
+    def tag(self) -> str:
+        return self.name if self.kind == "element" else ""
+
+    @property
+    def data(self) -> str:
+        # htmldom.Node's PI data is ``target + " " + content``
+        return f"{self.name} {self.value}" if self.kind == "pi" else self.value
+
+    def text_content(self) -> str:
+        return self.value
+
+
+_KINDS = [
+    ("element", "self::*"),
+    ("text", "self::text()"),
+    ("comment", "self::comment()"),
+    ("pi", "self::processing-instruction()"),
+    ("document", "not(..)"),
+    ("attribute", "count(../@* | .) = count(../@*)"),
+    ("namespace", "true()"),
+]
+
+
+def _vocabulary(html: str) -> tuple[list[str], list[str]]:
+    """Every name and every string value a node of ``html`` can have."""
+    names, values = {"", "xml"}, {"", "http://www.w3.org/XML/1998/namespace"}
+    root, _ = parse_html(html)
+    values.add(root.text_content())
+    for node in root.iter_elements():
+        names.add(node.tag)
+        values.add(node.text_content())
+        names.update(node.attrs)
+        values.update(node.attrs.values())
+        for child in node.children:
+            if type(child) is str:
+                values.add(child)
+            elif child.kind == COMMENT:
+                values.add(child.data)
+            elif child.kind == PI:
+                target, _, content = child.data.partition(" ")
+                names.add(target)
+                values.add(content)
+    return sorted(names), sorted(values)
+
+
+def _match(html: str, probe: str, candidates: list[str]) -> str:
+    """The candidate ``probe`` (an XPath string expression) equals."""
+    for candidate in candidates:
+        literal = _literal(candidate)
+        if literal is not None and holds(html, f"{probe} = {literal}"):
+            return candidate
+    raise AssertionError(f"{probe} matches nothing in the document")
+
+
+def q(html: str, expr: str) -> list[Sel]:
+    """The node set ``expr`` selects in ``html``, in document order."""
+    names, values = _vocabulary(html)
+    out = []
+    for k in range(1, count(html, expr) + 1):
+        node = f"({expr})[{k}]"
+        kind = next(kind for kind, test in _KINDS if holds(html, f"{node}[{test}]"))
+        attrs = {
+            attr: _match(html, f"string({node}/@{attr})", values)
+            for attr in ("id", "class")
+            if kind == "element" and holds(html, f"{node}/@{attr}")
+        }
+        out.append(Sel(kind, _match(html, f"name({node})", names), _match(html, f"string({node})", values), attrs))
+    return out
+
 
 HTML = """
 <div id="top">
@@ -24,11 +176,7 @@ HTML = """
 
 @pytest.fixture(scope="module")
 def root():
-    return parse_html_fast(HTML)[0]
-
-
-def q(root, expr):
-    return compile_xpath(expr).query(root)
+    return HTML
 
 
 def ids(root, expr):
@@ -68,16 +216,20 @@ def ids(root, expr):
     ],
 )
 def test_node_counts(root, expr, count):
-    assert len(q(root, expr)) == count, expr
+    assert len(q(root, expr)) == LIBXML2_COUNTS.get(expr, count), expr
+
+
+# libxml2's tree has html/body wrappers, and the reference's context node is
+# the root element, html: no div is a child of the document or of html. The
+# Python engine's wrapper-less tree, walked from the document, counted 2 and 1.
+LIBXML2_COUNTS = {"/div/table": 0, "div/div/table": 0}
 
 
 def test_string_value_multi_child_document_order():
     """string() of a node with multiple text-bearing children must come back
     in document order (round-3 ADVICE: the old traversal returned 'ba' for
     <tr><td>a</td><td>b</td></tr> and 'xac' for <p>a<b>x</b>c</p>)."""
-    doc = parse_html_fast(
-        "<table><tr><td>a</td><td>b</td></tr></table><p>a<b>x</b>c</p>"
-    )[0]
+    doc = "<table><tr><td>a</td><td>b</td></tr></table><p>a<b>x</b>c</p>"
     assert [n.tag for n in q(doc, '//tr[.="ab"]')] == ["tr"]
     assert q(doc, '//tr[.="ba"]') == []
     assert [n.tag for n in q(doc, '//p[contains(.,"ax")]')] == ["p"]
@@ -98,9 +250,11 @@ def test_outer_wrapper_is_global_document_order(root):
 
 
 def test_first_is_lazy_prefix_of_query(root):
-    expr = compile_xpath("//td")
-    assert expr.first(root) is expr.query(root)[0]
-    assert compile_xpath("//video").first(root) is None
+    """The selection takes the node set's first node, as the reference's
+    ``->item(0)`` does."""
+    assert select(root, "//table") == select(root, "(//table)[1]") == "table:A"
+    assert select(root, "//td") == msg_not_a_table("td")
+    assert select(root, "//video") == MSG_TABLE_NOT_FOUND
 
 
 @pytest.mark.parametrize(
@@ -117,8 +271,7 @@ def test_first_is_lazy_prefix_of_query(root):
     ],
 )
 def test_eager_validation_rejects(bad):
-    with pytest.raises(ParserError):
-        compile_xpath(bad)
+    assert_invalid(bad)
 
 
 @pytest.mark.parametrize(
@@ -130,7 +283,7 @@ def test_scalar_expression_selects_nothing(root, expr):
     DOMXPath::query coerces a non-nodeset result to an EMPTY DOMNodeList
     without warning (ext/dom/xpath.c) — so selection proceeds and fails
     with table-not-found, never ParserError."""
-    assert compile_xpath(expr).query(root) == []
+    assert select(root, expr) == MSG_TABLE_NOT_FOUND
 
 
 @pytest.mark.parametrize(
@@ -150,8 +303,7 @@ def test_top_level_context_position_rejected(expr):
     the reference's eager validation (Parser.php:73-80) raises — so the
     scalar fallback must reject these instead of compiling to an empty
     selection (round-4 ADVICE)."""
-    with pytest.raises(ParserError):
-        compile_xpath(expr)
+    assert_invalid(expr)
 
 
 @pytest.mark.parametrize(
@@ -205,14 +357,13 @@ def test_new_axes(root, expr, expect):
 
 def test_attribute_and_text_result_steps(root):
     """Attribute location steps and text() node tests as result steps
-    (round-3): results are XPathAttr/XPathText wrappers in document order,
-    deduplicated by node position."""
-    from html_table_spark.xpath import XPathAttr, XPathText
+    (round-3): attribute and text nodes in document order, deduplicated by
+    node position."""
 
     attrs = q(root, "//table/@id")
     assert [a.value for a in attrs] == ["a", "c"]
-    assert all(isinstance(a, XPathAttr) for a in attrs)
-    assert q(root, "//table/@id")[0].owner.tag == "table"
+    assert all(a.kind == "attribute" for a in attrs)
+    assert q(root, "//table/@id/..")[0].tag == "table"
     # @* yields every attribute of the element
     star = q(root, '//table[@id="a"]/@*')
     assert sorted(a.name for a in star) == ["class", "id"]
@@ -221,7 +372,7 @@ def test_attribute_and_text_result_steps(root):
     # text(): one result per text run, positional predicates allowed
     texts = q(root, "//td/text()")
     assert [t.value for t in texts] == ["1", "2", "3", "4"]
-    assert all(isinstance(t, XPathText) for t in texts)
+    assert all(t.kind == "text" for t in texts)
     assert [t.value for t in q(root, "(//td/text())[2]")] == ["2"]
     # descendant text under one table
     assert [t.value for t in q(root, '//table[@class="plain"]//text()')] == ["H", "2"]
@@ -253,13 +404,12 @@ def test_reference_generated_shapes_still_work(root):
 def test_nested_same_tag_document_order():
     """//table/tr with a table nested inside the outer table: DOMXPath
     yields strict document order (inner rows surface at their position);
-    the walk emits per context, so the path takes the document-order sort
-    (``_path_needs_order_fix``: a non-final descendant step)."""
+    inner rows come first."""
     html = (
         '<table id="outer"><table id="inner"><tr id="A"><td>a</td></tr>'
         "</table><tr id=\"B\"><td>b</td></tr></table>"
     )
-    r, _ = parse_html_fast(html)
+    r = html
     got = [(n.attrs or {}).get("id") for n in q(r, "//table/tr")]
     assert got == ["A", "B"]
     assert (q(r, "(//table/tr)[1]")[0].attrs or {}).get("id") == "A"
@@ -270,7 +420,7 @@ def test_number_valued_predicate_is_positional():
     position — [last()] keeps the last node per context, and a bare
     numeric function result compares against position()."""
     html = '<div><table id="a"></table><table id="b"></table><table id="c"></table></div>'
-    r, _ = parse_html_fast(html)
+    r = html
     assert [(n.attrs or {}).get("id") for n in q(r, "//table[last()]")] == ["c"]
     # string-length(@id)=1 for all → position()=1 keeps only the first
     assert [(n.attrs or {}).get("id") for n in q(r, "//table[string-length(@id)]")] == ["a"]
@@ -281,15 +431,14 @@ def test_number_literal_dot_forms():
     both the leading-dot ('.5') and trailing-dot ('2.') spellings are
     numbers, not a self-node abbreviation followed by digits."""
     html = '<div><table id="a"></table><table id="b"></table><table id="c"></table></div>'
-    r, _ = parse_html_fast(html)
+    r = html
     assert [(n.attrs or {}).get("id") for n in q(r, "(//table)[2.]")] == ["b"]
     assert [(n.attrs or {}).get("id") for n in q(r, "(//table)[.5 + .5]")] == ["a"]
     assert [(n.attrs or {}).get("id")
             for n in q(r, "//table[position() - .5 > 1]")] == ["b", "c"]
     # '.' not followed by a digit still tokenizes as the self abbreviation
     assert len(q(r, "//table[. = '']")) == 3
-    with pytest.raises(ParserError):
-        compile_xpath("//table[1..2]")  # adjacent numbers, not a range
+    assert_invalid("//table[1..2]")  # adjacent numbers, not a range
 
 
 # ---------------------------------------------------------------------------
@@ -306,7 +455,7 @@ FN_HTML = """<div>
 
 @pytest.fixture(scope="module")
 def fn_root():
-    return parse_html_fast(FN_HTML)[0]
+    return FN_HTML
 
 
 def _fids(root, expr):
@@ -374,8 +523,7 @@ def test_function_library(fn_root, expr, expect):
     ],
 )
 def test_function_library_eager_rejects(bad):
-    with pytest.raises(ParserError):
-        compile_xpath(bad)
+    assert_invalid(bad)
 
 
 def test_div_is_still_an_element_name(fn_root):
@@ -384,7 +532,7 @@ def test_div_is_still_an_element_name(fn_root):
     assert _fids(fn_root, "//div") == ["div"]
     assert _fids(fn_root, "//div[div div div = 1]") == []  # no <div> children
     html = '<section><div>2</div><div>2</div><table id="x"></table></section>'
-    r, _ = parse_html_fast(html)
+    r = html
     # div div div = 2/2 = 1 -> positional 1? No: numeric predicate selects
     # position 1 of section candidates; value is 1 -> keeps position 1
     assert _fids(r, "//section[div div div = 1]") == ["section"]
@@ -405,7 +553,7 @@ ID_HTML = """<div>
 
 @pytest.fixture(scope="module")
 def id_root():
-    return parse_html_fast(ID_HTML)[0]
+    return ID_HTML
 
 
 def test_id_path_start(id_root):
@@ -434,14 +582,13 @@ def test_id_in_predicates(id_root):
 
 def test_id_still_an_element_name(id_root):
     html = "<div><id>q</id><table id='z'></table></div>"
-    r, _ = parse_html_fast(html)
+    r = html
     assert [n.tag for n in q(r, "//id")] == ["id"]
 
 
 @pytest.mark.parametrize("bad", ["id()", "//table/id('x')", "id('x'"])
 def test_id_eager_rejects(bad):
-    with pytest.raises(ParserError):
-        compile_xpath(bad)
+    assert_invalid(bad)
 
 
 # -- round-3 review regressions ---------------------------------------------
@@ -449,13 +596,12 @@ def test_id_eager_rejects(bad):
 
 def test_value_conversion_uses_document_first_node():
     """string()/substring()/number() of a node-set read the DOCUMENT-first
-    node, not the first node the lazy walk emits — with a tr nested inside
-    a caption, .//table/tr's walk order differs from document order."""
+    node — with a tr nested inside a caption, the inner row comes first."""
     html = (
         "<div><table><caption><table><tr><td>I</td></tr></table></caption>"
         "<tr><td>O</td></tr></table></div>"
     )
-    r, _ = parse_html_fast(html)
+    r = html
     assert len(q(r, '//div[string(.//table/tr)="I"]')) == 1
     assert len(q(r, '//div[substring(.//table/tr,1,1)="I"]')) == 1
     assert len(q(r, '//div[string(.//table/tr)="O"]')) == 0
@@ -465,7 +611,7 @@ def test_id_arg_sees_outer_position():
     """id()'s argument runs in the enclosing predicate's context, so
     position() inside it must resolve (and not leak an internal error)."""
     html = '<div><p id="1">a</p><p id="2">b</p><p id="9">c</p></div>'
-    r, _ = parse_html_fast(html)
+    r = html
     # p #1 at position 1 -> id('1') exists; p #2 at position 2 -> id('2')
     # exists; p #9 at position 3 -> id('3') missing
     assert [n.attrs["id"] for n in q(r, "//p[id(string(position()))]")] == [
@@ -477,21 +623,20 @@ def test_id_arg_sees_outer_position():
 def test_top_level_position_is_singleton_context():
     # initial context is the document node: position() = last() = 1
     html = "<div><p>a</p></div>"
-    r, _ = parse_html_fast(html)
+    r = html
     assert len(q(r, "//p[1 = position() - 0]") or q(r, "//p")) == 1
-    assert len(compile_xpath("id(string(position()))").query(r)) == 0  # no id '1'
+    assert count(r, "id(string(position()))") == 0  # no id '1'
 
 
 def test_count_accepts_bare_node_set_ops():
     html = '<div><p id="x">t</p><p>u</p></div>'
-    r, _ = parse_html_fast(html)
+    r = html
     assert len(q(r, "//p[count(@id) = 1]")) == 1  # same as count(./@id)
     assert len(q(r, "//p[count(./@id) = 1]")) == 1
     assert len(q(r, "//p[count(text()) = 1]")) == 2
     assert len(q(r, "//p[count(.) = 1]")) == 2
     assert len(q(r, "//div[count(p) = 2]")) == 1
-    with pytest.raises(ParserError):
-        compile_xpath("//p[count('x')]")  # string literal is not a node-set
+    assert_invalid("//p[count('x')]")  # string literal is not a node-set
 
 
 @pytest.mark.parametrize(
@@ -508,8 +653,11 @@ def test_count_accepts_bare_node_set_ops():
     ],
 )
 def test_number_uses_xpath_grammar_not_python_float(lit, expect_match):
+    # libxml2's number() reads an exponent, which XPath 1.0 does not have
+    if lit == "'1e3'":
+        expect_match = True
     html = "<p>x</p>"
-    r, _ = parse_html_fast(html)
+    r = html
     # number(lit) != number(lit) is the NaN probe; for parseable literals
     # equality with itself holds
     match = len(q(r, f"//p[number({lit}) = number({lit})]")) == 1
@@ -521,7 +669,7 @@ def test_sum_function():
         '<table><tr><td p="2">1</td><td p="3">2</td><td>x</td></tr>'
         "<tr><td>4</td></tr></table>"
     )
-    r, _ = parse_html_fast(html)
+    r = html
     # sum over a path of element string values: 1+2+4 poisoned by 'x' → NaN
     assert len(q(r, "//table[sum(.//td) = sum(.//td)]")) == 0  # NaN != NaN
     # numeric-only rows sum cleanly
@@ -531,10 +679,8 @@ def test_sum_function():
     assert len(q(r, "//tr[sum(td/@p) = 5]")) == 1
     # empty node-set sums to 0
     assert len(q(r, "//tr[sum(th) = 0]")) == 2
-    with pytest.raises(ParserError):
-        compile_xpath("//tr[sum(1)]")  # number literal is not a node-set
-    with pytest.raises(ParserError):
-        compile_xpath("//tr[sum()]")
+    assert_invalid("//tr[sum(1)]")  # number literal is not a node-set
+    assert_invalid("//tr[sum()]")
 
 
 def test_union_in_predicate():
@@ -542,26 +688,24 @@ def test_union_in_predicate():
         '<div><section><a>1</a></section><section><b>2</b></section>'
         '<section><c>3</c></section></div>'
     )
-    r, _ = parse_html_fast(html)
+    r = html
     # truth: sections having an <a> OR a <b> child
     assert len(q(r, "//section[a | b]")) == 2
     assert len(q(r, "//section[a | b | c]")) == 3
     # document-first across branches: first node of (b | a) is still <a>
-    r2, _ = parse_html_fast("<div><a>x</a><b>y</b></div>")
+    r2 = "<div><a>x</a><b>y</b></div>"
     assert len(q(r2, '//div[string(b | a) = "x"]')) == 1
     # count/sum over a union
     assert len(q(r, "//div[count(.//a | .//b) = 2]")) == 1
-    r3, _ = parse_html_fast("<div><a>1</a><b>2</b></div>")
+    r3 = "<div><a>1</a><b>2</b></div>"
     assert len(q(r3, "//div[sum(a | b) = 3]")) == 1
     # union with @attr operand
-    r4, _ = parse_html_fast('<p id="i" class="c">t</p>')
+    r4 = '<p id="i" class="c">t</p>'
     assert len(q(r4, "//p[count(@id | @class) = 2]")) == 1
     # dedup: same node reached twice counts once
     assert len(q(r3, "//div[count(a | a) = 1]")) == 1
-    with pytest.raises(ParserError):
-        compile_xpath("//p[a | 1]")  # number is not a node-set
-    with pytest.raises(ParserError):
-        compile_xpath('//p[a | "s"]')
+    assert_invalid("//p[a | 1]")  # number is not a node-set
+    assert_invalid('//p[a | "s"]')
 
 
 def test_lang_function():
@@ -569,20 +713,24 @@ def test_lang_function():
         '<div xml:lang="en-US"><p>a</p>'
         '<span xml:lang="fr">b</span></div><i>c</i>'
     )
-    r, _ = parse_html_fast(html)
-    assert len(q(r, '//p[lang("en")]')) == 1  # sublanguage prefix match
-    assert len(q(r, '//p[lang("en-us")]')) == 1  # case-insensitive
+    r = html
+    # libxml2's HTML parser binds no namespace: the attribute is named
+    # "xml:lang", and lang() (xmlNodeGetLang) looks for lang in the XML
+    # namespace, so nothing matches (the Python engine matched p and span)
+    assert [a.name for a in q(r, "//@*")] == ["xml:lang", "xml:lang"]
+    assert len(q(r, '//p[lang("en")]')) == 0
+    assert len(q(r, '//p[lang("en-us")]')) == 0
     assert len(q(r, '//p[lang("fr")]')) == 0
-    assert len(q(r, '//span[lang("fr")]')) == 1  # nearest wins
-    assert len(q(r, '//i[lang("en")]')) == 0  # no xml:lang anywhere above
+    assert len(q(r, '//span[lang("fr")]')) == 0
+    assert len(q(r, '//i[lang("en")]')) == 0
     # plain HTML lang attribute does NOT count (xmlNodeGetLang parity)
-    r2, _ = parse_html_fast('<p lang="en">x</p>')
+    r2 = '<p lang="en">x</p>'
     assert len(q(r2, '//p[lang("en")]')) == 0
 
 
 def test_namespace_uri_is_empty_on_html():
     html = "<p>x</p>"
-    r, _ = parse_html_fast(html)
+    r = html
     assert len(q(r, '//p[namespace-uri() = ""]')) == 1
     assert len(q(r, '//p[namespace-uri() = "urn:x"]')) == 0
 
@@ -592,7 +740,7 @@ def test_comment_node_test():
         "<div><!--first--><p>a<!--inner--></p>"
         "<table><!--t--><tr><td>x</td></tr></table><!--last--></div>"
     )
-    r, _ = parse_html_fast(html)
+    r = html
     # result steps: child and descendant, doc order, positional preds
     assert [n.data for n in q(r, "//comment()")] == [
         "first", "inner", "t", "last",
@@ -621,14 +769,14 @@ def test_comment_node_test():
 
 def test_processing_instruction_node_test():
     """PI nodes are real childNodes on HTML-parsed trees (libxml2 keeps
-    <?...> as a PI; htmldom.py:242 mirrors it), so the node test selects
+    <?...> as a PI), so the node test selects
     them — target filter, string value (content after target), predicate
     node-set and count() forms all per XPath 1.0 §2.3/§4."""
     html = (
         "<div><?php echo 1 ?><p>a<?perl x ?></p>"
         "<table><tr><td>x</td></tr></table><?xml-stylesheet href='s'?></div>"
     )
-    r, _ = parse_html_fast(html)
+    r = html
     pis = q(r, "//processing-instruction()")
     assert [n.data for n in pis] == [
         "php echo 1 ?", "perl x ?", "xml-stylesheet href='s'?",
@@ -659,8 +807,7 @@ def test_processing_instruction_node_test():
         '//processing-instruction("a", "b")',
         "//processing-instruction(2)",
     ):
-        with pytest.raises(ParserError):
-            compile_xpath(bad)
+        assert_invalid(bad)
 
 
 def test_namespace_axis():
@@ -669,7 +816,7 @@ def test_namespace_axis():
     declarations) — so namespace::* selects one node per context element
     and namespace::xml / node() match it while other names do not."""
     html = '<div><table id="a"><tr><td>1</td></tr></table><p>x</p></div>'
-    r, _ = parse_html_fast(html)
+    r = html
     ns = q(r, "//table/namespace::*")
     assert len(ns) == 1
     assert ns[0].name == "xml"
@@ -700,7 +847,7 @@ def test_nonelement_parent_ancestor_climb():
         '<div><table id="a"><tr><td class="x">1<!--c--></td><td>2</td></tr>'
         '</table><table><tr><td href="h">3</td></tr></table><?php z ?></div>'
     )
-    r, _ = parse_html_fast(html)
+    r = html
 
     def tags(expr):
         return [n.tag for n in q(r, expr)]
@@ -726,11 +873,9 @@ def test_nonelement_parent_ancestor_climb():
     assert q(r, "//@id/td") == []                     # ...or children
     assert q(r, "//comment()/descendant::p") == []    # ...comments neither
     # self:: from a text context yields the text node itself
-    from html_table_spark.xpath import XPathText
-
     selfs = q(r, "//text()/self::node()")
     assert [t.value for t in selfs] == ["1", "2", "3"]
-    assert all(isinstance(t, XPathText) for t in selfs)
+    assert all(t.kind == "text" for t in selfs)
     # sibling walk from a text context reaches the comment beside it
     assert [c.data for c in q(r, "//td/text()/following-sibling::comment()")] == [
         "c"
@@ -773,8 +918,8 @@ def test_pi_target_is_name_parsed():
     (libxml2 name-parses the target, then skips whitespace before the
     data begins)."""
     html = "<div><?php?><p>a</p></div>"
-    r, _ = parse_html_fast(html)
-    assert [n.data for n in q(r, "//processing-instruction()")] == ["php?"]
+    r = html
+    assert [(n.name, n.value) for n in q(r, "//processing-instruction()")] == [("php", "?")]
     assert len(q(r, "//processing-instruction('php')")) == 1
     assert len(q(r, "//processing-instruction('php?')")) == 0
     # string value = content after the Name-parsed target (here just the
@@ -783,13 +928,12 @@ def test_pi_target_is_name_parsed():
 
 
 def test_union_merges_all_node_kinds_in_document_order():
-    """Comment/PI nodes carry real document-order ordinals, so a union of
-    mixed node kinds interleaves them with elements instead of dumping
-    non-elements after every element."""
+    """A union of mixed node kinds interleaves comments with elements in
+    document order."""
     html = "<div><!--a--><p>x</p><!--b--><span>y</span></div>"
-    r, _ = parse_html_fast(html)
+    r = html
     got = [
-        (n.tag or "", n.data or "")
+        (n.tag, n.data if n.kind == "comment" else "")
         for n in q(r, "//comment() | //p | //span")
     ]
     assert got == [("", "a"), ("p", ""), ("", "b"), ("span", "")]
@@ -800,7 +944,7 @@ def test_following_axis_skips_nonelement_subtree_entries():
     subtree contains comment/PI nodes — the boundary is the subtree-end
     ordinal, not the context ordinal plus its element count."""
     html = "<div><p><!--in-->x<?pi y?></p><span>y</span></div>"
-    r, _ = parse_html_fast(html)
+    r = html
     assert [n.tag for n in q(r, "//p/following::*")] == ["span"]
 
 
@@ -825,7 +969,7 @@ def test_round_negative_zero_sign():
     """XPath 1.0 §4.4: round(x) for x in [-0.5, -0] is NEGATIVE zero, so
     division by it yields -Infinity. floor(x + 0.5) alone loses the sign
     (it returns +0.0), flipping the comparison below."""
-    r, _ = parse_html_fast("<table><tr><td>1</td></tr></table>")
+    r = "<table><tr><td>1</td></tr></table>"
     assert len(q(r, "//table[1 div round(-0.5) < 0]")) == 1
     assert len(q(r, "//table[1 div round(-0.4) < 0]")) == 1
     assert len(q(r, "//table[1 div round(0.4) > 0]")) == 1
@@ -838,21 +982,18 @@ def test_node_test_enumerates_every_node_kind():
     comments, PIs — exactly as DOMXPath does (this replaces the round-2/3
     element-only narrowing the module docstring used to pin):
     count(//p/following::node()) counts the intervening comment."""
-    from html_table_spark.htmldom import COMMENT
-    from html_table_spark.xpath import XPathText
-
     def kinds(nodes):
         out = []
         for n in nodes:
-            if isinstance(n, XPathText):
+            if n.kind == "text":
                 out.append(("text", n.value))
-            elif n.kind == COMMENT:
+            elif n.kind == "comment":
                 out.append(("comment", n.data))
             else:
                 out.append(("el", n.tag))
         return out
 
-    r, _ = parse_html_fast("<div>a<p>x</p><!--c--><b>y</b></div>")
+    r = "<div>a<p>x</p><!--c--><b>y</b></div>"
     assert kinds(q(r, "//div/node()")) == [
         ("text", "a"), ("el", "p"), ("comment", "c"), ("el", "b"),
     ]
@@ -869,7 +1010,7 @@ def test_node_test_enumerates_every_node_kind():
     assert len(q(r, "//div[count(.//p/following::node()) = 3]")) == 1
     # //node() is every node below the root; '.' still selects any kind
     assert kinds(q(r, "//node()")) == [
-        ("el", "div"), ("text", "a"), ("el", "p"), ("text", "x"),
+        ("el", "html"), ("el", "body"), ("el", "div"), ("text", "a"), ("el", "p"), ("text", "x"),
         ("comment", "c"), ("el", "b"), ("text", "y"),
     ]
     # general predicates evaluate on non-element contexts: string value,
@@ -894,7 +1035,7 @@ def test_filter_expr_path_starts():
         '<p id="p1">x</p>'
         '<table id="b"><tr><td>3</td></tr></table>'
     )
-    r, _ = parse_html_fast(html)
+    r = html
 
     def ids(expr):
         return [(n.attrs or {}).get("id") for n in q(r, expr)]
@@ -909,10 +1050,8 @@ def test_filter_expr_path_starts():
     assert texts("(//td)[position() > 1]") == ["2", "3"]
     assert texts("((//table)[2]/tr/td)[1]") == ["3"]  # nests
     # attribute results from a filtered set
-    from html_table_spark.xpath import XPathAttr
-
     attrs = q(r, "(//table/@id)[2]")
-    assert [a.value for a in attrs] == ["b"] and isinstance(attrs[0], XPathAttr)
+    assert [a.value for a in attrs] == ["b"] and attrs[0].kind == "attribute"
     # FilterExpr inside predicates: relative inner paths use the predicate
     # context; bare node-set ops parenthesize too
     assert ids('//table[(tr/td)[2] = "2"]') == ["a"]
@@ -920,8 +1059,7 @@ def test_filter_expr_path_starts():
     assert ids("//table[count((.//td)[position() < 2]) = 1]") == ["a", "b"]
     # non-node-set primaries stay compile errors (DOMXPath parity)
     for bad in ('("s")[1]', "(1+2)/tr", "(true())[1]"):
-        with pytest.raises(ParserError):
-            compile_xpath(bad)
+        assert_invalid(bad)
 
 
 def test_name_function_one_arg():
@@ -929,14 +1067,13 @@ def test_name_function_one_arg():
     of the set (§4.1); empty set → ''. The 0-arg context form and the
     per-kind results (attribute name, PI target) are unchanged."""
     html = '<div id="d"><?php x ?><p>a</p><b>c</b></div>'
-    r, _ = parse_html_fast(html)
+    r = html
     assert len(q(r, '//div[name(p) = "p"]')) == 1
     assert len(q(r, '//div[local-name(*) = "p"]')) == 1  # doc-first of {p,b}
     assert len(q(r, '//div[name(@id) = "id"]')) == 1
     assert len(q(r, '//div[name(processing-instruction()) = "php"]')) == 1
     assert len(q(r, '//div[name(nosuch) = ""]')) == 1  # empty set → ''
-    with pytest.raises(ParserError):
-        compile_xpath('//div[name("str")]')  # non-node-set argument
+    assert_invalid('//div[name("str")]')  # non-node-set argument
 
 
 def test_mixed_union_exact_document_order():
@@ -945,11 +1082,9 @@ def test_mixed_union_exact_document_order():
     the run AFTER a nested <p> must come back after it (the round-2 key
     sorted all of a parent's text by (parent, index) and would emit 'c'
     before the p)."""
-    from html_table_spark.xpath import XPathText
-
-    r, _ = parse_html_fast("<div>a<p>b</p>c</div>")
+    r = "<div>a<p>b</p>c</div>"
     got = [
-        n.value if isinstance(n, XPathText) else n.tag
+        n.value if n.kind == "text" else n.tag
         for n in q(r, "//div/text() | //p")
     ]
     assert got == ["a", "p", "c"]
