@@ -36,6 +36,14 @@ class Node:
     allocations on text-heavy markup. Kept deliberately small
     (``__slots__``); the extraction hot path builds millions of nodes per
     Arrow batch.
+
+    The extraction's nodes come from libxml2's tree, built by the compiled
+    walker (``_tree.c``, loaded by ``libxml2.py``) in one C call per
+    selected table or per document: it allocates each Node and stores the
+    five slots directly, without running ``__init__``, with the same values
+    ``__init__`` would give (comment/PI nodes share the empty attrs and
+    children below). The slots are therefore part of that walker's
+    contract: it checks them when it is bound.
     """
 
     __slots__ = ("kind", "tag", "attrs", "children", "data")

@@ -1,23 +1,34 @@
-"""The reference's HTML parser and XPath engine: libxml2 2.9 over ctypes.
+"""The reference's HTML parser and XPath engine: libxml2 2.9, and its tree
+as ``htmldom.Node``.
 
 The reference parses with PHP ``DOMDocument::loadHTML`` under
 ``LIBXML_NOWARNING|LIBXML_NOERROR`` (``Parser.php:446``), which is
 libxml2's ``htmlReadMemory`` with RECOVER|NOERROR|NOWARNING, and selects
 its table with ``DOMXPath``, which is libxml2's XPath. This module makes
-the same calls on the installed ``libxml2.so.2`` and converts what the
-extraction reads into ``htmldom.Node`` trees:
+the same calls on the installed ``libxml2.so.2`` over ctypes. The tree
+libxml2 builds is converted to ``htmldom.Node`` objects in C: ``_tree.c``
+walks a whole subtree in one call (one per selected table, or one per
+document for ``parse``) under these rules:
 
-- text and CDATA become ``str`` children, adjacent runs merged;
+- text and CDATA become ``str`` children, adjacent runs merged, an empty
+  run dropped unless it merges;
 - comments become COMMENT nodes;
 - a PI becomes a PI node whose ``data`` is ``target + " " + content``
   (the target alone when there is no content);
 - attributes keep the first of any duplicate name;
+- names and content are decoded as UTF-8 with ``replace``;
 - the DTD node libxml2 adds is dropped.
 
-The struct layouts below are libxml2 2.9's (``tree.h``, ``xpath.h``), and
-2.9's HTML tokenizer is the one the reference's PHP 8.2 links, so importing
-this module fails unless the library is 2.9.x. Executors need the same
-library: ``--py-files`` ships no compiled code.
+The struct layouts read here and in ``_tree.c`` are libxml2 2.9's
+(``tree.h``, ``xpath.h``), and 2.9's HTML tokenizer is the one the
+reference's PHP 8.2 links, so importing this module fails unless the
+library is 2.9.x. ``_tree.c`` is compiled on first import with
+``sysconfig``'s C compiler against ``Python.h`` (no libxml2 headers, no
+link step) into ``$XDG_CACHE_HOME/html_table_spark`` (default
+``~/.cache/html_table_spark``), keyed by a hash of the source and the
+extension suffix; importing fails when it cannot be built. Executors need
+the same library, a C compiler and Python's headers: ``--py-files`` ships
+the source, nothing compiled.
 
 ``HTML_PARSE_HUGE`` is not passed, as the reference does not pass it: libxml2
 then stops building the tree 256 elements deep, and drops what lies below.
@@ -27,51 +38,32 @@ from __future__ import annotations
 
 import ctypes
 import ctypes.util
+import hashlib
+import importlib.resources
+import importlib.util
+import os
+import shlex
+import subprocess
+import sysconfig
+import tempfile
 from contextlib import contextmanager
 
 from .errors import ParserError, msg_invalid_xpath
-from .htmldom import COMMENT, ELEMENT, PI, Node
+from .htmldom import _EMPTY_ATTRS, _EMPTY_CHILDREN, COMMENT, ELEMENT, PI, Node
 
 _PARSE_OPTIONS = 1 | 32 | 64  # HTML_PARSE_RECOVER | NOERROR | NOWARNING
-_ELEMENT, _TEXT, _CDATA, _PI, _COMMENT = 1, 3, 4, 7, 8
+_ELEMENT = 1
 _XPATH_NODESET = 1
 
 
 class _XmlNode(ctypes.Structure):
-    pass
-
-
-class _XmlAttr(ctypes.Structure):
-    pass
+    # the leading fields of xmlNode, which xmlDoc, xmlAttr and the xmlNs
+    # copies an XPath node set holds share: every node-set entry's type
+    # reads as an xmlNode's (the xmlNs copies die with the node set)
+    _fields_ = [("_private", ctypes.c_void_p), ("type", ctypes.c_int), ("name", ctypes.c_char_p)]
 
 
 _node_p = ctypes.POINTER(_XmlNode)
-_XmlNode._fields_ = [
-    ("_private", ctypes.c_void_p),
-    ("type", ctypes.c_int),
-    ("name", ctypes.c_char_p),
-    ("children", _node_p),
-    ("last", _node_p),
-    ("parent", _node_p),
-    ("next", _node_p),
-    ("prev", _node_p),
-    ("doc", ctypes.c_void_p),
-    ("ns", ctypes.c_void_p),
-    ("content", ctypes.c_char_p),
-    ("properties", ctypes.POINTER(_XmlAttr)),
-]
-_XmlAttr._fields_ = [
-    ("_private", ctypes.c_void_p),
-    ("type", ctypes.c_int),
-    ("name", ctypes.c_char_p),
-    ("children", _node_p),
-    ("last", _node_p),
-    ("parent", _node_p),
-    ("next", ctypes.POINTER(_XmlAttr)),
-]
-# xmlDoc, xmlAttr and the xmlNs copies an XPath node set holds all keep
-# ``type`` at xmlNode's offset, so every node-set entry's type reads as an
-# xmlNode's; the xmlNs copies die with the node set
 
 
 class _XmlNodeSet(ctypes.Structure):
@@ -138,6 +130,43 @@ def load(path: str | None):
 
 _lib = load(ctypes.util.find_library("xml2"))
 VERSION = _version(_lib)
+
+
+def build_tree_module():
+    """``_tree.c`` compiled and loaded as ``<package>._tree``, or ImportError
+    naming the compiler when it cannot be built. The source is read as a
+    package resource, so this works from a ``--py-files`` zip too. Each
+    build lands under a temporary name and is renamed into place, so
+    workers that build at once do not race."""
+    name = f"{__package__}._tree"
+    source = importlib.resources.files(__package__).joinpath("_tree.c").read_bytes()
+    suffix = sysconfig.get_config_var("EXT_SUFFIX")
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "html_table_spark")
+    path = os.path.join(cache, f"_tree-{hashlib.sha256(source + suffix.encode()).hexdigest()[:16]}{suffix}")
+    if not os.path.exists(path):
+        cc = sysconfig.get_config_var("CC") or "cc"
+        try:
+            os.makedirs(cache, exist_ok=True)
+            with tempfile.TemporaryDirectory(dir=cache) as tmp:
+                src, out = os.path.join(tmp, "_tree.c"), os.path.join(tmp, "_tree" + suffix)
+                with open(src, "wb") as fh:
+                    fh.write(source)
+                include = sysconfig.get_paths()["include"]
+                cmd = [*shlex.split(cc), "-shared", "-fPIC", "-O2", "-I", include, src, "-o", out]
+                proc = subprocess.run(cmd, capture_output=True, text=True)
+                if proc.returncode:
+                    raise ImportError(f"cannot build {name} with {cc!r}: {proc.stderr.strip()[-2000:]}")
+                os.replace(out, path)
+        except OSError as exc:
+            raise ImportError(f"cannot build {name} with {cc!r} in {cache}: {exc}") from exc
+    spec = importlib.util.spec_from_file_location(name, path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    module.bind(Node, ELEMENT, COMMENT, PI, _EMPTY_ATTRS, _EMPTY_CHILDREN)
+    return module
+
+
+_tree = build_tree_module()
 
 
 @contextmanager
@@ -237,55 +266,6 @@ def validate(expression: str) -> None:
     raise ParserError(msg_invalid_xpath(expression))
 
 
-def _text(node_p) -> str:
-    out = []
-    while node_p:
-        node = node_p.contents
-        if node.content is not None and node.type in (_TEXT, _CDATA):
-            out.append(node.content.decode("utf-8", "replace"))
-        node_p = node.next
-    return "".join(out)
-
-
-def _convert(node_p, out: list) -> None:
-    # recursive through _element: libxml2 builds at most 256 levels
-    while node_p:
-        node = node_p.contents
-        kind = node.type
-        if kind == _ELEMENT:
-            out.append(_element(node))
-        elif kind == _TEXT or kind == _CDATA:
-            content = node.content
-            data = content.decode("utf-8", "replace") if content else ""
-            if out and type(out[-1]) is str:
-                out[-1] += data
-            elif data:
-                out.append(data)
-        elif kind == _COMMENT:
-            out.append(Node(COMMENT, data=node.content.decode("utf-8", "replace") if node.content else ""))
-        elif kind == _PI:
-            target = node.name.decode("utf-8", "replace")
-            data = f"{target} {node.content.decode('utf-8', 'replace')}" if node.content else target
-            out.append(Node(PI, data=data))
-        node_p = node.next
-
-
-def _element(node: _XmlNode) -> Node:
-    attrs = None
-    attr_p = node.properties
-    if attr_p:
-        attrs = {}
-        while attr_p:
-            attr = attr_p.contents
-            attrs.setdefault(attr.name.decode("utf-8", "replace"), _text(attr.children))
-            attr_p = attr.next
-    element = Node(ELEMENT, tag=node.name.decode("utf-8", "replace"), attrs=attrs)
-    children = node.children
-    if children:
-        _convert(children, element.children)
-    return element
-
-
 def element_name(node_p) -> str:
     """The tag of the element at ``node_p``."""
     return node_p.contents.name.decode("utf-8", "replace")
@@ -293,7 +273,7 @@ def element_name(node_p) -> str:
 
 def to_node(node_p) -> Node:
     """The element at ``node_p``, with its subtree, as an ``htmldom.Node``."""
-    return _element(node_p.contents)
+    return _tree.element(ctypes.addressof(node_p.contents))
 
 
 def parse(html: str) -> tuple[Node, list[str]]:
@@ -303,5 +283,5 @@ def parse(html: str) -> tuple[Node, list[str]]:
     root = Node(ELEMENT, tag="#document")
     with document(html, errors) as doc:
         if doc:
-            _convert(doc.contents.children, root.children)
+            root.children = _tree.children(ctypes.addressof(doc.contents))
     return root, errors

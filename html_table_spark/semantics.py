@@ -31,6 +31,7 @@ per Python call), satisfying the "no per-row Python on the hot path" rule
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from . import libxml2
 from .config import ALL_SECTIONS, TR, ParserConfig, validate_header
@@ -48,10 +49,11 @@ MEDIA_TAGS = frozenset({"img", "object", "embed", "video", "audio", "source", "i
 MEDIA_REF_ATTR = "data-media-ref"
 
 
-@dataclass(frozen=True)
-class Cell:
+class Cell(NamedTuple):
     """One emitted grid cell copy: raw nodeValue text + the media refs found
-    inside the source cell, in document order."""
+    inside the source cell, in document order. Immutable, as copies are
+    shared across colspan and rowspan; a tuple, as a frozen dataclass's
+    ``__init__`` costs an ``object.__setattr__`` per field per cell."""
 
     text: str
     media: tuple[str, ...] = ()

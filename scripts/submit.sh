@@ -3,8 +3,11 @@
 # Usage: scripts/submit.sh <input> <output> [spark-submit args...] [-- job args...]
 #   e.g. scripts/submit.sh in.parquet out/ --conf spark.ui.enabled=false -- --mode single --no-resume
 # Executors, and the machine submitting the job, need libxml2.so.2 2.9.x
-# (html_table_spark/libxml2.py binds it over ctypes): --py-files ships
-# Python only, nothing compiled.
+# (html_table_spark/libxml2.py binds it over ctypes), a C compiler and
+# Python's headers: --py-files ships the package's Python and the C source
+# of its tree walker (_tree.c), nothing compiled. Each machine compiles the
+# walker on first import into $XDG_CACHE_HOME/html_table_spark (default
+# ~/.cache/html_table_spark), once per source and Python version.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 INPUT="${1:?input corpus path}"
@@ -25,20 +28,7 @@ for arg in "$@"; do
 done
 
 ZIP="$(mktemp -d)/html_table_spark.zip"
-(cd "$REPO" && python3 - "$ZIP" <<'EOF'
-import os, sys, zipfile
-zip_path = sys.argv[1]
-with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-    for root, _dirs, files in os.walk("html_table_spark"):
-        if "__pycache__" in root:
-            continue
-        for f in files:
-            if f.endswith(".py"):
-                p = os.path.join(root, f)
-                zf.write(p, p)
-print(zip_path)
-EOF
-)
+python3 "$REPO/scripts/pack_py_files.py" "$ZIP"
 
 exec spark-submit \
     --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}" \

@@ -4,7 +4,8 @@ libxml2, a C library, parses untrusted documents inside the Python
 workers. The extraction pipeline runs in a subprocess with a timeout over
 inputs that stress it (nesting past libxml2's 256-level cap, a text node
 past its 10,000,000-byte cap, NUL bytes, an unterminated comment, a
-charset declaration that must not re-decode the text), and every document
+charset declaration that must not re-decode the text, an element with
+5,000 attributes), and every document
 must come back as exactly one row, with no task failure: a crashed worker
 or a raising kernel fails the job, and the subprocess with it.
 """
@@ -35,6 +36,7 @@ DOCS = {
     "nul": "<table><tr><td>a\x00b</td></tr></table>",
     "comment": "<table><tr><td>a</td></tr></table><!--" + "x" * 1_000_000,
     "charset": '<meta charset="iso-8859-1"><table><tr><td>café €</td></tr></table>',
+    "attrs": "<table><tr><td>a<img " + " ".join(f"a{i}={i}" for i in range(5_000)) + "></td><td>b</td></tr></table>",
 }
 spark = get_spark("adversarial")
 spark.sparkContext.setLogLevel("ERROR")
@@ -74,6 +76,9 @@ def test_adversarial_documents_yield_one_row_each():
         "comment": [[0, "ok", ["a"]]],
         # the text arrives decoded: the declared charset is not applied again
         "charset": [[0, "ok", ["café €"]]],
+        # libxml2's duplicate-attribute check is quadratic in a start tag's
+        # attributes (as in the reference); 5,000 parse in well under a second
+        "attrs": [[0, "ok", ["a", "b"]]],
     }
 
 
