@@ -1704,71 +1704,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the external driver's CORRECTNESS gate attests only the FIRST 50
     # entries, in dict insertion order.  To keep every query externally
     # attested within a 2-round window:
-    #   * queries with NO driver-signed row in the previous round go FIRST
-    #     (round 5: the 23 round-4 additions plus ann_topk/ann_lsh/ann_ivf,
-    #     which round 4's mid-registry inserts displaced from the window);
-    #   * genuinely NEW queries added this round are inserted right after
-    #     that block (still inside the top 50) so they are attested the
-    #     round they ship;
+    #   * queries with NO green row in the latest CORRECTNESS_r*.json go
+    #     FIRST;
+    #   * genuinely NEW queries are inserted right after that block (still
+    #     inside the top 50) so they are attested the round they ship;
     #   * the remaining window slots are filled with queries whose
     #     behaviour may change this round, then §2 core;
-    #   * everything below slot 50 MUST already hold a green row in the
-    #     immediately preceding CORRECTNESS_r{N-1}.json.
+    #   * everything past the first 50 MUST already hold a green row in the
+    #     latest CORRECTNESS_r*.json.
+    # tests/test_entry_registry.py checks the last rule against the file.
     return {
-        # -- block 1: un-attested as of CORRECTNESS_r04 (26 entries) ------
-        "tx_bpe_train": tx_bpe_train,
-        "tx_bpe_tokenize": tx_bpe_tokenize,
-        "dd_segments": dd_segments,
-        "dd_semantic": dd_semantic,
-        "dd_bloom": dd_bloom,
-        "dd_canonical": dd_canonical,
-        "dd_decontaminate": dd_decontaminate,
-        "dd_ngram_novelty": dd_ngram_novelty,
-        "dd_exact_substr": dd_exact_substr,
-        "tx_sample_mix": tx_sample_mix,
-        "tx_pii_scrub": tx_pii_scrub,
-        "tx_pack_sequences": tx_pack_sequences,
-        "tx_corpus_pipeline": tx_corpus_pipeline,
-        "tx_lm_score": tx_lm_score,
-        "tx_token_budget": tx_token_budget,
-        "tx_tfidf": tx_tfidf,
-        "tx_train_val_split": tx_train_val_split,
-        "ann_topk": ann_topk,
-        "ann_lsh": ann_lsh,
-        "ann_ivf": ann_ivf,
-        "ann_quantized": ann_quantized,
-        "ann_pq": ann_pq,
-        "ann_batch": ann_batch,
-        "mc_blocks": mc_blocks,
-        "mc_main_text": mc_main_text,
-        "pdf_spans": pdf_spans,
-        # -- block 2: NEW this round (attested the round they ship) -------
-        "tx_langid_model": tx_langid_model,
-        "x_warc_extract": x_warc_extract,
-        "mc_markdown": mc_markdown,
-        "mc_metadata": mc_metadata,
-        "tx_url_dedup": tx_url_dedup,
-        "tx_robots_filter": tx_robots_filter,
-        "x_warc_cdx": x_warc_cdx,
-        # -- block 2: new round-5 queries (inside the window) -------------
-        # -- block 3: window fill — behaviour-may-change + §2 core (24) ---
-        "x_media_interleave": x_media_interleave,
-        "x_media_features": x_media_features,
-        "tx_langid": tx_langid,
-        "x_cells": x_cells,
-        "x_colspan": x_colspan,
-        "x_rowspan": x_rowspan,
-        "x_caption": x_caption,
-        "x_sections": x_sections,
-        "x_position": x_position,
-        "x_by_id": x_by_id,
-        "x_xpath_extended": x_xpath_extended,
-        "x_user_header": x_user_header,
-        "x_header_rows": x_header_rows,
-        "x_table_summary": x_table_summary,
-        "x_errors": x_errors,
-        "x_fixtures": x_fixtures,
-        "qs_json": qs_json,
+        # -- block 1: no row in CORRECTNESS_r05 (33 entries) --------------
         "qs_json_numeric_header": qs_json_numeric_header,
         "q1_pricing": q1_pricing,
         "q3_shipping": q3_shipping,
@@ -1776,8 +1722,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dd_exact": dd_exact,
         "dd_minhash_sig": dd_minhash_sig,
         "dd_lsh_pairs": dd_lsh_pairs,
-        # ---- driver window ends here (slot 50) --------------------------
-        # -- below: green in CORRECTNESS_r04.json (1 round old, in policy)
         "qs_filter": qs_filter,
         "qs_sorted_slice": qs_sorted_slice,
         "qs_fetch_pairs": qs_fetch_pairs,
@@ -1804,8 +1748,59 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tx_filter": tx_filter,
         "tx_vocab": tx_vocab,
         "tx_topk_ngrams": tx_topk_ngrams,
+        # -- block 2: window fill: table extraction, its grid now in C (17)
+        "x_cells": x_cells,
+        "x_colspan": x_colspan,
+        "x_rowspan": x_rowspan,
+        "x_caption": x_caption,
+        "x_sections": x_sections,
+        "x_position": x_position,
+        "x_by_id": x_by_id,
+        "x_xpath_extended": x_xpath_extended,
+        "x_user_header": x_user_header,
+        "x_header_rows": x_header_rows,
+        "x_table_summary": x_table_summary,
+        "x_errors": x_errors,
+        "x_fixtures": x_fixtures,
+        "x_media_interleave": x_media_interleave,
+        "x_media_features": x_media_features,
+        "x_warc_extract": x_warc_extract,
+        "qs_json": qs_json,
+        # -- past the window: green in CORRECTNESS_r05 ---------------------
+        "tx_bpe_train": tx_bpe_train,
+        "tx_bpe_tokenize": tx_bpe_tokenize,
+        "dd_segments": dd_segments,
+        "dd_semantic": dd_semantic,
+        "dd_bloom": dd_bloom,
+        "dd_canonical": dd_canonical,
+        "dd_decontaminate": dd_decontaminate,
+        "dd_ngram_novelty": dd_ngram_novelty,
+        "dd_exact_substr": dd_exact_substr,
+        "tx_sample_mix": tx_sample_mix,
+        "tx_pii_scrub": tx_pii_scrub,
+        "tx_pack_sequences": tx_pack_sequences,
+        "tx_corpus_pipeline": tx_corpus_pipeline,
+        "tx_lm_score": tx_lm_score,
+        "tx_token_budget": tx_token_budget,
+        "tx_tfidf": tx_tfidf,
+        "tx_train_val_split": tx_train_val_split,
+        "ann_topk": ann_topk,
+        "ann_lsh": ann_lsh,
+        "ann_ivf": ann_ivf,
+        "ann_quantized": ann_quantized,
+        "ann_pq": ann_pq,
+        "ann_batch": ann_batch,
+        "mc_blocks": mc_blocks,
+        "mc_main_text": mc_main_text,
+        "pdf_spans": pdf_spans,
+        "tx_langid_model": tx_langid_model,
+        "mc_markdown": mc_markdown,
+        "mc_metadata": mc_metadata,
+        "tx_url_dedup": tx_url_dedup,
+        "tx_robots_filter": tx_robots_filter,
+        "x_warc_cdx": x_warc_cdx,
+        "tx_langid": tx_langid,
     }
-
 
 _FP_SQL = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
 # exact twin of functions/text.py tokens(): trim, \s+ split, empty → []

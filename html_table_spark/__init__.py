@@ -17,41 +17,106 @@ interleaved text+media document corpus at web scale:
 - training-data-pipeline operators: dedup (exact/MinHash-LSH/SimHash/
   n-gram Jaccard), embedding similarity search, text analysis, multimodal
   column plumbing.
+
+Importing the package runs :func:`patch_zipimport` and nothing else: the
+public names below resolve on first use, so the worker daemon
+(``fastdaemon.py``) loads neither libxml2 nor the compiled kernel.
 """
 
-# Worker-side import side effect (deliberate): every PySpark task prologue
-# calls importlib.invalidate_caches(), and CPython 3.11's zipimporter
-# re-reads its whole archive TOC on each call — measured ~200-390 ms PER
-# TASK on a Spark-distribution install (pyspark.zip + jars on sys.path).
-# Reused workers import this package exactly once while unpickling our
-# UDFs, so applying the mtime-gated patch here fixes every later task in
-# that worker even under sessions we did not configure (e.g. the driver's
-# own correctness-gate session). Sessions built by session.get_spark also
-# set spark.python.daemon.module=html_table_spark.fastdaemon, which patches
-# before the FIRST task. See fastdaemon.py for the full story.
-from . import fastdaemon as _fastdaemon
+from __future__ import annotations
 
-_fastdaemon.apply()
-
-from .config import ALL_SECTIONS, TBODY, TFOOT, THEAD, TR, ParserConfig
-from .errors import ParserError
-from .semantics import Cell, ExtractedTable, parse_document
-from .spans import doc_spans_to_html, encode_table_spans, html_to_doc_spans
+import importlib
+import os
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "ALL_SECTIONS",
-    "TBODY",
-    "TFOOT",
-    "THEAD",
-    "TR",
-    "Cell",
-    "ExtractedTable",
-    "ParserConfig",
-    "ParserError",
-    "doc_spans_to_html",
-    "encode_table_spans",
-    "html_to_doc_spans",
-    "parse_document",
-]
+# public name -> the module that defines it, imported on first use
+_EXPORTS = {
+    name: module
+    for module, names in {
+        "config": "ALL_SECTIONS TBODY TFOOT THEAD TR ParserConfig",
+        "errors": "ParserError",
+        "semantics": "Cell ExtractedTable parse_document",
+        "spans": "doc_spans_to_html encode_table_spans html_to_doc_spans",
+    }.items()
+    for name in names.split()
+}
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+
+
+def patch_zipimport() -> bool:
+    """Install the mtime-gated zipimporter invalidation. Idempotent; returns
+    True when the patch is (already) active, False when the environment does
+    not cooperate (C zipimport, unexpected attributes) — stock behavior then
+    remains, which is slow but always correct.
+
+    Why: every PySpark task prologue calls ``importlib.invalidate_caches()``
+    (``pyspark/worker_util.py``), and on CPython 3.11 each zipimporter then
+    EAGERLY re-reads its archive's table of contents, even unchanged
+    (CPython gh-83684; 3.12+ resets lazily). With ``pyspark.zip`` and a
+    spark-core jar on ``sys.path`` that is ~30 TOCs on EVERY task: 309 ms
+    median per task, 10-100x a typical extraction task's Python compute.
+
+    The patch keeps ``invalidate_caches`` SEMANTICS intact: each zipimporter
+    re-reads its TOC iff the archive's (mtime_ns, size) changed since the
+    last read (or on its first invalidation). New path entries, directory
+    finders (``FileFinder``, what ``sc.addPyFile`` relies on for .py files),
+    and replaced/rewritten archives all behave exactly as stock CPython; only
+    the pointless identical re-read is skipped.
+
+    With the patch a no-op ``mapInArrow`` task still costs 55-80 core-ms
+    (local[4], 4 vCPUs, six alternating rounds): PySpark's runner, not ours
+    to cut. A ``gc.collect()`` per task (20-26 ms) once came on top of it in
+    the extraction operator."""
+    try:
+        import zipimport
+
+        cls = zipimport.zipimporter
+        if getattr(cls, "_htmltable_fast_invalidate", False):
+            return True
+        orig = cls.invalidate_caches
+
+        def _sig(path):
+            try:
+                st = os.stat(path)
+                return (st.st_mtime_ns, st.st_size)
+            except (OSError, TypeError):
+                # TypeError: the defensive getattr(self, "archive", None)
+                # default feeds None here when a zipimporter(-subclass)
+                # lacks a usable .archive — degrade to stock behavior
+                # instead of crashing every task prologue's
+                # importlib.invalidate_caches()
+                return None
+
+        def invalidate_caches(self):  # noqa: ANN001 — stdlib signature
+            sig = _sig(getattr(self, "archive", None))
+            if (
+                sig is not None
+                and getattr(self, "_htmltable_toc_sig", None) == sig
+            ):
+                return
+            orig(self)
+            try:
+                self._htmltable_toc_sig = sig
+            except AttributeError:
+                # C-implemented zipimporter (no instance dict): cannot
+                # memoize — leave stock behavior for this instance
+                pass
+
+        cls.invalidate_caches = invalidate_caches
+        cls._htmltable_fast_invalidate = True
+        return True
+    except Exception:
+        return False
+
+
+# deliberate import side effect: it reaches the workers of sessions we did
+# not configure too (they import the package unpickling our UDFs), and
+# through fastdaemon those of session.get_spark before their FIRST task
+patch_zipimport()

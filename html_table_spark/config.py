@@ -47,7 +47,7 @@ class ParserConfig:
     table_header: tuple[tuple[int, str], ...] = ()
     ignore_table_header: bool = False
     # header row as (section, 0-based offset): ``Section::xpathRow``
-    # (src/Section.php:19-28), found by semantics._header_row_and_caption
+    # (src/Section.php:19-28), found by the compiled grid (_tree.c lookups)
     table_header_row: tuple[str, int] = (THEAD, 0)
     # thead EXCLUDED from data by default (Parser.php:61)
     included_sections: tuple[str, ...] = (TBODY, TFOOT, TR)

@@ -1,14 +1,14 @@
-"""The reference's HTML parser and XPath engine: libxml2 2.9, and its tree
-as ``htmldom.Node``.
+"""The reference's HTML parser and XPath engine: libxml2 2.9, its tree as
+``htmldom.Node``, and the grid over it.
 
 The reference parses with PHP ``DOMDocument::loadHTML`` under
 ``LIBXML_NOWARNING|LIBXML_NOERROR`` (``Parser.php:446``), which is
 libxml2's ``htmlReadMemory`` with RECOVER|NOERROR|NOWARNING, and selects
 its table with ``DOMXPath``, which is libxml2's XPath. This module makes
-the same calls on the installed ``libxml2.so.2`` over ctypes. The tree
-libxml2 builds is converted to ``htmldom.Node`` objects in C: ``_tree.c``
-walks a whole subtree in one call (one per selected table, or one per
-document for ``parse``) under these rules:
+the same calls on the installed ``libxml2.so.2`` over ctypes. The rest runs
+in C, ``_tree.c``, one call each: :func:`table` reads a selected table's
+caption, header and rows, and :func:`parse` converts a whole document to
+``htmldom.Node`` objects under these rules:
 
 - text and CDATA become ``str`` children, adjacent runs merged, an empty
   run dropped unless it merges;
@@ -49,7 +49,7 @@ import tempfile
 from contextlib import contextmanager
 
 from .errors import ParserError, msg_invalid_xpath
-from .htmldom import _EMPTY_ATTRS, _EMPTY_CHILDREN, COMMENT, ELEMENT, PI, Node
+from .htmldom import _EMPTY_ATTRS, _EMPTY_CHILDREN, COMMENT, ELEMENT, PI, Cell, Node
 
 _PARSE_OPTIONS = 1 | 32 | 64  # HTML_PARSE_RECOVER | NOERROR | NOWARNING
 _ELEMENT = 1
@@ -162,7 +162,7 @@ def build_tree_module():
     spec = importlib.util.spec_from_file_location(name, path)
     module = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(module)
-    module.bind(Node, ELEMENT, COMMENT, PI, _EMPTY_ATTRS, _EMPTY_CHILDREN)
+    module.bind(Node, ELEMENT, COMMENT, PI, _EMPTY_ATTRS, _EMPTY_CHILDREN, Cell)
     return module
 
 
@@ -271,9 +271,10 @@ def element_name(node_p) -> str:
     return node_p.contents.name.decode("utf-8", "replace")
 
 
-def to_node(node_p) -> Node:
-    """The element at ``node_p``, with its subtree, as an ``htmldom.Node``."""
-    return _tree.element(ctypes.addressof(node_p.contents))
+def table(node_p, section: str | None, offset: int, sections: tuple[str, ...], media: bool) -> tuple:
+    """``_tree.table`` for the table element at ``node_p``: its caption,
+    header row (``section``, ``offset``; none when section is None) and rows."""
+    return _tree.table(ctypes.addressof(node_p.contents), section, offset, sections, media)
 
 
 def parse(html: str) -> tuple[Node, list[str]]:

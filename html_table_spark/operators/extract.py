@@ -99,12 +99,13 @@ def make_arrow_extractor(config: ParserConfig):
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else -1
         started = time.monotonic()
-        # the DOM tree is acyclic (no parent pointers) — refcounting frees
-        # it; CPython's cyclic GC otherwise triggers constantly on the
-        # millions of container allocations per batch. No gc.collect() at
-        # the end: there is no cycle for it to find, it was most of the
-        # operator's own per-task cost (fastdaemon.py), and the automatic
-        # collector resumes once GC is re-enabled.
+        # the kernel's results (lists of Cell tuples) are acyclic —
+        # refcounting frees them; CPython's cyclic GC otherwise triggers
+        # constantly on the container allocations of a batch. No
+        # gc.collect() at the end: there is no cycle for it to find, it was
+        # most of the operator's own per-task cost (patch_zipimport in
+        # __init__.py), and the automatic collector resumes once GC is
+        # re-enabled.
         gc_was_enabled = gc.isenabled()
         if gc_was_enabled:
             gc.disable()

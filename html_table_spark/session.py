@@ -85,7 +85,7 @@ def get_spark(
         # Spark's file-split formula, split = min(maxPartitionBytes,
         # max(openCostInBytes, totalBytes / minPartitionNum)): ≈2 tasks per
         # core by bytes. Every Python task pays a fixed 55-80 core-ms
-        # (fastdaemon.py), so more, smaller waves cost more than the
+        # (patch_zipimport in __init__.py), so more, smaller waves cost more than the
         # straggler tail they trim: on 4 cores, seed-1 perfbench bulk went
         # from 32 tasks (largest 1.46x the mean bytes) to 9 (1.22x), and
         # skew from 19 tasks (2.85x) to 10 (1.58x, at most one mega doc

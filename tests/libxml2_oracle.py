@@ -1,10 +1,10 @@
 """Test helpers over libxml2's whole-document tree (``htmldom.parse_html``).
 
-:func:`extract` runs the extraction over the whole converted tree, html/head/
-body wrappers included, with the tables found by a Python walk instead of
-libxml2's XPath: the path ``parse_document`` took before it selected with
-XPath and converted only the selected subtrees. Comparing the two checks the
-selection and the subtree conversion. :func:`unwrap` is the normal form tree
+:func:`extract` runs the Python grid (``grid_oracle``) over the whole
+converted tree, html/head/body wrappers included, with the tables found by a
+Python walk instead of libxml2's XPath. Comparing it with ``parse_document``
+(XPath selects, the compiled grid reads the selected subtrees) checks the
+selection and the compiled grid. :func:`unwrap` is the normal form tree
 goldens are written in.
 """
 
@@ -14,6 +14,7 @@ from html_table_spark import semantics
 from html_table_spark.config import ParserConfig
 from html_table_spark.errors import MSG_TABLE_NOT_FOUND
 from html_table_spark.htmldom import ELEMENT, Node, parse_html
+from tests import grid_oracle
 
 _WRAPPERS = frozenset({"html", "head", "body"})
 
@@ -62,8 +63,8 @@ def extract(html: str, config: ParserConfig) -> list[semantics.ExtractedTable]:
         return [semantics.ExtractedTable(table_idx=0, status="error", error_msg=msg)]
     tables = _top_level_tables(root)
     if config.select_all_tables:
-        return [semantics._extract_table(t, config, i) for i, t in enumerate(tables)]
+        return [grid_oracle.extract_table(t, config, i) for i, t in enumerate(tables)]
     assert config.table_expression == "(//table)[1]", config.table_expression
     if not tables:
         return [semantics.ExtractedTable(table_idx=0, status="error", error_msg=MSG_TABLE_NOT_FOUND)]
-    return [semantics._extract_table(tables[0], config, 0)]
+    return [grid_oracle.extract_table(tables[0], config, 0)]

@@ -5,9 +5,11 @@ workers. The extraction pipeline runs in a subprocess with a timeout over
 inputs that stress it (nesting past libxml2's 256-level cap, a text node
 past its 10,000,000-byte cap, NUL bytes, an unterminated comment, a
 charset declaration that must not re-decode the text, an element with
-5,000 attributes), and every document
-must come back as exactly one row, with no task failure: a crashed worker
-or a raising kernel fails the job, and the subprocess with it.
+5,000 attributes) and the compiled grid (a span of non-ASCII digits, a row
+of 10,000 cells, a 1000x1000 span block over 1,000 rows, tables nested to
+libxml2's depth cap), and every document must come back as exactly one
+row, with no task failure: a crashed worker or a raising kernel fails the
+job, and the subprocess with it.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ from html_table_spark.semantics import parse_document
 _PIPELINE = r"""
 import json
 
+from pyspark.sql import functions as F
+
 from html_table_spark.config import ParserConfig
 from html_table_spark.plans.pipeline import plan_extraction
 from html_table_spark.session import get_spark
@@ -37,19 +41,28 @@ DOCS = {
     "comment": "<table><tr><td>a</td></tr></table><!--" + "x" * 1_000_000,
     "charset": '<meta charset="iso-8859-1"><table><tr><td>café €</td></tr></table>',
     "attrs": "<table><tr><td>a<img " + " ".join(f"a{i}={i}" for i in range(5_000)) + "></td><td>b</td></tr></table>",
+    "superscript": '<table><tr><td colspan="²">a</td></tr></table>',
+    "wide_row": "<table><tr>" + "<td>x</td>" * 10_000 + "</tr></table>",
+    "block": "<table><tr><td rowspan=1000 colspan=1000>x</td></tr>" + "<tr><td>y</td></tr>" * 999 + "</table>",
+    "nested": "<table><tr><td>" * 84 + "<div>deep</div>",
 }
 spark = get_spark("adversarial")
 spark.sparkContext.setLogLevel("ERROR")
 documents = spark.createDataFrame(
     [(doc_id, [("text", html, None, 0)]) for doc_id, html in DOCS.items()], DOCUMENTS_SCHEMA
 )
-rows = plan_extraction(documents, ParserConfig().all_tables(), num_partitions=4).collect()
+cells = F.filter("spans", lambda s: s["kind"] == "cell")
+rows = (
+    plan_extraction(documents, ParserConfig().all_tables(), num_partitions=4)
+    .select("doc_id", "table_idx", "status", F.size(cells).alias("n"), F.transform(cells, lambda s: s["text"]).alias("texts"))
+    .select("doc_id", "table_idx", "status", "n", F.when(F.col("n") <= 100, F.col("texts")).alias("texts"))
+    .collect()
+)
 out = {}
 for row in rows:
-    texts = [s["text"] for s in row["spans"] if s["kind"] == "cell"]
-    out.setdefault(row["doc_id"], []).append(
-        [row["table_idx"], row["status"], [t if len(t) < 100 else len(t) for t in texts]]
-    )
+    # a table of more than 100 cells is reported by its cell count
+    texts = row["n"] if row["texts"] is None else [t if len(t) < 100 else len(t) for t in row["texts"]]
+    out.setdefault(row["doc_id"], []).append([row["table_idx"], row["status"], texts])
 print("ROWS " + json.dumps(out))
 spark.stop()
 """
@@ -79,6 +92,15 @@ def test_adversarial_documents_yield_one_row_each():
         # libxml2's duplicate-attribute check is quadratic in a start tag's
         # attributes (as in the reference); 5,000 parse in well under a second
         "attrs": [[0, "ok", ["a", "b"]]],
+        # PHP's (int)"²" is 0: one copy of the cell (str.isdigit() holds)
+        "superscript": [[0, "ok", ["a"]]],
+        "wide_row": [[0, "ok", 10_000]],
+        # 1,000 copies in row 1, then 1,000 carried copies plus y in each
+        # of the other 999 rows
+        "block": [[0, "ok", 1_000 + 999 * 1_001]],
+        # the div inside the 84th table is element 255 of the document
+        # (html, body, then table, tr, td 84 times), one short of libxml2's cap
+        "nested": [[0, "ok", ["deep"]]],
     }
 
 

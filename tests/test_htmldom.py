@@ -18,11 +18,11 @@ from html_table_spark.htmldom import (
     PI,
     Node,
     parse_html,
-    php_int_cast,
 )
 from html_table_spark.semantics import parse_document
 from html_table_spark.spans import doc_spans_to_html
 from tests import libxml2_oracle as libxml2
+from tests.grid_oracle import iter_elements, php_int_cast
 
 
 def tree_repr(node):
@@ -114,13 +114,13 @@ def test_mismatched_quote_divergence():
     """A start tag with mismatched quotes: libxml2 runs the value to the
     next matching quote, here to the end of input, and builds the tag."""
     root, _ = parse_html("<td colspan='2\">weird quotes</td>")
-    td = next(n for n in root.iter_elements() if n.tag == "td")
+    td = next(n for n in iter_elements(root) if n.tag == "td")
     assert td.attrs == {"colspan": '2">weird quotes</td>'}
     assert td.children == []
 
 
 def _body_tags(root: Node) -> list[str]:
-    (body,) = (n for n in root.iter_elements() if n.tag == "body")
+    (body,) = (n for n in iter_elements(root) if n.tag == "body")
     return [n.tag for n in body.children if type(n) is Node and n.kind == ELEMENT]
 
 
@@ -173,15 +173,15 @@ def test_unseen_tag_angle_prescan_is_linear_time():
 
 def test_rawtext_script_not_parsed():
     root, _ = parse_html("<script><table><tr></script><p>after</p>")
-    tags = [e.tag for e in root.iter_elements()]
+    tags = [e.tag for e in iter_elements(root)]
     assert tags == ["html", "head", "script", "body", "p"]
-    (script,) = (e for e in root.iter_elements() if e.tag == "script")
+    (script,) = (e for e in iter_elements(root) if e.tag == "script")
     assert script.children == ["<table><tr>"]
 
 
 def test_fast_entity_decoding():
     root, _ = parse_html("<td>&amp;x&nbsp;</td>")
-    td = next(n for n in root.iter_elements() if n.tag == "td")
+    td = next(n for n in iter_elements(root) if n.tag == "td")
     assert td.text_content() == "&x\xa0"
 
 
@@ -198,6 +198,11 @@ def test_php_int_cast():
     assert php_int_cast("1e3") == 1000
     assert php_int_cast("12.9") == 12
     assert php_int_cast("nope") == 0
+    # PHP reads ASCII digits only: a superscript or Arabic-Indic digit is
+    # not a number (str.isdigit() holds for both)
+    assert php_int_cast("²") == 0
+    assert php_int_cast("٣") == 0
+    assert php_int_cast("2e٣") == 2
 
 
 # --- randomized differential fuzz (selected subtrees vs the whole tree) ----

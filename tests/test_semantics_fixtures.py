@@ -39,12 +39,10 @@ from html_table_spark.fixtures import (
     FILE_HTML,
     f14_mega_doc_html,
 )
-from html_table_spark.semantics import (
-    TOP_LEVEL_TABLES,
-    _header_row_and_caption,
-    parse_document,
-)
+from html_table_spark.htmldom import ELEMENT, Node
+from html_table_spark.semantics import TOP_LEVEL_TABLES, parse_document
 from html_table_spark.spans import encode_table_spans
+from tests import grid_oracle
 from tests.test_htmldom import _token
 
 HEADER = ["prenoms", "nombre", "sexe", "annee"]
@@ -368,6 +366,15 @@ def test_clamp_variants():
     assert rows[1] == ["e"]  # rowspan=0 did NOT carry into row 2
 
 
+def test_span_of_non_ascii_digits_is_one():
+    # PHP's (int) reads ASCII digits only: (int)"²" and (int)"٣" are 0, so
+    # each cell is emitted once (str.isdigit() holds for both; int("²")
+    # raises)
+    for digit in ("²", "٣"):
+        html = f'<table><tr><td colspan="{digit}">a</td><td rowspan="{digit}">b</td></tr><tr></tr></table>'
+        assert one(html, ParserConfig()).row_texts() == [["a", "b"], []]
+
+
 # --- header trim charset (Parser.php:539): NBSP trimmed in header only
 
 
@@ -469,12 +476,14 @@ def _address(node_p) -> int:
 @settings(max_examples=300, deadline=None)
 @given(parts=st.lists(st.one_of(_table_soup, _token()), max_size=6))
 def test_header_row_and_caption_walk_equals_xpath(parts):
-    """The walk over each converted table finds the node libxml2's XPath
-    finds over the document: the same ordinal among the table's ``tr`` (or
-    ``caption``) descendants."""
+    """The oracle's walk over each converted table finds the node libxml2's
+    XPath finds over the document: the same ordinal among the table's ``tr``
+    (or ``caption``) descendants. The compiled grid reads the caption and
+    header row the walk finds."""
     with libxml2.document("".join(parts)) as doc:
         for k, table_p in enumerate(libxml2.query(doc, TOP_LEVEL_TABLES), 1):
-            table = libxml2.to_node(table_p)
+            table = Node(ELEMENT, tag="table")
+            table.children = libxml2._tree.children(_address(table_p))
             top = f"({TOP_LEVEL_TABLES})[{k}]"
 
             def ordinal(expr: str, tag: str):
@@ -483,18 +492,27 @@ def test_header_row_and_caption_walk_equals_xpath(parts):
                 return nodes.index(hits[0]) if hits else None
 
             def walk_ordinal(node, tag: str):
-                nodes = [n for n in table.iter_elements() if n.tag == tag]
+                nodes = [n for n in grid_oracle.iter_elements(table) if n.tag == tag]
                 return next((i for i, n in enumerate(nodes) if n is node), None)
 
+            def compiled(section, offset):
+                caption, header, _ = libxml2.table(table_p, section, offset, ALL_SECTIONS, False)
+                return caption, header
+
             caption = ordinal(f"({top}//caption)[1]", "caption")
-            assert walk_ordinal(_header_row_and_caption(table, None, 0)[1], "caption") == caption
+            _, cap = grid_oracle.header_row_and_caption(table, None, 0)
+            assert walk_ordinal(cap, "caption") == caption
+            cap_text = cap.text_content() if cap is not None else None
+            assert compiled(None, 0) == (cap_text, [])
             for section in ALL_SECTIONS:
                 parent = "table" if section == TR else f"table/{section}"
                 for offset in range(4):
-                    row, cap = _header_row_and_caption(table, section, offset)
+                    row, cap = grid_oracle.header_row_and_caption(table, section, offset)
                     expr = f"({top}/descendant-or-self::{parent}/tr)[{offset + 1}]"
                     assert walk_ordinal(row, "tr") == ordinal(expr, "tr")
                     assert walk_ordinal(cap, "caption") == caption
+                    header = [c.text for c in grid_oracle.extract_record(row, {}, False)] if row else []
+                    assert compiled(section, offset) == (cap_text, header)
 
 
 # --- rowspan carry drops pending entries past the single trailing splice

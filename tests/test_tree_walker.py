@@ -1,7 +1,8 @@
 """The compiled tree walker (``html_table_spark/_tree.c``): libxml2's nodes
 become the same ``htmldom.Node`` trees, with no leaked references, from a
 build that works where the package is imported from a ``--py-files`` zip,
-and an import that fails loudly when there is no compiler."""
+and an import that fails loudly when there is no compiler. The grid the same
+file compiles is checked in ``test_grid_c.py``."""
 
 from __future__ import annotations
 
@@ -9,17 +10,22 @@ import ctypes
 import ctypes.util
 import gc
 import os
+import shlex
+import shutil
 import subprocess
 import sys
+import sysconfig
 import time
 import tracemalloc
 from pathlib import Path
 
+import pytest
+
 from html_table_spark import htmldom
 from html_table_spark import libxml2 as binding
 from html_table_spark.htmldom import parse_html
-from html_table_spark.semantics import TOP_LEVEL_TABLES
 from tests import libxml2_oracle as oracle
+from tests.grid_oracle import iter_elements
 from tests.test_libxml2_corpus import ser
 
 REPO = Path(__file__).resolve().parents[1]
@@ -43,13 +49,18 @@ FIXTURE_TABLE = (
 )
 
 
+def children(node_p) -> list:
+    """``_tree.children`` of the element or document at ``node_p``."""
+    return binding._tree.children(ctypes.cast(node_p, ctypes.c_void_p).value)
+
+
 def test_fixture_converts_to_the_goldens():
     """Attributes (duplicates, entities, valueless), entities, a comment,
     PIs with and without content, ``<script>`` CDATA and a 255-deep chain,
-    through both entry points: one selected table, and the whole document."""
+    converted from an element (the body) and from the whole document."""
     with binding.document(FIXTURE) as doc:
-        [table] = binding.query(doc, TOP_LEVEL_TABLES)
-        assert ser(binding.to_node(table)) == FIXTURE_TABLE
+        [body] = binding.query(doc, "//body")
+        assert [ser(node) for node in children(body)] == [FIXTURE_TABLE]
     root, _ = parse_html(FIXTURE)
     assert ser(oracle.unwrap(root)) == f"#document[{FIXTURE_TABLE}]"
 
@@ -98,7 +109,7 @@ def test_adjacent_text_runs_merge():
             lib.xmlNewDocText(doc, b"\xc3\xa9"),
         ]:
             lib.xmlAddChild(td, child)
-        node = binding.to_node(ctypes.cast(td, binding._node_p))
+        [node] = children(doc)
         assert ser(node) == "td(id='first' nowrap='')[#c'c' 'bc' b[] 'dé']"
         assert [type(c) for c in node.children] == [htmldom.Node, str, htmldom.Node, str]
     finally:
@@ -106,7 +117,7 @@ def test_adjacent_text_runs_merge():
 
 
 def test_conversion_does_not_leak():
-    """Converting one table 20,000 times, each tree dropped, grows traced
+    """Converting a one-table body 20,000 times, each tree dropped, grows traced
     memory by under 1 MB, and leaves the shared empties' reference counts
     where they were."""
     html = (
@@ -115,15 +126,15 @@ def test_conversion_does_not_leak():
     )
     refs = sys.getrefcount(htmldom._EMPTY_ATTRS), sys.getrefcount(htmldom._EMPTY_CHILDREN)
     with binding.document(html) as doc:
-        [table] = binding.query(doc, TOP_LEVEL_TABLES)
+        [body] = binding.query(doc, "//body")
         for _ in range(100):
-            binding.to_node(table)
+            children(body)
         gc.collect()
         tracemalloc.start()
         try:
             before = tracemalloc.get_traced_memory()[0]
             for _ in range(20_000):
-                binding.to_node(table)
+                children(body)
             gc.collect()
             grown = tracemalloc.get_traced_memory()[0] - before
         finally:
@@ -145,13 +156,13 @@ def test_attribute_loop_is_linear():
 
     def convert_s(n_attrs: int) -> float:
         with binding.document(_img_table(n_attrs)) as doc:
-            [table] = binding.query(doc, TOP_LEVEL_TABLES)
-            [img] = [e for e in binding.to_node(table).iter_elements() if e.tag == "img"]
+            [body] = binding.query(doc, "//body")
+            [img] = [e for e in iter_elements(children(body)[0]) if e.tag == "img"]
             assert len(img.attrs) == n_attrs
             best = float("inf")
             for _ in range(5):
                 t = time.perf_counter()
-                binding.to_node(table)
+                children(body)
                 best = min(best, time.perf_counter() - t)
             return best
 
@@ -160,12 +171,12 @@ def test_attribute_loop_is_linear():
 
 def test_compiled_walker_needs_a_compiler(tmp_path):
     """With the compiler pointed at a missing binary and an empty build
-    cache, importing the package fails with an ImportError that names the
+    cache, importing the kernel fails with an ImportError that names the
     compiler."""
     code = (
         "import sysconfig\n"
         "sysconfig.get_config_vars()['CC'] = '/nonexistent/bin/cc'\n"
-        "import html_table_spark\n"
+        "import html_table_spark.semantics\n"
     )
     env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache")}
     proc = subprocess.run([sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True)
@@ -203,3 +214,19 @@ def test_walker_builds_from_the_py_files_zip(tmp_path):
     assert proc.stdout.strip() == "ok [['ab', 'c']]"
     assert [p.name.startswith("_tree-") for p in (cache / "html_table_spark").iterdir()] == [True]
 
+
+
+def test_tree_c_compiles_without_warnings(tmp_path):
+    """``_tree.c`` builds with sysconfig's compiler under ``-Wall -Wextra
+    -Werror`` against ``Python.h`` (the import builds it with ``-O2`` only,
+    which hides warnings)."""
+    cc = shlex.split(sysconfig.get_config_var("CC") or "cc")
+    if shutil.which(cc[0]) is None:
+        pytest.skip(f"no C compiler: {cc[0]!r} is not on PATH")
+    cmd = [*cc, "-Wall", "-Wextra", "-Werror", "-O2", "-fPIC", "-c", "-I", sysconfig.get_paths()["include"]]
+    proc = subprocess.run(
+        [*cmd, str(REPO / "html_table_spark" / "_tree.c"), "-o", str(tmp_path / "_tree.o")],
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 0, proc.stderr

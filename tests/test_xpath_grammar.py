@@ -15,6 +15,7 @@ from html_table_spark.config import ParserConfig
 from html_table_spark.errors import MSG_TABLE_NOT_FOUND, ParserError, msg_not_a_table
 from html_table_spark.htmldom import COMMENT, PI, parse_html
 from html_table_spark.semantics import parse_document
+from tests.grid_oracle import iter_elements
 
 
 def select(html: str, expr: str) -> str:
@@ -123,7 +124,7 @@ def _vocabulary(html: str) -> tuple[list[str], list[str]]:
     names, values = {"", "xml"}, {"", "http://www.w3.org/XML/1998/namespace"}
     root, _ = parse_html(html)
     values.add(root.text_content())
-    for node in root.iter_elements():
+    for node in iter_elements(root):
         names.add(node.tag)
         values.add(node.text_content())
         names.update(node.attrs)
