@@ -6,9 +6,12 @@ The reference parses with PHP ``DOMDocument::loadHTML`` under
 libxml2's ``htmlReadMemory`` with RECOVER|NOERROR|NOWARNING, and selects
 its table with ``DOMXPath``, which is libxml2's XPath. This module makes
 the same calls on the installed ``libxml2.so.2`` over ctypes. The rest runs
-in C, ``_tree.c``, one call each: :func:`table` reads a selected table's
-caption, header and rows, and :func:`parse` converts a whole document to
-``htmldom.Node`` objects under these rules:
+in C, ``_tree.c``, one call each: :func:`top_level_tables` finds a
+document's outermost tables (what ``//table[not(ancestor::table)]``
+selects), :func:`table` reads a selected table's caption, header and rows,
+into Python objects or into a :class:`Builder` that encodes them as Arrow
+buffers, and :func:`parse` converts a whole document to ``htmldom.Node``
+objects under these rules:
 
 - text and CDATA become ``str`` children, adjacent runs merged, an empty
   run dropped unless it merges;
@@ -19,6 +22,9 @@ caption, header and rows, and :func:`parse` converts a whole document to
 - names and content are decoded as UTF-8 with ``replace``;
 - the DTD node libxml2 adds is dropped.
 
+Nodes are passed around as their addresses (ints), which live as long as
+their document.
+
 The struct layouts read here and in ``_tree.c`` are libxml2 2.9's
 (``tree.h``, ``xpath.h``), and 2.9's HTML tokenizer is the one the
 reference's PHP 8.2 links, so importing this module fails unless the
@@ -26,9 +32,10 @@ library is 2.9.x. ``_tree.c`` is compiled on first import with
 ``sysconfig``'s C compiler against ``Python.h`` (no libxml2 headers, no
 link step) into ``$XDG_CACHE_HOME/html_table_spark`` (default
 ``~/.cache/html_table_spark``), keyed by a hash of the source and the
-extension suffix; importing fails when it cannot be built. Executors need
-the same library, a C compiler and Python's headers: ``--py-files`` ships
-the source, nothing compiled.
+extension suffix; importing fails when it cannot be built. A build's mtime
+is refreshed whenever it is loaded, and each new build deletes all but the
+4 most recently used. Executors need the same library, a C compiler and
+Python's headers: ``--py-files`` ships the source, nothing compiled.
 
 ``HTML_PARSE_HUGE`` is not passed, as the reference does not pass it: libxml2
 then stops building the tree 256 elements deep, and drops what lies below.
@@ -130,6 +137,25 @@ def load(path: str | None):
 
 _lib = load(ctypes.util.find_library("xml2"))
 VERSION = _version(_lib)
+# builds kept in the cache: the loaded one and the 3 used before it
+_KEEP_BUILDS = 4
+
+
+def _prune(cache: str) -> None:
+    """Deletes all but the ``_KEEP_BUILDS`` most recently used builds in
+    ``cache``; another process may be pruning at the same time."""
+    builds = []
+    for entry in os.scandir(cache):
+        if entry.name.startswith("_tree-") and entry.is_file():
+            try:
+                builds.append((entry.stat().st_mtime, entry.path))
+            except FileNotFoundError:
+                pass
+    for _, path in sorted(builds, reverse=True)[_KEEP_BUILDS:]:
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass
 
 
 def build_tree_module():
@@ -137,7 +163,7 @@ def build_tree_module():
     naming the compiler when it cannot be built. The source is read as a
     package resource, so this works from a ``--py-files`` zip too. Each
     build lands under a temporary name and is renamed into place, so
-    workers that build at once do not race."""
+    workers that build at once do not race; then the stale builds go."""
     name = f"{__package__}._tree"
     source = importlib.resources.files(__package__).joinpath("_tree.c").read_bytes()
     suffix = sysconfig.get_config_var("EXT_SUFFIX")
@@ -157,8 +183,14 @@ def build_tree_module():
                 if proc.returncode:
                     raise ImportError(f"cannot build {name} with {cc!r}: {proc.stderr.strip()[-2000:]}")
                 os.replace(out, path)
+            _prune(cache)
         except OSError as exc:
             raise ImportError(f"cannot build {name} with {cc!r} in {cache}: {exc}") from exc
+    else:
+        try:
+            os.utime(path)  # marks it used, for _prune
+        except OSError:
+            pass
     spec = importlib.util.spec_from_file_location(name, path)
     module = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(module)
@@ -167,6 +199,10 @@ def build_tree_module():
 
 
 _tree = build_tree_module()
+# Builder(): EXTRACTED_SCHEMA rows in C buffers (``_tree.c``): start(doc_id)
+# per document, table(..., out=builder) then add() or error() per table,
+# empty() for a document without tables, flush() per output batch
+Builder = _tree.Builder
 
 
 @contextmanager
@@ -215,8 +251,8 @@ def _compiled(expression: str):
 def _evaluate(doc, comp) -> list | None:
     """The node set ``comp`` selects in ``doc``, in libxml2's order, with the
     document's root element as the context node (as ``DOMXPath::query``
-    sets it): a pointer per element, None per node of any other kind; [] for
-    a scalar result, None when evaluation fails."""
+    sets it): an address per element, None per node of any other kind; []
+    for a scalar result, None when evaluation fails."""
     ctx = _lib.xmlXPathNewContext(doc)
     obj = None
     try:
@@ -230,11 +266,8 @@ def _evaluate(doc, comp) -> list | None:
         nodeset = result.nodesetval.contents
         # kinds are read now: namespace entries are copies freed with the
         # node set; elements live as long as ``doc``
-        out = []
-        for address in nodeset.nodeTab[: nodeset.nodeNr]:
-            node_p = ctypes.cast(address, _node_p)
-            out.append(node_p if node_p.contents.type == _ELEMENT else None)
-        return out
+        addresses = nodeset.nodeTab[: nodeset.nodeNr]
+        return [a if ctypes.cast(a, _node_p).contents.type == _ELEMENT else None for a in addresses]
     finally:
         if obj:
             _lib.xmlXPathFreeObject(obj)
@@ -242,10 +275,10 @@ def _evaluate(doc, comp) -> list | None:
 
 
 def query(doc, expression: str) -> list:
-    """What ``expression`` selects in ``doc``: a pointer per element, None
+    """What ``expression`` selects in ``doc``: an address per element, None
     per node of any other kind (attribute, text, comment, PI, namespace,
     document); [] when it selects none, is scalar-valued or fails to
-    evaluate. The pointers live as long as ``doc``."""
+    evaluate."""
     with _compiled(expression) as comp:
         if not doc or not comp:
             return []
@@ -266,15 +299,24 @@ def validate(expression: str) -> None:
     raise ParserError(msg_invalid_xpath(expression))
 
 
-def element_name(node_p) -> str:
-    """The tag of the element at ``node_p``."""
-    return node_p.contents.name.decode("utf-8", "replace")
+def element_name(address: int) -> str:
+    """The tag of the element at ``address``."""
+    return ctypes.cast(address, _node_p).contents.name.decode("utf-8", "replace")
 
 
-def table(node_p, section: str | None, offset: int, sections: tuple[str, ...], media: bool) -> tuple:
-    """``_tree.table`` for the table element at ``node_p``: its caption,
-    header row (``section``, ``offset``; none when section is None) and rows."""
-    return _tree.table(ctypes.addressof(node_p.contents), section, offset, sections, media)
+def top_level_tables(doc) -> list[int]:
+    """The addresses of ``doc``'s tables with no table ancestor, in document
+    order: what ``//table[not(ancestor::table)]`` selects. Nested tables
+    are part of their outer cell's text, not tables of their own."""
+    return _tree.top_level_tables(ctypes.addressof(doc.contents)) if doc else []
+
+
+# table(address, section, offset, sections, media, projection=(), out=None)
+#   -> (caption, header, rows) for the table element at address: its
+#   caption, header row (section, offset; none when section is None) and
+#   rows, projected through the user header's (offset, name) pairs; rows is
+#   None when out is a Builder, which holds them for its add()
+table = _tree.table
 
 
 def parse(html: str) -> tuple[Node, list[str]]:

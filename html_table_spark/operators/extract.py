@@ -11,7 +11,12 @@ tables, a UDTF-shaped fan-out).  There is **no per-row Python UDF** anywhere
 
 One stage, one ``mapInArrow`` (:func:`make_arrow_extractor`), one output
 row shape: ``(doc_id, html)`` in, ``EXTRACTED_SCHEMA`` rows out, every
-document parsed whole.
+document parsed whole. The rows never exist as Python objects: the kernel
+(``semantics.extract_document``) reads each table's grid in C into a
+``libxml2.Builder``, which encodes the spans and the other columns straight
+into growable C buffers, and each output batch wraps those buffers with
+``pa.Array.from_buffers``. Per table, Python touches only the header names
+and caption (precedence, trim, validation).
 
 The extraction config is a small frozen dataclass captured in the closure —
 pickled once per task, never re-validated per document.
@@ -33,9 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import libxml2
 from ..config import ParserConfig
-from ..semantics import parse_document
-from ..spans import encode_table_flat
+from ..semantics import extract_document
 from ..sources.documents import EXTRACTED_SCHEMA
 
 # output batch bounds: rows, and approx bytes of span text (Arrow string
@@ -44,47 +49,36 @@ _FLUSH_ROWS = 4096
 _FLUSH_BYTES = 256 * 1024 * 1024
 
 _ARROW_OUT = to_arrow_schema(EXTRACTED_SCHEMA)
-_ARROW_SPAN_FIELDS = list(_ARROW_OUT.field("spans").type.value_type)
 
 
 def html_reassembly_col(spans_col: str = "spans"):
     """JVM-side twin of ``spans.doc_spans_to_html``: text spans with
     non-null text, ordered by (offset, original span position) — null
     offsets sort as 0 and ties keep span order, exactly the Python
-    reference's stable sort — concatenated into one HTML string.
+    reference's stable sort — concatenated into one HTML string; a null or
+    empty span array gives ''.
 
-    Doing the reassembly in the JVM (round-3 Arrow-copy reduction) means
-    the Python boundary carries ONE string column per document instead of
-    the full span struct array: the kind/media_ref/offset child arrays and
-    every media span stop crossing the JVM↔Python socket entirely, and the
-    worker no longer materializes four ``to_pylist`` copies per batch just
-    to re-join them. Null/empty span rows coalesce to ''.
+    Doing the reassembly in the JVM means the Python boundary carries ONE
+    string column per document instead of the span struct array: the
+    kind/media_ref/offset child arrays and every media span never cross
+    the JVM↔Python socket.
 
-    Expression shape (round-3 serial-planning diet): ONE lambda and a
-    comparator-FREE ``array_sort``. Structs sort field-lexicographically,
-    so ``struct(o, i, t)`` under the default ordering IS the stable
-    (offset, position) sort — ``i`` is unique per array, so the ``t``
-    field is never compared. Non-text / null-text spans keep a NULL ``t``
-    instead of being pre-filtered: ``array_join`` skips null elements, so
-    the filter rides the join for free, and the sorted ``t`` column comes
-    out via lambda-free ``getField``. Every lambda costs repeated
-    LambdaFunction resolution on EACH analyzer pass over the plan (the
-    extraction pipeline analyzes this subtree ~10 times during
-    construction) and an interpreted per-element call at runtime; the
-    round-2 comparator variant additionally paid an interpreted lambda per
-    COMPARISON (O(n log n) per row)."""
-    indexed = F.transform(
-        spans_col,
-        lambda s, i: F.struct(
-            F.coalesce(s["offset"], F.lit(0)).alias("o"),
-            i.alias("i"),
-            F.when(
-                (s["kind"] == F.lit("text")) & s["text"].isNotNull(), s["text"]
-            ).alias("t"),
-        ),
+    One SQL expression, parsed once: building it from ``F`` calls costs a
+    Py4J round trip per call (about 15), serial driver time in every
+    plan. It has one lambda and a comparator-free ``array_sort``: structs
+    sort field by field, so ``(o, i, t)`` under the default ordering is the
+    stable (offset, position) sort (``i`` is unique per array, so ``t`` is
+    never compared). A span that is not text, or has null text, keeps a
+    null ``t`` rather than being filtered out: ``array_join`` skips nulls,
+    so the filter rides the join, and the sorted ``t`` values come out as a
+    lambda-free field access. Each lambda is resolved again on every
+    analyzer pass and called per element at runtime; a comparator would
+    add a call per comparison."""
+    return F.expr(
+        f"coalesce(array_join(array_sort(transform(`{spans_col}`, (s, i) -> struct("
+        "coalesce(s.offset, 0) AS o, i AS i, "
+        "CASE WHEN s.kind = 'text' AND s.text IS NOT NULL THEN s.text END AS t))).t, ''), '')"
     )
-    joined = F.array_join(F.array_sort(indexed).getField("t"), "")
-    return F.coalesce(joined, F.lit(""))
 
 
 def make_arrow_extractor(config: ParserConfig):
@@ -99,9 +93,9 @@ def make_arrow_extractor(config: ParserConfig):
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else -1
         started = time.monotonic()
-        # the kernel's results (lists of Cell tuples) are acyclic —
+        # the kernel's Python objects (a few per table) are acyclic —
         # refcounting frees them; CPython's cyclic GC otherwise triggers
-        # constantly on the container allocations of a batch. No
+        # on the container allocations of a batch. No
         # gc.collect() at the end: there is no cycle for it to find, it was
         # most of the operator's own per-task cost (patch_zipimport in
         # __init__.py), and the automatic collector resumes once GC is
@@ -119,54 +113,19 @@ def make_arrow_extractor(config: ParserConfig):
                 gc.enable()
 
     def _run(part_id: int, started: float, batches):
-        def new_buffers():
-            return {
-                "doc_id": [], "table_idx": [], "caption": [], "header": [],
-                "row_lens": [], "n_rows": [], "n_cells": [], "status": [],
-                "error_msg": [],
-                "span_offsets": [0],
-                "sk": [], "st": [], "sr": [], "so": [],
-            }
-
-        buf = new_buffers()
+        # libxml2.Builder, not the class itself: the closure is pickled, and
+        # a C type outside an importable module would pickle by value
+        builder = libxml2.Builder()
         buf_bytes = 0  # approx bytes of span text buffered
 
         def flush() -> pa.RecordBatch:
-            nonlocal buf, buf_bytes
+            nonlocal buf_bytes
             buf_bytes = 0
-            n = len(buf["doc_id"])
+            n = builder.rows
             wall = (time.monotonic() - started) * 1000.0
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(buf["sk"], pa.string()),
-                    pa.array(buf["st"], pa.string()),
-                    pa.array(buf["sr"], pa.string()),
-                    pa.array(buf["so"], pa.int32()),
-                ],
-                fields=_ARROW_SPAN_FIELDS,
-            )
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(buf["span_offsets"], pa.int32()), struct
-            )
-            batch = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(buf["doc_id"], pa.string()),
-                    pa.array(buf["table_idx"], pa.int32()),
-                    pa.array(buf["caption"], pa.string()),
-                    pa.array(buf["header"], pa.list_(pa.string())),
-                    spans_arr,
-                    pa.array(buf["row_lens"], pa.list_(pa.int32())),
-                    pa.array(buf["n_rows"], pa.int32()),
-                    pa.array(buf["n_cells"], pa.int32()),
-                    pa.array(buf["status"], pa.string()),
-                    pa.array(buf["error_msg"], pa.string()),
-                    pa.array([part_id] * n, pa.int32()),
-                    pa.array([wall] * n, pa.float64()),
-                ],
-                schema=_ARROW_OUT,
-            )
-            buf = new_buffers()
-            return batch
+            columns = [_array(field.type, spec) for field, spec in zip(_ARROW_OUT, builder.flush())]
+            columns += [pa.array([part_id] * n, pa.int32()), pa.array([wall] * n, pa.float64())]
+            return pa.RecordBatch.from_arrays(columns, schema=_ARROW_OUT)
 
         for batch in batches:
             doc_ids = batch.column("doc_id").to_pylist()
@@ -174,40 +133,38 @@ def make_arrow_extractor(config: ParserConfig):
             # column crosses Arrow, already filtered/ordered/joined
             htmls = batch.column("html").to_pylist()
             for doc_id, html in zip(doc_ids, htmls):
-                results = parse_document(html, config)
-                if not results and config.select_all_tables:
+                rows = builder.rows
+                builder.start(doc_id)
+                extract_document(html, config, builder)
+                if builder.rows == rows and config.select_all_tables:
                     # completion marker: a doc with zero tables must still be
                     # recorded, or snapshot-resume would reprocess it forever
                     # (filter table_idx >= 0 for real tables)
-                    buf["doc_id"].append(doc_id)
-                    buf["table_idx"].append(-1)
-                    buf["caption"].append(None)
-                    buf["header"].append([])
-                    buf["row_lens"].append([])
-                    buf["n_rows"].append(0)
-                    buf["n_cells"].append(0)
-                    buf["status"].append("ok")
-                    buf["error_msg"].append(None)
-                    buf["span_offsets"].append(len(buf["sk"]))
-                for table in results:
-                    buf["doc_id"].append(doc_id)
-                    buf["table_idx"].append(table.table_idx)
-                    buf["caption"].append(table.caption)
-                    buf["header"].append(table.header)
-                    buf["row_lens"].append([len(r) for r in table.rows])
-                    buf["n_rows"].append(table.n_rows)
-                    buf["n_cells"].append(table.n_cells)
-                    buf["status"].append(table.status)
-                    buf["error_msg"].append(table.error_msg)
-                    encode_table_flat(table, buf["sk"], buf["st"], buf["sr"], buf["so"])
-                    buf["span_offsets"].append(len(buf["sk"]))
+                    builder.empty()
                 buf_bytes += len(html)  # upper bound on this doc's span text
-                if len(buf["doc_id"]) >= _FLUSH_ROWS or buf_bytes >= _FLUSH_BYTES:
+                if builder.rows >= _FLUSH_ROWS or buf_bytes >= _FLUSH_BYTES:
                     yield flush()
-        if buf["doc_id"]:
+        if builder.rows:
             yield flush()
 
     return extract_batches
+
+
+def _array(type_: pa.DataType, spec) -> pa.Array:
+    """One column of a ``Builder.flush()``: its ``(length, null_count,
+    buffers, children)`` over the builder's bytes, children alike."""
+    length, nulls, buffers, children = spec
+    if pa.types.is_list(type_):
+        child_types = [type_.value_type]
+    else:
+        child_types = [field.type for field in type_] if pa.types.is_struct(type_) else []
+    return pa.Array.from_buffers(
+        type_,
+        length,
+        [None if b is None else pa.py_buffer(b) for b in buffers],
+        nulls,
+        children=[_array(t, c) for t, c in zip(child_types, children)] or None,
+    )
 
 
 def extract_tables(

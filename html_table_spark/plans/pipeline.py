@@ -47,12 +47,13 @@ def plan_extraction(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """The one extraction pass, lazy: ``documents(doc_id, spans)`` →
-    ``EXTRACTED_SCHEMA`` rows. Documents are extracted on the scan's
-    partitions unless they can keep fewer than half of ``num_partitions``
-    (default ``spark.sql.shuffle.partitions``) tasks busy
+    ``EXTRACTED_SCHEMA`` rows. One select reassembles each document's HTML
+    on the scan's partitions, where the documents are extracted unless
+    they can keep fewer than half of ``num_partitions`` (default
+    ``spark.sql.shuffle.partitions``) tasks busy
     (:func:`~html_table_spark.operators.util.scan_parallelism`: a
     one-row-group file fills one split however many it is cut into), when
-    they take a salted repartition first.
+    the (doc_id, html) rows take a salted repartition first.
 
     Plan construction is deliberately terse: every intermediate Dataset
     costs a full Catalyst analyzer pass over the whole subtree, serial
@@ -61,13 +62,10 @@ def plan_extraction(
     if num_partitions is None:
         spark = documents.sparkSession
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    source = documents.select("doc_id", "spans")
+    source = documents.select("doc_id", html_reassembly_col("spans").alias("html"))
     if scan_parallelism(documents) < max(2, num_partitions // 2):
         source = salted(source, num_partitions)
-    return _extract_html(
-        source.select(F.col("doc_id"), html_reassembly_col("spans").alias("html")),
-        config,
-    )
+    return _extract_html(source, config)
 
 
 def run_extraction_concurrent(

@@ -19,9 +19,13 @@ semantics of the reference parser (bakame-php/html-table,
    contributes carries to the body (Parser.php:534).
 
 libxml2 parses and selects the tables; the grid, header row and caption
-lookup included, runs in C over libxml2's nodes, one ``_tree.table()`` call
-per selected table (``_tree.c``). This module picks the header by
-precedence, trims and validates an extracted one, and applies the rest.
+lookup and the user header's projection included, runs in C over
+libxml2's nodes, one ``_tree.table()`` call per selected table
+(``_tree.c``). This module picks the header by precedence, trims and
+validates an extracted one, and applies the default caption, once for both
+outputs: :func:`parse_document`'s ``ExtractedTable`` objects, and the
+Arrow operator's ``libxml2.Builder``, which keeps the grid in C and encodes
+it as output spans without a Python object per cell or span.
 
 Per-document failures return ``status='error'`` results with the reference's
 message semantics instead of raising — a raising UDF would kill the Spark
@@ -73,27 +77,31 @@ class ExtractedTable:
         return [[c.text if c is not None else None for c in row] for row in self.rows]
 
 
-# nested tables are part of their outer cell's text (nodeValue
-# flattening), not independent extraction units
-TOP_LEVEL_TABLES = "//table[not(ancestor::table)]"
+class _Tables(list):
+    """:func:`parse_document`'s output: each table as an ExtractedTable
+    (``libxml2.Builder`` takes the same calls)."""
+
+    def add(self, table_idx: int, caption, header: list[str], rows) -> None:
+        self.append(ExtractedTable(table_idx=table_idx, caption=caption, header=header, rows=rows))
+
+    def error(self, table_idx: int, msg: str) -> None:
+        self.append(ExtractedTable(table_idx=table_idx, status="error", error_msg=msg))
 
 
-def _extract_table(table_p, config: ParserConfig, table_idx: int) -> ExtractedTable:
-    """Steps 3-7 of the reference lifecycle (SURVEY.md §3.2) for one selected
-    table element: ``libxml2.table`` does the grid in C; here the header is
-    chosen by precedence (Parser.php:376-380), an extracted one trimmed and
-    validated, and the default caption applied."""
+def _extract_table(table: int, config: ParserConfig, table_idx: int, out) -> None:
+    """Steps 3-7 of the reference lifecycle (SURVEY.md §3.2) for the selected
+    table element at ``table``, added to ``out``: ``libxml2.table`` does the
+    grid in C; here the header is chosen by precedence (Parser.php:376-380),
+    an extracted one trimmed and validated, and the default caption
+    applied."""
     section, offset = config.table_header_row
     if config.table_header or config.ignore_table_header:
         section = None
     caption, header, rows = libxml2.table(
-        table_p, section, offset, config.included_sections, config.emit_media_spans
+        table, section, offset, config.included_sections, config.emit_media_spans, config.table_header, out
     )
     if config.table_header:
-        # project through the user's (sparse, reordering) offsets
         header = [name for _, name in config.table_header]
-        offsets = [off for off, _ in config.table_header]
-        rows = [[row[off] if 0 <= off < len(row) else None for off in offsets] for row in rows]
     elif header:
         header = [name.strip(HEADER_TRIM_CHARSET) for name in header]
         # extracted headers are re-validated for duplicates (Parser.php:482);
@@ -101,9 +109,8 @@ def _extract_table(table_p, config: ParserConfig, table_idx: int) -> ExtractedTa
         try:
             validate_header(header)
         except ParserError as exc:
-            return ExtractedTable(table_idx=table_idx, status="error", error_msg=str(exc))
-    caption = config.caption if caption is None else caption
-    return ExtractedTable(table_idx=table_idx, caption=caption, header=header, rows=rows)
+            return out.error(table_idx, str(exc))
+    out.add(table_idx, config.caption if caption is None else caption, header, rows)
 
 
 def parse_document(html: str, config: ParserConfig) -> list[ExtractedTable]:
@@ -116,21 +123,26 @@ def parse_document(html: str, config: ParserConfig) -> list[ExtractedTable]:
     ``select_all_tables`` mode (graft extension for the interleaved corpus):
     one result per top-level table, ``table_idx`` = 0-based ordinal; a
     document with no tables yields no results.
-
-    libxml2 parses and selects; ``_tree.c`` reads each selected table.
     """
+    tables = _Tables()
+    extract_document(html, config, tables)
+    return list(tables)
+
+
+def extract_document(html: str, config: ParserConfig, out) -> None:
+    """:func:`parse_document`'s tables added to ``out``: a ``_Tables`` or a
+    ``libxml2.Builder``. libxml2 parses and selects; ``_tree.c`` reads each
+    selected table."""
     parse_errors: list[str] | None = [] if config.fail_on_xml_errors else None
     with libxml2.document(html, parse_errors) as doc:
         if parse_errors:
             # reference: ParserError::dueToLibXmlErrors (Parser.php:450-453)
-            msg = "\n".join(f"parse error: {e}" for e in parse_errors)
-            return [ExtractedTable(table_idx=0, status="error", error_msg=msg)]
+            return out.error(0, "\n".join(f"parse error: {e}" for e in parse_errors))
 
         if config.select_all_tables:
-            return [
-                _extract_table(table, config, i)
-                for i, table in enumerate(libxml2.query(doc, TOP_LEVEL_TABLES))
-            ]
+            for i, table in enumerate(libxml2.top_level_tables(doc)):
+                _extract_table(table, config, i, out)
+            return
 
         selected = libxml2.query(doc, config.table_expression)
         # the reference takes ->item(0) and gates on `instanceof DOMElement`
@@ -138,12 +150,8 @@ def parse_document(html: str, config: ParserConfig) -> list[ExtractedTable]:
         # comment, PI, namespace or the document node (None) is not found
         first = selected[0] if selected else None
         if first is None:
-            return [
-                ExtractedTable(table_idx=0, status="error", error_msg=MSG_TABLE_NOT_FOUND)
-            ]
+            return out.error(0, MSG_TABLE_NOT_FOUND)
         tag = libxml2.element_name(first)
         if tag != "table":
-            return [
-                ExtractedTable(table_idx=0, status="error", error_msg=msg_not_a_table(tag))
-            ]
-        return [_extract_table(first, config, 0)]
+            return out.error(0, msg_not_a_table(tag))
+        _extract_table(first, config, 0, out)

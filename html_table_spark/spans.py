@@ -63,37 +63,17 @@ def html_to_doc_spans(html: str, media_refs: list[str] | None = None) -> list[di
 
 
 def encode_table_spans(table: ExtractedTable) -> list[dict]:
-    """Extracted table → output span sequence (FIXTURES.md output schema).
-
-    - one ``caption`` span when a caption exists (extracted or config default);
-    - one ``header`` span per resolved header cell, in order;
-    - per body row in extraction order, one ``cell`` span per grid-expanded
-      cell (colspan/rowspan duplicates repeat; null-filled combine slots emit
-      a cell span with null text), each immediately followed by ``media``
-      spans for refs inside that cell copy, in document order.
-    """
-    if table.status != "ok":
-        return []
-    spans: list[dict] = []
-
-    def push(kind: str, text: str | None, media_ref: str | None = None) -> None:
-        spans.append(
-            {"kind": kind, "text": text, "media_ref": media_ref, "offset": len(spans)}
-        )
-
-    if table.caption is not None:
-        push(KIND_CAPTION, table.caption)
-    for name in table.header:
-        push(KIND_HEADER, name)
-    for row in table.rows:
-        for cell in row:
-            if cell is None:
-                push(KIND_CELL, None)
-            else:
-                push(KIND_CELL, cell.text)
-                for ref in cell.media:
-                    push(KIND_MEDIA, "", ref)
-    return spans
+    """Extracted table → output span sequence (FIXTURES.md output schema),
+    one dict per span, as :func:`encode_table_flat` encodes it."""
+    kind: list = []
+    text: list = []
+    ref: list = []
+    off: list = []
+    encode_table_flat(table, kind, text, ref, off)
+    return [
+        {"kind": k, "text": t, "media_ref": r, "offset": o}
+        for k, t, r, o in zip(kind, text, ref, off)
+    ]
 
 
 def encode_table_flat(
@@ -103,9 +83,19 @@ def encode_table_flat(
     out_ref: list,
     out_off: list,
 ) -> int:
-    """Flat-buffer variant of :func:`encode_table_spans` for the Arrow hot
-    path: appends the span columns in place (no per-span dict objects) and
-    returns the number of spans emitted. Encoding is identical."""
+    """Extracted table → output span sequence (FIXTURES.md output schema),
+    appended in place as four columns; returns the number of spans. An
+    error table has none; otherwise:
+
+    - one ``caption`` span when a caption exists (extracted or config default);
+    - one ``header`` span per resolved header cell, in order;
+    - per body row in extraction order, one ``cell`` span per grid-expanded
+      cell (colspan/rowspan duplicates repeat; null-filled combine slots emit
+      a cell span with null text), each immediately followed by ``media``
+      spans (text ``""``) for refs inside that cell copy, in document order.
+
+    The Arrow operator encodes the same spans in C (``_tree.c``'s
+    ``Builder.add``); this is its oracle."""
     if table.status != "ok":
         return 0
     n = 0

@@ -12,7 +12,6 @@ only. :func:`extract_table` takes a table ``Node`` from
 
 from __future__ import annotations
 
-import ctypes
 from unittest import mock
 
 from html_table_spark import libxml2, semantics
@@ -27,6 +26,9 @@ CELL_TAGS = ("th", "td")  # Parser.php:48
 MEDIA_TAGS = frozenset({"img", "object", "embed", "video", "audio", "source", "iframe"})
 MEDIA_REF_ATTR = "data-media-ref"
 _DIGITS = frozenset("0123456789")
+# the selection of all-tables mode, which ``libxml2.top_level_tables`` walks
+# in C: nested tables are part of their outer cell's text
+TOP_LEVEL_TABLES = "//table[not(ancestor::table)]"
 
 
 def php_int_cast(value: str) -> int:
@@ -264,12 +266,12 @@ def extract_table(table_node: Node, config: ParserConfig, table_idx: int) -> Ext
     return ExtractedTable(table_idx=table_idx, caption=caption, header=header_names, rows=rows)
 
 
-def table_node(table_p) -> Node:
-    """The table element at ``table_p`` (a ``libxml2.query`` pointer) as a
+def table_node(address: int) -> Node:
+    """The table element at ``address`` (a ``libxml2.query`` result) as a
     Node, its subtree converted by ``_tree.children``; the grid reads none
     of the table's own attributes, so it has none."""
     table = Node(ELEMENT, tag="table")
-    table.children = libxml2._tree.children(ctypes.cast(table_p, ctypes.c_void_p).value)
+    table.children = libxml2._tree.children(address)
     return table
 
 
@@ -278,6 +280,6 @@ def parse_document(html: str, config: ParserConfig) -> list[ExtractedTable]:
     one: the same parse and selection, then :func:`extract_table` over each
     selected table converted to Nodes."""
     with mock.patch.object(
-        semantics, "_extract_table", lambda table_p, c, i: extract_table(table_node(table_p), c, i)
+        semantics, "_extract_table", lambda table, c, i, out: out.append(extract_table(table_node(table), c, i))
     ):
         return semantics.parse_document(html, config)

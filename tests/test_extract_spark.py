@@ -17,7 +17,7 @@ import pytest
 from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import fixture_documents, synthesize_documents
 from html_table_spark.fixtures import FIXTURES, f14_mega_doc_html
-from html_table_spark.operators.extract import extract_tables
+from html_table_spark.operators.extract import extract_tables, html_reassembly_col
 from html_table_spark.plans.pipeline import plan_extraction
 from html_table_spark.semantics import parse_document
 from html_table_spark.spans import doc_spans_to_html, encode_table_spans, spans_signature
@@ -141,7 +141,7 @@ def test_mega_doc_split_parity(spark, n_spans):
 def test_read_html_files_parsefile_parity(spark, tmp_path):
     """parseFile parity: raw .html files → documents schema → extraction."""
     from html_table_spark.config import ParserConfig
-    from html_table_spark.operators.extract import extract_tables
+    from html_table_spark.operators.extract import extract_tables, html_reassembly_col
     from html_table_spark.sources.documents import read_html_files
 
     (tmp_path / "a.html").write_text(
@@ -165,7 +165,7 @@ def test_read_html_files_parsefile_parity(spark, tmp_path):
 
 def test_documents_from_html_strings(spark):
     from html_table_spark.config import ParserConfig
-    from html_table_spark.operators.extract import extract_tables
+    from html_table_spark.operators.extract import extract_tables, html_reassembly_col
     from html_table_spark.sources.documents import documents_from_html
 
     docs = documents_from_html(spark, ["<table><tr><td>v</td></tr></table>"], ["d1"])
@@ -260,6 +260,30 @@ def test_chunk_leg_parity_misnested_end_tag(spark):
     )
 
 
+def _span(kind, text, offset, media_ref=None):
+    return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
+
+
+# span arrays the JVM-side reassembly must put together as the Python one does
+REASSEMBLY_CASES = {
+    "null_offsets_sort_as_0": [_span("text", "b", 1), _span("text", "a", None), _span("text", "c", 2)],
+    "offset_ties_keep_span_order": [_span("text", "x", 1), _span("text", "y", 0), _span("text", "z", 1)],
+    "null_text": [_span("text", None, 0), _span("text", "<p>", 1)],
+    "media_with_text": [_span("media", "<img>", 0, "m1"), _span("text", "t", 1), _span(None, "n", 2)],
+    "empty": [],
+    "null": None,
+}
+
+
+def test_html_reassembly_col_equals_doc_spans_to_html(spark):
+    rows = [{"doc_id": name, "spans": spans} for name, spans in REASSEMBLY_CASES.items()]
+    got = dict(
+        _docs_df(spark, rows).select("doc_id", html_reassembly_col("spans").alias("html")).collect()
+    )
+    assert got == {name: doc_spans_to_html(spans or []) for name, spans in REASSEMBLY_CASES.items()}
+    assert got["null"] == "" and got["offset_ties_keep_span_order"] == "yxz"
+
+
 def _html_batches(n_docs=3):
     for i in range(n_docs):
         yield pa.RecordBatch.from_pydict(
@@ -283,10 +307,10 @@ def test_extractor_re_enables_gc_however_it_stops(monkeypatch):
     out.close()
     assert gc.isenabled()
 
-    def kernel_fails(html, config):
+    def kernel_fails(html, config, out):
         raise RuntimeError("kernel failed")
 
-    monkeypatch.setattr(extract, "parse_document", kernel_fails)
+    monkeypatch.setattr(extract, "extract_document", kernel_fails)
     with pytest.raises(RuntimeError, match="kernel failed"):
         list(extract.make_arrow_extractor(config)(_html_batches()))
     assert gc.isenabled()

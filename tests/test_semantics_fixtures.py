@@ -7,8 +7,6 @@ specification, independent of the kernel's implementation.
 
 from __future__ import annotations
 
-import ctypes
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -40,7 +38,7 @@ from html_table_spark.fixtures import (
     f14_mega_doc_html,
 )
 from html_table_spark.htmldom import ELEMENT, Node
-from html_table_spark.semantics import TOP_LEVEL_TABLES, parse_document
+from html_table_spark.semantics import parse_document
 from html_table_spark.spans import encode_table_spans
 from tests import grid_oracle
 from tests.test_htmldom import _token
@@ -469,10 +467,6 @@ def _tables(inner):
 _table_soup = st.recursive(st.just(""), _tables, max_leaves=8)
 
 
-def _address(node_p) -> int:
-    return ctypes.cast(node_p, ctypes.c_void_p).value
-
-
 @settings(max_examples=300, deadline=None)
 @given(parts=st.lists(st.one_of(_table_soup, _token()), max_size=6))
 def test_header_row_and_caption_walk_equals_xpath(parts):
@@ -481,14 +475,14 @@ def test_header_row_and_caption_walk_equals_xpath(parts):
     (or ``caption``) descendants. The compiled grid reads the caption and
     header row the walk finds."""
     with libxml2.document("".join(parts)) as doc:
-        for k, table_p in enumerate(libxml2.query(doc, TOP_LEVEL_TABLES), 1):
+        for k, table_p in enumerate(libxml2.query(doc, grid_oracle.TOP_LEVEL_TABLES), 1):
             table = Node(ELEMENT, tag="table")
-            table.children = libxml2._tree.children(_address(table_p))
-            top = f"({TOP_LEVEL_TABLES})[{k}]"
+            table.children = libxml2._tree.children(table_p)
+            top = f"({grid_oracle.TOP_LEVEL_TABLES})[{k}]"
 
             def ordinal(expr: str, tag: str):
-                hits = [_address(p) for p in libxml2.query(doc, expr)]
-                nodes = [_address(p) for p in libxml2.query(doc, f"{top}//{tag}")]
+                hits = libxml2.query(doc, expr)
+                nodes = libxml2.query(doc, f"{top}//{tag}")
                 return nodes.index(hits[0]) if hits else None
 
             def walk_ordinal(node, tag: str):

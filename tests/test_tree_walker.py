@@ -215,6 +215,33 @@ def test_walker_builds_from_the_py_files_zip(tmp_path):
     assert [p.name.startswith("_tree-") for p in (cache / "html_table_spark").iterdir()] == [True]
 
 
+def test_new_build_prunes_stale_builds(tmp_path):
+    """A build into a cache that holds 6 older builds leaves at most 4
+    ``_tree-*`` files, the loaded one among them; a later import of the same
+    build refreshes its mtime and deletes nothing."""
+    cache = tmp_path / "cache" / "html_table_spark"
+    cache.mkdir(parents=True)
+    suffix = sysconfig.get_config_var("EXT_SUFFIX")
+    for k in range(6):
+        stale = cache / f"_tree-{k:016x}{suffix}"
+        stale.write_bytes(b"not a build")
+        os.utime(stale, (1_000_000 + k, 1_000_000 + k))
+    code = "from html_table_spark import libxml2\nprint(libxml2._tree.__file__)\n"
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache")}
+
+    def load() -> Path:
+        proc = subprocess.run([sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return Path(proc.stdout.strip())
+
+    loaded = load()
+    builds = sorted(cache.glob("_tree-*"))
+    assert loaded in builds and len(builds) <= 4, builds
+    os.utime(loaded, (1_000, 1_000))
+    assert load() == loaded
+    assert sorted(cache.glob("_tree-*")) == builds
+    assert loaded.stat().st_mtime > 1_000_000
+
 
 def test_tree_c_compiles_without_warnings(tmp_path):
     """``_tree.c`` builds with sysconfig's compiler under ``-Wall -Wextra
