@@ -187,26 +187,9 @@ def extract_tables(
 
     ``mega_cost_threshold`` and ``mega_policy`` are accepted and ignored
     (the benchmark harness still passes them): every document is parsed
-    whole, whatever its size.
+    whole, whatever its size. The plan is the pipeline's
+    (:func:`~html_table_spark.plans.pipeline.plan_extraction`).
     """
-    from .util import ensure_parallelism
+    from ..plans.pipeline import plan_extraction
 
-    config = config or ParserConfig()
-    # explicit pruning before the UDF stage, with the HTML reassembly done
-    # JVM-side: the Arrow boundary carries (doc_id, html) only — no span
-    # structs, no media spans (round-3 Arrow-copy reduction)
-    pruned = documents.select(
-        F.col("doc_id"), html_reassembly_col("spans").alias("html")
-    )
-    # a dimension-sized corpus arriving as one file = one partition would
-    # serialize the whole Arrow stage on a single Python worker. The full
-    # pipeline (plans/pipeline.py) manages partitioning itself.
-    return _extract_html(ensure_parallelism(pruned), config)
-
-
-def _extract_html(html_docs: DataFrame, config: ParserConfig) -> DataFrame:
-    """The one extraction ``mapInArrow`` stage: ``html_docs(doc_id, html)``
-    → extracted tables. The pipeline calls it on its already-reassembled
-    input (one reassembly subtree, no schema probe: every intermediate
-    Dataset costs a Catalyst analyzer pass)."""
-    return html_docs.mapInArrow(make_arrow_extractor(config), schema=EXTRACTED_SCHEMA)
+    return plan_extraction(documents, config)

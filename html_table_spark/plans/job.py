@@ -1,15 +1,19 @@
 """Cluster job entrypoint — ``spark-submit --py-files`` deployment.
 
-    spark-submit --master <cluster> \
+    spark-submit --master <master> \
         --py-files html_table_spark.zip \
         job.py --input <corpus parquet/iceberg> --output <sink root> \
-               [--mode all|single] [--partitions N]
+               [--mode all|single|maincontent|corpus] [--no-resume] [--format auto|warc]
 
-The session comes from ``session.get_spark``, the builder the tests and
-the benchmark use: spark-submit's ``--master`` and cluster conf win, and the
-job runs with the same Arrow batch caps and scan split sizes the benchmark
-measures.  Re-running the same command after a failure resumes from the
-last committed snapshot (anti-join on committed doc_ids).
+(``scripts/submit.sh`` packs the zip and runs this.) The session comes
+from ``session.get_spark``, the builder the tests and the benchmark use:
+spark-submit's ``--master`` and ``--conf`` win, and the job plans as the
+benchmark does: the same Arrow batch caps and scan split sizes, and a
+narrow corpus salted into as many partitions as the context has cores
+when the plan is built (``--conf spark.default.parallelism=N`` overrides
+that count).
+Re-running the same command after a failure resumes from the last
+committed snapshot (anti-join on committed doc_ids).
 """
 
 from __future__ import annotations
@@ -33,7 +37,6 @@ def main(argv: list[str] | None = None) -> dict:
                              "pipeline (block features + verdicts) instead of tables; "
                              "'corpus': training-corpus build (quality gate + exact "
                              "dedup + PII scrub) with the same snapshot commit")
-    parser.add_argument("--partitions", type=int, default=None)
     parser.add_argument("--no-resume", action="store_true")
     parser.add_argument("--format", choices=["auto", "warc"], default="auto",
                         help="'auto': parquet/iceberg documents table; 'warc': a "
@@ -70,14 +73,7 @@ def main(argv: list[str] | None = None) -> dict:
         print(json.dumps(manifest))
         return manifest
     config = ParserConfig().all_tables() if args.mode == "all" else ParserConfig()
-    manifest = run_job(
-        spark,
-        documents,
-        sink,
-        config,
-        resume=not args.no_resume,
-        num_partitions=args.partitions,
-    )
+    manifest = run_job(spark, documents, sink, config, resume=not args.no_resume)
     print(json.dumps(manifest))
     return manifest
 

@@ -23,8 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ParserConfig
-from ..operators.extract import _extract_html, html_reassembly_col
+from ..operators.extract import html_reassembly_col, make_arrow_extractor
 from ..operators.util import scan_parallelism
+from ..sources.documents import EXTRACTED_SCHEMA
 from ..sources.sinks import SnapshotSink
 
 
@@ -49,23 +50,28 @@ def plan_extraction(
     """The one extraction pass, lazy: ``documents(doc_id, spans)`` →
     ``EXTRACTED_SCHEMA`` rows. One select reassembles each document's HTML
     on the scan's partitions, where the documents are extracted unless
-    they can keep fewer than half of ``num_partitions`` (default
-    ``spark.sql.shuffle.partitions``) tasks busy
+    they can keep fewer than half of ``num_partitions`` tasks busy
     (:func:`~html_table_spark.operators.util.scan_parallelism`: a
     one-row-group file fills one split however many it is cut into), when
     the (doc_id, html) rows take a salted repartition first.
+    ``num_partitions`` defaults to the context's ``defaultParallelism`` as
+    the plan is built: a local master's cores, or the executor cores a
+    cluster has registered by then (``--conf spark.default.parallelism=N``
+    sets it).
 
     Plan construction is deliberately terse: every intermediate Dataset
     costs a full Catalyst analyzer pass over the whole subtree, serial
     driver time before any task runs."""
-    config = config or ParserConfig()
     if num_partitions is None:
-        spark = documents.sparkSession
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        num_partitions = documents.sparkSession.sparkContext.defaultParallelism
     source = documents.select("doc_id", html_reassembly_col("spans").alias("html"))
-    if scan_parallelism(documents) < max(2, num_partitions // 2):
+    # a streaming input passes through (.rdd is illegal on its plan): the
+    # trigger sizes its micro-batches (maxFilesPerTrigger)
+    if not documents.isStreaming and scan_parallelism(documents) < max(2, num_partitions // 2):
         source = salted(source, num_partitions)
-    return _extract_html(source, config)
+    return source.mapInArrow(
+        make_arrow_extractor(config or ParserConfig()), schema=EXTRACTED_SCHEMA
+    )
 
 
 def run_extraction_concurrent(

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # Arrow batches default to 10k rows; with multi-KB..MB HTML documents per
@@ -24,28 +25,24 @@ def get_spark(
     app_name: str = "html-table-spark", master: str | None = None
 ) -> SparkSession:
     """The one session builder, shared by tests, bench and the deployed job.
-    Local masters get ``max(8, cores)`` shuffle partitions.
 
-    Under spark-submit (``PYSPARK_GATEWAY_PORT`` set, no explicit
-    ``master``) the master is left to spark-submit's ``--master`` and the
-    session takes the cluster branch: no local-only confs, no fastdaemon."""
-    if not master and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        master = os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    # SPARK_GRAFT_CPUS pins the LOCAL core count; it must never demote a
-    # real cluster master to local mode
-    if cpus and master == "local[*]":
-        master = f"local[{cpus}]"
-    threads = None
-    if master and master.startswith("local["):
-        # match the core count in local mode; 'local[N,maxFailures]' and
-        # 'local[*]' are both legal master strings
-        inner = master[master.find("[") + 1 : master.find("]")]
-        t = inner.split(",")[0]
-        threads = (os.cpu_count() or 1) if t == "*" else max(1, int(t))
+    The master is ``master``, else spark-submit's ``--master`` (under
+    spark-submit: ``PYSPARK_GATEWAY_PORT`` set), else
+    ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` when unset). A local master,
+    ``submit.sh``'s own included, boots Python workers through
+    ``fastdaemon`` and sizes tasks from its ``defaultParallelism`` P
+    unless ``--conf`` (or spark-defaults.conf) holds the key. Any other
+    master keeps Spark's sizing: its executors register after the context
+    starts."""
     builder = SparkSession.builder.appName(app_name)
-    if master:
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
         builder = builder.master(master)
+    else:
+        # spark-submit's --master wins; read it only to choose the daemon.
+        # SparkConf holds the submitted values once the gateway is up.
+        SparkContext._ensure_initialized()
+        master = SparkConf().get("spark.master", "")
     builder = (
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -77,32 +74,17 @@ def get_spark(
         # UI off: it costs serial driver time per stage
         .config("spark.ui.enabled", "false")
     )
-    # cluster masters: leave Spark's own default / spark-submit conf
-    if threads is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(max(8, threads))
-        )
-        # Spark's file-split formula, split = min(maxPartitionBytes,
-        # max(openCostInBytes, totalBytes / minPartitionNum)): ≈2 tasks per
-        # core by bytes. Every Python task pays a fixed 55-80 core-ms
-        # (patch_zipimport in __init__.py), so more, smaller waves cost more than the
-        # straggler tail they trim: on 4 cores, seed-1 perfbench bulk went
-        # from 32 tasks (largest 1.46x the mean bytes) to 9 (1.22x), and
-        # skew from 19 tasks (2.85x) to 10 (1.58x, at most one mega doc
-        # each). A scan that keeps too few tasks busy, e.g. one file cut
-        # into byte ranges, is salted (operators.util.scan_parallelism).
-        # Cluster masters: leave to spark-submit conf.
-        builder = builder.config(
-            "spark.sql.files.minPartitionNum", str(2 * threads)
-        )
-        # Local masters: boot Python workers through fastdaemon so the
-        # zip-TOC invalidation patch is active from the FIRST task (the
+    local = master == "local" or master.startswith("local[")
+    if local:
+        # Boot Python workers through fastdaemon so the zip-TOC
+        # invalidation patch is active from the FIRST task (the
         # package-import hook in __init__ only catches a worker after its
         # first unpickle of our code). Measured on this host: 205 -> 68 ms
         # per Python task (identity mapInArrow, 256 tasks, local[16]).
-        # Cluster masters are left alone — the daemon module boots BEFORE
-        # --py-files are materialized, so there it must be shipped via an
-        # operator-managed PYTHONPATH instead (fastdaemon.py docstring).
+        # A core conf, fixed when the context starts, and local-only: a
+        # cluster's daemon boots BEFORE --py-files are materialized, so
+        # there it must be shipped via an operator-managed PYTHONPATH
+        # instead (fastdaemon.py docstring).
         repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         extra_pp = os.environ.get("PYTHONPATH", "")
         builder = builder.config(
@@ -111,4 +93,25 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             repo_root + (os.pathsep + extra_pp if extra_pp else ""),
         )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if local:
+        # A local context's P is its thread count from the start; a
+        # cluster's counts the executor cores registered so far (2 before
+        # any has), which would cap every shuffle of a large cluster.
+        # Spark's file-split formula, split = min(maxPartitionBytes,
+        # max(openCostInBytes, totalBytes / minPartitionNum)), gives ≈2
+        # tasks per core by bytes. Every Python task pays a fixed 55-80
+        # core-ms (patch_zipimport in __init__.py), so more, smaller waves
+        # cost more than the straggler tail they trim: on 4 cores, seed-1
+        # perfbench bulk went from 32 tasks (largest 1.46x the mean bytes)
+        # to 9 (1.22x), and skew from 19 tasks (2.85x) to 10 (1.58x, at
+        # most one mega doc each).
+        cores = spark.sparkContext.defaultParallelism
+        submitted_conf = spark.sparkContext.getConf()
+        for key, value in (
+            ("spark.sql.shuffle.partitions", max(8, cores)),
+            ("spark.sql.files.minPartitionNum", 2 * cores),
+        ):
+            if not submitted_conf.contains(key):
+                spark.conf.set(key, str(value))
+    return spark

@@ -44,10 +44,10 @@ SPAN_ARRAY_DDL = (
 EXTRACTED_SCHEMA = T.StructType(
     [
         # nullable: DOCUMENTS_SCHEMA declares doc_id non-null, but a
-        # foreign parquet writer can relax that, and the routing layer
-        # guarantees null-id docs ride the normal leg rather than vanish —
-        # a non-nullable output field here would NPE the whole stage in
-        # the JVM the moment such a doc's extraction row surfaces
+        # foreign parquet writer can relax that, and a null-id doc is
+        # extracted like any other rather than dropped — a non-nullable
+        # output field here would NPE the whole stage in the JVM the
+        # moment such a doc's extraction row surfaces
         T.StructField("doc_id", T.StringType(), nullable=True),
         T.StructField("table_idx", T.IntegerType(), nullable=False),
         T.StructField("caption", T.StringType()),

@@ -5,7 +5,7 @@ The reference is strictly batch (SURVEY.md §2.7) and the north rule's
 corpus (crawler output landing as files) is the natural streaming shape, so
 the same extraction operator is exposed as a streaming query:
 
-    readStream(parquet dir) → mapInPandas(extraction) → writeStream(parquet)
+    readStream(parquet dir) → mapInArrow(extraction) → writeStream(parquet)
 
 - exactly-once file sink via Spark's own checkpoint/WAL;
 - ``Trigger.AvailableNow`` drains the backlog then stops (used in tests and

@@ -27,12 +27,22 @@ for arg in "$@"; do
     fi
 done
 
-ZIP="$(mktemp -d)/html_table_spark.zip"
+# the zip's directory is removed on exit, once spark-submit has exited;
+# TERM/INT reach spark-submit, and the exit status is spark-submit's
+ZIP_DIR="$(mktemp -d)"
+trap 'rm -rf "$ZIP_DIR"' EXIT
+ZIP="$ZIP_DIR/html_table_spark.zip"
 python3 "$REPO/scripts/pack_py_files.py" "$ZIP"
 
-exec spark-submit \
+spark-submit \
     --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}" \
     --py-files "$ZIP" \
     ${SUBMIT_ARGS[@]+"${SUBMIT_ARGS[@]}"} \
     "$REPO/html_table_spark/plans/job.py" \
-    --input "$INPUT" --output "$OUTPUT" ${JOB_ARGS[@]+"${JOB_ARGS[@]}"}
+    --input "$INPUT" --output "$OUTPUT" ${JOB_ARGS[@]+"${JOB_ARGS[@]}"} &
+pid=$!
+trap 'kill -TERM "$pid" 2>/dev/null || true' TERM INT
+# a trapped signal ends the first wait early; the second returns
+# spark-submit's exit status, which set -e exits with
+wait "$pid" || true
+wait "$pid"

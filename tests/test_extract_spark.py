@@ -284,6 +284,24 @@ def test_html_reassembly_col_equals_doc_spans_to_html(spark):
     assert got["null"] == "" and got["offset_ties_keep_span_order"] == "yxz"
 
 
+def test_extract_tables_plans_as_the_pipeline(spark, tmp_path):
+    """One spreading rule: on a one-file corpus (one task's worth of scan)
+    ``extract_tables`` and ``plan_extraction`` both salt into the
+    context's ``defaultParallelism`` partitions and extract the same
+    rows."""
+    path = str(tmp_path / "one_file")
+    _docs_df(spark, synthesize_documents(n_docs=40, seed=13)).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) == 1
+    config = ParserConfig().all_tables()
+    via_operator = extract_tables(docs, config).drop("wall_ms")
+    via_pipeline = plan_extraction(docs, config).drop("wall_ms")
+    n = via_pipeline.rdd.getNumPartitions()
+    assert n == spark.sparkContext.defaultParallelism > 1
+    assert via_operator.rdd.getNumPartitions() == n
+    assert sorted(via_operator.collect(), key=repr) == sorted(via_pipeline.collect(), key=repr)
+
+
 def _html_batches(n_docs=3):
     for i in range(n_docs):
         yield pa.RecordBatch.from_pydict(

@@ -13,12 +13,19 @@ from html_table_spark.session import DEFAULT_ARROW_BATCH_BYTES, get_spark
 
 
 class _RecordingBuilder:
-    """Stands in for ``SparkSession.builder``: records master and confs."""
+    """Stands in for ``SparkSession.builder`` and the session it builds:
+    records the master, the builder confs and the runtime confs set once
+    the context runs. ``cores`` is the context's ``defaultParallelism``;
+    ``submitted`` is the SparkConf spark-submit hands the job (its
+    ``--master`` and ``--conf`` values)."""
 
-    def __init__(self, session=None):
-        self.session = session
+    def __init__(self):
+        self.session = None  # a real session to return, else a stand-in
         self.masters: list[str] = []
         self.confs: dict[str, str] = {}
+        self.runtime: dict[str, str] = {}
+        self.cores = 4
+        self.submitted: dict[str, str] = {}
 
     def appName(self, name):
         self.app = name
@@ -33,13 +40,27 @@ class _RecordingBuilder:
         return self
 
     def getOrCreate(self):
-        return self.session
+        if self.session is not None:
+            return self.session
+        conf = types.SimpleNamespace(contains=self.submitted.__contains__)
+        return types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(
+                defaultParallelism=self.cores, getConf=lambda: conf
+            ),
+            conf=types.SimpleNamespace(set=self.runtime.__setitem__),
+        )
 
 
 @pytest.fixture
 def recorder(monkeypatch):
     rec = _RecordingBuilder()
     monkeypatch.setattr(session_mod, "SparkSession", types.SimpleNamespace(builder=rec))
+    monkeypatch.setattr(
+        session_mod, "SparkConf", lambda: types.SimpleNamespace(get=rec.submitted.get)
+    )
+    monkeypatch.setattr(
+        session_mod, "SparkContext", types.SimpleNamespace(_ensure_initialized=lambda: None)
+    )
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
@@ -60,39 +81,79 @@ SHARED_CONFS = {
     "spark.ui.enabled": "false",
 }
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(session_mod.__file__)))
+DAEMON_CONFS = {
+    "spark.python.daemon.module": "html_table_spark.fastdaemon",
+    "spark.executorEnv.PYTHONPATH": REPO_ROOT,
+}
+
 
 def test_explicit_local_master_confs(recorder):
     get_spark("t", master="local[4]")
     assert recorder.masters == ["local[4]"]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(session_mod.__file__)))
-    assert recorder.confs == {
-        **SHARED_CONFS,
+    assert recorder.confs == {**SHARED_CONFS, **DAEMON_CONFS}
+    assert recorder.runtime == {
         "spark.sql.shuffle.partitions": "8",
         "spark.sql.files.minPartitionNum": "8",
-        "spark.python.daemon.module": "html_table_spark.fastdaemon",
-        "spark.executorEnv.PYTHONPATH": repo_root,
     }
 
 
 def test_bare_local_master_sizes_from_the_box(recorder, monkeypatch):
-    """``local[*]`` takes this box's core count for shuffle partitions and
-    the scan-split floor — not a fixed 32-core assumption."""
-    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    """No master: ``local[*]``, or ``local[$SPARK_GRAFT_CPUS]``. Either
+    way the sizing comes from the context's cores, not a fixed 32-core
+    assumption."""
+    recorder.cores = 6
     get_spark("t")
-    threads = os.cpu_count()
-    assert recorder.masters == ["local[*]"]
-    assert recorder.confs["spark.sql.shuffle.partitions"] == str(max(8, threads))
-    assert recorder.confs["spark.sql.files.minPartitionNum"] == str(2 * threads)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    get_spark("t")
+    assert recorder.masters == ["local[*]", "local[3]"]
+    assert recorder.runtime == {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.files.minPartitionNum": "12",
+    }
 
 
 def test_spark_submit_leaves_master_to_submit(recorder, monkeypatch):
-    """Under spark-submit --master wins: no .master() call, and the cluster
-    branch sets no local-only confs (partitions, split floor, fastdaemon)."""
+    """``submit.sh``'s own ``local[N]``: spark-submit's ``--master`` wins
+    (no ``.master()`` call), and the session gets the confs, the sizing
+    and the daemon of ``get_spark(master="local[N]")``."""
+    get_spark("t", master="local[4]")
+    explicit = (dict(recorder.confs), dict(recorder.runtime))
+    for recorded in (recorder.masters, recorder.confs, recorder.runtime):
+        recorded.clear()
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    recorder.submitted["spark.master"] = "local[4]"
+    get_spark("t")
+    assert recorder.masters == []
+    assert (recorder.confs, recorder.runtime) == explicit
+
+
+@pytest.mark.parametrize("master", ["local-cluster[2,1,1024]", "spark://host:7077", "yarn"])
+def test_spark_submit_cluster_master_keeps_spark_sizing(recorder, monkeypatch, master):
+    """A cluster master gets no daemon (a cluster's daemon boots before
+    ``--py-files`` land) and no sizing: its executors register after the
+    context starts, so the cores it reports then are no measure of the
+    cluster. ``SPARK_GRAFT_CPUS`` never demotes it to a local master."""
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    recorder.submitted["spark.master"] = master
+    recorder.cores = 2
     get_spark("t")
     assert recorder.masters == []
     assert recorder.confs == SHARED_CONFS
+    assert recorder.runtime == {}
+
+
+def test_submitted_conf_wins_over_the_sizing(recorder, monkeypatch):
+    """``--conf spark.sql.shuffle.partitions=N`` (or spark-defaults.conf)
+    wins on a local master: the session leaves it as submitted and still
+    sizes the scan split floor."""
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    recorder.submitted.update(
+        {"spark.master": "local[4]", "spark.sql.shuffle.partitions": "3"}
+    )
+    get_spark("t")
+    assert recorder.runtime == {"spark.sql.files.minPartitionNum": "8"}
 
 
 def test_job_builds_its_session_with_get_spark(spark, recorder, monkeypatch, tmp_path):
