@@ -50,6 +50,7 @@ from html_table_spark.functions import text as tx
 from html_table_spark.operators import bpe, corpus, dedup, similarity
 from html_table_spark.operators.extract import extract_tables
 from html_table_spark.operators.tabular import Tabular, extracted_cells
+from html_table_spark.sources.documents import html_spans
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -62,23 +63,11 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-def _doc_spans(html_col) -> F.Column:
-    """Wrap a per-row HTML string column as a one-span document stream."""
-    return F.array(
-        F.struct(
-            F.lit("text").alias("kind"),
-            html_col.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )
-    )
-
-
 def _docs_as_corpus(spark: SparkSession, sf_dir: str, html_col) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        _doc_spans(html_col).alias("spans"),
+        html_spans(html_col).alias("spans"),
     )
 
 

@@ -606,8 +606,7 @@ lookups(xml_node *table, const char *section, Py_ssize_t offset, xml_node **capt
    (Parser.php:532-540); a header of one cell or more keeps its row out of
    the body. */
 static PyObject *
-fill(sheet *sh, xml_node *table, const char *section, Py_ssize_t offset, PyObject *sections, int media,
-     PyObject *projection)
+fill(sheet *sh, xml_node *table, const char *section, Py_ssize_t offset, PyObject *sections, PyObject *projection)
 {
     xml_node *caption, *header_row;
     lookups(table, section, offset, &caption, &header_row);
@@ -630,7 +629,7 @@ fill(sheet *sh, xml_node *table, const char *section, Py_ssize_t offset, PyObjec
         return NULL;
     if (width)
         g.skip = header_row, g.width = width;
-    g.media = media;
+    g.media = 1;
     /* the user header's (offset, name) pairs; an offset past Py_ssize_t
        never matches a source offset */
     Py_ssize_t n_projected = projection ? PyTuple_GET_SIZE(projection) : 0;
@@ -1059,9 +1058,8 @@ py_table(PyObject *module, PyObject *args)
     PyObject *where, *sections, *projection = NULL, *out = Py_None;
     const char *section;
     Py_ssize_t offset;
-    int media;
-    if (!PyArg_ParseTuple(args, "OznO!p|O!O:table", &where, &section, &offset, &PyTuple_Type, &sections, &media,
-                          &PyTuple_Type, &projection, &out))
+    if (!PyArg_ParseTuple(args, "OznO!|O!O:table", &where, &section, &offset, &PyTuple_Type, &sections, &PyTuple_Type,
+                          &projection, &out))
         return NULL;
     state *st = bound(module);
     xml_node *table = st ? address(where) : NULL;
@@ -1071,7 +1069,7 @@ py_table(PyObject *module, PyObject *args)
     sheet own = {0}, *sh = b ? &b->grid : &own;
     if (b)
         b->pending = 0;
-    PyObject *read = fill(sh, table, section, offset, sections, media, projection);
+    PyObject *read = fill(sh, table, section, offset, sections, projection);
     PyObject *rows = read == NULL ? NULL : b ? Py_NewRef(Py_None) : py_rows(st, sh);
     PyObject *result = rows ? PyTuple_Pack(3, PyTuple_GET_ITEM(read, 0), PyTuple_GET_ITEM(read, 1), rows) : NULL;
     if (b && result)
@@ -1135,7 +1133,7 @@ static PyMethodDef methods[] = {
     {"bind", py_bind, METH_VARARGS,
      "bind(Node, ELEMENT, COMMENT, PI, empty_attrs, empty_children, Cell): the classes and shared values to build with"},
     {"table", py_table, METH_VARARGS,
-     "table(address, section, offset, sections, media, projection=(), out=None) -> (caption, header, rows) of the "
+     "table(address, section, offset, sections, projection=(), out=None) -> (caption, header, rows) of the "
      "xmlNode table at address; rows is None when out is a Builder, which then holds them for its add()"},
     {"top_level_tables", py_top_level_tables, METH_O,
      "top_level_tables(address) -> the addresses of the document's tables with no table ancestor, in document order"},

@@ -57,9 +57,6 @@ class ParserConfig:
     # extract every top-level table in the document instead of one selected
     # table (mega-docs contain thousands; table_idx is the 0-based ordinal).
     select_all_tables: bool = False
-    # interleave media refs (img/object/... with data-media-ref) found inside
-    # cells as kind='media' spans after their cell span (FIXTURES.md F13).
-    emit_media_spans: bool = True
 
     # -- builder methods (reference parity) ---------------------------------
 

@@ -28,14 +28,17 @@ their document.
 The struct layouts read here and in ``_tree.c`` are libxml2 2.9's
 (``tree.h``, ``xpath.h``), and 2.9's HTML tokenizer is the one the
 reference's PHP 8.2 links, so importing this module fails unless the
-library is 2.9.x. ``_tree.c`` is compiled on first import with
-``sysconfig``'s C compiler against ``Python.h`` (no libxml2 headers, no
-link step) into ``$XDG_CACHE_HOME/html_table_spark`` (default
-``~/.cache/html_table_spark``), keyed by a hash of the source and the
-extension suffix; importing fails when it cannot be built. A build's mtime
-is refreshed whenever it is loaded, and each new build deletes all but the
-4 most recently used. Executors need the same library, a C compiler and
-Python's headers: ``--py-files`` ships the source, nothing compiled.
+library is 2.9.x. ``_tree.c`` is compiled on first use (the first
+:func:`table`, ``Builder``, :func:`top_level_tables` or :func:`parse`),
+not on import, so validating XPath (:func:`validate`, which ``config``
+imports) needs no compiler. It is built with ``sysconfig``'s C compiler
+against ``Python.h`` (no libxml2 headers, no link step) into
+``$XDG_CACHE_HOME/html_table_spark`` (default ``~/.cache/html_table_spark``),
+keyed by a hash of the source and the extension suffix; that first use
+raises ImportError when it cannot be built. A build's mtime is refreshed
+whenever it is loaded, and each new build deletes all but the 4 most
+recently used. Executors need the same library, a C compiler and Python's
+headers: ``--py-files`` ships the source, nothing compiled.
 
 ``HTML_PARSE_HUGE`` is not passed, as the reference does not pass it: libxml2
 then stops building the tree 256 elements deep, and drops what lies below.
@@ -53,6 +56,7 @@ import shlex
 import subprocess
 import sysconfig
 import tempfile
+import threading
 from contextlib import contextmanager
 
 from .errors import ParserError, msg_invalid_xpath
@@ -198,11 +202,37 @@ def build_tree_module():
     return module
 
 
-_tree = build_tree_module()
-# Builder(): EXTRACTED_SCHEMA rows in C buffers (``_tree.c``): start(doc_id)
-# per document, table(..., out=builder) then add() or error() per table,
-# empty() for a document without tables, flush() per output batch
-Builder = _tree.Builder
+_LOCK = threading.Lock()
+
+
+def _walker():
+    """The ``_tree`` module, built and loaded on first use rather than on
+    import, so a driver that only validates XPath (``config``) needs no C
+    compiler. It also sets the module's ``Builder`` and ``table``:
+
+    - ``Builder()``: EXTRACTED_SCHEMA rows in C buffers: ``start(doc_id)``
+      per document, ``table(..., out=builder)`` then ``add()`` or
+      ``error()`` per table, ``empty()`` for a document without tables,
+      ``flush()`` per output batch;
+    - ``table(address, section, offset, sections, projection=(), out=None)``
+      -> ``(caption, header, rows)`` for the table element at address: its
+      caption, header row (section, offset; none when section is None) and
+      rows, projected through the user header's (offset, name) pairs; rows
+      is None when out is a Builder, which holds them for its ``add()``."""
+    global _tree, Builder, table
+    with _LOCK:
+        if "_tree" not in globals():
+            _tree = build_tree_module()
+            Builder, table = _tree.Builder, _tree.table
+    return _tree
+
+
+def __getattr__(name: str):
+    """``_tree``, ``Builder`` and ``table`` (see :func:`_walker`)."""
+    if name in ("_tree", "Builder", "table"):
+        _walker()
+        return globals()[name]
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 @contextmanager
@@ -308,15 +338,7 @@ def top_level_tables(doc) -> list[int]:
     """The addresses of ``doc``'s tables with no table ancestor, in document
     order: what ``//table[not(ancestor::table)]`` selects. Nested tables
     are part of their outer cell's text, not tables of their own."""
-    return _tree.top_level_tables(ctypes.addressof(doc.contents)) if doc else []
-
-
-# table(address, section, offset, sections, media, projection=(), out=None)
-#   -> (caption, header, rows) for the table element at address: its
-#   caption, header row (section, offset; none when section is None) and
-#   rows, projected through the user header's (offset, name) pairs; rows is
-#   None when out is a Builder, which holds them for its add()
-table = _tree.table
+    return _walker().top_level_tables(ctypes.addressof(doc.contents)) if doc else []
 
 
 def parse(html: str) -> tuple[Node, list[str]]:
@@ -326,5 +348,5 @@ def parse(html: str) -> tuple[Node, list[str]]:
     root = Node(ELEMENT, tag="#document")
     with document(html, errors) as doc:
         if doc:
-            root.children = _tree.children(ctypes.addressof(doc.contents))
+            root.children = _walker().children(ctypes.addressof(doc.contents))
     return root, errors

@@ -98,7 +98,7 @@ def _extract_table(table: int, config: ParserConfig, table_idx: int, out) -> Non
     if config.table_header or config.ignore_table_header:
         section = None
     caption, header, rows = libxml2.table(
-        table, section, offset, config.included_sections, config.emit_media_spans, config.table_header, out
+        table, section, offset, config.included_sections, config.table_header, out
     )
     if config.table_header:
         header = [name for _, name in config.table_header]

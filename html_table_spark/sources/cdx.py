@@ -9,11 +9,16 @@ length, filename)`` so a reader can fetch ONE record with a ranged read
 (.warc.gz) or a complete raw record (.warc).  This module builds that
 index with the stdlib only:
 
+* **records** are the reader's: the index walks archives with the
+  reader's own record walk (``warc.iter_records``, its header rule and
+  resync), member walk and HTTP head, so it lists every record the
+  reader reads as ``ok`` and no other (a test checks both directions);
 * **offsets** come from the container walk itself: member start offsets
   in the COMPRESSED stream for .warc.gz (each record its own member, the
-  Common Crawl layout), byte offsets in the raw stream for plain .warc —
-  the random-access property is pinned by a test that slices the archive
-  at ``(offset, length)`` and re-parses the single record;
+  Common Crawl layout), byte offsets in the raw stream for plain .warc,
+  the record plus the CR/LF run after it; the random-access property is
+  pinned by a test that slices the archive at ``(offset, length)`` and
+  re-parses the single record;
 * **urlkey** is the classic massaged URL (lowercased scheme/host,
   default-port drop, sorted query, fragment drop) — a deliberately
   independent Python restatement of the Spark-side
@@ -42,8 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the same record-magic and member walk the reader uses
-from .warc import _VERSION_RE, iter_gzip_members
+# the reader's record walk, member walk and HTTP head
+from .warc import _http_head, _is_http, _mime, iter_gzip_members, iter_records
 
 __all__ = ["cdx_records", "warc_cdx", "urlkey", "CDX_SCHEMA"]
 
@@ -52,9 +57,6 @@ CDX_SCHEMA = (
     "http_status int, digest string, offset long, length long, "
     "archive string, record_type string"
 )
-
-_WS = re.compile(r"\s+")
-
 
 def urlkey(url: str) -> str:
     """Classic CDX massaged-URL key (see module docstring) — keep in sync
@@ -84,122 +86,49 @@ def urlkey(url: str) -> str:
     return f"{scheme}://{user_s}{host}{port_s}{path}{q}"
 
 
-def _record_fields(raw: bytes) -> dict:
-    """Header + content fields of ONE raw record (already decompressed)."""
-    m = _VERSION_RE.match(raw)
-    if not m:
-        return {"status": "error: no WARC version line"}
-    hdr_end = raw.find(b"\r\n\r\n")
-    skip = 4
-    alt = raw.find(b"\n\n")
-    if hdr_end < 0 or (0 <= alt < hdr_end):
-        hdr_end, skip = alt, 2
-    if hdr_end < 0:
-        return {"status": "error: unterminated header block"}
-    headers: dict[str, str] = {}
-    for ln in raw[m.end(): hdr_end].split(b"\n"):
-        k, sep, v = ln.decode("latin-1", "replace").partition(":")
-        if sep:
-            headers[k.strip().lower()] = v.strip()
-    try:
-        length = int(headers.get("content-length", ""))
-    except ValueError:
-        return {"status": "error: bad Content-Length"}
-    content = raw[hdr_end + skip : hdr_end + skip + length]
-    if len(content) < length:
-        return {"status": "error: truncated content block"}
-    status = mime = None
-    if headers.get("warc-type") == "response" and headers.get(
-        "content-type", ""
-    ).startswith("application/http"):
-        head = content.split(b"\r\n\r\n", 1)[0].split(b"\n")
-        first = head[0].strip() if head else b""
-        if first.startswith(b"HTTP/"):
-            parts = first.split(None, 2)
-            try:
-                status = int(parts[1])
-            except (IndexError, ValueError):
-                status = None
-            for ln in head[1:]:
-                k, _, v = ln.decode("latin-1").partition(":")
-                if k.strip().lower() == "content-type":
-                    mime = v.split(";")[0].strip().lower()
-                    break
-    ts = re.sub(r"[^0-9]", "", headers.get("warc-date", ""))[:14]
-    return {
-        "status": "ok",
-        "record_type": headers.get("warc-type", ""),
-        "url": headers.get("warc-target-uri", ""),
-        "ts": ts,
-        "http_status": status,
-        "mime": mime,
-        "digest": base64.b32encode(hashlib.sha1(content).digest()).decode(),
-    }
-
-
-def _raw_slices(b: bytes) -> Iterator[tuple[int, int, bytes]]:
-    """(offset, length, raw_record) per record of a PLAIN archive; length
-    includes the trailing CRLF CRLF so the slice is the complete on-disk
-    record."""
-    i, n = 0, len(b)
-    while i < n:
-        while i < n and b[i : i + 1] in (b"\r", b"\n"):
-            i += 1
-        if i >= n:
-            return
-        if not _VERSION_RE.match(b, i):
-            nxt = b.find(b"WARC/", i + 1)
-            if nxt < 0:
-                return
-            i = nxt
-            continue
-        hdr_end = b.find(b"\r\n\r\n", i)
-        skip = 4
-        alt = b.find(b"\n\n", i)
-        if hdr_end < 0 or (0 <= alt < hdr_end):
-            hdr_end, skip = alt, 2
-        if hdr_end < 0:
-            return
-        mlen = re.search(rb"(?im)^content-length:[ \t]*([0-9]+)[ \t]*$",
-                         b[i:hdr_end])
-        if not mlen:
-            i = hdr_end + skip
-            continue
-        end = hdr_end + skip + int(mlen.group(1))
-        while end < n and b[end : end + 1] in (b"\r", b"\n"):
-            end += 1
-        yield i, end - i, b[i:end]
-        i = end
-
-
 def cdx_records(archive: str, payload: bytes) -> list[dict]:
-    """The CDX rows of one archive (auto-detecting layout); a hopeless
-    archive yields [] (errors are the READER's concern — an index never
-    invents entries for records it cannot locate)."""
+    """The CDX rows of one archive (auto-detecting layout): one per record
+    the reader reads. Broken records are the READER's concern (it reports
+    them as error rows); the index never invents entries for them, and a
+    hopeless archive yields the rows located before the damage."""
     b = payload or b""
+    if b[:2] == b"\x1f\x8b":
+        located = (
+            (offset, length, headers, content)
+            for offset, length, member in iter_gzip_members(b)
+            for _, _, headers, content in iter_records(member)
+        )
+    else:
+        located = (
+            (start, end - start, headers, content)
+            for start, end, headers, content in iter_records(b)
+        )
     rows: list[dict] = []
     try:
-        slices = iter_gzip_members(b) if b[:2] == b"\x1f\x8b" else _raw_slices(b)
-        for offset, length, raw in slices:
-            f = _record_fields(raw)
-            if f.get("status") != "ok":
+        for offset, length, headers, content in located:
+            if isinstance(content, str):
                 continue
+            status = mime = None
+            if _is_http(headers):
+                status, ctype, _ = _http_head(content)
+                mime = ctype and _mime(ctype)  # None without a Content-Type
+            url = headers.get("warc-target-uri", "")
             rows.append(
                 {
-                    "urlkey": urlkey(f["url"]) if f["url"] else "",
-                    "ts": f["ts"],
-                    "url": f["url"],
-                    "mime": f["mime"],
-                    "http_status": f["http_status"],
-                    "digest": f["digest"],
+                    "urlkey": urlkey(url) if url else "",
+                    "ts": re.sub(r"[^0-9]", "", headers.get("warc-date", ""))[:14],
+                    "url": url,
+                    "mime": mime,
+                    "http_status": status,
+                    "digest": base64.b32encode(hashlib.sha1(content).digest()).decode(),
                     "offset": offset,
                     "length": length,
                     "archive": archive,
-                    "record_type": f["record_type"],
+                    "record_type": headers.get("warc-type", ""),
                 }
             )
     except ValueError:
-        pass  # corrupt container: index what was located, never invent
+        pass  # corrupt gzip member: index what was located, never invent
     return rows
 
 

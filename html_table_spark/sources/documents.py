@@ -18,7 +18,7 @@ snapshot, resume via committed-doc anti-join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
 SPAN_STRUCT = T.StructType(
@@ -83,6 +83,21 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def html_spans(html: Column) -> Column:
+    """A string Column of whole HTML pages as documents' ``spans``: one text
+    span per page, at offset 0."""
+    from pyspark.sql import functions as F
+
+    return F.array(
+        F.struct(
+            F.lit("text").alias("kind"),
+            html.alias("text"),
+            F.lit(None).cast("string").alias("media_ref"),
+            F.lit(0).alias("offset"),
+        )
+    )
+
+
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
     """Scan the corpus. Parquet (or Iceberg via ``iceberg://table`` ref).
 
@@ -131,14 +146,7 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     if "text" in df.columns:
         return df.select(
             F.col("doc_id").cast("string").alias("doc_id"),
-            F.array(
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    F.col("text").cast("string").alias("text"),
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(0).alias("offset"),
-                )
-            ).alias("spans"),
+            html_spans(F.col("text").cast("string")).alias("spans"),
         )
     raise ValueError(
         f"corpus at {path} has neither a 'spans' nor a 'text' column: {df.columns}"
@@ -161,14 +169,7 @@ def read_html_files(spark: SparkSession, path: str, glob: str = "*.html") -> Dat
     )
     return files.select(
         F.col("path").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.decode(F.col("content"), "UTF-8").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+        html_spans(F.decode(F.col("content"), "UTF-8")).alias("spans"),
     )
 
 

@@ -23,6 +23,12 @@ Format notes (ISO 28500 / WARC 1.1, public spec):
   utf-8 → latin-1 fallback (latin-1 never fails, so undeclared legacy
   pages still yield text).
 
+One walk reads records: :func:`iter_records` (header block, header rule,
+Content-Length, resync after a broken record) and ``_http_head`` (the
+HTTP status line and Content-Type) serve both this reader and the CDX
+index (``sources/cdx.py``), so the index lists exactly the records the
+reader reads.
+
 Scale design: the WARC *file* is the unit of parallelism — exactly how
 Common Crawl is processed in practice (segment files are ~1 GB, and the
 format is a stream with no random access, so records of one file are
@@ -52,7 +58,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .documents import html_spans
+
 __all__ = [
+    "iter_records",
     "parse_warc",
     "split_gzip_members",
     "iter_gzip_members",
@@ -123,7 +132,7 @@ def split_gzip_members(b: bytes) -> list[bytes]:
 
 
 def _decode_body(body: bytes, content_type: str) -> str:
-    m = _CHARSET_RE.search(content_type or "")
+    m = _CHARSET_RE.search(content_type)
     if m:
         try:
             return body.decode(m.group(1), errors="replace")
@@ -135,35 +144,61 @@ def _decode_body(body: bytes, content_type: str) -> str:
         return body.decode("latin-1")
 
 
-def _parse_http_response(content: bytes) -> tuple[int | None, str, str]:
-    """(status_code, mime, decoded body text) from an HTTP/1.x response
-    block; a block that is not HTTP at all comes back (None, '', raw-text)."""
+def _mime(content_type: str) -> str:
+    return content_type.split(";")[0].strip().lower()
+
+
+def _is_http(headers: dict[str, str]) -> bool:
+    """A ``response`` record wrapping an HTTP message, whose content is
+    read by :func:`_http_head`."""
+    return headers.get("warc-type") == "response" and headers.get(
+        "content-type", ""
+    ).startswith("application/http")
+
+
+def _http_head(content: bytes) -> tuple[int | None, str | None, bytes]:
+    """``(status, Content-Type, body)`` of an HTTP/1.x response block, with
+    None for a missing Content-Type; a block that is not HTTP at all comes
+    back ``(None, None, content)``."""
     head, sep, body = content.partition(b"\r\n\r\n")
     if not sep:
         head, sep, body = content.partition(b"\n\n")
     lines = head.split(b"\n")
-    first = lines[0].strip() if lines else b""
+    first = lines[0].strip()
     if not first.startswith(b"HTTP/"):
-        return None, "", _decode_body(content, "")
+        return None, None, content
     parts = first.split(None, 2)
     try:
         status = int(parts[1])
     except (IndexError, ValueError):
         status = None
-    ctype = ""
     for ln in lines[1:]:
         k, _, v = ln.decode("latin-1").partition(":")
         if k.strip().lower() == "content-type":
-            ctype = v.strip()
-            break
-    mime = ctype.split(";")[0].strip().lower()
-    return status, mime, _decode_body(body, ctype)
+            return status, v.strip(), body
+    return status, None, body
 
 
-def _parse_record_stream(b: bytes) -> Iterator[dict]:
-    """Walk concatenated (uncompressed) WARC records tolerantly: a broken
-    record yields one error row and parsing resynchronizes at the next
-    ``WARC/`` magic, so one bad record cannot sink an archive."""
+def _resync(b: bytes, start: int) -> int:
+    """Where the walk resumes after a broken record: the next ``WARC/``
+    magic at or after ``start``, or the end of ``b``."""
+    nxt = b.find(b"WARC/", start)
+    return len(b) if nxt < 0 else nxt
+
+
+def iter_records(
+    b: bytes,
+) -> Iterator[tuple[int, int, dict[str, str] | None, bytes | str]]:
+    """``(start, end, headers, content)`` per record of concatenated
+    (uncompressed) WARC records; ``b[start:end]`` is the whole record with
+    the CR/LF run after it. Header names are trimmed and lower-cased, and
+    the content is ``int(Content-Length)`` bytes.
+
+    The walk is tolerant: a broken record comes with its error message as
+    ``content`` and the headers read so far (None when it has no header
+    block), and the walk resynchronizes at the next ``WARC/`` magic, so
+    one bad record cannot sink an archive. The reader and the CDX index
+    both walk archives with this, so they see the same records."""
     i, n = 0, len(b)
     while i < n:
         while i < n and b[i : i + 1] in (b"\r", b"\n"):
@@ -172,11 +207,9 @@ def _parse_record_stream(b: bytes) -> Iterator[dict]:
             return
         m = _VERSION_RE.match(b, i)
         if not m:
-            nxt = b.find(b"WARC/", i + 1)
-            yield {"status": "error: no WARC version line"}
-            if nxt < 0:
-                return
-            i = nxt
+            end = _resync(b, i + 1)
+            yield i, end, None, "error: no WARC version line"
+            i = end
             continue
         hdr_end = b.find(b"\r\n\r\n", i)
         alt_end = b.find(b"\n\n", i)
@@ -185,36 +218,32 @@ def _parse_record_stream(b: bytes) -> Iterator[dict]:
         else:
             skip = 4
         if hdr_end < 0:
-            yield {"status": "error: unterminated header block"}
+            yield i, n, None, "error: unterminated header block"
             return
         headers: dict[str, str] = {}
         for ln in b[m.end() : hdr_end].split(b"\n"):
-            k, _, v = ln.decode("latin-1", "replace").partition(":")
-            if _:
+            k, sep, v = ln.decode("latin-1", "replace").partition(":")
+            if sep:
                 headers[k.strip().lower()] = v.strip()
         try:
             length = int(headers.get("content-length", ""))
         except ValueError:
-            yield {"status": "error: bad Content-Length", **_ids(headers)}
-            nxt = b.find(b"WARC/", hdr_end)
-            if nxt < 0:
-                return
-            i = nxt
+            length = -1
+        if length < 0:
+            end = _resync(b, hdr_end)
+            yield i, end, headers, "error: bad Content-Length"
+            i = end
             continue
         body_start = hdr_end + skip
-        if body_start + length > n:
-            yield {"status": "error: truncated content block", **_ids(headers)}
+        end = body_start + length
+        if end > n:
+            yield i, n, headers, "error: truncated content block"
             return
-        content = b[body_start : body_start + length]
-        rec = {
-            "record_type": headers.get("warc-type", ""),
-            "url": headers.get("warc-target-uri", ""),
-            "warc_date": headers.get("warc-date", ""),
-            "status": "ok",
-            **_http_fields(headers, content),
-        }
-        yield rec
-        i = body_start + length
+        content = b[body_start:end]
+        while end < n and b[end : end + 1] in (b"\r", b"\n"):
+            end += 1
+        yield i, end, headers, content
+        i = end
 
 
 def _ids(headers: dict[str, str]) -> dict:
@@ -225,17 +254,20 @@ def _ids(headers: dict[str, str]) -> dict:
     }
 
 
-def _http_fields(headers: dict[str, str], content: bytes) -> dict:
-    ctype = headers.get("content-type", "")
-    if headers.get("warc-type") == "response" and ctype.startswith(
-        "application/http"
-    ):
-        status, mime, text = _parse_http_response(content)
-        return {"http_status": status, "mime": mime, "text": text}
+def _record_row(headers: dict[str, str] | None, content: bytes | str) -> dict:
+    """One record's reader row: an error row for a broken record."""
+    if isinstance(content, str):
+        return {"status": content} if headers is None else {"status": content, **_ids(headers)}
+    status, ctype = None, headers.get("content-type", "")
+    if _is_http(headers):
+        status, ctype, content = _http_head(content)
+        ctype = ctype or ""
     # resource / conversion / metadata / warcinfo: content is the payload
     return {
-        "http_status": None,
-        "mime": ctype.split(";")[0].strip().lower(),
+        **_ids(headers),
+        "status": "ok",
+        "http_status": status,
+        "mime": _mime(ctype),
         "text": _decode_body(content, ctype),
     }
 
@@ -248,7 +280,7 @@ def parse_warc(payload: bytes) -> list[dict]:
     try:
         if b[:2] == b"\x1f\x8b":
             b = b"".join(split_gzip_members(b))
-        return list(_parse_record_stream(b))
+        return [_record_row(headers, content) for _, _, headers, content in iter_records(b)]
     except ValueError as e:
         return [{"status": f"error: {e}"}]
 
@@ -327,15 +359,7 @@ def warc_to_documents(records: DataFrame) -> DataFrame:
         & (F.col("http_status") == 200)
     )
     return keep.select(
-        warc_doc_id().alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"),
-                F.col("text").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
+        warc_doc_id().alias("doc_id"), html_spans(F.col("text")).alias("spans")
     )
 
 

@@ -1,7 +1,7 @@
 """Zip the html_table_spark package for ``spark-submit --py-files``.
 
 The zip holds the package's Python modules and ``_tree.c``, the C source
-the package compiles on first import (``libxml2.build_tree_module``).
+the package compiles on its first parse (``libxml2.build_tree_module``).
 Usage: python3 scripts/pack_py_files.py <zip path>
 """
 

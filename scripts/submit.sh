@@ -3,11 +3,12 @@
 # Usage: scripts/submit.sh <input> <output> [spark-submit args...] [-- job args...]
 #   e.g. scripts/submit.sh in.parquet out/ --conf spark.ui.enabled=false -- --mode single --no-resume
 # Executors, and the machine submitting the job, need libxml2.so.2 2.9.x
-# (html_table_spark/libxml2.py binds it over ctypes), a C compiler and
-# Python's headers: --py-files ships the package's Python and the C source
-# of its tree walker (_tree.c), nothing compiled. Each machine compiles the
-# walker on first import into $XDG_CACHE_HOME/html_table_spark (default
-# ~/.cache/html_table_spark), once per source and Python version.
+# (html_table_spark/libxml2.py binds it over ctypes); executors also need a
+# C compiler and Python's headers: --py-files ships the package's Python and
+# the C source of its tree walker (_tree.c), nothing compiled. Each
+# executor compiles the walker on its first parse into
+# $XDG_CACHE_HOME/html_table_spark (default ~/.cache/html_table_spark),
+# once per source and Python version; the driver only plans the job.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 INPUT="${1:?input corpus path}"

@@ -106,7 +106,6 @@ def _collect_media(cell: Node) -> tuple[str, ...]:
 def extract_record(
     tr: Node,
     row_span_indices: dict[int, list[list[Cell]]],
-    emit_media: bool,
 ) -> list[Cell]:
     """Grid-expand one <tr> (Parser.php:547-587, byte-for-byte semantics).
 
@@ -122,8 +121,7 @@ def extract_record(
             if not pending:
                 del row_span_indices[index]
         if type(node) is Node and node.kind == ELEMENT and node.tag in CELL_TAGS:
-            media = _collect_media(node) if emit_media else ()
-            cell = Cell(node.text_content(), media)
+            cell = Cell(node.text_content(), _collect_media(node))
             colspan = _span_size(node, "colspan")
             rowspan = _span_size(node, "rowspan")
             cells = [cell] * colspan
@@ -140,10 +138,10 @@ def extract_record(
     return row
 
 
-def _extract_header_row(tr: Node, emit_media: bool) -> list[str]:
+def _extract_header_row(tr: Node) -> list[str]:
     """Parser.php:532-540: grid-expand with a throwaway rowspan state, then
     trim each cell with the exact PHP charset."""
-    record = extract_record(tr, {}, emit_media)
+    record = extract_record(tr, {})
     return [cell.text.strip(HEADER_TRIM_CHARSET) for cell in record]
 
 
@@ -225,9 +223,7 @@ def extract_table(table_node: Node, config: ParserConfig, table_idx: int) -> Ext
         header_section, offset = config.table_header_row
     tr, caption_node = header_row_and_caption(table_node, header_section, offset)
     if header_section is not None:
-        header_names = (
-            _extract_header_row(tr, config.emit_media_spans) if tr is not None else []
-        )
+        header_names = _extract_header_row(tr) if tr is not None else []
         if header_names:
             # extracted headers are re-validated for duplicates
             # (Parser.php:482); user headers were validated at config time
@@ -258,7 +254,7 @@ def extract_table(table_node: Node, config: ParserConfig, table_idx: int) -> Ext
         for tr in [child] if section == TR else child.children:
             record_tr = _filter_record(tr, marked_id)
             if record_tr is not None:
-                record = extract_record(record_tr, row_span, config.emit_media_spans)
+                record = extract_record(record_tr, row_span)
                 rows.append(_combine(record, header_pairs) if header_pairs else list(record))
 
     # -- caption (Parser.php:389-390) ---------------------------------------

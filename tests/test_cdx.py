@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import zlib
+from collections import Counter
 
 import pytest
 from hypothesis import given, settings
@@ -60,6 +61,71 @@ def test_unlocatable_records_are_skipped_not_invented():
     assert [r["record_type"] for r in rows] == ["warcinfo", "response"]
     assert cdx_records("a", b"\x1f\x8b\xffbroken") == []
     assert cdx_records("a", b"") == []
+
+
+def _response_record(page: dict) -> bytes:
+    """``encode_warc``'s response record for ``page``, without the
+    warcinfo record it writes first."""
+    archive = encode_warc([page])
+    return archive[archive.index(b"WARC/1.1\r\n", 1) :]
+
+
+def _lf_only_header(record: bytes) -> bytes:
+    head, _, rest = record.partition(b"\r\n\r\n")
+    return head.replace(b"\r\n", b"\n") + b"\n\n" + rest
+
+
+# how a record's WARC header is written; encode_warc puts Content-Length last
+HEADER_VARIANTS = {
+    "as_written": lambda r: r,
+    "space_before_colon": lambda r: r.replace(b"\r\nContent-Length: ", b"\r\nContent-Length : ", 1),
+    "plus_sign": lambda r: r.replace(b"\r\nContent-Length: ", b"\r\nContent-Length: +", 1),
+    "lower_case": lambda r: r.replace(b"\r\nContent-Length: ", b"\r\ncontent-length: ", 1),
+    "lf_only": _lf_only_header,
+}
+
+
+def _gzip_member(b: bytes) -> bytes:
+    co = zlib.compressobj(6, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
+    return co.compress(b) + co.flush()
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    records=st.lists(
+        st.tuples(
+            st.sampled_from(sorted(HEADER_VARIANTS)),
+            # spliced before the record: the reader resyncs at its WARC/ magic
+            st.binary(max_size=30).filter(lambda g: b"WARC/" not in g),
+            st.sampled_from([200, 404]),
+            st.text(st.characters(blacklist_categories=("Cs",)), max_size=40),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+    gz=st.booleans(),
+)
+def test_reader_and_index_agree(records, gz):
+    """The index lists exactly the records the reader reads: every ``ok``
+    record of ``parse_warc`` has one CDX row with its url, record type and
+    HTTP status, and every row's ``(offset, length)`` slice re-parses to
+    exactly one ``ok`` record, whatever the header's spelling and the
+    garbage between records. In .warc.gz each piece is its own member."""
+    pieces = [encode_warc([])]
+    for k, (variant, garbage, status, html) in enumerate(records):
+        page = {"url": f"http://p{k}.example/", "html": html, "status": status}
+        pieces += [garbage, HEADER_VARIANTS[variant](_response_record(page))]
+    pieces = [p for p in pieces if p]
+    b = b"".join(_gzip_member(p) for p in pieces) if gz else b"".join(pieces)
+    read = [r for r in parse_warc(b) if r["status"] == "ok"]
+    assert len(read) == len(records) + 1
+    rows = cdx_records("a", b)
+    key = lambda r: (r["url"], r["record_type"], r["http_status"])  # noqa: E731
+    assert Counter(map(key, rows)) == Counter(map(key, read))
+    for r in rows:
+        chunk = b[r["offset"] : r["offset"] + r["length"]]
+        sub = parse_warc(zlib.decompress(chunk, 16 + zlib.MAX_WBITS) if gz else chunk)
+        assert [key(s) for s in sub if s["status"] == "ok"] == [key(r)]
 
 
 def test_urlkey_matches_spark_canonical_semantics():

@@ -33,7 +33,7 @@ CONFIGS = {
     "all": ParserConfig().all_tables(),
     "tr_header": ParserConfig().all_tables().include_all_sections().table_header_position(TR, 1),
     "tbody_header": ParserConfig().all_tables().table_header_position(TBODY, 0),
-    "ignore_no_media": ParserConfig(emit_media_spans=False).all_tables().ignore_header(),
+    "ignore": ParserConfig().all_tables().ignore_header(),
     "user_header": ParserConfig().all_tables().with_table_header({3: "d", 0: "a", 7: "z"}),
     "thead_only": ParserConfig().all_tables().exclude_all_sections().include_section("thead"),
 }
@@ -91,21 +91,21 @@ def test_table_does_not_leak():
     projection, media and caption, each result dropped, grow traced memory
     by under 1 MB and leave the reference count of the Cell class (one per
     live Cell) where it was."""
-    calls = [(TBODY, 0, True), ("thead", 0, True), (None, 0, False)]
+    calls = [(TBODY, 0), ("thead", 0), (None, 0)]
     sections = ParserConfig().include_all_sections().included_sections
     with libxml2.document(LEAK_HTML) as doc:
         [table] = libxml2.query(doc, grid_oracle.TOP_LEVEL_TABLES)
-        assert libxml2.table(table, "thead", 0, sections, True)[1] == ["h1", "h1", "h2"]
-        for section, offset, media in calls * 100:
-            libxml2.table(table, section, offset, sections, media)
+        assert libxml2.table(table, "thead", 0, sections)[1] == ["h1", "h1", "h2"]
+        for section, offset in calls * 100:
+            libxml2.table(table, section, offset, sections)
         gc.collect()
         refs = sys.getrefcount(grid_oracle.Cell)
         tracemalloc.start()
         try:
             before = tracemalloc.get_traced_memory()[0]
             for i in range(20_000):
-                section, offset, media = calls[i % len(calls)]
-                libxml2.table(table, section, offset, sections, media)
+                section, offset = calls[i % len(calls)]
+                libxml2.table(table, section, offset, sections)
             gc.collect()
             grown = tracemalloc.get_traced_memory()[0] - before
         finally:
@@ -241,7 +241,7 @@ def test_builder_text_bytes_match_python_decoding():
         "</table>"
     )
     docs = [("s", html), ("s\u00e9", html.replace("<thead>", '<thead><tr><th title="\ud800">x</th></tr>'))]
-    for config in (ParserConfig().all_tables(), ParserConfig().ignore_header(), ParserConfig(emit_media_spans=False)):
+    for config in (ParserConfig().all_tables(), ParserConfig().ignore_header()):
         builder = libxml2.Builder()
         for doc_id, doc in docs:
             builder.start(doc_id)
@@ -253,7 +253,7 @@ def test_builder_text_bytes_match_python_decoding():
         [theirs] = python_batches(docs, config)
         assert ours.equals(theirs.drop_columns(["part_id"]))
         refs = {s["media_ref"] for s in ours.column("spans")[0].as_py()}
-        assert refs == {None} | ({"m\ufffd\ufffd\ufffd\U0001F600"} if config.emit_media_spans else set())
+        assert refs == {None, "m\ufffd\ufffd\ufffd\U0001F600"}
 
 
 def test_operator_flushes_as_the_python_rows_do(monkeypatch):
@@ -309,7 +309,7 @@ def test_builder_does_not_leak():
                     builder = libxml2.Builder()
                     builder.start(doc_id if i % 40 else None)
                 kind = i % 4
-                read = libxml2.table(table, "thead", 0, sections, kind != 1, projection if kind == 1 else (), builder)
+                read = libxml2.table(table, "thead", 0, sections, projection if kind == 1 else (), builder)
                 if kind == 2:
                     builder.error(i, "duplicate")
                 elif kind == 3:

@@ -1,15 +1,17 @@
-"""The benchmark harness (``perfbench/``) against the package it measures.
+"""The benchmark harness (``perfbench/``) and the scripts tier-1 does not
+run (``bench.py``, ``__spark_entry__.py``, ``scripts/*.py``) against the
+package they use.
 
 perfbench is kept fixed between benchmark changes, so a package change that
 drops or renames a name it uses shows up only when the benchmark runs, and
-then as no numbers at all. This reads perfbench's source with ``ast`` (no
-Spark session, nothing run) and checks every use of the package there:
+then as no numbers at all; a script breaks as silently. This reads their
+source with ``ast`` (no Spark session, nothing run) and checks every use of
+the package, and of ``__spark_entry__`` and ``bench``, there:
 
-- each ``from html_table_spark... import x`` resolves;
-- each call of such a name, or of ``module.attr`` on an imported package
-  module, binds its positional count and keyword names to the callee's
-  signature;
-- each attribute read or assigned on an imported package module exists.
+- each ``from html_table_spark... import x`` (or ``import m as y``) resolves;
+- each call of such a name, or of ``module.attr`` on an imported module,
+  binds its positional count and keyword names to the callee's signature;
+- each attribute read or assigned on an imported module exists.
 """
 
 from __future__ import annotations
@@ -22,8 +24,12 @@ from pathlib import Path
 
 import pytest
 
-PERFBENCH = Path(__file__).resolve().parents[1] / "perfbench"
+REPO = Path(__file__).resolve().parents[1]
+PERFBENCH = REPO / "perfbench"
 SOURCES = sorted(PERFBENCH.rglob("*.py"))
+SCRIPTS = [REPO / "bench.py", REPO / "__spark_entry__.py", *sorted((REPO / "scripts").glob("*.py"))]
+# the repo's own modules; a use of any other import is not checked
+CHECKED = ("html_table_spark", "__spark_entry__", "bench")
 
 
 def _resolve(module: str, name: str):
@@ -37,13 +43,17 @@ def _resolve(module: str, name: str):
 
 
 def _package_names(tree: ast.AST) -> dict[str, object]:
-    """Local name -> package object, for every package import in the file
-    (the harness imports inside functions; its names do not clash)."""
+    """Local name -> object, for every import of a ``CHECKED`` module in the
+    file (the files import inside functions; their names do not clash)."""
     names = {}
     for node in ast.walk(tree):
-        if not isinstance(node, ast.ImportFrom) or node.module is None:
-            continue
-        if node.module.split(".")[0] == "html_table_spark":
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] in CHECKED:
+                    # ``import a.b`` binds ``a``; ``import a.b as c`` binds ``a.b``
+                    module = alias.name if alias.asname else alias.name.split(".")[0]
+                    names[alias.asname or module] = importlib.import_module(module)
+        elif isinstance(node, ast.ImportFrom) and node.module and node.module.split(".")[0] in CHECKED:
             for alias in node.names:
                 names[alias.asname or alias.name] = _resolve(node.module, alias.name)
     return names
@@ -67,6 +77,15 @@ def _bind(fn, call: ast.Call, where: str) -> None:
 
 @pytest.mark.parametrize("path", SOURCES, ids=lambda p: str(p.relative_to(PERFBENCH)))
 def test_perfbench_uses_of_the_package_resolve(path):
+    _check(path)
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: str(p.relative_to(REPO)))
+def test_script_uses_of_the_package_resolve(path):
+    _check(path)
+
+
+def _check(path: Path) -> None:
     tree = ast.parse(path.read_text(), filename=str(path))
     names = _package_names(tree)
     modules = {n for n, obj in names.items() if isinstance(obj, types.ModuleType)}

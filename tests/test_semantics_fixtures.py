@@ -490,7 +490,7 @@ def test_header_row_and_caption_walk_equals_xpath(parts):
                 return next((i for i, n in enumerate(nodes) if n is node), None)
 
             def compiled(section, offset):
-                caption, header, _ = libxml2.table(table_p, section, offset, ALL_SECTIONS, False)
+                caption, header, _ = libxml2.table(table_p, section, offset, ALL_SECTIONS)
                 return caption, header
 
             caption = ordinal(f"({top}//caption)[1]", "caption")
@@ -505,7 +505,7 @@ def test_header_row_and_caption_walk_equals_xpath(parts):
                     expr = f"({top}/descendant-or-self::{parent}/tr)[{offset + 1}]"
                     assert walk_ordinal(row, "tr") == ordinal(expr, "tr")
                     assert walk_ordinal(cap, "caption") == caption
-                    header = [c.text for c in grid_oracle.extract_record(row, {}, False)] if row else []
+                    header = [c.text for c in grid_oracle.extract_record(row, {})] if row else []
                     assert compiled(section, offset) == (cap_text, header)
 
 

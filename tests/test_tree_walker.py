@@ -171,17 +171,40 @@ def test_attribute_loop_is_linear():
 
 def test_compiled_walker_needs_a_compiler(tmp_path):
     """With the compiler pointed at a missing binary and an empty build
-    cache, importing the kernel fails with an ImportError that names the
-    compiler."""
+    cache, the kernel's first parse fails with an ImportError that names
+    the compiler."""
     code = (
         "import sysconfig\n"
         "sysconfig.get_config_vars()['CC'] = '/nonexistent/bin/cc'\n"
-        "import html_table_spark.semantics\n"
+        "from html_table_spark.config import ParserConfig\n"
+        "from html_table_spark.semantics import parse_document\n"
+        "parse_document('<table></table>', ParserConfig())\n"
     )
     env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache")}
     proc = subprocess.run([sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True)
     assert proc.returncode != 0
     assert "ImportError: cannot build html_table_spark._tree with '/nonexistent/bin/cc'" in proc.stderr, proc.stderr
+
+
+def test_validating_xpath_builds_no_walker(tmp_path):
+    """The job's driver validates its table selection (``ParserConfig``,
+    over ctypes) but parses no HTML: with an empty build cache that compiles
+    and loads nothing, and the first parse afterwards builds the walker."""
+    code = (
+        "import os, sys\n"
+        "from html_table_spark.config import ParserConfig\n"
+        "config = ParserConfig().table_position('x')\n"
+        "cache = os.path.join(os.environ['XDG_CACHE_HOME'], 'html_table_spark')\n"
+        "print(os.path.exists(cache) and sorted(os.listdir(cache)), 'html_table_spark._tree' in sys.modules)\n"
+        "from html_table_spark.semantics import parse_document\n"
+        "[t] = parse_document('<table id=\"x\"><tr><td>a</td></tr></table>', config)\n"
+        "print(t.status, t.row_texts(), 'html_table_spark._tree' in sys.modules)\n"
+    )
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache")}
+    proc = subprocess.run([sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.splitlines() == ["False False", "ok [['a']] True"]
+    assert [p.name[:6] for p in (tmp_path / "cache" / "html_table_spark").iterdir()] == ["_tree-"]
 
 
 def test_walker_builds_from_the_py_files_zip(tmp_path):

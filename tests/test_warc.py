@@ -103,6 +103,17 @@ def test_tolerant_resync_and_truncation():
     assert recs[0]["status"] == "error: bad Content-Length"
 
 
+def test_negative_content_length_is_bad():
+    """``int()`` reads ``-40`` as a length: the record is a bad one and the
+    walk goes on from its header block. Read as a length, it would step the
+    walk back to the garbage before the record, and from there to the same
+    record again, forever."""
+    recs = parse_warc(b"garbage\r\nWARC/1.0\r\nContent-Length: -40\r\n\r\nabc" + encode_warc([]))
+    assert [r["status"] for r in recs] == [
+        "error: no WARC version line", "error: bad Content-Length", "ok"
+    ]
+
+
 def test_charset_decode_fallback():
     b = encode_warc(
         [{"url": "http://l.example", "html": "<td>café</td>", "charset": "latin-1"}]
