@@ -9,12 +9,12 @@ length, filename)`` so a reader can fetch ONE record with a ranged read
 (.warc.gz) or a complete raw record (.warc).  This module builds that
 index with the stdlib only:
 
-* **records** are the reader's: the index walks archives with the
-  reader's own record walk (``warc.iter_records``, its header rule and
-  resync), member walk and HTTP head, so it lists every record the
-  reader reads as ``ok`` and no other (a test checks both directions);
-* **offsets** come from the container walk itself: member start offsets
-  in the COMPRESSED stream for .warc.gz (each record its own member, the
+* **records** are the reader's: the index maps over the reader's own
+  archive walk (``warc.located_records``: gzip members, header rule,
+  resync) and HTTP head, so it lists every record the reader reads as
+  ``ok`` and no other (a test checks both directions);
+* **offsets** come from that walk: member start offsets in the
+  COMPRESSED stream for .warc.gz (each record its own member, the
   Common Crawl layout), byte offsets in the raw stream for plain .warc,
   the record plus the CR/LF run after it; the random-access property is
   pinned by a test that slices the archive at ``(offset, length)`` and
@@ -47,8 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the reader's record walk, member walk and HTTP head
-from .warc import _http_head, _is_http, _mime, iter_gzip_members, iter_records
+# the reader's archive walk and HTTP head
+from .warc import _http_head, _is_http, _mime, located_records
 
 __all__ = ["cdx_records", "warc_cdx", "urlkey", "CDX_SCHEMA"]
 
@@ -88,47 +88,33 @@ def urlkey(url: str) -> str:
 
 def cdx_records(archive: str, payload: bytes) -> list[dict]:
     """The CDX rows of one archive (auto-detecting layout): one per record
-    the reader reads. Broken records are the READER's concern (it reports
-    them as error rows); the index never invents entries for them, and a
-    hopeless archive yields the rows located before the damage."""
-    b = payload or b""
-    if b[:2] == b"\x1f\x8b":
-        located = (
-            (offset, length, headers, content)
-            for offset, length, member in iter_gzip_members(b)
-            for _, _, headers, content in iter_records(member)
-        )
-    else:
-        located = (
-            (start, end - start, headers, content)
-            for start, end, headers, content in iter_records(b)
-        )
+    the reader reads. Broken records and damaged members are the READER's
+    concern (it reports them as error rows); the index never invents
+    entries for them, and a hopeless archive yields the rows located
+    before the damage."""
     rows: list[dict] = []
-    try:
-        for offset, length, headers, content in located:
-            if isinstance(content, str):
-                continue
-            status = mime = None
-            if _is_http(headers):
-                status, ctype, _ = _http_head(content)
-                mime = ctype and _mime(ctype)  # None without a Content-Type
-            url = headers.get("warc-target-uri", "")
-            rows.append(
-                {
-                    "urlkey": urlkey(url) if url else "",
-                    "ts": re.sub(r"[^0-9]", "", headers.get("warc-date", ""))[:14],
-                    "url": url,
-                    "mime": mime,
-                    "http_status": status,
-                    "digest": base64.b32encode(hashlib.sha1(content).digest()).decode(),
-                    "offset": offset,
-                    "length": length,
-                    "archive": archive,
-                    "record_type": headers.get("warc-type", ""),
-                }
-            )
-    except ValueError:
-        pass  # corrupt gzip member: index what was located, never invent
+    for offset, length, headers, content in located_records(payload):
+        if isinstance(content, str):
+            continue
+        status = mime = None
+        if _is_http(headers):
+            status, ctype, _ = _http_head(content)
+            mime = ctype and _mime(ctype)  # None without a Content-Type
+        url = headers.get("warc-target-uri", "")
+        rows.append(
+            {
+                "urlkey": urlkey(url) if url else "",
+                "ts": re.sub(r"[^0-9]", "", headers.get("warc-date", ""))[:14],
+                "url": url,
+                "mime": mime,
+                "http_status": status,
+                "digest": base64.b32encode(hashlib.sha1(content).digest()).decode(),
+                "offset": offset,
+                "length": length,
+                "archive": archive,
+                "record_type": headers.get("warc-type", ""),
+            }
+        )
     return rows
 
 

@@ -16,7 +16,9 @@ IS the checkpoint (SURVEY.md §4.3).  This sandbox ships no Iceberg jars, so
   read a manifest prefix);
 - ``remaining_documents`` anti-joins the source against committed doc_ids —
   the restart path.  The anti-join build side is the committed-ids
-  projection, pruned to one column so Catalyst can broadcast it when small.
+  projection, pruned to one column so Catalyst can broadcast it when small;
+  with no commit yet there is nothing to join, and the source passes
+  through with its scan's partitioning.
 
 The same class writes the lineage table (one row per extraction partition
 per run) under ``lineage/run_id=<id>/`` inside the same commit, mirroring
@@ -167,7 +169,14 @@ class SnapshotSink:
         join on a real cluster. Null-safe: a null doc_id is committed like
         any other, and a plain equality would never match it, so every
         resumed run would extract that document again.
+
+        Before the first commit the documents come back as they are:
+        against an empty relation Catalyst cannot size, the anti-join plans
+        as a sort-merge join that shuffles every document's spans and
+        extracts them on hash partitions instead of the scan's splits.
         """
+        if not self._manifest_files():
+            return documents
         spark = documents.sparkSession
         done = self.read_committed(spark).select("doc_id").distinct()
         return documents.join(

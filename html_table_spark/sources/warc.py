@@ -15,19 +15,20 @@ Format notes (ISO 28500 / WARC 1.1, public spec):
   exactly ``Content-Length`` content bytes, then ``CRLF CRLF``;
 * archives are plain concatenations of records, OR concatenations of
   single-record gzip members (Common Crawl's ``.warc.gz`` layout — members
-  are detected by the 1f 8b magic and walked by one linear pass that
-  feeds ``zlib`` bounded slices of the archive, so no external
+  are detected by the 1f 8b magic and walked one by one in a linear pass
+  that feeds ``zlib`` bounded slices of the archive, so no external
   gzip-member library is needed);
 * ``response`` records wrap a full HTTP/1.1 response (status line, headers,
   body); the body's charset comes from the Content-Type header with a
   utf-8 → latin-1 fallback (latin-1 never fails, so undeclared legacy
   pages still yield text).
 
-One walk reads records: :func:`iter_records` (header block, header rule,
-Content-Length, resync after a broken record) and ``_http_head`` (the
-HTTP status line and Content-Type) serve both this reader and the CDX
-index (``sources/cdx.py``), so the index lists exactly the records the
-reader reads.
+One walk reads archives: :func:`located_records` (gzip members, then
+:func:`iter_records`' header block, header rule, Content-Length and
+resync after a broken record in each) and ``_http_head`` (the HTTP status
+line and Content-Type) serve both this reader and the CDX index
+(``sources/cdx.py``), so the index lists exactly the records the reader
+reads.
 
 Scale design: the WARC *file* is the unit of parallelism — exactly how
 Common Crawl is processed in practice (segment files are ~1 GB, and the
@@ -62,9 +63,8 @@ from .documents import html_spans
 
 __all__ = [
     "iter_records",
+    "located_records",
     "parse_warc",
-    "split_gzip_members",
-    "iter_gzip_members",
     "read_warc",
     "warc_doc_id",
     "warc_to_documents",
@@ -91,10 +91,11 @@ _CHARSET_RE = re.compile(r"charset=[\"']?([A-Za-z0-9_.:-]+)", re.I)
 _MEMBER_SLICE = 256
 
 
-def iter_gzip_members(b: bytes) -> Iterator[tuple[int, int, bytes]]:
+def _gzip_members(b: bytes) -> Iterator[tuple[int, int, bytes | str]]:
     """``(offset, compressed_length, payload)`` per gzip member of a
-    concatenation (the .warc.gz layout), stopping at the first non-member
-    byte; raises ValueError on a corrupt or truncated member.
+    concatenation (the .warc.gz layout). A corrupt or truncated member, or
+    bytes after the last member that are not NUL padding, come as one entry
+    with an error message as ``payload``, and the walk stops there.
 
     One linear walk: the decompressor is fed memoryview slices of the
     archive, never the archive tail, so the bytes fed and copied are
@@ -110,25 +111,16 @@ def iter_gzip_members(b: bytes) -> Iterator[tuple[int, int, bytes]]:
                 parts.append(d.decompress(view[cur : cur + step]))
                 cur, step = min(cur + step, n), step * 2
         except zlib.error as e:
-            raise ValueError(f"warc: corrupt gzip member: {e}") from None
+            yield pos, n - pos, f"error: corrupt gzip member: {e}"
+            return
         if not d.eof:
-            raise ValueError("warc: truncated gzip member")
+            yield pos, n - pos, "error: truncated gzip member"
+            return
         end = cur - len(d.unused_data)
         yield pos, end - pos, b"".join(parts)
         pos = end
-
-
-def split_gzip_members(b: bytes) -> list[bytes]:
-    """Decompress a concatenation of gzip members (the .warc.gz layout)
-    into the per-member payloads; raises ValueError on a corrupt member."""
-    out: list[bytes] = []
-    end = 0
-    for offset, length, payload in iter_gzip_members(b):
-        out.append(payload)
-        end = offset + length
-    if b[end:].strip(b"\x00"):
-        raise ValueError("warc: trailing garbage after gzip members")
-    return out
+    if b[pos:].strip(b"\x00"):
+        yield pos, n - pos, "error: trailing garbage after gzip members"
 
 
 def _decode_body(body: bytes, content_type: str) -> str:
@@ -136,7 +128,9 @@ def _decode_body(body: bytes, content_type: str) -> str:
     if m:
         try:
             return body.decode(m.group(1), errors="replace")
-        except LookupError:
+        except (LookupError, ValueError):
+            # unknown, or a codec that fails on any input (idna and punycode
+            # refuse errors="replace"): read it as an undeclared page
             pass
     try:
         return body.decode("utf-8")
@@ -197,8 +191,8 @@ def iter_records(
     The walk is tolerant: a broken record comes with its error message as
     ``content`` and the headers read so far (None when it has no header
     block), and the walk resynchronizes at the next ``WARC/`` magic, so
-    one bad record cannot sink an archive. The reader and the CDX index
-    both walk archives with this, so they see the same records."""
+    one bad record cannot sink an archive. :func:`located_records` walks
+    each archive, or each of its gzip members, with this."""
     i, n = 0, len(b)
     while i < n:
         while i < n and b[i : i + 1] in (b"\r", b"\n"):
@@ -246,6 +240,31 @@ def iter_records(
         i = end
 
 
+def located_records(
+    payload: bytes,
+) -> Iterator[tuple[int, int, dict[str, str] | None, bytes | str]]:
+    """``(offset, length, headers, content)`` per record of one archive,
+    .warc or .warc.gz, as :func:`iter_records` gives them. In a plain
+    archive ``payload[offset : offset + length]`` is the record; in a
+    .warc.gz it is the gzip member holding it, and each member is walked on
+    its own, so a record cut across members, or one whose Content-Length
+    runs past its member, is a broken record of that member. A corrupt or
+    truncated member, or garbage after the members, is one error entry
+    (headers None) that ends the walk. The reader and the CDX index both
+    map over this, so they read an archive the same way."""
+    b = payload or b""
+    if b[:2] != b"\x1f\x8b":
+        for start, end, headers, content in iter_records(b):
+            yield start, end - start, headers, content
+        return
+    for offset, length, member in _gzip_members(b):
+        if isinstance(member, str):
+            yield offset, length, None, member
+            return
+        for _, _, headers, content in iter_records(member):
+            yield offset, length, headers, content
+
+
 def _ids(headers: dict[str, str]) -> dict:
     return {
         "record_type": headers.get("warc-type", ""),
@@ -273,16 +292,10 @@ def _record_row(headers: dict[str, str] | None, content: bytes | str) -> dict:
 
 
 def parse_warc(payload: bytes) -> list[dict]:
-    """All records of one archive (auto-detecting .warc vs .warc.gz); a
-    structurally hopeless archive returns a single error row rather than
-    raising (errors are data in this engine, never stage-killers)."""
-    b = payload or b""
-    try:
-        if b[:2] == b"\x1f\x8b":
-            b = b"".join(split_gzip_members(b))
-        return [_record_row(headers, content) for _, _, headers, content in iter_records(b)]
-    except ValueError as e:
-        return [{"status": f"error: {e}"}]
+    """All records of one archive (auto-detecting .warc vs .warc.gz): a
+    broken record, or damaged gzip container, is an error row rather than
+    an exception (errors are data in this engine, never stage-killers)."""
+    return [_record_row(headers, content) for _, _, headers, content in located_records(payload)]
 
 
 def _records_frame(archive: str, payload: bytes) -> pd.DataFrame:

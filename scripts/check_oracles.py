@@ -51,7 +51,7 @@ def main():
     import __spark_entry__ as entrymod
     from html_table_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]")
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -90,6 +90,20 @@ def _gzip_member(b: bytes) -> bytes:
     return co.compress(b) + co.flush()
 
 
+def _over_long(record: bytes, extra: int) -> bytes:
+    """``encode_warc``'s ``record`` with a Content-Length (its header's last
+    line) ``extra`` bytes past its content and the CR/LF run after it."""
+    head, sep, rest = record.partition(b"\r\n\r\n")
+    name, _, n = head.rpartition(b": ")
+    return name + b": %d" % (int(n) + 4 + extra) + sep + rest
+
+
+# how a response record is packed into .warc.gz members: whole in one, cut
+# in two at a point before its closing CR/LF run, or in one with a
+# Content-Length that runs past the member
+PACKINGS = ("whole", "cut", "over_long")
+
+
 @settings(max_examples=80, deadline=None)
 @given(
     records=st.lists(
@@ -99,6 +113,8 @@ def _gzip_member(b: bytes) -> bytes:
             st.binary(max_size=30).filter(lambda g: b"WARC/" not in g),
             st.sampled_from([200, 404]),
             st.text(st.characters(blacklist_categories=("Cs",)), max_size=40),
+            st.sampled_from(PACKINGS),
+            st.integers(min_value=0, max_value=10**4),
         ),
         min_size=1,
         max_size=6,
@@ -110,15 +126,26 @@ def test_reader_and_index_agree(records, gz):
     record of ``parse_warc`` has one CDX row with its url, record type and
     HTTP status, and every row's ``(offset, length)`` slice re-parses to
     exactly one ``ok`` record, whatever the header's spelling and the
-    garbage between records. In .warc.gz each piece is its own member."""
-    pieces = [encode_warc([])]
-    for k, (variant, garbage, status, html) in enumerate(records):
+    garbage between records. In .warc.gz each piece is its own member,
+    and a record cut across two members or running past its member is a
+    broken record that costs no other record."""
+    pieces, whole = [encode_warc([])], 1
+    for k, (variant, garbage, status, html, packing, at) in enumerate(records):
         page = {"url": f"http://p{k}.example/", "html": html, "status": status}
-        pieces += [garbage, HEADER_VARIANTS[variant](_response_record(page))]
+        record = _response_record(page)
+        if gz and packing == "over_long":
+            record = _over_long(record, 1 + at % 64)
+        record = HEADER_VARIANTS[variant](record)
+        if gz and packing == "cut":
+            cut = 1 + at % (len(record) - 5)
+            pieces += [garbage, record[:cut], record[cut:]]
+        else:
+            pieces += [garbage, record]
+        whole += not gz or packing == "whole"
     pieces = [p for p in pieces if p]
     b = b"".join(_gzip_member(p) for p in pieces) if gz else b"".join(pieces)
     read = [r for r in parse_warc(b) if r["status"] == "ok"]
-    assert len(read) == len(records) + 1
+    assert len(read) == whole
     rows = cdx_records("a", b)
     key = lambda r: (r["url"], r["record_type"], r["http_status"])  # noqa: E731
     assert Counter(map(key, rows)) == Counter(map(key, read))

@@ -3,17 +3,17 @@
 from __future__ import annotations
 
 import os
+import zlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from html_table_spark.sources.warc import (
     encode_warc,
+    located_records,
     parse_warc,
     parse_warc_column,
     read_warc,
     read_warc_documents,
-    split_gzip_members,
     warc_to_documents,
 )
 
@@ -38,26 +38,40 @@ def test_parse_plain_and_gzip_layouts():
         assert recs[1]["warc_date"] == "2024-01-01T00:00:00Z"
 
 
+def _members(b: bytes) -> list[bytes]:
+    """The decompressed gzip members ``located_records`` walked, in order."""
+    spans = sorted({(offset, length) for offset, length, _, _ in located_records(b)})
+    return [zlib.decompress(b[o : o + n], 16 + zlib.MAX_WBITS) for o, n in spans]
+
+
 def test_gzip_member_split_and_errors():
     b = encode_warc(PAGES[:2], per_record_gzip=True)
-    members = split_gzip_members(b)
+    members = _members(b)
     assert len(members) == 3  # warcinfo + 2 responses
     assert members[1].startswith(b"WARC/1.1\r\n")
-    with pytest.raises(ValueError, match="corrupt gzip"):
-        split_gzip_members(b"\x1f\x8b\xff nonsense")
-    with pytest.raises(ValueError, match="trailing garbage"):
-        split_gzip_members(b + b"tail")
+    # a damaged container is one error entry, and the walk stops there
+    bad = list(located_records(b"\x1f\x8b\xff nonsense"))
+    assert len(bad) == 1 and bad[0][3].startswith("error: corrupt gzip")
+    tail = list(located_records(b + b"tail"))
+    assert [e[3] for e in tail[3:]] == ["error: trailing garbage after gzip members"]
+    assert tail[3][:2] == (len(b), 4)
+    # NUL padding after the last member is not garbage
+    assert len(list(located_records(b + b"\x00" * 8))) == 3
+    cut = list(located_records(b[:-5]))
+    assert [e[3] for e in cut[2:]] == ["error: truncated gzip member"]
     # a corrupt archive yields an error ROW, never an exception
     rows = parse_warc(b"\x1f\x8b\xff nonsense")
     assert len(rows) == 1 and rows[0]["status"].startswith("error:")
+    # the records before the damage are read
+    rows = parse_warc(b + b"tail")
+    assert [r["status"] for r in rows[:3]] == ["ok"] * 3
+    assert rows[3]["status"] == "error: trailing garbage after gzip members"
 
 
 def test_gzip_member_walk_is_linear(monkeypatch):
     """The member walk feeds the decompressor O(archive) bytes: feeding
     each member the whole archive tail re-copies it per member, which is
     quadratic on the one-record-per-member Common Crawl layout."""
-    import zlib
-
     from html_table_spark.sources.cdx import cdx_records
 
     pages = [
@@ -80,7 +94,7 @@ def test_gzip_member_walk_is_linear(monkeypatch):
             return getattr(self._d, name)
 
     monkeypatch.setattr(zlib, "decompressobj", Counting)
-    assert len(split_gzip_members(b)) == 2000
+    assert len({offset for offset, _, _, _ in located_records(b)}) == 2000
     assert fed[0] <= 3 * len(b), (fed[0], len(b))
     fed[0] = 0
     rows = cdx_records("a.warc.gz", b)
@@ -128,6 +142,14 @@ def test_charset_decode_fallback():
         b"Content-Length: %d\r\n\r\n" % len(http) + http + b"\r\n\r\n"
     )
     assert parse_warc(rec)[0]["text"] == "café"
+    # a codec that fails on any input (idna and punycode refuse
+    # errors="replace") reads as undeclared, and costs no other record
+    rows = parse_warc(encode_warc(
+        [{"url": "http://a.example/", "html": "<td>café</td>"},
+         {"url": "http://b.example/", "html": "<td>x</td>", "charset": "idna"}]
+    ))
+    assert [r["status"] for r in rows] == ["ok"] * 3
+    assert [r["text"] for r in rows[1:]] == ["<td>café</td>", "<td>x</td>"]
 
 
 def test_non_http_response_body():
