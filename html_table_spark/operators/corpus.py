@@ -481,11 +481,13 @@ def run_corpus_job(
     incremental pass's job (``dedup.bloom_dedup`` against the committed
     corpus), exactly as in a production ingest.
 
-    Same crash discipline as ``run_job`` / ``run_maincontent_job``:
-    data materializes exactly once via ``errorifexists``, lineage
-    derives from a columnar re-read, the manifest lands atomically after
-    both writes. The whole pass is JVM expressions + two hash aggregates
-    (fingerprint dedup, lineage) — no Python on the hot path.
+    Committed like ``run_job`` / ``run_maincontent_job``, by
+    ``sink.write_run``: the rows are written once, lineage aggregates the
+    written files, the manifest lands atomically after both writes, and
+    its ``processed``/``docs``/``tokens`` are the sums of the lineage's
+    ``doc_count``/``kept_count``/``token_count``. The whole pass is JVM
+    expressions + two hash aggregates (fingerprint dedup, lineage) — no
+    Python on the hot path.
     """
     from ..functions.text import (
         dup_token_ratio,
@@ -495,10 +497,9 @@ def run_corpus_job(
     )
     from .extract import html_reassembly_col
 
-    # resume identity is doc_id: a null id can never match the committed
-    # set's anti-join, so it would be reprocessed (and re-committed) on
-    # every resumed run, and the canonical-dedup join would silently drop
-    # it. Reject nulls up front and surface the count in the manifest.
+    # the canonical-dedup join matches doc_id with plain equality and would
+    # silently drop a null id (the resume anti-join is null-safe), so nulls
+    # are rejected up front and counted in the manifest.
     # Rejected docs are never committed, so EVERY run (including resumed
     # ones) re-reports the nulls still present in its input — that per-run
     # visibility is the contract (test_run_corpus_job_rejects_null_ids
@@ -512,8 +513,6 @@ def run_corpus_job(
     documents = documents.filter(F.col("doc_id").isNotNull())
     if resume:
         documents = sink.remaining_documents(documents)
-    run_id = sink.new_run_id()
-    data_path = sink.data_path(run_id)
     docs = documents.select(
         "doc_id", html_reassembly_col("spans").alias("text")
     )
@@ -549,21 +548,9 @@ def run_corpus_job(
             ),
         )
     )
-    out.write.mode("errorifexists").parquet(data_path)
-    committed = spark.read.parquet(data_path)
-    lineage_path = sink.lineage_path(run_id)
-    corpus_lineage(committed, run_id).write.mode("errorifexists").parquet(
-        lineage_path
-    )
-    manifest = sink.commit_run(run_id, data_path, lineage_path)
-    stats = committed.agg(
-        F.count("*").alias("processed"),
-        F.sum(F.col("kept").cast("long")).alias("docs"),
-        F.sum(F.when(F.col("kept"), F.col("n_tokens"))
-              .otherwise(F.lit(0))).alias("tokens"),
-    ).first()
-    manifest["processed"] = int(stats["processed"] or 0)
-    manifest["docs"] = int(stats["docs"] or 0)
-    manifest["tokens"] = int(stats["tokens"] or 0)
+    manifest = sink.write_run(out, corpus_lineage)
+    manifest["processed"] = manifest["doc_count"]
+    manifest["docs"] = manifest["kept_count"]
+    manifest["tokens"] = manifest["token_count"]
     manifest["null_id_docs"] = int(n_null)
     return manifest

@@ -282,9 +282,10 @@ def main_text(docs: DataFrame, *, doc_id_col: str = "doc_id",
 _JOB_SCHEMA = (_BLOCKS_SCHEMA + ", part_id int, wall_ms long")
 
 
-def _job_blocks(documents: DataFrame) -> DataFrame:
+def _job_blocks(documents: DataFrame, resume_from=None) -> DataFrame:
     """Span-stream corpus → per-block rows carrying the lineage columns
-    (physical partition id + running kernel wall)."""
+    (physical partition id + running kernel wall), minus the pages
+    ``resume_from`` committed, dropped after the scan's spread is decided."""
     from ..operators.extract import html_reassembly_col
     from .util import ensure_parallelism
 
@@ -294,6 +295,8 @@ def _job_blocks(documents: DataFrame) -> DataFrame:
             html_reassembly_col("spans").alias("html"),
         )
     )
+    if resume_from is not None:
+        pages = resume_from.remaining_documents(pages)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -342,26 +345,11 @@ def maincontent_lineage(committed: DataFrame, run_id: str) -> DataFrame:
 
 def run_maincontent_job(spark: SparkSession, documents: DataFrame, sink,
                         *, resume: bool = True) -> dict:
-    """One snapshot-committed main-content run over a span-stream corpus.
-
-    Same crash discipline as the table pipeline's ``run_job``
-    (plans/pipeline.py): resume filters committed doc_ids out first
-    (anti-join on the sink's committed snapshots), the block rows are
-    materialized exactly once by the data write, lineage derives from a
-    cheap columnar re-read of those files, and nothing becomes visible
-    until the commit manifest lands atomically after BOTH writes."""
-    if resume:
-        documents = sink.remaining_documents(documents)
-    run_id = sink.new_run_id()
-    data_path = sink.data_path(run_id)
-    blocks = _job_blocks(documents)
-    blocks.write.mode("errorifexists").parquet(data_path)
-    committed = spark.read.parquet(data_path)
-    lineage_path = sink.lineage_path(run_id)
-    maincontent_lineage(committed, run_id).write.mode(
-        "errorifexists"
-    ).parquet(lineage_path)
-    manifest = sink.commit_run(run_id, data_path, lineage_path)
-    manifest["blocks"] = committed.count()
-    manifest["docs"] = committed.select("doc_id").distinct().count()
+    """One snapshot-committed main-content run over a span-stream corpus,
+    resumed and committed (``sink.write_run``) as the table pipeline's
+    ``run_job`` is. The manifest's ``docs``/``blocks`` are its lineage's
+    ``doc_count``/``block_count`` sums."""
+    blocks = _job_blocks(documents, sink if resume else None)
+    manifest = sink.write_run(blocks, maincontent_lineage)
+    manifest["docs"], manifest["blocks"] = manifest["doc_count"], manifest["block_count"]
     return manifest

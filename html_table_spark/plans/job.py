@@ -56,24 +56,18 @@ def main(argv: list[str] | None = None) -> dict:
     else:
         documents = read_documents(spark, args.input)
     sink = SnapshotSink(args.output)
+    resume = not args.no_resume
     if args.mode == "corpus":
         from html_table_spark.operators.corpus import run_corpus_job
 
-        manifest = run_corpus_job(
-            spark, documents, sink, resume=not args.no_resume
-        )
-        print(json.dumps(manifest))
-        return manifest
-    if args.mode == "maincontent":
+        manifest = run_corpus_job(spark, documents, sink, resume=resume)
+    elif args.mode == "maincontent":
         from html_table_spark.operators.maincontent import run_maincontent_job
 
-        manifest = run_maincontent_job(
-            spark, documents, sink, resume=not args.no_resume
-        )
-        print(json.dumps(manifest))
-        return manifest
-    config = ParserConfig().all_tables() if args.mode == "all" else ParserConfig()
-    manifest = run_job(spark, documents, sink, config, resume=not args.no_resume)
+        manifest = run_maincontent_job(spark, documents, sink, resume=resume)
+    else:
+        config = ParserConfig().all_tables() if args.mode == "all" else ParserConfig()
+        manifest = run_job(spark, documents, sink, config, resume=resume)
     print(json.dumps(manifest))
     return manifest
 

@@ -5,7 +5,8 @@ Catalyst rules:
 
     scan (doc_id, spans; splits packed by bytes, ≈2 per core)
     → JVM-side HTML reassembly → extraction (mapInArrow)
-    → one write → per-partition lineage agg → snapshot commit
+    → SnapshotSink.write_run: one write into the run's data path (no leg
+      subdirectory) → per-partition lineage of the written files → commit
 
 Every document parses whole, in place, as the reference parses each page
 in one ``loadHTML`` (Parser.php:446). The kernel's cost is about linear in
@@ -45,30 +46,36 @@ def plan_extraction(
     documents: DataFrame,
     config: ParserConfig | None = None,
     *,
-    num_partitions: int | None = None,
+    resume_from: SnapshotSink | None = None,
 ) -> DataFrame:
     """The one extraction pass, lazy: ``documents(doc_id, spans)`` →
     ``EXTRACTED_SCHEMA`` rows. One select reassembles each document's HTML
     on the scan's partitions, where the documents are extracted unless
-    they can keep fewer than half of ``num_partitions`` tasks busy
+    they can keep fewer than half of P tasks busy
     (:func:`~html_table_spark.operators.util.scan_parallelism`: a
     one-row-group file fills one split however many it is cut into), when
-    the (doc_id, html) rows take a salted repartition first.
-    ``num_partitions`` defaults to the context's ``defaultParallelism`` as
-    the plan is built: a local master's cores, or the executor cores a
-    cluster has registered by then (``--conf spark.default.parallelism=N``
-    sets it).
+    the (doc_id, html) rows take a salted repartition into P first. P is
+    the context's ``defaultParallelism`` as the plan is built: a local
+    master's cores, or the executor cores a cluster has registered by then
+    (``--conf spark.default.parallelism=N`` sets it).
+
+    ``resume_from`` keeps the documents that sink has not committed
+    (``remaining_documents``). The salt is decided on the corpus before
+    that join: its committed files are not corpus files, and sizing a
+    plan that holds it would run its query stages.
 
     Plan construction is deliberately terse: every intermediate Dataset
     costs a full Catalyst analyzer pass over the whole subtree, serial
     driver time before any task runs."""
-    if num_partitions is None:
-        num_partitions = documents.sparkSession.sparkContext.defaultParallelism
-    source = documents.select("doc_id", html_reassembly_col("spans").alias("html"))
+    target = documents.sparkSession.sparkContext.defaultParallelism
     # a streaming input passes through (.rdd is illegal on its plan): the
     # trigger sizes its micro-batches (maxFilesPerTrigger)
-    if not documents.isStreaming and scan_parallelism(documents) < max(2, num_partitions // 2):
-        source = salted(source, num_partitions)
+    salt = not documents.isStreaming and scan_parallelism(documents) < max(2, target // 2)
+    if resume_from is not None:
+        documents = resume_from.remaining_documents(documents)
+    source = documents.select("doc_id", html_reassembly_col("spans").alias("html"))
+    if salt:
+        source = salted(source, target)
     return source.mapInArrow(
         make_arrow_extractor(config or ParserConfig()), schema=EXTRACTED_SCHEMA
     )
@@ -79,12 +86,12 @@ def run_extraction_concurrent(
     config: ParserConfig | None = None,
     *,
     leg_action,
-    num_partitions: int | None = None,
+    resume_from: SnapshotSink | None = None,
 ) -> dict:
     """Plan the one pass and run ``leg_action("normal", df)`` on it (count,
     write, collect). Returns ``{"normal": result}``; the name and shape are
     the ones the benchmark harness calls (perfbench/run.py)."""
-    df = plan_extraction(documents, config, num_partitions=num_partitions)
+    df = plan_extraction(documents, config, resume_from=resume_from)
     return {"normal": leg_action("normal", df)}
 
 
@@ -120,40 +127,17 @@ def run_job(
     config: ParserConfig | None = None,
     *,
     resume: bool = True,
-    num_partitions: int | None = None,
 ) -> dict:
-    """Execute one extraction run: resume-filter → extract → write+commit.
-
-    Returns the commit manifest. Re-running after a crash or
-    partial corpus processes only uncommitted documents (Iceberg-snapshot
-    discipline, SURVEY.md §4.3).
-    """
-    if resume:
-        documents = sink.remaining_documents(documents)
-    run_id = sink.new_run_id()
-    # Materialize the extraction exactly once: write the data files, then
-    # derive lineage by re-reading them (a cheap columnar aggregate) instead
-    # of recomputing the whole extraction DAG. The snapshot commits only
-    # after BOTH tables are on disk — crash at any earlier point leaves no
-    # visible state ("lineage in the same transaction", SURVEY.md §4.3).
-    data_path = sink.data_path(run_id)
-
-    def write_leg(name: str, df: DataFrame):
-        df.write.mode("errorifexists").parquet(data_path.rstrip("/") + "/" + name)
-        return df.schema
-
-    res = run_extraction_concurrent(
-        documents, config, leg_action=write_leg, num_partitions=num_partitions
-    )
-    committed = (
-        spark.read.schema(res["normal"])
-        .option("recursiveFileLookup", "true")
-        .parquet(data_path)
-    )
-    lineage = lineage_from_extracted(committed, run_id)
-    lineage_path = sink.lineage_path(run_id)
-    lineage.write.mode("errorifexists").parquet(lineage_path)
-    return sink.commit_run(run_id, data_path, lineage_path)
+    """One extraction run: resume filter → extract → ``sink.write_run``
+    with :func:`lineage_from_extracted`; returns the commit manifest.
+    Re-running after a crash or partial corpus processes only uncommitted
+    documents (Iceberg-snapshot discipline, SURVEY.md §4.3)."""
+    return run_extraction_concurrent(
+        documents,
+        config,
+        resume_from=sink if resume else None,
+        leg_action=lambda _name, df: sink.write_run(df, lineage_from_extracted),
+    )["normal"]
 
 
 # perfbench/layers.py:226-260 (frozen between benchmark changes) imports

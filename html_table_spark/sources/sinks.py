@@ -6,12 +6,14 @@ with an Iceberg catalog this is a ``writeTo(...).append()`` whose snapshot
 IS the checkpoint (SURVEY.md §4.3).  This sandbox ships no Iceberg jars, so
 :class:`SnapshotSink` reproduces the observable contract over plain Parquet:
 
-- every run writes its data under ``data/run_id=<id>/`` (atomic at the
-  directory level: the path is invisible to readers until committed);
+- :meth:`SnapshotSink.write_run`, the one way a job commits, writes a
+  run's rows straight under ``data/run_id=<id>/``, then its per-partition
+  lineage under ``lineage/run_id=<id>/`` (invisible until committed);
 - a commit is one JSON manifest atomically renamed into ``_commits/`` after
-  the write succeeds — a crashed run leaves data files but NO manifest, so
+  both writes succeed — a crashed run leaves data files but NO manifest, so
   readers and resume logic never see partial output (exactly Iceberg's
-  snapshot discipline, minus compaction);
+  snapshot discipline, minus compaction), and lineage lands "in the same
+  transaction" (SURVEY.md §4.3);
 - ``read_committed`` unions only committed run directories (time-travel =
   read a manifest prefix);
 - ``remaining_documents`` anti-joins the source against committed doc_ids —
@@ -19,10 +21,6 @@ IS the checkpoint (SURVEY.md §4.3).  This sandbox ships no Iceberg jars, so
   projection, pruned to one column so Catalyst can broadcast it when small;
   with no commit yet there is nothing to join, and the source passes
   through with its scan's partitioning.
-
-The same class writes the lineage table (one row per extraction partition
-per run) under ``lineage/run_id=<id>/`` inside the same commit, mirroring
-"write lineage in the same transaction" (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -33,6 +31,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .documents import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
 
@@ -60,14 +59,31 @@ class SnapshotSink:
 
     # -- write path ----------------------------------------------------
 
-    def new_run_id(self) -> str:
-        return uuid.uuid4().hex[:12]
-
     def data_path(self, run_id: str) -> str:
         return os.path.join(self.data_dir, f"run_id={run_id}")
 
     def lineage_path(self, run_id: str) -> str:
         return os.path.join(self.lineage_dir, f"run_id={run_id}")
+
+    def write_run(self, rows: DataFrame, lineage) -> dict:
+        """Write ``rows`` once under ``data_path(run_id)``, then
+        ``lineage(written, run_id)`` (one row per ``part_id``, aggregated
+        over the written files, not a second run of ``rows``' plan), then
+        :meth:`commit_run`. Returns the manifest, plus the sum of each
+        lineage ``*_count`` column."""
+        run_id = uuid.uuid4().hex[:12]
+        data_path, lineage_path = self.data_path(run_id), self.lineage_path(run_id)
+        rows.write.mode("errorifexists").parquet(data_path)
+        spark = rows.sparkSession
+        per_part = lineage(spark.read.schema(rows.schema).parquet(data_path), run_id)
+        per_part.write.mode("errorifexists").parquet(lineage_path)
+        manifest = self.commit_run(run_id, data_path, lineage_path)
+        counts = [c for c in per_part.columns if c.endswith("_count")]
+        sums = spark.read.schema(per_part.schema).parquet(lineage_path).agg(
+            *(F.sum(c).alias(c) for c in counts)
+        ).first()
+        manifest.update({c: int(sums[c] or 0) for c in counts})
+        return manifest
 
     def commit_run(self, run_id: str, data_path: str, lineage_path: str | None) -> dict:
         """Publish already-written run directories as one atomic snapshot.
@@ -143,11 +159,10 @@ class SnapshotSink:
         ]
         if not paths:
             return spark.createDataFrame([], schema)
-        # recursiveFileLookup: a committed run's data_path holds its files in
-        # leg subdirectories (run_job writes normal/; runs committed by the
-        # earlier two-leg plan also hold mega/) — read every data file under
-        # it with the explicit schema, no partition inference from the
-        # directory names
+        # recursiveFileLookup: runs committed before write_run hold their
+        # files in leg subdirectories (normal/, and mega/ from the earlier
+        # two-leg plan) — read every data file under a data_path with the
+        # explicit schema, no partition inference from the directory names
         return (
             spark.read.schema(schema)
             .option("recursiveFileLookup", "true")

@@ -53,7 +53,7 @@ documents = spark.createDataFrame(
 )
 cells = F.filter("spans", lambda s: s["kind"] == "cell")
 rows = (
-    plan_extraction(documents, ParserConfig().all_tables(), num_partitions=4)
+    plan_extraction(documents, ParserConfig().all_tables())
     .select("doc_id", "table_idx", "status", F.size(cells).alias("n"), F.transform(cells, lambda s: s["text"]).alias("texts"))
     .select("doc_id", "table_idx", "status", "n", F.when(F.col("n") <= 100, F.col("texts")).alias("texts"))
     .collect()

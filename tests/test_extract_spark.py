@@ -41,7 +41,7 @@ def _one_pass(spark, rows, n_spans=16):
             {"kind": "text", "text": html[i * k : (i + 1) * k], "media_ref": None, "offset": i}
             for i in reversed(range(n_spans))
         ]})
-    return plan_extraction(_docs_df(spark, spread), ParserConfig().all_tables(), num_partitions=4)
+    return plan_extraction(_docs_df(spark, spread), ParserConfig().all_tables())
 
 
 def kernel_signatures(rows, config):

@@ -190,7 +190,11 @@ def test_main_text_spark(spark):
     assert got == {"1": long_body, "2": "", "3": ""}
 
 
-def _page_corpus(spark, n_docs: int):
+def _page_corpus(spark, n_docs: int, null_id: bool = False):
+    """``n_docs`` pages; with ``null_id``, the last page's doc_id is null
+    (a foreign writer may relax the schema's non-null doc_id)."""
+    from pyspark.sql.types import StructField, StructType
+
     from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
 
     rows = [
@@ -207,7 +211,11 @@ def _page_corpus(spark, n_docs: int):
         }
         for i in range(n_docs)
     ]
-    return spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    if not null_id:
+        return spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    rows[-1]["doc_id"] = None
+    relaxed = StructType([StructField(f.name, f.dataType, True) for f in DOCUMENTS_SCHEMA])
+    return spark.createDataFrame(rows, relaxed)
 
 
 def test_run_maincontent_job_resume(spark, tmp_path):
@@ -216,17 +224,21 @@ def test_run_maincontent_job_resume(spark, tmp_path):
     from html_table_spark.operators.maincontent import run_maincontent_job
     from html_table_spark.sources.sinks import SnapshotSink
 
-    df = _page_corpus(spark, 24)
+    # 24 pages and one whose doc_id is null; the null id hashes to 42, so
+    # it is in the first half
+    df = _page_corpus(spark, 25, null_id=True)
     sink = SnapshotSink(str(tmp_path / "mc"))
     half = df.filter(F.xxhash64("doc_id") % 2 == 0)
     m1 = run_maincontent_job(spark, half, sink)
-    assert m1["docs"] == half.count()
-    assert m1["blocks"] == 3 * m1["docs"]  # nav / body / footer per page
+    # the manifest sums the lineage, whose doc_count counts distinct
+    # non-null ids: the null-id page's blocks count, its id does not
+    assert m1["docs"] == half.count() - 1
+    assert m1["blocks"] == 3 * half.count()  # nav / body / footer per page
 
     # second run over the FULL corpus resumes: only the other half runs
     m2 = run_maincontent_job(spark, df, sink)
     assert m2["run_id"] != m1["run_id"]
-    assert m2["docs"] == df.count() - m1["docs"]
+    assert m2["docs"] == df.count() - half.count()
     from html_table_spark.operators.maincontent import _JOB_SCHEMA
 
     committed = sink.read_committed(spark, schema=_JOB_SCHEMA)
@@ -241,18 +253,48 @@ def test_run_maincontent_job_resume(spark, tmp_path):
     m3 = run_maincontent_job(spark, df, sink)
     assert m3["blocks"] == 0 and m3["docs"] == 0
 
-    # per-partition lineage + metrics rows committed with run 1
-    lineage = spark.read.parquet(m1["lineage_path"])
-    agg = lineage.agg(
-        F.sum("doc_count").alias("docs"),
-        F.sum("block_count").alias("blocks"),
-        F.sum("content_count").alias("content"),
-        F.max("wall_ms").alias("wall"),
-    ).first()
-    assert agg.docs == m1["docs"] and agg.blocks == m1["blocks"]
-    assert 0 < agg.content  # long bodies classify as content
-    assert agg.wall >= 0
-    assert lineage.filter(F.col("run_id") != m1["run_id"]).count() == 0
+    # per-partition lineage + metrics rows committed with each run; the
+    # manifests' totals are their sums
+    for m in (m1, m2):
+        lineage = spark.read.parquet(m["lineage_path"])
+        agg = lineage.agg(
+            F.sum("doc_count").alias("docs"),
+            F.sum("block_count").alias("blocks"),
+            F.sum("content_count").alias("content"),
+            F.max("wall_ms").alias("wall"),
+        ).first()
+        assert agg.docs == m["docs"] and agg.blocks == m["blocks"]
+        assert 0 < agg.content  # long bodies classify as content
+        assert agg.wall >= 0
+        assert lineage.filter(F.col("run_id") != m["run_id"]).count() == 0
+
+
+def test_resumed_one_file_corpus_spreads(spark, tmp_path):
+    """A one-file, one-row-group corpus cut into byte ranges by the scan
+    fills one of them, so the job spreads it over the cores. A resumed run
+    spreads it too: the files its resume filter joins are not corpus
+    files."""
+    from html_table_spark.operators.maincontent import run_maincontent_job
+    from html_table_spark.sources.documents import read_documents
+    from html_table_spark.sources.sinks import SnapshotSink
+
+    path = str(tmp_path / "pages")
+    _page_corpus(spark, 24).coalesce(1).write.parquet(path)
+    sink = SnapshotSink(str(tmp_path / "mc"))
+    confs = {"spark.sql.files.openCostInBytes": "0", "spark.sql.files.maxPartitionBytes": "1024"}
+    before = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        docs = read_documents(spark, path)
+        assert docs.rdd.getNumPartitions() >= 8
+        run_maincontent_job(spark, docs.filter("doc_id < 'd008'"), sink)
+        resumed = run_maincontent_job(spark, docs, sink)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert resumed["docs"] == 16
+    assert spark.read.parquet(resumed["lineage_path"]).count() >= 2
 
 
 def test_job_cli_maincontent_mode(spark, tmp_path, monkeypatch):

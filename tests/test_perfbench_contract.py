@@ -12,6 +12,10 @@ the package, and of ``__spark_entry__`` and ``bench``, there:
 - each call of such a name, or of ``module.attr`` on an imported module,
   binds its positional count and keyword names to the callee's signature;
 - each attribute read or assigned on an imported module exists.
+
+A name perfbench patches must also still be called: the traced write job
+(``layers.traced_write_job``) reads one span from each of the three it
+patches, so one test runs ``run_job`` with those names counted.
 """
 
 from __future__ import annotations
@@ -119,3 +123,31 @@ def test_the_harness_is_read():
     for path in SOURCES:
         seen |= set(_package_names(ast.parse(path.read_text())))
     assert {"run_extraction_concurrent", "extract_tables", "pipeline", "get_spark"} <= seen
+
+
+def test_run_job_calls_the_names_the_traced_write_patches(spark, tmp_path, monkeypatch):
+    """``layers.traced_write_job`` times the write, the lineage and the
+    commit by patching ``pipeline.run_extraction_concurrent``,
+    ``pipeline.lineage_from_extracted`` and the sink's ``commit_run``:
+    ``run_job`` calls each once, the lineage before the commit."""
+    from html_table_spark.corpus import synthesize_documents
+    from html_table_spark.plans import pipeline
+    from html_table_spark.sources.documents import DOCUMENTS_SCHEMA
+    from html_table_spark.sources.sinks import SnapshotSink
+
+    calls = []
+
+    def counted(name, fn):
+        def wrapper(*a, **k):
+            calls.append(name)
+            return fn(*a, **k)
+
+        return wrapper
+
+    for name in ("run_extraction_concurrent", "lineage_from_extracted"):
+        monkeypatch.setattr(pipeline, name, counted(name, getattr(pipeline, name)))
+    sink = SnapshotSink(str(tmp_path / "sink"))
+    sink.commit_run = counted("commit_run", sink.commit_run)
+    docs = spark.createDataFrame(synthesize_documents(n_docs=4, seed=3), DOCUMENTS_SCHEMA)
+    pipeline.run_job(spark, docs, sink)
+    assert calls == ["run_extraction_concurrent", "lineage_from_extracted", "commit_run"]

@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 from html_table_spark.config import ParserConfig
 from html_table_spark.corpus import CORPUS_SCHEMA, synthesize_documents
-from html_table_spark.plans.pipeline import run_extraction_concurrent, run_job
+from html_table_spark.plans.pipeline import plan_extraction, run_extraction_concurrent, run_job
 from html_table_spark.semantics import parse_document
-from html_table_spark.sources.documents import DOCUMENTS_SCHEMA, read_documents
+from html_table_spark.sources.documents import DOCUMENTS_SCHEMA, EXTRACTED_SCHEMA, read_documents
 from html_table_spark.sources.sinks import SnapshotSink
 from html_table_spark.spans import doc_spans_to_html, encode_table_spans, spans_signature
 
@@ -59,7 +59,7 @@ def _kernel_rows(rows, config):
 def test_plan_extraction_with_mega(spark):
     """A mega doc is parsed whole, in one task, like every other doc."""
     df, rows = _corpus_df(spark, n_docs=30, seed=11, mega_docs=1, mega_tables=120)
-    out = _extract(df, ParserConfig().all_tables(), num_partitions=8)
+    out = _extract(df, ParserConfig().all_tables())
     mega = [r for r in out if r.doc_id == "mega000"]
     assert sorted(r.table_idx for r in mega) == list(range(120))
     assert len({r.part_id for r in mega}) == 1
@@ -69,13 +69,13 @@ def test_run_job_resume(spark, tmp_path):
     df, rows = _corpus_df(spark, n_docs=40, seed=5)
     sink = SnapshotSink(str(tmp_path / "out"))
     half = df.filter(F.xxhash64("doc_id") % 2 == 0)
-    manifest1 = run_job(spark, half, sink, ParserConfig().all_tables(), num_partitions=4)
+    manifest1 = run_job(spark, half, sink, ParserConfig().all_tables())
     first = sink.read_committed(spark)
     n_first_docs = first.select("doc_id").distinct().count()
     assert n_first_docs == half.count()
 
     # second run over the FULL corpus resumes: only the other half processed
-    manifest2 = run_job(spark, df, sink, ParserConfig().all_tables(), num_partitions=4)
+    manifest2 = run_job(spark, df, sink, ParserConfig().all_tables())
     assert manifest2["run_id"] != manifest1["run_id"]
     all_docs = sink.read_committed(spark)
     assert all_docs.select("doc_id").distinct().count() == df.count()
@@ -90,7 +90,7 @@ def test_run_job_resume(spark, tmp_path):
     assert dup == 0
 
     # third run: nothing left to do, commit is empty but valid
-    run_job(spark, df, sink, ParserConfig().all_tables(), num_partitions=4)
+    run_job(spark, df, sink, ParserConfig().all_tables())
     assert all(m["data_path"] for m in sink.manifests())
 
     # lineage rows exist, metrics add up to the committed table count
@@ -104,8 +104,8 @@ def test_snapshot_time_travel(spark, tmp_path):
     df, _ = _corpus_df(spark, n_docs=12, seed=9)
     sink = SnapshotSink(str(tmp_path / "tt"))
     third = df.limit(4)
-    run_job(spark, third, sink, num_partitions=2)
-    run_job(spark, df, sink, num_partitions=2)
+    run_job(spark, third, sink)
+    run_job(spark, df, sink)
     seq1_docs = sink.read_committed(spark, as_of_seq=1).select("doc_id").distinct().count()
     all_docs = sink.read_committed(spark).select("doc_id").distinct().count()
     assert seq1_docs == 4
@@ -153,29 +153,37 @@ def test_legs_equal_union_plan(spark):
     """One pass in every mode: the result holds the ``normal`` leg only."""
     df, _ = _corpus_df(spark, n_docs=25, seed=7, mega_docs=1, mega_tables=80)
     for config in (ParserConfig(), ParserConfig().all_tables()):
-        legs = run_extraction_concurrent(
-            df, config, leg_action=lambda _n, d: d.count(), num_partitions=4
-        )
+        legs = run_extraction_concurrent(df, config, leg_action=lambda _n, d: d.count())
         assert list(legs) == ["normal"] and legs["normal"] > 0
 
 
 def test_run_job_leg_layout_readable(spark, tmp_path):
-    """The pass writes into one data_path subdir; read_committed and the
-    lineage re-read must see every row exactly once."""
-    import os
-
+    """run_job writes its files straight into its data_path. A run
+    committed in the earlier layout, its files in ``normal/`` and ``mega/``
+    leg subdirectories of its data_path, still reads once through
+    read_committed, and a resume skips its documents."""
     df, _ = _corpus_df(spark, n_docs=20, seed=13, mega_docs=1, mega_tables=60)
+    config = ParserConfig().all_tables()
     sink = SnapshotSink(str(tmp_path / "legs"))
-    run_job(spark, df, sink, ParserConfig().all_tables(), num_partitions=4)
-    data_path = sink.manifests()[0]["data_path"]
-    subdirs = sorted(
-        d for d in os.listdir(data_path)
-        if os.path.isdir(os.path.join(data_path, d))
-    )
-    assert subdirs == ["normal"]
+    legacy = sink.data_path("legacy")
+    is_mega = F.col("doc_id") == "mega000"
+    plan_extraction(df.filter(is_mega), config).write.parquet(legacy + "/mega")
+    old = df.filter(~is_mega & (F.xxhash64("doc_id") % 2 == 0))
+    plan_extraction(old, config).write.parquet(legacy + "/normal")
+    sink.commit_run("legacy", legacy, None)
+    n_old = old.count() + 1  # and mega000
+
+    manifest = run_job(spark, df, sink, config)
+    data_path = manifest["data_path"]
+    entries = os.listdir(data_path)
+    assert not [d for d in entries if os.path.isdir(os.path.join(data_path, d))]
+    assert any(f.endswith(".parquet") for f in entries)
+    assert manifest["doc_count"] == 21 - n_old
     committed = sink.read_committed(spark)
     assert committed.select("doc_id").distinct().count() == 21
+    assert committed.count() == committed.select("doc_id", "table_idx").distinct().count()
     assert committed.filter("doc_id = 'mega000'").count() == 60
+    assert sink.remaining_documents(df).count() == 0
 
 
 # -- the metamorphic suite -----------------------------------------------------
@@ -250,20 +258,24 @@ def _full_kernel_rows(rows, config):
 
 
 @pytest.mark.parametrize(
-    "num_partitions,batch_rows", [(1, 1), (4, 8), (8, 16), (16, 64), (4, 1024)]
+    "input_partitions,batch_rows", [(1, 1), (4, 8), (8, 16), (16, 64), (4, 1024)]
 )
-def test_discovery_routing_equals_kernel(spark, num_partitions, batch_rows):
+def test_discovery_routing_equals_kernel(spark, input_partitions, batch_rows):
     """The plan is a performance choice, never a correctness boundary: the
-    one pass extracts the kernel's rows whatever the partition count and
-    the Arrow batch size (``maxRecordsPerBatch``; 1024 is the session's)."""
+    one pass extracts the kernel's rows whatever the partition count (one
+    input partition is salted over the cores; 4, 8 or 16 are extracted in
+    place) and the Arrow batch size (``maxRecordsPerBatch``; 1024 is the
+    session's)."""
     rows = _metamorphic_rows()
-    df = spark.createDataFrame(rows, _NULLABLE_SCHEMA)
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, input_partitions), _NULLABLE_SCHEMA
+    )
     config = ParserConfig().all_tables()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key)
     spark.conf.set(key, str(batch_rows))
     try:
-        got = _full_rows(_extract(df, config, num_partitions=num_partitions))
+        got = _full_rows(_extract(df, config))
     finally:
         spark.conf.set(key, before)
     assert got == _full_kernel_rows(rows, config)
@@ -334,14 +346,26 @@ def test_one_file_corpus_spreads(spark, tmp_path, setting):
     """A one-file, one-row-group corpus (the layout of the sf*
     documents.parquet files) fills one split however many byte ranges the
     scan cuts it into, so the pass salts it over the cores instead of
-    parsing the whole corpus in one task."""
+    parsing the whole corpus in one task. So does a resumed run over it:
+    the files its resume filter joins do not count as corpus files."""
     rows = _metamorphic_rows()
     path = _write_corpus(rows, str(tmp_path / "corpus"), n_files=1, row_group_rows=len(rows))
     config = ParserConfig().all_tables()
+    sink = SnapshotSink(str(tmp_path / "sink"))
     with _split_confs(spark, setting):
-        got = _extract(read_documents(spark, path), config)
+        docs = read_documents(spark, path)
+        got = _extract(docs, config)
+        run_job(spark, docs.filter(F.xxhash64("doc_id") % 3 == 0), sink, config)
+        resumed = run_job(spark, docs, sink, config)
     assert _full_rows(got) == _full_kernel_rows(rows, config)
     assert len({r.part_id for r in got}) >= 2
+    resumed_rows = (
+        spark.read.schema(EXTRACTED_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(resumed["data_path"])
+    )
+    assert resumed_rows.select("part_id").distinct().count() >= 2
+    assert _full_rows(sink.read_committed(spark).collect()) == _full_kernel_rows(rows, config)
 
 
 def test_resume_split_equals_kernel(spark, tmp_path):
@@ -354,8 +378,8 @@ def test_resume_split_equals_kernel(spark, tmp_path):
     sink = SnapshotSink(str(tmp_path / "resume"))
     first = df.filter(F.xxhash64("doc_id") % 3 == 0)
     assert 0 < first.count() < len(rows)
-    run_job(spark, first, sink, config, num_partitions=4)
-    run_job(spark, df, sink, config, num_partitions=4)
+    run_job(spark, first, sink, config)
+    run_job(spark, df, sink, config)
     assert len(sink.manifests()) == 2
     assert _full_rows(sink.read_committed(spark).collect()) == _full_kernel_rows(rows, config)
 
@@ -367,7 +391,7 @@ def test_resume_null_doc_id_extracted_once(spark, tmp_path):
     df = spark.createDataFrame(rows, _NULLABLE_SCHEMA)
     sink = SnapshotSink(str(tmp_path / "resume_null"))
     for _ in range(2):
-        run_job(spark, df, sink, ParserConfig().all_tables(), num_partitions=2)
+        run_job(spark, df, sink, ParserConfig().all_tables())
     assert sink.read_committed(spark).count() == 1
 
 
@@ -409,7 +433,7 @@ def test_discovery_proxy_miss_byte_heavy_doc_not_dropped(spark):
     span-heavy one."""
     rows = [r for r in _edge_rows() if r["doc_id"] in ("slim-mega", "X")]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    out = _tables(df, ParserConfig().all_tables(), num_partitions=4)
+    out = _tables(df, ParserConfig().all_tables())
     by_key = {(r.doc_id, r.table_idx): r for r in out if r.doc_id == "slim-mega"}
     assert list(by_key) == [("slim-mega", 0)]
     assert by_key[("slim-mega", 0)].caption == "big"
@@ -424,7 +448,7 @@ def test_discovery_null_doc_id_rides_normal_leg(spark):
     executor-side NPE."""
     rows = [r for r in _edge_rows() if r["doc_id"] in (None, "X")]
     df = spark.createDataFrame(rows, _NULLABLE_SCHEMA)
-    out = _tables(df, ParserConfig().all_tables(), num_partitions=4)
+    out = _tables(df, ParserConfig().all_tables())
     null_rows = [r for r in out if r.doc_id is None]
     assert len(null_rows) == 1, "null-id doc must surface exactly once"
     assert null_rows[0].status == "ok"
@@ -436,7 +460,7 @@ def test_discovery_duplicate_doc_id_extracts_each_row_once(spark):
     documents under one id is extracted once."""
     rows = [r for r in _edge_rows() if r["doc_id"] == "X"]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    collected = _tables(df, ParserConfig().all_tables(), num_partitions=4)
+    collected = _tables(df, ParserConfig().all_tables())
     cells = [s.text for r in collected for s in r.spans]
     assert len(collected) == 43, f"expected 43 tables, got {len(collected)}"
     for i in range(3):

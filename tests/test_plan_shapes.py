@@ -7,13 +7,16 @@ from the plans of the test corpus's queries, not from their output.
   extraction/simhash Arrow stages), small dimension joins broadcast, top-k
   as TakeOrderedAndProject (no global sort). Expect tokens are substrings
   of the formatted plan; forbid tokens are regular expressions over it.
-- The extraction pass (``plan_extraction``) over a one-file and a
-  multi-file corpus: one Python stage, the ``MapInArrow``; a scan pruned to
-  the two columns it reads; no ``Exchange`` between the scan and the
-  ``MapInArrow`` unless the salt rule fires, and then exactly the salt's.
-- The resume path (``SnapshotSink.remaining_documents``) keeps that plan:
-  over an empty sink there is nothing to join, and over a sink holding a
-  small committed share the anti-join broadcasts the committed ids.
+- The extraction pass (``plan_extraction``) over a one-file corpus (one
+  split, or cut into several) and a multi-file corpus: one Python stage,
+  the ``MapInArrow``; a scan pruned to the two columns it reads; no
+  ``Exchange`` between the scan and the ``MapInArrow`` unless the salt
+  rule fires, and then exactly the salt's.
+- The resume path (``plan_extraction(..., resume_from=sink)``, as
+  ``run_job`` plans it) keeps that plan: over an empty sink there is
+  nothing to join, and over a sink holding a small committed share the
+  anti-join broadcasts the committed ids, and building the plan runs no
+  Spark job.
 """
 
 from __future__ import annotations
@@ -263,15 +266,21 @@ def _exchanges(df) -> list[str]:
 @pytest.fixture(scope="module")
 def corpora(sf_dir, tmp_path_factory):
     """The test corpus as it ships (one file, one row group: the salt rule
-    fires) and cut into four files (the scan keeps every core busy)."""
+    fires), rewritten uncompressed as one file of one row group (larger
+    than one split, so the scan cuts it into byte ranges of which one holds
+    rows: the salt rule fires) and cut into four files (the scan keeps
+    every core busy)."""
     one = f"{sf_dir}/documents.parquet"
     table = pq.read_table(one)
-    multi = tmp_path_factory.mktemp("plan_shapes") / "documents"
+    tmp = tmp_path_factory.mktemp("plan_shapes")
+    split = str(tmp / "documents.parquet")
+    pq.write_table(table, split, compression="none", row_group_size=table.num_rows)
+    multi = tmp / "documents"
     multi.mkdir()
     step = -(-table.num_rows // 4)
     for i in range(4):
         pq.write_table(table.slice(i * step, step), str(multi / f"part-{i}.parquet"))
-    return {"one_file": one, "multi_file": str(multi)}
+    return {"one_file": one, "one_file_split": split, "multi_file": str(multi)}
 
 
 @pytest.fixture(scope="module")
@@ -285,7 +294,7 @@ def committed_share(spark, corpora, tmp_path_factory):
     return sinks
 
 
-LAYOUTS = ["one_file", "multi_file"]
+LAYOUTS = ["one_file", "one_file_split", "multi_file"]
 # the salt's repartition (plans.pipeline.salted)
 SALT = "Exchange hashpartitioning(xxhash64(doc_id, 42)"
 
@@ -308,7 +317,10 @@ def test_extraction_scan_is_pruned(spark, corpora, layout):
 @pytest.mark.parametrize("layout", LAYOUTS)
 def test_extraction_shuffles_only_to_salt(spark, corpora, layout):
     """No Exchange between the scan and the MapInArrow on a multi-file
-    corpus; exactly the salt's on a one-file corpus."""
+    corpus; exactly the salt's on a one-file corpus, however many splits
+    the scan cuts it into."""
+    if layout == "one_file_split":
+        assert read_documents(spark, corpora[layout]).rdd.getNumPartitions() > 1
     exchanges = _exchanges(plan_extraction(read_documents(spark, corpora[layout])))
     if layout == "multi_file":
         assert exchanges == []
@@ -322,7 +334,7 @@ def test_first_resume_keeps_the_scan_plan(spark, corpora, tmp_path, layout):
     the bench plan's Exchanges (none, or the salt's) and partition count."""
     docs = read_documents(spark, corpora[layout])
     bench = plan_extraction(docs)
-    resumed = plan_extraction(SnapshotSink(str(tmp_path / "sink")).remaining_documents(docs))
+    resumed = plan_extraction(docs, resume_from=SnapshotSink(str(tmp_path / "sink")))
     assert "Join" not in _plan_text(resumed), _plan_text(resumed)
     assert _exchanges(resumed) == _exchanges(bench)
     assert resumed.rdd.getNumPartitions() == bench.rdd.getNumPartitions()
@@ -332,10 +344,15 @@ def test_first_resume_keeps_the_scan_plan(spark, corpora, tmp_path, layout):
 def test_resume_broadcasts_a_small_committed_share(spark, corpora, committed_share, layout):
     """Over a sink holding a small committed share the anti-join broadcasts
     the committed ids: the corpus side keeps the bench plan's Exchanges and
-    partition count, never a sort-merge join's shuffle."""
+    partition count, never a sort-merge join's shuffle. The salt is decided
+    on the corpus, so the committed files neither count as corpus files nor
+    get their join's query stages run while the plan is built."""
     docs = read_documents(spark, corpora[layout])
     bench = plan_extraction(docs)
-    resumed = plan_extraction(committed_share[layout].remaining_documents(docs))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    resumed = plan_extraction(docs, resume_from=committed_share[layout])
+    assert not set(tracker.getJobIdsForGroup(None)) - before
     path = [line for _, line in _scan_path(resumed)]
     assert any(line.startswith("BroadcastHashJoin") and "LeftAnti" in line for line in path), path
     assert "SortMergeJoin" not in _plan_text(resumed)
